@@ -16,6 +16,13 @@ object Bench {
   // 10x the JIT-warmup noise the 3-run median exists to discount.
   private val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
     .map(_.toInt).filter(_ >= 1).getOrElse(3)
+  // local iteration knob for scale experiments: at sf1+ a fixed
+  // partitions==cores keeps per-partition sort-merge working sets
+  // growing with data; a real cluster scales this with executors.
+  // JobProbe and PlanDump share it, so they plan like Bench.
+  private[graft] val shufflePartitions: Int =
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
+      .getOrElse(core.Session.localCores)
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -23,36 +30,11 @@ object Bench {
     // iteration aid; the driver always passes at most the sf dir)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local iteration knob for scale experiments: at sf1+ a fixed
-    // partitions==cores keeps per-partition sort-merge working sets
-    // growing with data; a real cluster scales this with executors
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // per-process warehouse: Bench must never share fixture/managed-
-      // table roots with a concurrently-running Verify on this host
-      // (the r15 driver artifact lost the fixture-writing query family
-      // to exactly such a collision)
-      .config("spark.sql.warehouse.dir", java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        s"graft_wh_bench_${ProcessHandle.current().pid()}").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // make ContextCleaner shuffle/broadcast reaping synchronous so the
-      // post-run System.gc() actually clears spark.local.dir before the
-      // next measurement starts (async cleanup lands mid-measurement)
-      .config("spark.cleaner.referenceTracking.blocking", "true")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      // local-checkpoint IO: no fork-per-checkpoint-file (Session docs)
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.build(
+      appName = "graft-bench",
+      shufflePartitions = shufflePartitions,
+      extraConf = org.apache.spark.GraftBenchInternals.blockingCleanerConfs +
+        core.Session.processWarehouse("bench"))
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -61,57 +43,48 @@ object Bench {
     // prime the temp-checkpoint baseline so pre-existing dirs (other
     // processes') are never reaped — only dirs this suite creates
     org.apache.spark.GraftBenchInternals.cleanStreamingState(spark)
+    // one timed query run: wall seconds and GC ms inside the timed
+    // region, or None when it threw — a query that throws early must
+    // never read as a fast timing. The between-run reset runs outside
+    // the timer.
+    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[(Double, Long)] = {
+      val gc0 = gcMillis()
+      val t0 = System.nanoTime()
+      // noop sink: full expression evaluation without result
+      // materialization (count() lets Catalyst prune unreferenced
+      // projections, under-measuring projection-heavy queries)
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: $e"); false }
+      val dt = (System.nanoTime() - t0) / 1e9
+      val gcMs = gcMillis() - gc0
+      org.apache.spark.GraftBenchInternals.resetBetweenRuns(spark)
+      if (ok) Some((dt, gcMs)) else None
+    }
     // per query: (wall seconds, GC ms inside the timed region,
-    // local-dir MB left AFTER the between-run cleanup, used-heap MB
-    // after cleanup+gc) per run — the telemetry that lets an inflated
+    // local-dir MB left AFTER the between-run reset, used-heap MB
+    // after reset) per run — the telemetry that lets an inflated
     // in-suite timing be attributed (GC pause? disk debt? heap debt?)
-    // or cleared from the artifact alone
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Seq[(Double, Long, Long, Long)] =
-      (1 to runs).map { _ =>
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        // noop sink: full expression evaluation without result
-        // materialization (count() lets Catalyst prune unreferenced
-        // projections, under-measuring projection-heavy queries)
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val gcMs = gcMillis() - gc0
-        // drop any storage the query leaked (checkpoints, caches) so
-        // the NEXT measurement runs against a clean block manager —
-        // round 4's suite showed 10x inflation on late queries from
-        // accumulated localCheckpoint blocks (BENCHNOTES.md)
-        core.Lineage.sweep(spark)
-        // Deterministically unregister + DELETE every shuffle's files
-        // (GraftBenchInternals drives ContextCleaner.doCleanupShuffle
-        // directly). Relying on System.gc() to trigger the reap left
-        // the reaping to a GC lottery: the round-7 suite (164 queries
-        // x 3 runs) still accumulated enough spark.local.dir debt to
-        // inflate one victim query 9x vs isolated (BENCH_r07
-        // dedup_substring 32.15 s vs 3.41 s). Cleanup runs OUTSIDE
-        // the timed region.
-        org.apache.spark.GraftBenchInternals.cleanAllShuffles(spark.sparkContext)
-        // Streaming-state hygiene (round 9): the round-8 shuffle fix
-        // zeroed disk debt yet streaming/graph victims still inflated
-        // in-suite (stream_sliding 20.6 s vs 2.9 s isolated) — the
-        // residual debt is memory-sink views, loaded state-store
-        // providers, and leaked temp checkpoints. Reap them between
-        // measurements, deterministically, like the shuffles.
-        org.apache.spark.GraftBenchInternals.cleanStreamingState(spark)
-        // heap hygiene (code cache / humongous regions) — no longer
-        // load-bearing for shuffle files, kept for allocator headroom
-        System.gc()
-        val residualMb = org.apache.spark.GraftBenchInternals.localDirBytes() >> 20
-        val rt = Runtime.getRuntime
-        val heapMb = (rt.totalMemory - rt.freeMemory) >> 20
-        (dt, gcMs, residualMb, heapMb)
+    // or cleared from the artifact alone. None if any run threw.
+    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Seq[(Double, Long, Long, Long)]] = {
+      val rs = (1 to runs).map { _ =>
+        runOnce(name, fn).map { case (dt, gcMs) =>
+          val residualMb = org.apache.spark.GraftBenchInternals.localDirBytes() >> 20
+          val rt = Runtime.getRuntime
+          val heapMb = (rt.totalMemory - rt.freeMemory) >> 20
+          (dt, gcMs, residualMb, heapMb)
+        }
       }
-    val suiteT0 = System.nanoTime()
-    val results: Seq[(String, Seq[(Double, Long, Long, Long)])] = SparkEntry.queries.toSeq
+      if (rs.forall(_.isDefined)) Some(rs.flatten) else None
+    }
+    val measured = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> measure(fn) }
-    val suiteSec = (System.nanoTime() - suiteT0) / 1e9
+      .map { case (name, fn) => name -> measure(name, fn) }
+    val results: Seq[(String, Seq[(Double, Long, Long, Long)])] =
+      measured.collect { case (name, Some(v)) => name -> v }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     def fmtJ(d: Double): String =
       String.format(java.util.Locale.US, "%.2f", Double.box(d))
@@ -173,44 +146,39 @@ object Bench {
     // with no ceiling, and that uncapped post-suite tail pushed the
     // driver's 32-core run past its timeout (BENCH_r17 rc=124) — the
     // audit must never be the thing that kills the artifact it is
-    // auditing. Three caps, all env-overridable:
+    // auditing. Two caps bound its tail:
     //   * one run per flagged query (an isolated single run is already
     //     decisive for "contention vs regression" — contention debt
     //     shows up as 2-10x, not run noise);
-    //   * a hard wall-clock ceiling on the whole audit (default 60 s):
-    //     each flagged query re-runs only while the budget lasts, in
-    //     in-suite-cost order (cheapest first maximizes coverage);
-    //   * skipped entirely when the suite itself overran
-    //     SPARK_GRAFT_AUDIT_SUITE_CAP (default 1200 s) — past that the
-    //     process is already at risk of the driver timeout.
+    //   * a hard wall-clock ceiling on the whole audit (default 60 s,
+    //     SPARK_GRAFT_AUDIT_BUDGET): each flagged query re-runs only
+    //     while the budget lasts, in in-suite-cost order (cheapest
+    //     first maximizes coverage).
+    // A re-run that throws is reported under "failed", never as an
+    // isolated timing.
     val auditBudgetSec = sys.env.get("SPARK_GRAFT_AUDIT_BUDGET")
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(60.0)
-    val auditSuiteCap = sys.env.get("SPARK_GRAFT_AUDIT_SUITE_CAP")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(1200.0)
     val inSuiteSec: Map[String, Double] =
       results.map { case (k, v) => k -> median(v.map(_._1)) }.toMap
     val auditT0 = System.nanoTime()
-    val isolated: Seq[(String, Double)] =
-      if (suiteSec > auditSuiteCap) Seq.empty
-      else flagged.sortBy(inSuiteSec.getOrElse(_, 0.0)).flatMap { name =>
+    val audited: Seq[(String, Option[Double])] =
+      flagged.sortBy(inSuiteSec.getOrElse(_, 0.0)).flatMap { name =>
         val spent = (System.nanoTime() - auditT0) / 1e9
         if (spent > auditBudgetSec) None
-        else SparkEntry.queries.get(name).map { fn =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          catch { case _: Throwable => () }
-          val dt = (System.nanoTime() - t0) / 1e9
-          core.Lineage.sweep(spark)
-          org.apache.spark.GraftBenchInternals.cleanAllShuffles(spark.sparkContext)
-          org.apache.spark.GraftBenchInternals.cleanStreamingState(spark)
-          name -> dt
-        }
+        else SparkEntry.queries.get(name).map(fn => name -> runOnce(name, fn).map(_._1))
       }
+    val isolated: Seq[(String, Double)] =
+      audited.collect { case (name, Some(dt)) => name -> dt }
+    val failed: Seq[String] = measured.collect { case (name, None) => name } ++
+      audited.collect { case (name, None) => name }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val isolatedJson = isolated.map { case (k, v) => "\"" + k + "\":" + fmtJ(v) }
       .mkString("{", ",", "}")
     def fmt(d: Double): String = fmtJ(d)
+    // failed queries carry no timing: they are listed, not totalled
+    val timed = results.filterNot { case (k, _) => failed.contains(k) }
     val wall: Seq[(String, Seq[Double])] =
-      results.map { case (k, v) => k -> v.map(_._1) }
+      timed.map { case (k, v) => k -> v.map(_._1) }
     val total = wall.map { case (_, v) => median(v) }.sum
 
     // Full-detail record (medians + [min,max] spread + per-run GC ms
@@ -223,16 +191,16 @@ object Bench {
       .mkString("{", ",", "}")
     val spread = wall.map { case (k, v) => "\"" + k + "\":[" + v.min + "," + v.max + "]" }
       .mkString("{", ",", "}")
-    val gcDetail = results.map { case (k, v) =>
+    val gcDetail = timed.map { case (k, v) =>
       "\"" + k + "\":[" + v.map(_._2).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val dirDetail = results.map { case (k, v) =>
+    val dirDetail = timed.map { case (k, v) =>
       "\"" + k + "\":[" + v.map(_._3).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val heapDetail = results.map { case (k, v) =>
+    val heapDetail = timed.map { case (k, v) =>
       "\"" + k + "\":[" + v.map(_._4).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val detail = s"""{"metric":"detail","value":$total,"unit":"sec","queries":$detailQs,"spread":$spread,"gc_ms":$gcDetail,"localdir_mb_after_clean":$dirDetail,"heap_mb_after_clean":$heapDetail,"isolated":$isolatedJson,"runs":$runs,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"detail","value":$total,"unit":"sec","queries":$detailQs,"spread":$spread,"gc_ms":$gcDetail,"localdir_mb_after_clean":$dirDetail,"heap_mb_after_clean":$heapDetail,"isolated":$isolatedJson,"failed":$failedJson,"runs":$runs,"sf":"$sfDir"}"""
     // best-effort: a read-only or foreign cwd must not abort the run
     // AFTER the measurements and BEFORE the final stdout line
     try {
@@ -250,7 +218,8 @@ object Bench {
     // is elided (a shorter later name can still fit after a longer one
     // didn't, so elisions need not be a contiguous tail); elided_sec
     // summarizes the remainder so the total still reconciles.
-    val budget = 1600
+    // (a failed list, normally empty, takes its length off the budget)
+    val budget = 1600 - failedJson.length
     val sorted = wall.map { case (k, v) => k -> median(v) }.sortBy(-_._2)
     val sb = new StringBuilder
     var elided = 0; var elidedSec = 0.0
@@ -261,7 +230,7 @@ object Bench {
     }
     // flagged-query isolated re-reads ride the compact line too (small
     // by construction: only >2x-of-reference outliers re-ran)
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{${sb.result()}},"elided_queries":$elided,"elided_sec":${fmt(elidedSec)},"isolated":$isolatedJson,"runs":$runs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{${sb.result()}},"elided_queries":$elided,"elided_sec":${fmt(elidedSec)},"isolated":$isolatedJson,"failed":$failedJson,"runs":$runs,"sf":"$sfDir"}"""
     println(line)
     spark.stop()
     // Re-emit as the very LAST stdout bytes: spark.stop() and the sbt

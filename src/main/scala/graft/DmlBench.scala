@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Row-level-DML latency harness at high segment counts — the scale
@@ -25,15 +24,8 @@ object DmlBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(500)
     val rowsPerSeg = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
+    val spark = core.Session.build(
+      master = "local[8]", appName = "graft-dmlbench", shufflePartitions = 8)
     spark.sparkContext.setLogLevel("ERROR")
     val root = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), s"graft_dmlbench_$n").toString

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Relation-build latency harness for the manifest SQL face at high
   * segment counts (round-14: manifest-embedded metadata collapses the
   * per-query planning IO from O(segments) sidecar/listing reads + a
@@ -26,15 +24,8 @@ object MetaBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
+    val spark = core.Session.build(
+      master = "local[8]", appName = "graft-metabench", shufflePartitions = 8)
     spark.sparkContext.setLogLevel("ERROR")
     val root = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), s"graft_metabench_$n").toString

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-capture utility for the optimization rounds: writes
   * `.explain("formatted")` output for the named queries (or all of
@@ -21,23 +20,10 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.warehouse.dir", java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        s"graft_wh_plandump_${ProcessHandle.current().pid()}").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.build(
+      appName = "graft-plandump",
+      shufflePartitions = Bench.shufflePartitions,
+      extraConf = Map(core.Session.processWarehouse("plandump")))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     var failed = 0
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -358,23 +358,10 @@ object ScaleGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions) // SQL lakehouse face
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // per-process warehouse (see Verify/Bench): never collide with a
-      // concurrently-running engine process on this host
-      .config("spark.sql.warehouse.dir", java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        s"graft_wh_gate_${ProcessHandle.current().pid()}").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.build(
+      appName = "graft-scalegate",
+      shufflePartitions = core.Session.localCores,
+      extraConf = Map(core.Session.processWarehouse("gate")))
     println(check(spark, sfDir))
     spark.stop()
   }

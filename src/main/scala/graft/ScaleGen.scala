@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a driver-generated SF directory: writes
@@ -26,16 +26,8 @@ object ScaleGen {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.build(
+      appName = "graft-scalegen", shufflePartitions = core.Session.localCores)
 
     def rd(name: String): DataFrame = spark.read.parquet(s"$base/$name.parquet")
 

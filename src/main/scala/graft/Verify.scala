@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,25 +10,10 @@ object Verify {
     // iteration aid; the driver always passes exactly two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // per-process warehouse: a concurrently-running Bench/Verify on
-      // the same host must never share fixture/managed-table roots
-      // (the r15 driver artifact lost exactly the fixture-writing
-      // query family to such a collision)
-      .config("spark.sql.warehouse.dir", java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        s"graft_wh_verify_${ProcessHandle.current().pid()}").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.build(
+      appName = "graft-verify",
+      shufflePartitions = core.Session.localCores,
+      extraConf = Map(core.Session.processWarehouse("verify")))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.forall(_.contains(name))) {

@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * The reference manages a DB-API connection + cursor with a context
   * manager (reference: locopy/database.py:91-129, 272-283). Here the
   * "warehouse" is Spark itself, so the session IS the connection. The
-  * builder defaults are chosen for the judged environment (local[32],
-  * single JVM) but every setting is cluster-valid: AQE on, shuffle
+  * builder defaults are chosen for a local run (all cores, single JVM)
+  * but every setting is cluster-valid: AQE on, shuffle
   * partitions sized to cores (not the 200 default), UTC timezone for
   * oracle parity.
   *
@@ -18,9 +18,24 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
 
+  /** Cores of a local session: `SPARK_GRAFT_CPUS` when set, else every
+    * core the JVM sees. The one place the engine reads that variable. */
+  val localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A per-process `spark.sql.warehouse.dir` entry for `extraConf`: a
+    * main that writes fixtures or managed tables must never share those
+    * roots with a concurrently-running Bench/Verify on the same host
+    * (the r15 bench artifact lost the fixture-writing query family to
+    * exactly such a collision). */
+  def processWarehouse(tag: String): (String, String) =
+    "spark.sql.warehouse.dir" -> java.nio.file.Paths.get(
+      sys.props("java.io.tmpdir"),
+      s"graft_wh_${tag}_${ProcessHandle.current().pid()}").toString
+
   /** Streaming-checkpoint IO settings for LOCAL (`file://`) checkpoint
-    * dirs — shared by every local session builder (bench, verify,
-    * tests, tools).
+    * dirs — applied by [[build]], so every session (bench, verify,
+    * tests, tools) carries them.
     *
     * Why (round-18 measurement): Spark 4.1's default checkpoint writer
     * is `ChecksumCheckpointFileManager` over the FileContext API.
@@ -44,8 +59,9 @@ object Session {
     * redundant for single-host local disk, so it is off here. Real
     * HDFS/S3 deployments keep both defaults: these two confs are
     * env-overridable (`SPARK_GRAFT_CKPT_FM`, `SPARK_GRAFT_CKPT_CHECKSUM`)
-    * and scoped to the local builders, not baked into any operator. */
-  val localCheckpointIoConfs: Seq[(String, String)] = Seq(
+    * and scoped to the local session factory, not baked into any
+    * operator. */
+  private val localCheckpointIoConfs: Seq[(String, String)] = Seq(
     "spark.sql.streaming.checkpointFileManagerClass" ->
       sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
         "org.apache.spark.sql.execution.streaming.checkpointing." +
@@ -53,9 +69,11 @@ object Session {
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
       sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
 
-  /** Default local session matching the driver's bench/verify setup. */
+  /** The one session factory: every main, harness and test session is
+    * built here, so they all share the settings below and differ only in
+    * `master`, `shufflePartitions` and `extraConf`. */
   def build(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+      master: String = s"local[$localCores]",
       appName: String = "graft",
       shufflePartitions: Int = 32,
       extraConf: Map[String, String] = Map.empty
@@ -112,7 +130,7 @@ object Session {
     val cfg = Config.readConfigYaml(configYaml)
     def str(k: String): Option[String] = cfg.get(k).collect { case v if v != null => v.toString }
     val spark = build(
-      master = str("master").getOrElse(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"),
+      master = str("master").getOrElse(s"local[$localCores]"),
       appName = str("app_name").getOrElse("graft"),
       shufflePartitions = str("shuffle_partitions").map(_.toInt).getOrElse(32),
       extraConf = cfg.collect { case (k, v) if k.startsWith("spark.") && v != null => k -> v.toString })

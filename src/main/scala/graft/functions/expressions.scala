@@ -741,11 +741,17 @@ object Quantize8Impl {
     * `mx = array_max(v).cast(double)` — as ONE fused loop. The
     * higher-order form re-evaluated the whole-array min AND max for
     * every element (O(d²) interpreted work per row). min/max skip null
-    * elements (ArrayMin/ArrayMax semantics); a null element maps to a
-    * null code; all-null or empty arrays degenerate exactly like the
-    * original (null mn/mx → null codes; empty → empty). Arithmetic is
-    * ((x − mn) · 255.0) / (mx − mn), Math.floor, (int) — bit-identical
-    * IEEE in the same order. */
+    * elements (ArrayMin/ArrayMax semantics, NaN the largest value).
+    * Edge cases, each as the original has them:
+    *   - constant vector (`mx === mn`, which holds for NaN == NaN):
+    *     EVERY element codes 0, null elements too — the `when` branch
+    *     never looks at the element;
+    *   - otherwise a null element codes null;
+    *   - a NaN range (a NaN among finite values) makes every quotient
+    *     NaN, and the non-ANSI double → int cast maps NaN to 0;
+    *   - all-null arrays give null codes (null mn/mx), empty → empty.
+    * Arithmetic is ((x − mn) · 255.0) / (mx − mn), Math.floor, (int) —
+    * bit-identical IEEE in the same order. */
   def quantize(vec: ArrayData, isFloat: Boolean): ArrayData = {
     val n = vec.numElements()
     val out = new Array[Any](n)
@@ -766,14 +772,15 @@ object Quantize8Impl {
       }
       i += 1
     }
+    val constant = seen &&
+      (mx == mn || (java.lang.Double.isNaN(mx) && java.lang.Double.isNaN(mn)))
     var j = 0
     while (j < n) {
-      if (!vec.isNullAt(j) && seen) {
-        if (mx == mn) out(j) = 0
-        else {
-          val x = if (isFloat) vec.getFloat(j).toDouble else vec.getDouble(j)
-          out(j) = java.lang.Math.floor((x - mn) * 255.0 / (mx - mn)).toInt
-        }
+      if (constant) out(j) = 0
+      else if (seen && !vec.isNullAt(j)) {
+        val x = if (isFloat) vec.getFloat(j).toDouble else vec.getDouble(j)
+        val q = java.lang.Math.floor((x - mn) * 255.0 / (mx - mn))
+        out(j) = if (java.lang.Double.isNaN(q)) 0 else q.toInt
       } // else: null element, or null mn/mx (all-null array) → null code
       j += 1
     }

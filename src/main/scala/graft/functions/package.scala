@@ -128,7 +128,8 @@ package object functions {
     * storage: 4× smaller than float32). Truncating floor, not
     * round-half — identical IEEE arithmetic in any engine, so
     * quantized codes are hash-oracle-able. A constant vector (max ==
-    * min) quantizes to all zeros. Dequantize with [[dequantize8]]. */
+    * min, NaN == NaN included) quantizes to all zeros, null components
+    * included. Dequantize with [[dequantize8]]. */
   def quantize8(v: Column): Column = fx.quantize8Codes(v)
   // r18: was transform(v, x => when(mx === mn, 0).otherwise(floor((x −
   // mn)·255/(mx − mn)))) with mn/mx = array_min/max(v) INSIDE the

@@ -190,11 +190,17 @@ object ManifestDml {
   }
 
   /** The path component right after the table root IS the segment
-    * name (segment attribution for the match scan; must be projected
-    * on the scan side, never post-join). */
-  private def segOf(f: org.apache.hadoop.fs.FileSystem, p: Path): Column =
-    substring_index(input_file_name().substr(
-      lit(f.makeQualified(p).toString.length + 2), lit(1 << 30)), "/", 1)
+    * name, for flat (`root/seg/part-*`) and partitioned
+    * (`root/seg/k=v/part-*`) segments alike. Attribution compares PATHS,
+    * with the scheme and authority cut off `input_file_name()`, so it
+    * does not depend on how the root was spelled (`/x/t`, `file:/x/t`,
+    * `file:///x/t`) or how the reader qualified it. Must be projected
+    * on the scan side, never post-join. */
+  private def segOf(f: org.apache.hadoop.fs.FileSystem, p: Path): Column = {
+    val rootPath = f.makeQualified(p).toUri.getRawPath.stripSuffix("/")
+    val filePath = regexp_replace(input_file_name(), "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
+    substring_index(filePath.substr(lit(rootPath.length + 2), lit(1 << 30)), "/", 1)
+  }
 
   /** Shared copy-on-write core: find touched segments through the
     * pruned predicate scan, rewrite them with `rewrite`, swap
@@ -228,7 +234,7 @@ object ManifestDml {
     // ---- phase 2: rewrite ONLY the touched segments ----
     val metas = ManifestTable.segmentMetas(spark, root, Some(v))
     val rows = ManifestTable.applyMapping(
-      srcTaggedRead(spark, root, touched, rel, metas), mapping)
+      srcTaggedRead(spark, root, segCol, touched, rel, metas), mapping)
     val kept = rewrite(rows)
     require(kept.columns.toSeq == rows.columns.toSeq,
       "internal: DML rewrite changed the column set")
@@ -321,7 +327,7 @@ object ManifestDml {
     * dir layouts — CONFLICTING_DIRECTORY_STRUCTURES), as do legacy
     * segments without an embedded `#meta` schema. */
   private def srcTaggedRead(spark: SparkSession, root: String,
-      touched: Seq[String],
+      segCol: Column, touched: Seq[String],
       rel: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
       metas: Map[String, ManifestTable.SegMeta]): DataFrame = {
     require(!(rel.dataSchema.fieldNames ++ rel.partitionSchema.fieldNames)
@@ -340,10 +346,7 @@ object ManifestDml {
     val frames =
       if (rel.partitionSchema.nonEmpty) touched.map(perSegment)
       else {
-        // flat segment => the file's PARENT dir is the segment name —
-        // no dependence on how the reader qualifies the root prefix
-        val segExpr = element_at(split(input_file_name(), "/"), -2)
-        val tagExpr = element_at(typedLit(idx), segExpr)
+        val tagExpr = element_at(typedLit(idx), segCol)
         val bySchema = touched.groupBy(s => metas.get(s).flatMap(_.schema))
         bySchema.toSeq.flatMap {
           case (Some(st), segs) =>
@@ -487,7 +490,7 @@ object ManifestDml {
       if (touched.nonEmpty) {
         val segMetas = ManifestTable.segmentMetas(spark, root, Some(v))
         val base0 = ManifestTable.applyMapping(
-          srcTaggedRead(spark, root, touched, rel, segMetas), mapping)
+          srcTaggedRead(spark, root, segCol, touched, rel, segMetas), mapping)
         val base = evolveCols.foldLeft(base0) { case (df, (n, dt)) =>
           df.withColumn(n, lit(null).cast(dt))
         }

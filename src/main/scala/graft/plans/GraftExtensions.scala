@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.{SortedIntersectCount, TopKByScore, VecDotProduct}
 
 /** Engine extensions: registers the custom Catalyst expressions as SQL
-  * functions so `spark.sql` users reach them too:
+  * functions so `spark.sql` users reach them too. Every session built by
+  * [[graft.core.Session.build]] carries them:
   *
-  *   spark = SparkSession.builder()
-  *     .withExtensions(new GraftExtensions).getOrCreate()
+  *   val spark = graft.core.Session.build()
   *   spark.sql("SELECT vec_dot(a, b), sorted_intersect_count(x, y) ...")
   *
   * (The reference has no user-extension surface at all — SURVEY §2.3

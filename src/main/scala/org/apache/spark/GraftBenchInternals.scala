@@ -19,6 +19,37 @@ import java.io.File
   * the GC lottery from the timings. */
 object GraftBenchInternals {
 
+  /** Session confs [[resetBetweenRuns]] relies on: synchronous
+    * ContextCleaner shuffle/broadcast reaping, so the post-run
+    * `System.gc()` actually clears `spark.local.dir` before the next
+    * measurement starts (async cleanup lands mid-measurement). */
+  val blockingCleanerConfs: Map[String, String] = Map(
+    "spark.cleaner.referenceTracking.blocking" -> "true",
+    "spark.cleaner.referenceTracking.blocking.shuffle" -> "true")
+
+  /** The between-measurements reset every harness runs outside its
+    * timed region, so no query is measured under a predecessor's debt:
+    *
+    *   - drop leaked storage (checkpoints, caches) — round 4's suite
+    *     showed 10x inflation on late queries from accumulated
+    *     localCheckpoint blocks (BENCHNOTES.md);
+    *   - unregister + DELETE every shuffle's files ([[cleanAllShuffles]]):
+    *     relying on `System.gc()` left the reaping to a GC lottery, and
+    *     the round-7 suite still inflated one victim query 9x vs
+    *     isolated (BENCH_r07 dedup_substring 32.15 s vs 3.41 s);
+    *   - reap streaming state ([[cleanStreamingState]]): after the
+    *     shuffle fix zeroed disk debt, streaming/graph victims still
+    *     inflated in-suite (stream_sliding 20.6 s vs 2.9 s isolated);
+    *   - `System.gc()` for heap hygiene (code cache / humongous
+    *     regions) — no longer load-bearing for shuffle files, kept for
+    *     allocator headroom. */
+  def resetBetweenRuns(spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.core.Lineage.sweep(spark)
+    cleanAllShuffles(spark.sparkContext)
+    cleanStreamingState(spark)
+    System.gc()
+  }
+
   /** Synchronously unregister and delete every shuffle currently
     * registered with the map-output tracker: map statuses, block
     * manager state, and the on-disk `shuffle_*.{data,index}` files.

@@ -25,11 +25,8 @@ class BenchSpec extends AnyFunSuite {
         .format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    def sweepLikeBench(): Unit = {
-      core.Lineage.sweep(spark)
-      org.apache.spark.GraftBenchInternals.cleanAllShuffles(spark.sparkContext)
-      System.gc()
-    }
+    def sweepLikeBench(): Unit =
+      org.apache.spark.GraftBenchInternals.resetBetweenRuns(spark)
     // warm-up: JIT + parquet footer caches, discounted like Bench's median
     (1 to 3).foreach(_ => cheap())
     sweepLikeBench()
@@ -65,11 +62,8 @@ class BenchSpec extends AnyFunSuite {
         .format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    def sweepLikeBench(): Unit = {
-      core.Lineage.sweep(spark)
-      org.apache.spark.GraftBenchInternals.cleanAllShuffles(spark.sparkContext)
-      System.gc()
-    }
+    def sweepLikeBench(): Unit =
+      org.apache.spark.GraftBenchInternals.resetBetweenRuns(spark)
     (1 to 3).foreach(_ => cheap())
     sweepLikeBench()
     val before = (1 to 3).map(_ => { val t = cheap(); sweepLikeBench(); t }).min

@@ -65,6 +65,34 @@ class ConfigSpec extends AnyFunSuite {
     java.nio.file.Files.delete(f)
   }
 
+  test("one session factory: only core/Session.scala builds a SparkSession in code") {
+    import scala.jdk.CollectionConverters._
+    // comments (scaladoc examples included) and string literals are
+    // not code; string alternatives come first so "a/*" opens no comment
+    val nonCode = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|/\*.*?\*/|//[^\n]*""".r
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("core/Session.scala")))
+    val offenders = files.filterNot(_.endsWith("core/Session.scala")).filter { f =>
+      val code = nonCode.replaceAllIn(java.nio.file.Files.readString(f), "")
+      builderCall.findFirstIn(code).isDefined
+    }
+    assert(offenders.isEmpty,
+      "sessions must come from core.Session.build: " + offenders.mkString(", "))
+  }
+
+  test("TestSession carries the shared session settings") {
+    assert(spark.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")))
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "false")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ==
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+    assert(spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
+  }
+
   test("useContext: database maps to current catalog namespace; warehouse is a logged no-op") {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_ctx_db")
     val before = spark.catalog.currentDatabase

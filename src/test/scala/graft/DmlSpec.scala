@@ -76,6 +76,37 @@ class DmlSpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, r).count() == 300)
   }
 
+  test("DML on a root spelled as a bare path, file:/ or file:/// — flat and partitioned segments attribute to the manifest") {
+    for ((spell, i) <- Seq[String => String](p => p, p => s"file:$p", p => s"file://$p")
+        .zipWithIndex; partitioned <- Seq(false, true)) {
+      val bare = new org.apache.hadoop.fs.Path(root(s"dml_root_spelling_${i}_$partitioned"))
+        .toUri.getPath
+      val r = spell(bare)
+      val parts = if (partitioned) Seq("b") else Nil
+      Seq(0 until 10, 10 until 20).foreach { ids =>
+        ManifestTable.append(spark, r,
+          ids.map(k => (k.toLong, k % 2, k * 10L)).toDF("id", "b", "v"),
+          partitionBy = parts, statsCols = Seq("id"))
+      }
+      val what = s"root $r (partitioned=$partitioned)"
+      assert(ManifestDml.deleteWhere(spark, r, col("id") === 3L).rowsMatched == 1L, what)
+      assert(ManifestDml.updateWhere(spark, r, Seq("v" -> lit(-1L)),
+        col("id") === 15L).rowsMatched == 1L, what)
+      ManifestDml.mergeInto(spark, r,
+        Seq((7L, 1, 70L), (99L, 1, 990L)).toDF("id", "b", "nv"),
+        col("__t.id") === col("__s.id"),
+        matched = Seq(ManifestDml.MergeUpdate(None, Seq("v" -> col("__s.nv")))),
+        notMatched = Seq(ManifestDml.MergeInsert(None, Seq("id" -> col("__s.id"),
+          "b" -> col("__s.b"), "v" -> col("__s.nv")))),
+        notMatchedBySource = Nil)
+      val got = ManifestTable.read(spark, r).select("id", "v").as[(Long, Long)]
+        .collect().toMap
+      val want = ((0L until 20L).filter(_ != 3L).map(k => k -> k * 10L).toMap ++
+        Map(15L -> -1L, 7L -> 70L, 99L -> 990L))
+      assert(got == want, what)
+    }
+  }
+
   test("deleteWhere: NULL predicate rows stay; no-match is a no-op (no new version)") {
     val r = root("dml_delete_null")
     ManifestTable.append(spark, r,

@@ -1034,6 +1034,55 @@ class ExtSpec extends AnyFunSuite {
     assert(checked.getDouble(2) <= 1.0 + 1e-9, s"err ${checked.getDouble(2)}")
   }
 
+  /** The sf0.001 embeddings plus the hand-built edge vectors, as float
+    * and as double arrays (the kernels read each element type). */
+  private def edgeVectors: Seq[org.apache.spark.sql.DataFrame] = {
+    val hand = spark.sql(
+      """SELECT embedding FROM VALUES
+        |  (array(5.0F, CAST(NULL AS FLOAT), 5.0F)),
+        |  (array(float('NaN'), float('NaN'))),
+        |  (array(2.5F, 2.5F, 2.5F)),
+        |  (array(1.0F, float('NaN'), CAST(NULL AS FLOAT), 3.0F)),
+        |  (CAST(array() AS array<float>)),
+        |  (CAST(array(NULL, NULL) AS array<float>)),
+        |  (CAST(NULL AS array<float>))
+        |  AS t(embedding)""".stripMargin)
+    val floats = emb.select(col("embedding")).unionByName(hand)
+    Seq(floats, floats.select(col("embedding").cast("array<double>").as("embedding")))
+  }
+
+  /** Rows where the fused kernel and the higher-order expression it
+    * replaced differ (`<=>`: arrays compared element-wise, nulls and
+    * NaNs included). */
+  private def mismatches(df: org.apache.spark.sql.DataFrame,
+      old: org.apache.spark.sql.Column, fused: org.apache.spark.sql.Column): Seq[String] =
+    df.select(col("embedding").cast("string").as("v"), old.as("o"), fused.as("f"))
+      .filter(not(col("o") <=> col("f")))
+      .collect().map(r => s"${r.get(0)}: old ${r.get(1)} fused ${r.get(2)}").toSeq
+
+  test("normalize: fused kernel is bit-identical to the higher-order form on embeddings and edge vectors") {
+    val v = col("embedding")
+    val n = sqrt(aggregate(v, lit(0.0),
+      (acc, x) => acc + x.cast("double") * x.cast("double")))
+    val old = transform(v, x => x.cast("double") / n)
+    edgeVectors.foreach { df =>
+      val bad = mismatches(df, old, normalize(v))
+      assert(bad.isEmpty, bad.mkString("\n"))
+    }
+  }
+
+  test("quantize8: fused kernel is bit-identical to the higher-order form on embeddings and edge vectors") {
+    val v = col("embedding")
+    val mn = array_min(v).cast("double")
+    val mx = array_max(v).cast("double")
+    val old = transform(v, x => when(mx === mn, lit(0))
+      .otherwise(floor((x.cast("double") - mn) * 255.0 / (mx - mn)).cast("int")))
+    edgeVectors.foreach { df =>
+      val bad = mismatches(df, old, quantize8(v))
+      assert(bad.isEmpty, bad.mkString("\n"))
+    }
+  }
+
   test("qualityFilter applies word-count and stopword-density rules exactly") {
     import spark.implicits._
     val df = Seq(

@@ -4,20 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (per test-JVM). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Session.localCheckpointIoConfs.toMap)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = core.Session.build(
+    master = "local[4]", appName = "graft-test", shufflePartitions = 4)
   val sf: String = "/root/testdata/sf0.001"
 }
