@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Exec
+import graft.core.{Exec, GlobalOrder}
 import graft.ext.{Dedup, Multimodal, Similarity, Text}
 import graft.functions.{charShingles, fingerprintMd5, tokens}
 import graft.io.{Load, Unload}
@@ -247,27 +247,18 @@ trait SparkEntryBase {
 
   /** Date cast + interval arithmetic — the reference's own integration
     * SQL shape `('2017-12-31'::date + row_number())::date`
-    * (tests/test_integration.py:166). The global row_number comes from
-    * the SAME two-phase distributed prefix sum as [[graft.ext.Pack
-    * .packShards]] and statsMannwhitney: orderkeys coarse-bucket by
-    * floor(key/2^16); only the TINY per-bucket offset relation sees an
-    * ordered window; within-bucket ranks run under a bucket-PARTITIONED
-    * window — no full-table single-partition sort at any scale. The
-    * oracle deliberately keeps the single-window global formulation
+    * (tests/test_integration.py:166). The global row_number is
+    * [[graft.core.GlobalOrder]] over orderkeys bucketed by
+    * floor(key/2^16); the oracle keeps the single-window formulation
     * (independent). Serialized as ISO strings for the cross-engine
     * compare. */
   private[graft] def q22DateArith(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .select(col("o_orderkey"))
-      .withColumn("bkt", floor(col("o_orderkey") / 65536L).cast("long"))
-    val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = o.groupBy("bkt").agg(count(lit(1)).as("btot"))
-      .withColumn("off", coalesce(sum("btot").over(wOff), lit(0L)))
-    val wIn = Window.partitionBy("bkt").orderBy("o_orderkey")
-    o.join(broadcast(offsets.select("bkt", "off")), Seq("bkt"))
-      .withColumn("rn", (col("off") + row_number().over(wIn)).cast("int"))
+    val o = t(s, dir, "orders").select(col("o_orderkey"))
+    GlobalOrder.exclusivePrefix(o, "o_orderkey",
+        floor(col("o_orderkey") / 65536L).cast("long"), lit(1L) -> "pre")
       .select(col("o_orderkey"),
-        date_format(date_add(lit("2017-12-31").cast("date"), col("rn")), "yyyy-MM-dd").as("dt"))
+        date_format(date_add(lit("2017-12-31").cast("date"), (col("pre") + 1L).cast("int")),
+          "yyyy-MM-dd").as("dt"))
       .orderBy("o_orderkey")
   }
 
@@ -611,24 +602,17 @@ trait SparkEntryBase {
     * positive cent grid, so EVERY quantity in `G = Σ(2i−n−1)·x_i /
     * (n·Σx)` is an exact int64 — no float anywhere until the final
     * ratio): the inequality/concentration diagnostic behind dataset
-    * re-balancing decisions. Ranking uses the mannwhitney two-phase
-    * machinery (coarse cent buckets → tiny offset relation under the
-    * only ordered window; per-value position-block coefficient sums
-    * are closed-form, tie-invariant). Oracle: the independent
-    * single-window row_number formulation. */
+    * re-balancing decisions. Ranks come from [[graft.core.GlobalOrder]]
+    * over the distinct cents bucketed by floor(cents/10000); per-value
+    * position-block coefficient sums are closed-form, tie-invariant.
+    * Oracle: the independent single-window row_number formulation. */
   private[graft] def statsGini(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer").select(
       (round(col("c_acctbal") * 100.0, 0).cast("long") + 100000L).as("cents"))
     val vc = c.groupBy("cents").agg(count(lit(1)).as("cnt"))
-      .withColumn("bkt", floor(col("cents") / 10000.0).cast("long"))
-    val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = vc.groupBy("bkt").agg(sum("cnt").as("btot"))
-      .withColumn("off", coalesce(sum("btot").over(wOff), lit(0L)))
-    val wIn = Window.partitionBy("bkt").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, -1)
     val tot = c.agg(count(lit(1)).as("n"))
-    val ranked = vc.join(broadcast(offsets.select("bkt", "off")), Seq("bkt"))
-      .withColumn("cumStart", col("off") + coalesce(sum("cnt").over(wIn), lit(0L)))
+    val ranked = GlobalOrder.exclusivePrefix(vc, "cents",
+        floor(col("cents") / 10000.0).cast("long"), col("cnt") -> "cumStart")
       .crossJoin(broadcast(tot))
       // Σ_{i in block} (2i − n − 1) = 2·cnt·cumStart + cnt(cnt+1) − cnt(n+1)
       // (division-free form — Spark's / on longs is double division)
@@ -817,8 +801,8 @@ trait SparkEntryBase {
   /** New-user growth accounting: each user's first-seen day, daily
     * new-user counts, and the cumulative user curve. The cumulative
     * window runs over the DAY table (bounded by the date domain, the
-    * deliberate Pack-offsets class of global window), never the event
-    * corpus. */
+    * same class as GlobalOrder's bucket-offset window), never the
+    * event corpus. */
   private[graft] def userGrowth(s: SparkSession, dir: String): DataFrame = {
     val firstSeen = t(s, dir, "events")
       .groupBy("user_id")

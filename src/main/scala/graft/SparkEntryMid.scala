@@ -2031,18 +2031,16 @@ trait SparkEntryMid extends SparkEntryBase {
       .orderBy("doc_id")
 
   /** Token-budget shard packing ([[graft.ext.Pack.packShards]]): docs
-    * in id order fill 2000-token shards via the distributed two-phase
-    * prefix sum (bucketWidth 64 ⇒ ~8 buckets on the fixture, so the
-    * bucket-offset + within-bucket composition is genuinely exercised).
-    * The oracle computes the SAME cumulative sums with one global
-    * window — legal in DuckDB's single-node world, exactly what the
-    * Spark side must avoid (PlanSpec pins the corpus window as
-    * bucket-partitioned). */
+    * in id order fill 2000-token shards via the [[graft.core
+    * .GlobalOrder]] prefix sum. The oracle computes the SAME cumulative
+    * sums with one global window — legal in DuckDB's single-node world,
+    * exactly what the Spark side must avoid (PlanSpec pins the corpus
+    * window as bucket-partitioned). */
   private[graft] def packShardsQ(s: SparkSession, dir: String): DataFrame =
     graft.ext.Pack.packShards(
         t(s, dir, "documents")
           .select(col("doc_id"), graft.functions.tokenCount(col("text")).cast("long").as("n_tokens")),
-        "doc_id", "n_tokens", budget = 2000L, bucketWidth = 64L)
+        "doc_id", "n_tokens", budget = 2000L)
       .select("doc_id", "n_tokens", "shard_id")
       .orderBy("doc_id")
 

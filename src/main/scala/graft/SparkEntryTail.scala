@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Exec
+import graft.core.{Exec, GlobalOrder}
 import graft.ext.{Dedup, Multimodal, Similarity, Text}
 import graft.functions.{charShingles, fingerprintMd5, tokens}
 import graft.io.{Load, Unload}
@@ -1004,13 +1004,9 @@ trait SparkEntryTail extends SparkEntryMid {
     * stats_ttest for non-normal metrics.
     *
     * Scale shape: ranking continuous data needs a global order, so the
-    * ranks come from the SAME two-phase distributed prefix sum as
-    * [[graft.ext.Pack.packShards]]: distinct values coarse-bucket by
-    * floor(v); per-bucket totals make a TINY offset relation (≈ value
-    * range rows) that alone sees an ordered window; within-bucket
-    * cumulative counts run under a bucket-PARTITIONED window. No
-    * corpus-wide sort. The oracle deliberately uses the single-window
-    * global-rank formulation instead (independent).
+    * ranks come from [[graft.core.GlobalOrder]] over the distinct values
+    * bucketed by floor(v). The oracle deliberately uses the
+    * single-window global-rank formulation instead (independent).
     *
     * Determinism: counts and tie terms are exact ints; average ranks
     * are .5-granular exacts; the rank-sum rounds to 6 dp; every later
@@ -1023,15 +1019,8 @@ trait SparkEntryTail extends SparkEntryMid {
     val vc = ev.groupBy("v").agg(
         count(lit(1)).as("cnt"),
         sum(when(col("grp") === "click", 1L).otherwise(0L)).as("cntA"))
-      .withColumn("bkt", floor(col("v")).cast("long"))
-    val wOff = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = vc.groupBy("bkt").agg(sum("cnt").as("btot"))
-      .withColumn("off", coalesce(sum("btot").over(wOff), lit(0L)))
-    val wIn = Window.partitionBy("bkt").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = vc.join(broadcast(offsets.select("bkt", "off")), Seq("bkt"))
-      .withColumn("cumB", col("off") + coalesce(sum("cnt").over(wIn), lit(0L)))
+    val ranked = GlobalOrder.exclusivePrefix(vc, "v",
+        floor(col("v")).cast("long"), col("cnt") -> "cumB")
       .withColumn("avgRank",
         col("cumB").cast("double") + (col("cnt") + 1L).cast("double") / 2.0)
     val agg = ranked.agg(
@@ -1057,12 +1046,12 @@ trait SparkEntryTail extends SparkEntryMid {
 
   /** Two-sample Kolmogorov–Smirnov statistic (click vs purchase):
     * `D = max_v |F_A(v) − F_B(v)|` over observed values, with the
-    * smallest argmax value reported. Same distributed two-phase
-    * cumulative counts as [[statsMannwhitney]] (only the tiny
-    * per-bucket offset relation sees an ordered window); the oracle is
-    * the INDEPENDENT single-window ECDF formulation. Every D value is
-    * one subtraction of two exact-int divisions — bit-identical, so
-    * the statistic needs NO rounding at all. */
+    * smallest argmax value reported. Cumulative counts come from
+    * [[graft.core.GlobalOrder]] over the distinct values bucketed by
+    * floor(v); the oracle is the INDEPENDENT single-window ECDF
+    * formulation. Every D value is one subtraction of two exact-int
+    * divisions — bit-identical, so the statistic needs NO rounding at
+    * all. */
   private[graft] def statsKs(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
@@ -1070,20 +1059,13 @@ trait SparkEntryTail extends SparkEntryMid {
     val vc = ev.groupBy("v").agg(
         count(lit(1)).as("cnt"),
         sum(when(col("grp") === "click", 1L).otherwise(0L)).as("cntA"))
-      .withColumn("bkt", floor(col("v")).cast("long"))
-    val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = vc.groupBy("bkt")
-      .agg(sum("cnt").as("btot"), sum("cntA").as("btotA"))
-      .withColumn("off", coalesce(sum("btot").over(wOff), lit(0L)))
-      .withColumn("offA", coalesce(sum("btotA").over(wOff), lit(0L)))
-    val wIn = Window.partitionBy("bkt").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = ev.agg(
       sum(when(col("grp") === "click", 1L).otherwise(0L)).as("nA"),
       sum(when(col("grp") === "purchase", 1L).otherwise(0L)).as("nB"))
-    val cum = vc.join(broadcast(offsets.select("bkt", "off", "offA")), Seq("bkt"))
-      .withColumn("cum", col("off") + sum("cnt").over(wIn))
-      .withColumn("cumA", col("offA") + sum("cntA").over(wIn))
+    val cum = GlobalOrder.exclusivePrefix(vc, "v", floor(col("v")).cast("long"),
+        col("cnt") -> "pre", col("cntA") -> "preA")
+      .withColumn("cum", col("pre") + col("cnt"))
+      .withColumn("cumA", col("preA") + col("cntA"))
       .crossJoin(broadcast(totals))
       .withColumn("d", abs(
         col("cumA").cast("double") / col("nA") -
@@ -1150,11 +1132,10 @@ trait SparkEntryTail extends SparkEntryMid {
     * first — n·Σxy overflows int64 at scale but the cast is the same
     * deterministic op on both engines). Ranking is distributed the
     * statsMannwhitney way: quantity has a 50-value domain (broadcast
-    * rank map); price ranks use floor(v/1000) coarse buckets so only
-    * the ~100-row bucket-offset relation sees an ordered window and
-    * the per-value ranks run under bucket-partitioned windows. The
-    * oracle deliberately uses the single-window global-rank
-    * formulation — independent of the two-phase mechanism. */
+    * rank map); price ranks come from [[graft.core.GlobalOrder]] over
+    * the distinct prices bucketed by floor(y/1000). The oracle
+    * deliberately uses the single-window global-rank formulation —
+    * independent of the bucketed one. */
   private[graft] def statsSpearman(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select(col("l_quantity").as("x"), col("l_extendedprice").as("y"))
@@ -1163,18 +1144,11 @@ trait SparkEntryTail extends SparkEntryMid {
     val wX = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, -1)
     val xr = xvc.withColumn("r2x",
       lit(2L) * coalesce(sum("cnt").over(wX), lit(0L)) + col("cnt") + 1L)
-    // y: near-unique — two-phase bucketed ranking, no corpus-wide sort
+    // y: near-unique — bucketed GlobalOrder ranking, no corpus-wide sort
     val yvc = li.groupBy("y").agg(count(lit(1)).as("cnt"))
-      .withColumn("bkt", floor(col("y") / 1000.0).cast("long"))
-    val wOff = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    val yOff = yvc.groupBy("bkt").agg(sum("cnt").as("btot"))
-      .withColumn("off", coalesce(sum("btot").over(wOff), lit(0L)))
-    val wIn = Window.partitionBy("bkt").orderBy("y")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val yr = yvc.join(broadcast(yOff.select("bkt", "off")), Seq("bkt"))
-      .withColumn("r2y",
-        lit(2L) * (col("off") + coalesce(sum("cnt").over(wIn), lit(0L))) +
-          col("cnt") + 1L)
+    val yr = GlobalOrder.exclusivePrefix(yvc, "y",
+        floor(col("y") / 1000.0).cast("long"), col("cnt") -> "lessY")
+      .withColumn("r2y", lit(2L) * col("lessY") + col("cnt") + 1L)
     val joined = li
       .join(broadcast(xr.select("x", "r2x")), Seq("x"))
       .join(yr.select("y", "r2y"), Seq("y"))
@@ -1764,33 +1738,27 @@ trait SparkEntryTail extends SparkEntryMid {
         ((col("hi") - col("lo")) / 1000.0)), lit(999L)).cast("long").as("bin"))
       .groupBy("x", "bin").agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    val hist = vc.groupBy("bin").agg(sum("c").as("c"))
-    val cum = hist.withColumn("cum",
-      sum("c").over(Window.orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, 0)))
-    val qdf = st0.select(col("lo"), col("hi"), col("n"),
-      explode(array(lit(0.5), lit(0.9), lit(0.99))).as("q"))
-    val est = qdf.join(cum, col("cum") >= col("q") * col("n"))
-      .groupBy("q", "lo", "hi").agg(min("bin").as("qbin"))
-      .withColumn("est",
-        col("lo") + (col("qbin") + 1) * ((col("hi") - col("lo")) / 1000.0))
-    val cumv = vc.withColumn("cumc",
-      sum("c").over(Window.orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, 0)))
-    val tgt = st0.select(col("n"),
+    // cumulative counts over the sorted distinct values (`bin` is an
+    // order-preserving bucket of x). A bin's cumulative count reaches
+    // q·n iff one of its values' does, so the estimate's bin and the
+    // exact order statistics come from ONE aggregation over them.
+    val cumv = GlobalOrder.exclusivePrefix(vc, "x", col("bin"), col("c") -> "pre")
+      .withColumn("cumc", col("pre") + col("c"))
+    val tgt = st0.select(col("lo"), col("hi"), col("n"),
         explode(array(lit(0.5), lit(0.9), lit(0.99))).as("q"))
       .withColumn("pos", col("q") * (col("n") - lit(1L)).cast("double"))
       .withColumn("lower", floor(col("pos")))
       .withColumn("higher", ceil(col("pos")))
-    val exact = cumv.crossJoin(broadcast(tgt))
-      .groupBy("q", "pos", "lower", "higher")
-      .agg(min(when(col("cumc") >= col("lower") + 1, col("x"))).as("lv"),
+    cumv.crossJoin(broadcast(tgt))
+      .groupBy("q", "lo", "hi", "pos", "lower", "higher")
+      .agg(min(when(col("cumc") >= col("q") * col("n"), col("bin"))).as("qbin"),
+        min(when(col("cumc") >= col("lower") + 1, col("x"))).as("lv"),
         min(when(col("cumc") >= col("higher") + 1, col("x"))).as("hv"))
-      .select(col("q"),
-        when(col("higher") === col("lower"), col("lv"))
-          .otherwise((col("higher") - col("pos")) * col("lv") +
-            (col("pos") - col("lower")) * col("hv")).as("exact"))
-    est.join(exact, Seq("q"))
+      .withColumn("est",
+        col("lo") + (col("qbin") + 1) * ((col("hi") - col("lo")) / 1000.0))
+      .withColumn("exact", when(col("higher") === col("lower"), col("lv"))
+        .otherwise((col("higher") - col("pos")) * col("lv") +
+          (col("pos") - col("lower")) * col("hv")))
       .select(col("q"), col("qbin"), col("est"), col("exact"),
         round(col("est") - col("exact"), 6).as("err"))
       .orderBy("q")
@@ -1897,7 +1865,7 @@ trait SparkEntryTail extends SparkEntryMid {
     *
     * Scale shape: every stage is the already-audited operator —
     * per-row predicates, keyed aggs, a broadcast of the (bounded)
-    * eval-gram set, and the two-phase prefix pack; nothing here adds
+    * eval-gram set, and the GlobalOrder prefix pack; nothing here adds
     * a shuffle the stages don't own. The oracle replays each stage's
     * published SQL formulation and unions the same funnel. */
   private[graft] def pipelinePretrain(s: SparkSession, dir: String): DataFrame = {
@@ -2032,10 +2000,9 @@ trait SparkEntryTail extends SparkEntryMid {
     * (tier · 2⁴⁰ + doc_id), which REQUIRES doc_id < 2⁴⁰ (~1.1e12 —
     * ample for the 100 TB contract's doc counts, but a corpus with
     * wider synthetic ids must widen the shift or order by a
-    * (tier, doc_id) struct instead), and packing is the same
-    * two-phase distributed prefix sum as [[graft.ext.Pack
-    * .packShards]]. Oracle replays score → tier → ordered prefix in
-    * SQL. */
+    * (tier, doc_id) struct instead), and packing is
+    * [[graft.ext.Pack.packShards]]. Oracle replays score → tier →
+    * ordered prefix in SQL. */
   private[graft] def packCurriculum(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val base = docs.select(col("doc_id"),

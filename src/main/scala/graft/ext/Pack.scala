@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.GlobalOrder
 
 /** Token-budget shard packing: assign each document a shard id such
   * that consecutive documents (in id order) fill each shard to a
@@ -14,76 +15,31 @@ import org.apache.spark.sql.functions._
   * (documents are never split; a shard may overflow by at most one
   * document, the standard greedy rule).
   *
-  * The naive formulation — `sum(w) OVER (ORDER BY id)` — is a GLOBAL
-  * window: Spark plans it as a single-partition sort, one task doing
-  * all the work. This implementation is the distributed two-phase
-  * prefix sum instead:
-  *
-  *   1. coarse-bucket rows by `id div bucketWidth` (order-preserving);
-  *   2. per-bucket totals (one map-side-combinable aggregation over
-  *      n/bucketWidth rows) → running bucket offsets (a window over
-  *      the TINY bucket relation only);
-  *   3. broadcast the offsets back; within-bucket running sum is a
-  *      window PARTITIONED by bucket — parallel across buckets.
-  *
-  * Total cost: one aggregation + one keyed shuffle of the corpus +
-  * one broadcast of n/bucketWidth offset rows. At 10¹⁰ docs and
-  * bucketWidth 10⁶ the offset relation is 10⁴ rows — trivially
-  * broadcastable — and no single task ever sees more than one
-  * bucket. PlanSpec pins this shape (the only unpartitioned window
-  * runs over the bucket totals, never the corpus).
+  * The preceding cumulative weight is [[graft.core.GlobalOrder]]'s
+  * exclusive prefix sum over ids bucketed by `id div 4096` — never the
+  * global `sum(w) OVER (ORDER BY id)` window.
   */
 object Pack {
+
+  /** Id range per prefix-sum bucket: n dense ids make n/4096 buckets. */
+  private val BucketWidth = 4096.0
+
+  private def idBucket(idCol: String) =
+    floor(col(idCol).cast("double") / lit(BucketWidth)).cast("long")
 
   /** Add a `shard_id` column packing rows (in `idCol` order) into
     * consecutive shards of ≈`budget` total `weightCol`.
     *
-    * `idCol` must be numeric, non-negative and unique (document ids);
-    * `weightCol` non-negative (token counts). `bucketWidth` trades
-    * bucket-relation size against per-bucket parallelism — any value
-    * ≥ 1 is correct, only the plan economics change. */
+    * `idCol` must be numeric and unique (document ids); `weightCol`
+    * non-negative (token counts). */
   def packShards(df: DataFrame, idCol: String, weightCol: String,
-                 budget: Long, bucketWidth: Long = 4096L): DataFrame = {
+                 budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    withExclusivePrefix(df, idCol, weightCol, bucketWidth)
+    GlobalOrder.exclusivePrefix(df, idCol, idBucket(idCol),
+        col(weightCol).cast("long") -> "__pre")
       // preceding-weight div budget; __pre < 2⁵³ so the double path is exact
       .withColumn("shard_id", floor(col("__pre").cast("double") / lit(budget.toDouble)).cast("long"))
       .drop("__pre")
-  }
-
-  /** The distributed two-phase EXCLUSIVE prefix sum both packers share:
-    * adds `__pre` = Σ `weightCol` over all rows with smaller `idCol`.
-    * See the object scaladoc for why this beats the global-window
-    * formulation at scale. */
-  private def withExclusivePrefix(df: DataFrame, idCol: String, weightCol: String,
-                                  bucketWidth: Long): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
-    val reserved = Seq("__bucket", "__bw", "__boff", "__pre")
-    val hits = reserved.filter(df.columns.contains)
-    require(hits.isEmpty,
-      s"prefix-sum packing uses reserved working columns already present in the input: $hits")
-
-    val bucket = floor(col(idCol).cast("double") / lit(bucketWidth.toDouble)).cast("long")
-
-    // Phase 1: per-bucket totals — tiny relation, map-side combinable.
-    val totals = df.groupBy(bucket.as("__bucket"))
-      .agg(sum(col(weightCol).cast("long")).as("__bw"))
-    // Running offset over the bucket relation only (n/bucketWidth rows —
-    // the deliberate, bounded use of a global window).
-    val offW = Window.orderBy("__bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = totals
-      .withColumn("__boff", coalesce(sum(col("__bw")).over(offW), lit(0L)))
-      .select("__bucket", "__boff")
-
-    // Phase 2: within-bucket exclusive running sum, parallel per bucket.
-    val inW = Window.partitionBy("__bucket").orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("__bucket", bucket)
-      .join(broadcast(offsets), "__bucket")
-      .withColumn("__pre",
-        col("__boff") + coalesce(sum(col(weightCol).cast("long")).over(inW), lit(0L)))
-      .drop("__bucket", "__boff")
   }
 
   /** Concat-and-chunk sequence packing — the LM-training data step:
@@ -99,21 +55,18 @@ object Pack {
     * Output: (seq_idx, tokens, n_tokens) with `tokens` the ordered id
     * array.
     *
-    * Scale shape: per-document lengths feed the same two-phase
-    * distributed prefix sum as [[packShards]] (no global window over
-    * the corpus); the explode emits (global-pos, id) pairs that
-    * shuffle ONCE on seq_idx; sequence assembly is the array_sort ∘
-    * collect_list struct pattern (never collect_list order). Nothing
-    * reaches the driver. */
+    * Scale shape: per-document lengths feed the same
+    * [[graft.core.GlobalOrder]] prefix sum as [[packShards]]; the
+    * explode emits (global-pos, id) pairs that shuffle ONCE on seq_idx;
+    * sequence assembly is the array_sort ∘ collect_list struct pattern
+    * (never collect_list order). Nothing reaches the driver. */
   def packSequences(ids: DataFrame, seqLen: Int, eosId: Int = -1,
-                    idCol: String = "doc_id", tokenCol: String = "token_ids",
-                    bucketWidth: Long = 4096L): DataFrame = {
+                    idCol: String = "doc_id", tokenCol: String = "token_ids"): DataFrame = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
     val withEos = ids.select(col(idCol),
         concat(col(tokenCol), array(lit(eosId))).as("__toks"))
       .withColumn("__len", size(col("__toks")).cast("long"))
-    val pre = withExclusivePrefix(withEos, idCol, "__len", bucketWidth)
-    pre
+    GlobalOrder.exclusivePrefix(withEos, idCol, idBucket(idCol), col("__len") -> "__pre")
       .select(col("__pre"), posexplode(col("__toks")).as(Seq("__p", "__tid")))
       .withColumn("__gpos", col("__pre") + col("__p"))
       // __gpos < 2⁵³ so the double floor-div path is exact

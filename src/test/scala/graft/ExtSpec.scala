@@ -746,7 +746,7 @@ class ExtSpec extends AnyFunSuite {
     assert(again == capped.select("doc_id").collect().map(_.getLong(0)).toSet)
   }
 
-  test("packShards equals the single-window prefix sum and is bucketWidth-invariant") {
+  test("packShards equals the single-window prefix sum") {
     import graft.ext.Pack
     import org.apache.spark.sql.expressions.Window
     val w = docs.select(col("doc_id"), tokenCount(col("text")).cast("long").as("w"))
@@ -755,12 +755,10 @@ class ExtSpec extends AnyFunSuite {
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("doc_id"), floor(col("pre") / 2000.0).cast("long").as("shard_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (width <- Seq(1L, 7L, 64L, 100000L)) {
-      val packed = Pack.packShards(w, "doc_id", "w", budget = 2000L, bucketWidth = width)
-        .select("doc_id", "shard_id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(packed == naive, s"bucketWidth=$width diverges from the naive prefix sum")
-    }
+    val packed = Pack.packShards(w, "doc_id", "w", budget = 2000L)
+      .select("doc_id", "shard_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(packed == naive, "packShards diverges from the naive prefix sum")
     // no shard exceeds budget + one document's weight (greedy overflow rule)
     val maxDocW = w.agg(max("w")).head().getLong(0)
     val shardTotals = Pack.packShards(w, "doc_id", "w", 2000L)
@@ -786,6 +784,16 @@ class ExtSpec extends AnyFunSuite {
     assert(one.length == 1 && one(0).getLong(2) == 0L)
   }
 
+  test("packShards keeps a null doc_id row and packs it first") {
+    import graft.ext.Pack
+    import spark.implicits._
+    val w = Seq((None, 3L), (Some(1L), 2L), (Some(2L), 4L)).toDF("doc_id", "w")
+    val got = Pack.packShards(w, "doc_id", "w", budget = 5L).collect()
+      .map(r => (Option(r.getAs[java.lang.Long](0)).map(_.longValue), r.getLong(2))).toSeq
+    // exclusive prefix with the null first: 0, 3, 5 → shards 0, 0, 1
+    assert(got.sortBy(_._1) == Seq((None, 0L), (Some(1L), 0L), (Some(2L), 1L)), got.toString)
+  }
+
   test("packSequences lays out the concat-and-chunk stream exactly") {
     import graft.ext.Pack
     import spark.implicits._
@@ -807,10 +815,6 @@ class ExtSpec extends AnyFunSuite {
       .orderBy("seq_idx").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toList, r.getLong(2)))
     assert(ragged.last == ((2L, List(34, -1), 2L)))
-    // bucketWidth never changes the layout
-    val w1 = Pack.packSequences(ids, seqLen = 4, eosId = -1, bucketWidth = 1L)
-      .orderBy("seq_idx").collect().map(_.getSeq[Int](1).toList).toList
-    assert(w1 == out.map(_._2).toList)
   }
 
   test("temperatureWeights sums to 1 and α=1 reproduces natural proportions") {

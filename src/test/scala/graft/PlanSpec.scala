@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.GraftExtensions
@@ -22,6 +28,21 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
       .linesIterator.count(_.contains("Exchange hashpartitioning"))
+
+  /** Every node of a physical plan: subqueries included, AQE unwrapped
+    * to its initial plan, cached relations to the plan they cache. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] =
+    p.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => a +: planNodes(a.initialPlan)
+      case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
+      case n => Seq(n)
+    }.flatten
+
+  private def windows(df: org.apache.spark.sql.DataFrame): Seq[WindowExec] =
+    planNodes(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
+
+  private def attrNames(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+    es.collect { case a: Attribute => a.name }
 
   test("q03 multi-join broadcasts the dimension tables") {
     val plan = explained(SparkEntry.queries("q03_join_agg")(spark, TestSession.sf))
@@ -293,42 +314,91 @@ class PlanSpec extends AnyFunSuite {
     // match on the node name anywhere in the line
     val windowLines = simple.linesIterator.filter(_.contains("Window [")).toSeq
     assert(windowLines.size == 2, s"expected 2 Window nodes, got:\n${windowLines.mkString("\n")}")
-    assert(windowLines.exists(_.contains("[__bucket#")),
-      s"corpus running sum must partition by __bucket:\n${windowLines.mkString("\n")}")
+    assert(windowLines.exists(_.contains("[bkt#")),
+      s"corpus running sum must partition by bkt:\n${windowLines.mkString("\n")}")
     // bucket offsets join back by broadcast — the corpus must not
     // shuffle for the join
     assert(simple.contains("BroadcastHashJoin"), simple.take(2000))
   }
 
+  /** The GlobalOrder plan shape: the running sum is a window partitioned
+    * by bkt, the bucket offsets join back by broadcast, and nothing goes
+    * cartesian. Returns the plan's nodes for extra per-query checks. */
+  private def assertGlobalOrderPlan(q: String): Seq[SparkPlan] = {
+    val df = SparkEntry.queries(q)(spark, TestSession.sf)
+    val ws = windows(df)
+    assert(ws.exists(w => attrNames(w.partitionSpec) == Seq("bkt")),
+      s"$q: the running sum must be a window partitioned by bkt:\n${ws.mkString("\n")}")
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    assert(nodes.exists {
+        case j: BroadcastHashJoinExec => j.references.exists(_.name == "__obkt")
+        case _ => false
+      }, s"$q: bucket offsets must broadcast back, not shuffle the values:\n" +
+      df.queryExecution.executedPlan.toString.take(3000))
+    assert(!nodes.exists(_.nodeName == "CartesianProduct"), q)
+    nodes
+  }
+
+  test("GlobalOrder callers: bkt-partitioned running sum, broadcast offsets, no cartesian") {
+    for (q <- Seq("stats_gini", "quantile_hist", "pack_shards", "text_packseq"))
+      assertGlobalOrderPlan(q)
+  }
+
   test("rank-based stats: the value-relation window is bucket-partitioned") {
-    for (q <- Seq("stats_mannwhitney", "stats_ks")) {
-      val df = SparkEntry.queries(q)(spark, TestSession.sf)
-      val simple = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      // the distinct-value cumulative sum must run under a window
-      // PARTITIONED by the coarse bucket; the only unpartitioned window
-      // may run over the tiny per-bucket offset relation
-      val windowLines = simple.linesIterator.filter(_.contains("Window [")).toSeq
-      assert(windowLines.exists(_.contains("[bkt#")),
-        s"$q: the value-side window must partition by bkt:\n${windowLines.mkString("\n")}")
-      assert(simple.contains("BroadcastHashJoin"),
-        s"$q: bucket offsets must broadcast back, not shuffle the values:\n" + simple.take(1500))
-      assert(!simple.contains("CartesianProduct"), q)
-    }
+    for (q <- Seq("stats_mannwhitney", "stats_ks")) assertGlobalOrderPlan(q)
   }
 
   test("q22 global row_number: the orders-side window is bucket-partitioned") {
-    val df = SparkEntry.queries("q22_date_arith")(spark, TestSession.sf)
-    val simple = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    // the full-table rank must run under a window PARTITIONED by the
-    // coarse orderkey bucket; only the tiny per-bucket offset relation
-    // may see an unpartitioned window
-    val windowLines = simple.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(windowLines.exists(_.contains("[bkt#")),
-      s"orders-side window must partition by bkt:\n${windowLines.mkString("\n")}")
-    assert(simple.contains("BroadcastHashJoin"),
-      s"bucket offsets must broadcast back, not shuffle orders:\n" + simple.take(1500))
+    assertGlobalOrderPlan("q22_date_arith")
+  }
+
+  test("spearman: price ranking is bucket-partitioned, quantity rank map broadcasts") {
+    val nodes = assertGlobalOrderPlan("stats_spearman")
+    assert(nodes.exists {
+        case j: BroadcastHashJoinExec => j.leftKeys.exists(_.references.exists(_.name == "x"))
+        case _ => false
+      }, "the 50-value quantity rank map must broadcast")
+  }
+
+  test("curriculum and pipeline packing stay on the bucket-partitioned prefix plan") {
+    for (q <- Seq("pack_curriculum", "pipeline_pretrain")) assertGlobalOrderPlan(q)
+  }
+
+  test("scale lint: no query windows a data-sized relation without a partition key") {
+    // a window with an empty PARTITION BY plans as Exchange SinglePartition:
+    // one task sorts its whole input. Allowed only over a relation whose
+    // size is bounded by a named attribute domain, and for GlobalOrder's
+    // own offset window (ordered by its reserved bkt column, summing
+    // only its __btot bucket totals). Windows computed before a
+    // localCheckpoint are not in the plan and are not linted.
+    val allowed = Map(
+      "ml_stump" -> "floor(events.value) threshold domain, ~400 rows",
+      "stats_runs" -> "day domain, ~2.4k rows",
+      "stats_spearman" -> "l_quantity 1..50",
+      "stats_theilsen" -> "day domain, ~2.4k rows (residual per day)",
+      "text_packseq" -> "vocabulary cut to its top v=20 tokens before the rank",
+      "text_vocab_ids" -> "vocabulary cut to its top v=20 tokens before the rank",
+      "ts_rolling_median" -> "day domain, ~2.4k rows",
+      "user_growth" -> "day domain of events.ts, ~30 rows")
+    def globalOrderOffsets(w: WindowExec) =
+      attrNames(w.orderSpec.map(_.child)) == Seq("bkt") &&
+        w.windowExpression.flatMap(_.references).forall(a =>
+          a.name == "bkt" || a.name.startsWith("__btot"))
+    val t0 = System.nanoTime()
+    val found = SparkEntry.queries.toSeq.sortBy(_._1).map { case (q, build) =>
+      val t = System.nanoTime()
+      val open = windows(build(spark, TestSession.sf))
+        .filter(w => w.partitionSpec.isEmpty && !globalOrderOffsets(w))
+      (q, open, (System.nanoTime() - t) / 1e9)
+    }
+    val slowest = found.sortBy(-_._3).take(5).map { case (q, _, s) => f"$q $s%.1f s" }
+    info(f"linted ${found.size} queries in ${(System.nanoTime() - t0) / 1e9}%.1f s; " +
+      s"slowest builds: ${slowest.mkString(", ")}")
+    val offenders = found.collect { case (q, ws, _) if ws.nonEmpty && !allowed.contains(q) =>
+      s"$q: ${ws.map(_.simpleString(200)).mkString("; ")}" }
+    assert(offenders.isEmpty, s"unpartitioned windows:\n${offenders.mkString("\n")}")
+    val unused = allowed.keySet -- found.collect { case (q, ws, _) if ws.nonEmpty => q }
+    assert(unused.isEmpty, s"allowlist entries with no unpartitioned window: $unused")
   }
 
   test("text_zipf ranks the vocabulary with the heap aggregate, no window at all") {
@@ -339,19 +409,6 @@ class PlanSpec extends AnyFunSuite {
       s"text_zipf must not contain any Window node:\n" + simple.take(1500))
     assert(simple.contains("topk_by_score"),
       s"expected the TopKByScore aggregate in the plan:\n" + simple.take(1500))
-  }
-
-  test("curriculum and pipeline packing stay on the bucket-partitioned prefix plan") {
-    for (q <- Seq("pack_curriculum", "pipeline_pretrain")) {
-      val df = SparkEntry.queries(q)(spark, TestSession.sf)
-      val simple = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      val windowLines = simple.linesIterator.filter(_.contains("Window [")).toSeq
-      assert(windowLines.exists(_.contains("[__bucket#")),
-        s"$q: pack prefix must run under a __bucket-partitioned window:\n" +
-          windowLines.mkString("\n"))
-      assert(!simple.contains("CartesianProduct"), q)
-    }
   }
 
   test("bloom_join prunes the fact side with might_contain before the join") {
@@ -422,8 +479,8 @@ class PlanSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
     val windowLines = simple.linesIterator.filter(_.contains("Window [")).toSeq
     assert(windowLines.size == 2, s"expected 2 Window nodes, got:\n${windowLines.mkString("\n")}")
-    assert(windowLines.exists(_.contains("[__bucket#")),
-      s"corpus running sum must partition by __bucket:\n${windowLines.mkString("\n")}")
+    assert(windowLines.exists(_.contains("[bkt#")),
+      s"corpus running sum must partition by bkt:\n${windowLines.mkString("\n")}")
     assert(simple.contains("BroadcastHashJoin"), simple.take(2000))
   }
 
@@ -510,18 +567,6 @@ class PlanSpec extends AnyFunSuite {
     // appear is a corpus-sized shuffle join
     assert(!plan.contains("SortMergeJoin"), "no corpus-sized join expected")
     assert(plan.contains("BroadcastExchange"), "stats row should broadcast")
-  }
-
-  test("spearman: price ranking is bucket-partitioned, quantity rank map broadcasts") {
-    val df = SparkEntry.queries("stats_spearman")(spark, TestSession.sf)
-    val simple = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    val windowLines = simple.linesIterator.filter(_.contains("Window [")).toSeq
-    assert(windowLines.exists(_.contains("[bkt#")),
-      s"price-side window must partition by bkt:\n${windowLines.mkString("\n")}")
-    assert(simple.contains("BroadcastHashJoin"),
-      "bucket offsets and the 50-value quantity rank map must broadcast")
-    assert(!simple.contains("CartesianProduct"), simple.take(1500))
   }
 
   test("anova: one map-side-combinable aggregation, no join, no window") {
