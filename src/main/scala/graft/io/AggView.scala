@@ -236,15 +236,21 @@ object AggView {
     // covers every window segment; a view spec naming a since-renamed
     // column fails loudly at analysis rather than silently grouping
     // on nothing)
-    val headMapping = ManifestTable.columnMappingAt(spark, baseRoot, head)
+    val headSnap = ManifestTable.snapshotAt(spark, baseRoot, Some(head))
+    val headMapping = headSnap.actions._2
+    // window segments are named by the head, or (DML pre-images) by the
+    // version just before the commit that dropped them
+    val metas = headSnap.metas ++
+      pre.collect { case (s, Some(m)) => s -> m }
+    def readRaw(segs: Seq[String]) = ManifestTable.applyMapping(
+      ManifestTable.readSegs(spark, baseRoot, segs, metas), headMapping)
     val ins = chgSegs.filterNot(_.startsWith("del-"))
     val insRows0 =
       if (ins.isEmpty)
         // only safe rewrites (and/or deletes) in the window: the
         // cursor must still advance — an empty insert partial
         ManifestTable.read(spark, baseRoot).filter(lit(false))
-      else ManifestTable.applyMapping(
-        ManifestTable.readSegs(spark, baseRoot, ins), headMapping)
+      else readRaw(ins)
     // merged-read parity: outstanding tombstones hide insert rows too.
     // Tombstones are resolved AT THE PINNED HEAD, not the live
     // manifest: a delete committed between this sync's version capture
@@ -252,7 +258,7 @@ object AggView {
     // over (it would never be added here, yet the NEXT sync's window
     // would retract its pre-image — a silent double-subtraction).
     val insRows = ManifestTable.tombstonesOf(spark, baseRoot,
-        ManifestTable.segmentsAt(spark, baseRoot, head)) match {
+        headSnap.segs, metas) match {
       case Some(t0) if ins.nonEmpty =>
         val t = ManifestTable.applyMapping(t0, headMapping)
         insRows0.join(broadcast(t), t.columns.toSeq, "left_anti")
@@ -263,9 +269,7 @@ object AggView {
     val retractPartials =
       (if (dels.isEmpty || cursor == 0L) Seq.empty
        else {
-         val keys = ManifestTable.applyMapping(
-           dels.map(d => spark.read.parquet(s"$baseRoot/$d"))
-             .reduce(_ unionByName _).distinct(), headMapping)
+         val keys = readRaw(dels).distinct()
          Seq(ManifestTable.readMergedAt(spark, baseRoot, cursor)
            .join(broadcast(keys), keys.columns.toSeq, "left_semi")
            .groupBy(gcols: _*)
@@ -278,8 +282,7 @@ object AggView {
       // dirs must still exist — the base's retention horizon covers the
       // sync cadence or this read fails loudly (rebuild).
       (if (pre.isEmpty || cursor == 0L) Seq.empty
-       else Seq(ManifestTable.applyMapping(
-           ManifestTable.readSegs(spark, baseRoot, pre.map(_._1)), headMapping)
+       else Seq(readRaw(pre.map(_._1))
          .groupBy(gcols: _*)
          .agg(spec.aggs.head.retract, spec.aggs.tail.map(_.retract): _*)))
     // fold inserts + retractions into ONE stored partial (merge of

@@ -189,18 +189,19 @@ object ManifestDml {
     (f, p, v, all, rel)
   }
 
+  /** Every segment's metadata, as the pinned relation's file index
+    * already holds it (no second manifest read or segment listing). */
+  private def indexMetas(
+      rel: org.apache.spark.sql.execution.datasources.HadoopFsRelation) =
+    rel.location.asInstanceOf[graft.sources.ManifestFileIndex].segMetas
+
   /** The path component right after the table root IS the segment
     * name, for flat (`root/seg/part-*`) and partitioned
-    * (`root/seg/k=v/part-*`) segments alike. Attribution compares PATHS,
-    * with the scheme and authority cut off `input_file_name()`, so it
-    * does not depend on how the root was spelled (`/x/t`, `file:/x/t`,
-    * `file:///x/t`) or how the reader qualified it. Must be projected
-    * on the scan side, never post-join. */
-  private def segOf(f: org.apache.hadoop.fs.FileSystem, p: Path): Column = {
-    val rootPath = f.makeQualified(p).toUri.getRawPath.stripSuffix("/")
-    val filePath = regexp_replace(input_file_name(), "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
-    substring_index(filePath.substr(lit(rootPath.length + 2), lit(1 << 30)), "/", 1)
-  }
+    * (`root/seg/k=v/part-*`) segments alike ([[ManifestTable
+    * .rootRelative]]). Must be projected on the scan side, never
+    * post-join. */
+  private def segOf(f: org.apache.hadoop.fs.FileSystem, p: Path): Column =
+    substring_index(ManifestTable.rootRelative(f, p, input_file_name()), "/", 1)
 
   /** Shared copy-on-write core: find touched segments through the
     * pruned predicate scan, rewrite them with `rewrite`, swap
@@ -232,7 +233,7 @@ object ManifestDml {
         s"(${touched.filterNot(allSet).mkString(", ")}) — root prefix mismatch")
 
     // ---- phase 2: rewrite ONLY the touched segments ----
-    val metas = ManifestTable.segmentMetas(spark, root, Some(v))
+    val metas = indexMetas(rel)
     val rows = ManifestTable.applyMapping(
       srcTaggedRead(spark, root, segCol, touched, rel, metas), mapping)
     val kept = rewrite(rows)
@@ -318,14 +319,11 @@ object ManifestDml {
     * keep it, projections pass it) and becomes the replacement-segment
     * split at write time.
     *
-    * Plan shape at broad touch counts: FLAT segments sharing an
-    * embedded schema are read in ONE multi-path scan per schema group
-    * (a map-literal lookup on `input_file_name()` derives the source
-    * tag), so a 1000-segment UPDATE plans a handful of scan nodes, not
-    * a 1000-way union chain. Hive-partitioned segments keep the
-    * per-segment read (multi-path reads reject per-segment partition
-    * dir layouts — CONFLICTING_DIRECTORY_STRUCTURES), as do legacy
-    * segments without an embedded `#meta` schema. */
+    * Plan shape: ONE scan over all touched segments, flat or
+    * partitioned ([[ManifestTable.readSegs]]); a map-literal lookup on
+    * the file's segment ([[segOf]]) derives the source tag, so a
+    * 1000-segment UPDATE plans one scan node, not a 1000-way union
+    * chain. */
   private def srcTaggedRead(spark: SparkSession, root: String,
       segCol: Column, touched: Seq[String],
       rel: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
@@ -333,30 +331,8 @@ object ManifestDml {
     require(!(rel.dataSchema.fieldNames ++ rel.partitionSchema.fieldNames)
         .exists(_.equalsIgnoreCase(SrcCol)),
       s"table column $SrcCol collides with DML rewrite plumbing — rename it")
-    val idx = touched.zipWithIndex.toMap
-    def perSegment(s: String): DataFrame = {
-      // manifest-embedded schema when present — no per-segment footer
-      // inference (legacy segments without #meta lines fall back)
-      val rd = metas.get(s).flatMap(_.schema) match {
-        case Some(st) => spark.read.schema(st).parquet(s"$root/$s")
-        case None => spark.read.parquet(s"$root/$s")
-      }
-      conformTo(spark, rd, rel).withColumn(SrcCol, lit(idx(s)))
-    }
-    val frames =
-      if (rel.partitionSchema.nonEmpty) touched.map(perSegment)
-      else {
-        val tagExpr = element_at(typedLit(idx), segCol)
-        val bySchema = touched.groupBy(s => metas.get(s).flatMap(_.schema))
-        bySchema.toSeq.flatMap {
-          case (Some(st), segs) =>
-            val rd = spark.read.schema(st)
-              .parquet(segs.map(s => s"$root/$s"): _*)
-            Seq(conformTo(spark, rd, rel).withColumn(SrcCol, tagExpr))
-          case (None, segs) => segs.map(perSegment)
-        }
-      }
-    frames.reduce(_ unionByName _)
+    conformTo(spark, ManifestTable.readSegs(spark, root, touched, metas), rel)
+      .withColumn(SrcCol, element_at(typedLit(touched.zipWithIndex.toMap), segCol))
   }
 
   /** Reserved rewrite-plumbing column: source-segment index. */
@@ -488,7 +464,7 @@ object ManifestDml {
 
       // ---- phase 2: action chains over the touched rows + inserts ----
       if (touched.nonEmpty) {
-        val segMetas = ManifestTable.segmentMetas(spark, root, Some(v))
+        val segMetas = indexMetas(rel)
         val base0 = ManifestTable.applyMapping(
           srcTaggedRead(spark, root, segCol, touched, rel, segMetas), mapping)
         val base = evolveCols.foldLeft(base0) { case (df, (n, dt)) =>
@@ -677,7 +653,7 @@ object ManifestDml {
     * inserts ride tag -1 into their own append-like segment. */
   private def swapSegments(spark: SparkSession, root: String, v: Long,
       touched: Seq[String], kept: DataFrame, partBy: Seq[String],
-      metas: Map[String, ManifestTable.SegMeta] = Map.empty): Unit = {
+      metas: Map[String, ManifestTable.SegMeta]): Unit = {
     val (f, p) = ManifestTable.fs(spark, root)
     val all = ManifestTable.readManifest(f, p, v)
     val rest = all.filterNot(touched.toSet)
@@ -721,15 +697,8 @@ object ManifestDml {
     // per-replacement sidecars: stat/bloom columns come from the
     // segment it REPLACES (the -1 insert segment takes the union — it
     // has no single source)
-    val statsOf = touched.map(s => metas.get(s).flatMap(_.stats) match {
-      case Some(st) => st.cols.keys.toSeq // embedded copy: zero IO
-      case None => ManifestTable.segmentStats(spark, root, s)
-        .toSeq.flatMap(_.cols.keys).toSeq
-    })
-    val bloomsOf = touched.map(s => metas.get(s) match {
-      case Some(m) => m.blooms
-      case None => ManifestTable.bloomColsOf(f, new Path(p, s))
-    })
+    val statsOf = touched.map(metas(_).stats.toSeq.flatMap(_.cols.keys))
+    val bloomsOf = touched.map(metas(_).blooms)
     def statColsFor(i: Int): Seq[String] =
       if (i >= 0) statsOf(i) else statsOf.flatten.distinct
     def bloomColsFor(i: Int): Seq[String] =

@@ -1,9 +1,13 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat, count, datediff, lit,
-  max, min, struct, substring_index, unix_micros}
+import scala.collection.immutable.SeqMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, count, datediff, lit, max, min,
+  regexp_replace, struct, unix_micros}
 import org.apache.spark.sql.types._
 
 /** A minimal manifest-committed parquet table: the append-capable
@@ -38,8 +42,8 @@ import org.apache.spark.sql.types._
   * conditional PUT, the same escape hatch every manifest-log format
   * uses. Segment count grows one per non-empty ingest — [[compact]]
   * folds them back to one when the reader's per-segment open cost
-  * starts to matter (the reader hands Spark an explicit dir list, so
-  * scan parallelism is unaffected either way).
+  * starts to matter (the reader hands Spark the commit's file list,
+  * so scan parallelism is unaffected either way).
   */
 object ManifestTable {
 
@@ -215,12 +219,14 @@ object ManifestTable {
     * open, no footer-merge job over every file. On a streaming-fed
     * log with thousands of ingests between packs that was the
     * remaining O(segments) driver IO per query; real lakehouse logs
-    * carry exactly this in the commit. Sidecars keep being written
-    * (the typed API's `segmentStats`/`readRange` path and external
-    * tools read them); the manifest line is a COPY taken at commit
-    * time, authoritative for the snapshot it names. Tables written
-    * before this existed (or by hand) simply lack `#meta` lines and
-    * fall back to the per-segment listing/sidecar path, per segment. */
+    * carry exactly this in the commit. Every reader — typed and SQL —
+    * plans from these lines through [[segmentMetas]]/[[readSegs]].
+    * Sidecars keep being written (external tools and tables whose
+    * manifest lost its `#meta` lines read them); the manifest line is
+    * a COPY taken at commit time, authoritative for the snapshot it
+    * names. A segment without a parseable line (written before this
+    * existed, or by hand) gets its metadata derived from its dir, in
+    * one place ([[metaOf]]). */
   private val MetaPrefix = "#meta "
 
   private[io] def manifestLines(f: FileSystem, root: Path, v: Long): Seq[String] = {
@@ -374,14 +380,6 @@ object ManifestTable {
     (dropColLines(lines), colMapLines(lines))
   }
 
-  /** Head-version [[schemaActionsAt]]; empty for an uncommitted root. */
-  private def schemaActions(spark: SparkSession,
-      root: String): (Seq[String], Seq[(String, String)]) = {
-    val (f, p) = fs(spark, root)
-    currentVersion(f, p).map(v => schemaActionsAt(spark, root, v))
-      .getOrElse((Seq.empty, Seq.empty))
-  }
-
   /** The reader-side schema projection every face applies LAST: drop
     * the tombstoned physical columns, then rename the survivors to
     * their logical names. */
@@ -455,18 +453,111 @@ object ManifestTable {
   def deleteSegments(spark: SparkSession, root: String): Seq[String] =
     segments(spark, root).filter(_.startsWith(DelPrefix))
 
-  /** Union a segment list with schema EVOLUTION tolerance: later
-    * segments may add columns (earlier rows read NULL there) — the
-    * additive-evolution contract every append-only log needs, since a
-    * 100 TB table is never rewritten just to add a field. Each segment
-    * is read single-rooted and unioned — a multi-path read would
-    * reject hive-partitioned segment layouts
-    * (CONFLICTING_DIRECTORY_STRUCTURES) and this way partition
-    * discovery (and pruning on the partition column) works per
-    * segment. Same files either way; scan parallelism is per-file. */
-  private[graft] def readSegs(spark: SparkSession, root: String, segs: Seq[String]): DataFrame =
-    segs.map(s => spark.read.parquet(s"$root/$s"))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+  /** The one segment reader: ONE parquet relation over exactly `segs`
+    * of `root`, planned from their [[SegMeta]]s — `metas` may hold any
+    * subset (the embedded copies of the version that named the
+    * segments); the rest are derived by [[metaOf]]. The file list is
+    * the commit's, so files the commit never named are invisible, and
+    * the [[graft.sources.ManifestFileIndex]] prunes whole segments
+    * (zone maps, Bloom sidecars) and hive partition dirs from the
+    * query's pushed filters. The schema is the additive merge of the
+    * segments' schemas in commit order ([[mergeAdditive]]: later
+    * segments may add columns, earlier rows read NULL there — the
+    * evolution contract every append-only log needs, since a 100 TB
+    * table is never rewritten just to add a field); only a segment
+    * without an embedded schema costs a footer-merge job. Plan time
+    * does no filesystem call and runs no job on a meta-bearing table,
+    * so a plan builds even over segments maintenance has since retired
+    * (the streaming source's recovery contract). Data segments must
+    * share one layout (all flat, or all partitioned on the same
+    * columns); a mix fails loudly ([[requireOneLayout]]), and
+    * [[compact]] repairs it. */
+  private[graft] def readSegs(spark: SparkSession, root: String,
+      segs: Seq[String], metas: Map[String, SegMeta]): DataFrame =
+    spark.baseRelationToDataFrame(segRelation(spark, root, segs, metas))
+
+  /** [[readSegs]]' relation; `atVersion` pins the index for the SQL
+    * face's DML (see [[graft.sources.ManifestFileIndex.pinnedVersion]]). */
+  private[graft] def segRelation(spark: SparkSession, root: String,
+      segs: Seq[String], metas: Map[String, SegMeta],
+      atVersion: Long = -1L): HadoopFsRelation = {
+    val all = segs.map(s => s -> metaOf(spark, root, s, metas.get(s))).toMap
+    // a file-less segment counts only through an embedded schema (an
+    // ALTER marker on a partitioned table writes no file)
+    val schemas = segs.map(all)
+      .filter(m => m.files.nonEmpty || m.schema.isDefined).map(_.schema)
+    val merged =
+      if (schemas.nonEmpty && schemas.forall(_.isDefined))
+        mergeAdditive(schemas.flatten)
+      else None
+    val index = new graft.sources.ManifestFileIndex(spark, root, segs, all,
+      merged, atVersion)
+    val dataSchema = merged.getOrElse {
+      val files = index.inputFiles
+      if (files.isEmpty)
+        throw new IllegalStateException(
+          s"manifest table $root has no data files (every committed " +
+            "segment is empty) and no embedded schema; append data " +
+            "before reading it")
+      graft.sources.ManifestSource.lastBuildFooterJobs += 1
+      val footer =
+        spark.read.option("mergeSchema", "true").parquet(files.toSeq: _*).schema
+      mergeAdditive(footer +: segs.map(all).filter(_.files.isEmpty)
+        .flatMap(_.schema)).getOrElse(footer)
+    }
+    val partNames = index.partitionSchema.fieldNames.toSet
+    HadoopFsRelation(
+      location = index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = StructType(dataSchema.filterNot(f => partNames(f.name))),
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark)
+  }
+
+  /** Additive-evolution merge of per-segment schemas, in commit order:
+    * later segments may ADD columns, and a same-name column whose
+    * types differ by a SAFE WIDENING (the `ALTER COLUMN TYPE` marker-
+    * segment contract — int→bigint/double, float→double, decimal
+    * growth) merges to the WIDER type: the parquet scan then upcasts
+    * the narrow segments' values at read time (Spark 4 vectorized
+    * reader), so a widened 100 TB table reads as one homogeneous
+    * relation with zero rewrites. Any other type conflict is NOT
+    * additive → None (the caller falls back to the footer-merge job,
+    * which applies parquet's own reconciliation). */
+  private def mergeAdditive(schemas: Seq[StructType]): Option[StructType] = {
+    def widen(a: DataType, b: DataType): Option[DataType] =
+      if (a == b) Some(a)
+      else if (safeWiden(a, b)) Some(b)
+      else if (safeWiden(b, a)) Some(a)
+      else None
+    schemas.foldLeft(Option(StructType(Nil))) {
+      case (None, _) => None
+      case (Some(acc), st) =>
+        val byName = acc.fields.map(f => f.name -> f).toMap
+        val conflict = st.fields.exists(f =>
+          byName.get(f.name).exists(g => widen(g.dataType, f.dataType).isEmpty))
+        if (conflict) None
+        else Some(StructType(acc.fields.map { g =>
+          st.fields.find(_.name == g.name) match {
+            case Some(f) => g.copy(dataType = widen(g.dataType, f.dataType).get)
+            case None => g
+          }
+        } ++ st.fields.filterNot(f => byName.contains(f.name))))
+    }.filter(_.fields.nonEmpty)
+  }
+
+  /** A scanned file's path relative to `root` — `<segment>/<file>`,
+    * hive dirs included — from a file-path column (`input_file_name()`
+    * or `_metadata.file_path`). Compares PATHS, with the scheme and
+    * authority cut off the file's URI, so it does not depend on how
+    * the root was spelled (`/x/t`, `file:/x/t`, `file:///x/t`) or how
+    * the reader qualified it. */
+  private[graft] def rootRelative(f: FileSystem, root: Path, file: Column): Column = {
+    val rootPath = f.makeQualified(root).toUri.getRawPath.stripSuffix("/")
+    regexp_replace(file, "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
+      .substr(lit(rootPath.length + 2), lit(1 << 30))
+  }
 
   /** Per-physical-row surrogate identity, derived at READ time from
     * the parquet scan's metadata columns — `(segment-relative file
@@ -482,79 +573,113 @@ object ManifestTable {
   val RowIdCol = "_row_id"
 
   private[graft] def readSegsWithRowId(spark: SparkSession, root: String,
-      segs: Seq[String]): DataFrame =
-    segs.map { s =>
-      // the uuid-bearing segment name makes "/<seg>/" unique in the
-      // scan's absolute file path; everything after it is the
-      // segment-relative file (hive-partitioned layouts included)
-      spark.read.parquet(s"$root/$s").withColumn(RowIdCol, struct(
-        concat(lit(s + "/"), substring_index(
-          col("_metadata.file_path"), s"/$s/", -1)).as("path"),
-        col("_metadata.row_index").as("pos")))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+      segs: Seq[String], metas: Map[String, SegMeta]): DataFrame = {
+    val (f, p) = fs(spark, root)
+    readSegs(spark, root, segs, metas).withColumn(RowIdCol, struct(
+      rootRelative(f, p, col("_metadata.file_path")).as("path"),
+      col("_metadata.row_index").as("pos")))
+  }
 
   /** Head read with the [[RowIdCol]] surrogate stamped on every row —
     * the bootstrap snapshot for a change-feed consumer that applies
     * DML windows by row identity ([[readChanges]] `rowId = true`).
     * Tombstones are applied as in [[readMerged]]. */
-  def readWithRowId(spark: SparkSession, root: String): DataFrame = {
-    val segs = dataSegments(spark, root)
-    require(segs.nonEmpty, s"no committed manifest under $root")
-    val data = readSegsWithRowId(spark, root, segs)
-    val del = deleteSegments(spark, root)
-    val merged =
-      if (del.isEmpty) data
-      else {
-        val keys = readSegs(spark, root, del).distinct()
-        data.join(org.apache.spark.sql.functions.broadcast(keys),
-          keys.columns.toSeq, "left_anti")
-      }
-    applySchemaActions(merged, schemaActions(spark, root))
-  }
+  def readWithRowId(spark: SparkSession, root: String): DataFrame =
+    readSnapshot(spark, root, snapshotAt(spark, root, None), merge = true,
+      rowId = true)
 
-  /** Union-read every committed data segment. The dir list is
-    * explicit, so orphan (uncommitted) segments are invisible to
+  /** Read every committed data segment. The segment list is the
+    * manifest's, so orphan (uncommitted) segments are invisible to
     * readers. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val segs = dataSegments(spark, root)
-    require(segs.nonEmpty, s"no committed manifest under $root")
-    applySchemaActions(readSegs(spark, root, segs), schemaActions(spark, root))
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    readSnapshot(spark, root, snapshotAt(spark, root, None))
 
   /** Time-travel read: the data segments named by manifest version
     * `v`, exactly as a reader at that commit saw them. Reproducible
     * training runs pin a version instead of copying the corpus. */
-  def readAt(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val segs = segmentsAt(spark, root, v).filterNot(_.startsWith(DelPrefix))
-    require(segs.nonEmpty, s"manifest v$v of $root names no data segments")
-    applySchemaActions(readSegs(spark, root, segs), schemaActionsAt(spark, root, v))
+  def readAt(spark: SparkSession, root: String, v: Long): DataFrame =
+    readSnapshot(spark, root, snapshotAt(spark, root, Some(v)))
+
+  /** One manifest version as readers see it: its segments, their
+    * embedded metadata, its content fingerprint, and its schema actions
+    * (dropped physical columns, column mapping). `version` is the
+    * pinned version (None for a head read). */
+  private[graft] final case class Snapshot(version: Option[Long],
+      segs: Seq[String], metas: Map[String, SegMeta], fingerprint: String,
+      actions: (Seq[String], Seq[(String, String)]))
+
+  /** [[Snapshot]] of manifest `version` (head when None) — ONE
+    * manifest read. An uncommitted root has an empty head snapshot; a
+    * pinned version that was never committed throws. */
+  private[graft] def snapshotAt(spark: SparkSession, root: String,
+      version: Option[Long]): Snapshot = {
+    val (f, p) = fs(spark, root)
+    version.orElse(currentVersion(f, p)) match {
+      case None => Snapshot(None, Nil, Map.empty, "", (Nil, Nil))
+      case Some(v) => manifestSnapshot(spark, root, v).copy(version = version)
+    }
+  }
+
+  /** Every typed read of a snapshot: its data segments through
+    * [[readSegs]] (with the [[RowIdCol]] surrogate when `rowId`; one
+    * relation per layout group, unioned by name, when `anyLayout`),
+    * anti-joined with its tombstones when `merge`, then the schema
+    * actions. */
+  private def readSnapshot(spark: SparkSession, root: String, snap: Snapshot,
+      merge: Boolean = false, rowId: Boolean = false,
+      anyLayout: Boolean = false): DataFrame = {
+    val segs = snap.segs.filterNot(_.startsWith(DelPrefix))
+    require(segs.nonEmpty, snap.version.fold(s"no committed manifest under $root")(
+      v => s"manifest v$v of $root names no data segments"))
+    val data =
+      if (rowId) readSegsWithRowId(spark, root, segs, snap.metas)
+      else if (anyLayout) readSegsByLayout(spark, root, segs, snap.metas)
+      else readSegs(spark, root, segs, snap.metas)
+    val merged =
+      if (!merge) data
+      else tombstonesOf(spark, root, snap.segs, snap.metas) match {
+        case None => data
+        case Some(t) =>
+          data.join(org.apache.spark.sql.functions.broadcast(t),
+            t.columns.toSeq, "left_anti")
+      }
+    applySchemaActions(merged, snap.actions)
+  }
+
+  /** The distinct keys of the tombstone segments among `segs`. Every
+    * tombstone segment must carry the same key columns: they are read
+    * one relation each and unioned strictly by name, so a delete keyed
+    * `(id)` followed by one keyed `(id, ts)` fails loudly here — an
+    * additive merge would NULL-pad the first delete's `ts` and its rows
+    * would silently stop matching the anti-join. */
+  /** [[readSegs]] once per layout group ([[layoutOf]]; a file-less
+    * segment joins the first group), unioned by name with missing
+    * columns NULL — the one read that accepts a table whose data
+    * segments mix layouts, so [[compact]] can rewrite it into one. */
+  private def readSegsByLayout(spark: SparkSession, root: String,
+      segs: Seq[String], metas: Map[String, SegMeta]): DataFrame = {
+    val all = segs.map(s => s -> metaOf(spark, root, s, metas.get(s)))
+    val first = all.flatMap(m => layoutOf(m._2)).headOption
+    val keyed = all.map { case (s, m) => (s, layoutOf(m).orElse(first)) }
+    keyed.map(_._2).distinct
+      .map(k => readSegs(spark, root, keyed.collect { case (s, `k`) => s }, all.toMap))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   private[io] def tombstonesOf(spark: SparkSession, root: String,
-      segs: Seq[String]): Option[DataFrame] = {
-    val d = segs.filter(_.startsWith(DelPrefix))
-    if (d.isEmpty) None
-    else Some(d.map(s => spark.read.parquet(s"$root/$s"))
-      .reduce(_ unionByName _).distinct())
-  }
+      segs: Seq[String], metas: Map[String, SegMeta]): Option[DataFrame] =
+    segs.filter(_.startsWith(DelPrefix))
+      .map(d => readSegs(spark, root, Seq(d), metas))
+      .reduceOption(_ unionByName _).map(_.distinct())
 
   /** The union of all committed tombstone keys (column set = whatever
     * [[delete]] was given), or None when nothing was ever deleted.
     * Keys surface under their LOGICAL names (tombstone segments store
     * physical names like every other segment). */
-  def tombstones(spark: SparkSession, root: String): Option[DataFrame] =
-    tombstonesOf(spark, root, segments(spark, root))
-      .map(applyMapping(_, columnMapping(spark, root)))
-
-  private def mergeRead(spark: SparkSession, root: String,
-      segs: Seq[String]): DataFrame = {
-    val data = readSegs(spark, root, segs.filterNot(_.startsWith(DelPrefix)))
-    tombstonesOf(spark, root, segs) match {
-      case None => data
-      case Some(t) =>
-        data.join(org.apache.spark.sql.functions.broadcast(t),
-          t.columns.toSeq, "left_anti")
-    }
+  def tombstones(spark: SparkSession, root: String): Option[DataFrame] = {
+    val snap = snapshotAt(spark, root, None)
+    tombstonesOf(spark, root, snap.segs, snap.metas)
+      .map(applyMapping(_, snap.actions._2))
   }
 
   /** Merge-on-read: [[read]] minus [[tombstones]], anti-joined on the
@@ -563,15 +688,13 @@ object ManifestTable {
     * deletes; when the accumulated delete set outgrows broadcast
     * range, [[compact]] applies it physically and clears it. */
   def readMerged(spark: SparkSession, root: String): DataFrame =
-    applySchemaActions(mergeRead(spark, root, segments(spark, root)),
-      schemaActions(spark, root))
+    readSnapshot(spark, root, snapshotAt(spark, root, None), merge = true)
 
   /** Time-travel [[readMerged]]: state as of manifest version `v` —
     * deletes committed after `v` are invisible, deletes at or before
     * `v` apply. */
   def readMergedAt(spark: SparkSession, root: String, v: Long): DataFrame =
-    applySchemaActions(mergeRead(spark, root, segmentsAt(spark, root, v)),
-      schemaActionsAt(spark, root, v))
+    readSnapshot(spark, root, snapshotAt(spark, root, Some(v)), merge = true)
 
   /** Atomically publish `segs` as manifest version `v` through the
     * configured [[CommitStrategy]] (single winner per version; the
@@ -686,12 +809,15 @@ object ManifestTable {
     * partition columns), zone-map stats (the sidecar JSON, when
     * collected) and Bloom-sidecar column names. O(one segment) —
     * a listing plus one footer read — paid once per commit so NO
-    * reader ever pays it again. */
+    * reader ever pays it again. A segment with no files (an empty
+    * partitioned write, e.g. an ALTER marker on a partitioned table)
+    * embeds `writtenSchema`, the schema of the frame that wrote it. */
   private[io] def buildMeta(spark: SparkSession, f: FileSystem, root: String,
-      seg: String, statsJson: Option[String], bloomCols: Seq[String]): String = {
+      seg: String, statsJson: Option[String], bloomCols: Seq[String],
+      writtenSchema: Option[StructType] = None): String = {
     val files = listDataFilesRec(f, new Path(s"$root/$seg"), "")
     val schemaJson =
-      if (files.isEmpty) "null"
+      if (files.isEmpty) writtenSchema.fold("null")(_.json)
       else spark.read.parquet(s"$root/$seg").schema.json
     val filesJson = files.map { case (pp, l) =>
       s"""{"p":${jsonString(pp)},"l":$l}"""
@@ -750,37 +876,72 @@ object ManifestTable {
         else decodeMeta(rest.drop(sp + 1)).map(m => (rest.take(sp), m))
       }.toMap
 
-  /** Embedded per-segment metadata of manifest `version` (head when
-    * None): the one-log-read planning input for the SQL relation.
-    * Segments without a (parseable) `#meta` line are simply absent —
-    * callers fall back to the per-segment listing/sidecar path for
-    * those. */
+  /** A [[SegMeta]] for every segment manifest `version` (head when
+    * None) names, in commit order: the embedded copy where the
+    * manifest carries one, else [[metaOf]]'s derivation from the
+    * segment dir. Empty for an uncommitted root. */
   def segmentMetas(spark: SparkSession, root: String,
-      version: Option[Long] = None): Map[String, SegMeta] = {
-    val (f, p) = fs(spark, root)
-    version.orElse(currentVersion(f, p)) match {
-      case None => Map.empty
-      case Some(v) => metasFromLines(manifestLines(f, p, v))
-    }
+      version: Option[Long] = None): SeqMap[String, SegMeta] = {
+    val snap = snapshotAt(spark, root, version)
+    SeqMap.from(snap.segs.map(s => s -> metaOf(spark, root, s, snap.metas.get(s))))
   }
 
-  /** ONE-read snapshot of manifest `v`: (segment list, embedded metas,
-    * content fingerprint). The SQL relation's entire planning input —
-    * and the fingerprint is its cache key: version numbers can recur
-    * across destroy/recreate, but never with identical content (every
-    * segment name carries a fresh UUID). */
+  /** A segment's metadata: its `embedded` copy, else derived from its
+    * dir — the ONE place a reader lists a segment or opens its
+    * sidecars (a table written before `#meta` lines existed, or a
+    * manifest stripped of them). The derivation walks `col=value`
+    * dirs recursively and fails loudly on a level that mixes partition
+    * dirs with loose data files (such a segment would read back
+    * partially); it reads the `_stats.graft.json` sidecar (malformed →
+    * no stats, the conservative answer), takes the Bloom columns from
+    * the `_bloom.*` names, and leaves the schema to the footer-merge
+    * job. Counted in [[graft.sources.ManifestSource.lastBuildListOps]]
+    * (one per listing) and `lastBuildSidecarReads` (one per segment). */
+  private[graft] def metaOf(spark: SparkSession, root: String, seg: String,
+      embedded: Option[SegMeta]): SegMeta = embedded.getOrElse {
+    val (f, p) = fs(spark, root)
+    def list(dir: Path) = {
+      graft.sources.ManifestSource.lastBuildListOps += 1
+      f.listStatus(dir)
+    }
+    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
+    def level(all: Array[FileStatus], prefix: String): Seq[(String, Long)] = {
+      val dirs = all.filter(st => st.isDirectory &&
+        visible(st.getPath.getName) && st.getPath.getName.contains("="))
+      val files = all.filter(st => st.isFile && visible(st.getPath.getName))
+      if (dirs.isEmpty) files.map(st => (prefix + st.getPath.getName, st.getLen)).toSeq
+      else {
+        require(files.isEmpty,
+          s"segment $seg of $root mixes partition dirs with ${files.length} " +
+            s"loose data file(s) (e.g. ${files.head.getPath.getName}); " +
+            "refusing to read a partially-visible segment — repair the layout")
+        dirs.toSeq.flatMap(d =>
+          level(list(d.getPath), prefix + d.getPath.getName + "/"))
+      }
+    }
+    val top = list(new Path(p, seg))
+    graft.sources.ManifestSource.lastBuildSidecarReads += 1
+    val blooms = top.iterator.map(_.getPath.getName)
+      .filter(n => n.startsWith("_bloom.") && n.endsWith(".graft"))
+      .map(_.stripPrefix("_bloom.").stripSuffix(".graft")).toSeq
+    SegMeta(level(top, ""), None, segmentStats(spark, root, seg), blooms)
+  }
+
+  /** ONE-read [[Snapshot]] of manifest `v`. The SQL relation's entire
+    * planning input — and the fingerprint is its cache key: version
+    * numbers can recur across destroy/recreate, but never with
+    * identical content (every segment name carries a fresh UUID). */
   private[graft] def manifestSnapshot(spark: SparkSession, root: String,
-      v: Long): (Seq[String], Map[String, SegMeta], String, Seq[String],
-        Seq[(String, String)]) = {
+      v: Long): Snapshot = {
     val (f, p) = fs(spark, root)
     require(f.exists(new Path(p, ManifestPrefix + v)),
       s"no committed manifest version $v under $root")
     val lines = manifestLines(f, p, v)
-    val segs = lines.filterNot(_.startsWith("#"))
     val md = java.security.MessageDigest.getInstance("MD5")
     val hash = md.digest(lines.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    (segs, metasFromLines(lines), hash, dropColLines(lines), colMapLines(lines))
+    Snapshot(Some(v), lines.filterNot(_.startsWith("#")), metasFromLines(lines),
+      hash, (dropColLines(lines), colMapLines(lines)))
   }
 
   private[io] def writeSeg(df: DataFrame, dir: String, partitionBy: Seq[String]): Unit = {
@@ -800,10 +961,11 @@ object ManifestTable {
     * id can detect an already-committed batch from [[segments]] alone
     * (name scan, no data read) and skip the duplicate append.
     * `statsCols` names columns whose per-segment min/max are collected
-    * into a `_stats.graft.json` sidecar INSIDE the segment dir (an
-    * O(batch) pass over the committed bytes; data readers ignore
-    * `_`-prefixed files) — the zone-map input [[readRange]] prunes
-    * whole segments with. */
+    * (riding the write's scan) into the commit's `#meta` line and a
+    * `_stats.graft.json` sidecar INSIDE the segment dir (data readers
+    * ignore `_`-prefixed files) — the zone-map input every read prunes
+    * whole segments with. `partitionBy` must match the layout of the
+    * table's existing data segments ([[requireLayout]]). */
   def append(spark: SparkSession, root: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, tag: Option[String] = None,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
@@ -878,6 +1040,9 @@ object ManifestTable {
     val t = tag.map(_ + "-").getOrElse("")
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     var seg = s"seg-${v + 1}-$t$suffix"
+    var prior = priorMetas(f, p, v)
+    requireLayout(root, prior.iterator.filterNot(_._1.startsWith(DelPrefix))
+      .flatMap { case (s, j) => decodeMeta(j).map(s -> _) }, partitionBy)
     // flat + stats-bearing: the min/max/count ride the write's scan
     val (frame, obs) =
       if (pStats.nonEmpty && partitionBy.isEmpty) observedStats(pdf, pStats)
@@ -891,13 +1056,13 @@ object ManifestTable {
         case None => Some(writeStats(spark, f, s"$root/$seg", pStats))
       }
     if (pBlooms.nonEmpty) writeBlooms(spark, f, s"$root/$seg", pBlooms)
-    val meta = buildMeta(spark, f, root, seg, statsJson, pBlooms)
+    val meta = buildMeta(spark, f, root, seg, statsJson, pBlooms, Some(pdf.schema))
     var attempts = 0
     while (true) {
       try {
-        val prior = if (v == 0L) Seq.empty else readManifest(f, p, v)
-        commit(f, p, v + 1, prior :+ seg,
-          metas = priorMetas(f, p, v) + (seg -> meta), addMaps = addMaps)
+        val segs = if (v == 0L) Seq.empty else readManifest(f, p, v)
+        commit(f, p, v + 1, segs :+ seg, metas = prior + (seg -> meta),
+          addMaps = addMaps)
         return
       } catch {
         case _: CommitRaceLost if retryRaces && attempts < 50 =>
@@ -908,9 +1073,46 @@ object ManifestTable {
             s"append retry could not re-version segment $seg -> $ns")
           seg = ns
           v = nv
+          prior = priorMetas(f, p, v)
       }
     }
   }
+
+  /** Refuse a write whose new segment would break the table's ONE
+    * layout ([[requireOneLayout]]). The layout is read from `prior`'s
+    * file lists (the remaining data segments' metadata the writer
+    * already holds — no extra IO); a segment with no files carries no
+    * layout evidence, and a table whose segments predate `#meta` lines
+    * is not checked on append. */
+  private def requireLayout(root: String, prior: Iterator[(String, SegMeta)],
+      partitionBy: Seq[String]): Unit =
+    prior.flatMap { case (s, m) => layoutOf(m).map(s -> _) }.nextOption()
+      .foreach(first => requireOneLayout(root,
+        Seq(first, "the new segment" -> partitionBy)))
+
+  /** A segment's hive partition columns, read off its first data
+    * file's path (Nil = flat); None when it has no files. */
+  private[graft] def layoutOf(m: SegMeta): Option[Seq[String]] =
+    m.files.headOption.map(_._1.split("/").dropRight(1).toSeq
+      .map(_.takeWhile(_ != '=')))
+
+  /** Fail loudly unless every `(segment, partition columns)` names the
+    * same layout: a manifest table's data segments are all flat or all
+    * hive-partitioned on the same columns, because one parquet relation
+    * has one partition schema. [[compact]] reads a mixed table layout
+    * group by layout, so it is the repair. */
+  private[graft] def requireOneLayout(root: String,
+      layouts: Seq[(String, Seq[String])]): Unit =
+    layouts.find(_._2 != layouts.head._2).foreach { case (b, cb) =>
+      val (a, ca) = layouts.head
+      def show(c: Seq[String]) =
+        if (c.isEmpty) "flat" else s"partitioned on '${c.mkString("/")}'"
+      throw new IllegalArgumentException(
+        s"segment layouts of $root disagree: $a is ${show(ca)} but $b is " +
+          s"${show(cb)}; a manifest table holds one layout — " +
+          s"ManifestTable.compact(spark, root, partitionBy = …) rewrites " +
+          "it whole into one")
+    }
 
   /** Merge-on-read DELETE: append `keys` (deduplicated) as one
     * tombstone segment — IO is O(keys) + a tiny manifest; no data
@@ -1017,10 +1219,9 @@ object ManifestTable {
     // resurface — the column-mapping lifecycle (pre-r17 this rejected
     // loudly until a full rewrite retired the tombstone)
     val (dropped, mapping) = schemaActionsAt(spark, root, v)
-    val rawPhysical =
-      graft.sources.ManifestSource
-        .relation(spark, root, None, allowTombstones = true)
-        .dataSchema.fieldNames.toSeq
+    val rel = graft.sources.ManifestSource
+      .relation(spark, root, None, allowTombstones = true)
+    val rawPhysical = rel.dataSchema.fieldNames.toSeq
     val taken = scala.collection.mutable.Set.empty[String]
     taken ++= dropped
     taken ++= rawPhysical
@@ -1040,8 +1241,10 @@ object ManifestTable {
         org.apache.spark.sql.types.StructField(n, t, nullable = true) })
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), evolved)
-    appendReserved(spark, root, empty, tag = Some("alter"),
-      addMaps = addMaps)
+    // written in the table's own layout: on a partitioned table the
+    // empty write leaves no file and the schema rides the `#meta` line
+    appendReserved(spark, root, empty, rel.partitionSchema.fieldNames.toSeq,
+      tag = Some("alter"), addMaps = addMaps)
   }
 
   /** `ALTER TABLE … DROP COLUMN(S)`: one schema-projection commit (a
@@ -1176,7 +1379,8 @@ object ManifestTable {
     })
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), evolved)
-    appendReserved(spark, root, empty, tag = Some("alter"))
+    appendReserved(spark, root, empty, rel.partitionSchema.fieldNames.toSeq,
+      tag = Some("alter"))
   }
 
   /** Is `from -> to` a widening the scan layer performs losslessly?
@@ -1204,10 +1408,15 @@ object ManifestTable {
     * anti-join cost resets to zero. Readers see the old manifest until
     * the new one lands. `partitionBy` preserves a partitioned layout
     * through the rewrite (the columns come back as normal columns from
-    * [[read]]'s partition discovery, so the fold round-trips them). */
+    * [[read]]'s partition discovery, so the fold round-trips them).
+    * Unlike every other reader, compact accepts data segments of mixed
+    * layouts (it reads them layout group by layout group), so it is the
+    * repair for such a table: the rewrite has the one layout
+    * `partitionBy` names. */
   def compact(spark: SparkSession, root: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    val snap = readMerged(spark, root).localCheckpoint()
+    val snap = readSnapshot(spark, root, snapshotAt(spark, root, None),
+      merge = true, anyLayout = true).localCheckpoint()
     try replace(spark, root, snap, partitionBy, rewrite = true)
     finally graft.core.Lineage.release(snap)
   }
@@ -1491,9 +1700,8 @@ object ManifestTable {
     * window's inserts. A segment added AND dml-dropped inside the same
     * window nets out entirely (never delivered, its survivors ride the
     * replacement segment). Each pre-image carries the embedded
-    * metadata the manifest held just before the drop, so planned
-    * readers ([[graft.sources.ManifestSource.readSegsPlanned]]) can
-    * build the batch without filesystem listings. */
+    * metadata the manifest held just before the drop, so [[readSegs]]
+    * can build the batch without filesystem listings. */
   private[graft] def changedSegmentsDml(spark: SparkSession, root: String,
       fromV: Long, toV: Long): (Seq[String], Seq[(String, Option[SegMeta])]) =
     walkChanges(spark, root, fromV, toV, dmlAware = true)
@@ -1577,10 +1785,8 @@ object ManifestTable {
         .getOrElse(Set.empty[String])
     val metas = metasFromLines(lines)
     cur.filterNot(prev).map { s =>
-      metas.get(s).map(_.files.map(_._2).sum).getOrElse(
-        scala.util.Try(
-          listDataFilesRec(f, new Path(p, s), "").map(_._2).sum)
-          .getOrElse(0L))
+      scala.util.Try(metaOf(spark, root, s, metas.get(s)).files.map(_._2).sum)
+        .getOrElse(0L)
     }.sum
   }
 
@@ -1681,9 +1887,14 @@ object ManifestTable {
     // anti-joins cannot (see the caveat above; verifyDeletes becomes
     // unnecessary under rowId). Tombstone deletes stay key-valued
     // (_row_id NULL there — they delete by key, not by row).
+    // window segments are named by toV (additions, tombstones) or by
+    // the version just before the DML that dropped them (pre-images,
+    // whose embedded metadata the walk captured)
+    val metas = snapshotAt(spark, root, Some(toV)).metas ++
+      pre.collect { case (s, Some(m)) => s -> m }
     def readIns(segs: Seq[String]) =
-      if (rowId) readSegsWithRowId(spark, root, segs)
-      else readSegs(spark, root, segs)
+      if (rowId) readSegsWithRowId(spark, root, segs, metas)
+      else readSegs(spark, root, segs, metas)
     val ins = chg.filterNot(_.startsWith(DelPrefix))
     val del = chg.filter(_.startsWith(DelPrefix))
     val insDf =
@@ -1693,16 +1904,17 @@ object ManifestTable {
       if (pre.isEmpty) None
       // under rowId every pre-image row is already unique — a distinct
       // would only add a shuffle
-      else if (rowId) Some(readSegsWithRowId(spark, root, pre.map(_._1)))
-      else Some(readSegs(spark, root, pre.map(_._1)).distinct())
+      else if (rowId) Some(readIns(pre.map(_._1)))
+      else Some(readIns(pre.map(_._1)).distinct())
     // rowId supersedes the value-identity hazard check: identity
     // deletes cannot cross segments by construction
     if (verifyDeletes && !rowId) preRows.foreach { pr =>
       val droppedSet = pre.map(_._1).toSet
-      val untouched = segmentsAt(spark, root, fromV)
+      val atFrom = snapshotAt(spark, root, Some(fromV))
+      val untouched = atFrom.segs
         .filterNot(s => droppedSet(s) || s.startsWith(DelPrefix))
       if (untouched.nonEmpty) {
-        val raw = readSegs(spark, root, untouched)
+        val raw = readSegs(spark, root, untouched, atFrom.metas)
         // conform to the delete frame's column set (schema evolution:
         // a column the untouched segments lack reads NULL there, which
         // is exactly what the consumer's full-table read saw)
@@ -1719,11 +1931,7 @@ object ManifestTable {
             "full-refresh from the head snapshot and re-pin")
       }
     }
-    val delSides =
-      (if (del.isEmpty) Nil
-       else Seq(del.map(s => spark.read.parquet(s"$root/$s"))
-         .reduce(_ unionByName _).distinct())) ++
-      preRows.toList
+    val delSides = tombstonesOf(spark, root, del, metas).toList ++ preRows
     val delDf = delSides.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .map(_.withColumn("_change_type", lit("delete")))
     val out = (insDf, delDf) match {
@@ -1765,20 +1973,22 @@ object ManifestTable {
     val (f, p) = fs(spark, root)
     val v = currentVersion(f, p).getOrElse(
       throw new IllegalStateException(s"optimize of uncommitted table $root"))
-    val all = readManifest(f, p, v)
+    val metas = segmentMetas(spark, root, Some(v))
+    val all = metas.keys.toSeq
     val small = all.filterNot(_.startsWith(DelPrefix))
       .filter(s => f.getContentSummary(new Path(p, s)).getLength < smallBytes)
     if (small.size < 2) return 0
-    val statCols = small
-      .flatMap(s => segmentStats(spark, root, s).toSeq.flatMap(_.cols.keys))
-      .distinct
-    val bCols = small.flatMap(s => bloomColsOf(f, new Path(p, s))).distinct
+    val smallSet = small.toSet
+    requireLayout(root, metas.iterator.filterNot { case (s, _) =>
+      smallSet(s) || s.startsWith(DelPrefix) }, partitionBy)
+    val statCols = small.flatMap(metas(_).stats.toSeq.flatMap(_.cols.keys)).distinct
+    val bCols = small.flatMap(metas(_).blooms).distinct
     val seg = s"seg-${v + 1}-opt-${java.util.UUID.randomUUID().toString.take(8)}"
     // flat + stats-bearing: the min/max/count ride the fold's write scan
+    val rows = readSegs(spark, root, small, metas)
     val (frame, obs) =
-      if (statCols.nonEmpty && partitionBy.isEmpty)
-        observedStats(readSegs(spark, root, small), statCols)
-      else (readSegs(spark, root, small), None)
+      if (statCols.nonEmpty && partitionBy.isEmpty) observedStats(rows, statCols)
+      else (rows, None)
     writeSeg(frame, s"$root/$seg", partitionBy)
     val statsJson =
       if (statCols.isEmpty) None
@@ -1789,7 +1999,6 @@ object ManifestTable {
       }
     if (bCols.nonEmpty) writeBlooms(spark, f, s"$root/$seg", bCols)
     val meta = buildMeta(spark, f, root, seg, statsJson, bCols)
-    val smallSet = small.toSet
     commit(f, p, v + 1, all.filterNot(smallSet) :+ seg, Seq(RewriteMark),
       metas = (priorMetas(f, p, v) -- smallSet) + (seg -> meta))
     gc(f, p)
@@ -1920,16 +2129,21 @@ object ManifestTable {
     val (f, p) = fs(spark, root)
     val v = currentVersion(f, p).getOrElse(
       throw new IllegalStateException(s"clusterRange of uncommitted table $root"))
-    val all = readManifest(f, p, v)
+    val metas = segmentMetas(spark, root, Some(v))
+    val all = metas.keys.toSeq
     // this is a PARTIAL rewrite: it reads raw physical frames and
     // writes them back (mapping carried forward untouched), so the
     // caller's LOGICAL column names translate to physical here
     val mapping = columnMappingAt(spark, root, v)
     val byPhys = physicalNameOf(spark, mapping, byCol)
-    val touched = prunedDataSegments(spark, root, byPhys, lo, hi)
+    val touched = rangeAdmitted(metas, byPhys, lo, hi)
     if (touched.size < 2) return 0
+    val touchedSet = touched.toSet
+    // the clustered segments are flat: untouched segments must be too
+    requireLayout(root, metas.iterator.filterNot { case (s, _) =>
+      touchedSet(s) || s.startsWith(DelPrefix) }, Nil)
     val tmp = s".cluster-tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-    val frame = readSegs(spark, root, touched)
+    val frame = readSegs(spark, root, touched, metas)
     frame
       .repartitionByRange(nSegments, col(byPhys))
       .withColumn("_seg", org.apache.spark.sql.functions.spark_partition_id())
@@ -1949,7 +2163,6 @@ object ManifestTable {
     val newMetas = sidecarsBatched(spark, root,
       segNames.map(s => (s, stats, Seq.empty[String])),
       StructType(frame.schema.map(_.copy(nullable = true))))
-    val touchedSet = touched.toSet
     commit(f, p, v + 1, all.filterNot(touchedSet) ++ segNames,
       Seq(RewriteMark),
       metas = (priorMetas(f, p, v) -- touchedSet) ++ newMetas)
@@ -1958,35 +2171,37 @@ object ManifestTable {
     touched.size
   }
 
-  /** Exact row count from zone-map sidecars alone — zero data IO, a
-    * driver-side metadata sum. Available (Some) only when every data
-    * segment carries a sidecar and no tombstones are outstanding
-    * (tombstone matches can't be counted without reading); callers
-    * fall back to `read(root).count()` on None. The metadata-only
-    * count a 100 TB log answers in milliseconds. */
+  /** Exact row count from the segments' zone-map stats alone — zero
+    * data IO, a driver-side sum over the manifest's metadata. Available
+    * (Some) only when every data segment carries stats and no
+    * tombstones are outstanding (tombstone matches can't be counted
+    * without reading); callers fall back to `read(root).count()` on
+    * None. The metadata-only count a 100 TB log answers in
+    * milliseconds. */
   def fastRowCount(spark: SparkSession, root: String): Option[Long] = {
-    if (deleteSegments(spark, root).nonEmpty) None
-    else {
-      val st = dataSegments(spark, root).map(s => segmentStats(spark, root, s))
-      if (st.isEmpty || st.exists(_.isEmpty)) None
-      else Some(st.flatten.map(_.rows).sum)
-    }
+    val metas = segmentMetas(spark, root)
+    val st = metas.values.map(_.stats).toSeq
+    if (metas.keys.exists(_.startsWith(DelPrefix)) || st.isEmpty ||
+        st.exists(_.isEmpty)) None
+    else Some(st.flatten.map(_.rows).sum)
   }
 
   // ------------------------------------------------------------------
   // Segment statistics (zone maps) + data-skipping reads.
   //
-  // Each stats-enabled segment carries a `_stats.graft.json` sidecar:
+  // Each stats-enabled segment's stats are embedded in its `#meta`
+  // manifest line and written as a `_stats.graft.json` sidecar:
   //   {"rows":N,"cols":{"c":{"t":"n|ts|d|s","min":"…","max":"…"}}}
   // min/max are canonical sortable keys — numerics as their decimal
   // string, timestamps as epoch MICROS, dates as epoch DAYS, strings
-  // raw. A range read resolves the manifest, opens only the sidecars
-  // (a few hundred bytes per segment, driver-side), and hands Spark
-  // just the segments whose [min,max] intersects the predicate — the
+  // raw. A range read is a filtered [[read]]: the relation's file
+  // index ([[graft.sources.ManifestFileIndex]]) checks the pushed
+  // predicate against each segment's [min,max] from the ONE manifest
+  // read and hands Spark just the segments that intersect it — the
   // segment-granularity analogue of parquet row-group zone maps, and
   // the reason a time-keyed 100 TB append log answers a point-in-time
   // query by reading one segment instead of all of them. Conservative
-  // by construction: a segment without a sidecar (or without stats for
+  // by construction: a segment without stats (or without stats for
   // the queried column) is always read.
   // ------------------------------------------------------------------
 
@@ -2332,42 +2547,38 @@ object ManifestTable {
     * matches no NULLs. Open bounds via None. */
   def prunedDataSegments(spark: SparkSession, root: String, colName: String,
       lo: Option[Any], hi: Option[Any]): Seq[String] =
-    dataSegments(spark, root).filter { seg =>
-      statsAdmit(segmentStats(spark, root, seg), colName, lo, hi)
+    rangeAdmitted(segmentMetas(spark, root), colName, lo, hi)
+
+  private def rangeAdmitted(metas: SeqMap[String, SegMeta], colName: String,
+      lo: Option[Any], hi: Option[Any]): Seq[String] =
+    metas.collect { case (s, m) if !s.startsWith(DelPrefix) &&
+      statsAdmit(m.stats, colName, lo, hi) => s }.toSeq
+
+  /** Data-skipping range read: `read(...)` filtered to `lo <= colName
+    * <= hi` (open bounds via None). The relation's file index opens
+    * only segments whose zone map intersects the range
+    * ([[prunedDataSegments]]' answer); the filter itself removes the
+    * out-of-range rows kept segments still hold. */
+  def readRange(spark: SparkSession, root: String, colName: String,
+      lo: Option[Any], hi: Option[Any]): DataFrame =
+    probeRead(spark, root, colName, "range") { c =>
+      (lo.map(c >= lit(_)) ++ hi.map(c <= lit(_))).reduceOption(_ && _)
+        .getOrElse(lit(true))
     }
 
-  /** Data-skipping range read: resolve the manifest, keep only
-    * segments whose zone map intersects `[lo, hi]`, and apply the
-    * residual predicate (zone maps are segment-granular — kept
-    * segments can still hold out-of-range rows). Equivalent to
-    * `read(...).filter(between)` by construction; the difference is
-    * IO — segments outside the range are never opened. */
-  def readRange(spark: SparkSession, root: String, colName: String,
-      lo: Option[Any], hi: Option[Any]): DataFrame = {
-    // the dropped-column projection applies here exactly as in read/
-    // readMerged — and a range probe ON a dropped column is loud, the
-    // same unresolved-column failure `read(...).filter` would give.
-    // The probe column arrives LOGICAL; zone-map sidecars and the raw
-    // segment frames are keyed PHYSICAL, so translate first.
-    val actions @ (dropped, mapping) = schemaActions(spark, root)
+  /** [[read]] filtered by `pred` on the LOGICAL column `colName`; a
+    * probe on a DROPped column fails loudly (zone maps and Bloom
+    * sidecars are keyed by physical name, and Catalyst pushes the
+    * filter through the rename projection to the file index). */
+  private def probeRead(spark: SparkSession, root: String, colName: String,
+      what: String)(pred: Column => Column): DataFrame = {
+    val snap = snapshotAt(spark, root, None)
+    val (dropped, mapping) = snap.actions
     val eq = spark.sessionState.conf.resolver
-    val phys = physicalNameOf(spark, mapping, colName)
-    require(!dropped.exists(eq(_, phys)),
-      s"column $colName was DROPped from $root; range reads cannot " +
+    require(!dropped.exists(eq(_, physicalNameOf(spark, mapping, colName))),
+      s"column $colName was DROPped from $root; $what reads cannot " +
         "probe a dropped column")
-    val keep = prunedDataSegments(spark, root, phys, lo, hi)
-    val base =
-      if (keep.nonEmpty) readSegs(spark, root, keep)
-      else read(spark, root).filter(lit(false)) // schema-only; empty plan
-    // the empty-plan fallback is already logical (read applies the
-    // projection), so filter/relabel per branch
-    if (keep.isEmpty) base
-    else {
-      val c = col(phys)
-      val pred = (lo.map(c >= lit(_)) ++ hi.map(c <= lit(_)))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      applySchemaActions(base.filter(pred), actions)
-    }
+    readSnapshot(spark, root, snap).filter(pred(col(colName)))
   }
 
   // ------------------------------------------------------------------
@@ -2388,15 +2599,6 @@ object ManifestTable {
   // ------------------------------------------------------------------
 
   private def bloomFile(colName: String) = s"_bloom.$colName.graft"
-
-  /** Columns a segment carries Bloom sidecars for (file-name scan —
-    * how [[optimize]] knows what to regenerate on the packed output). */
-  private[io] def bloomColsOf(f: FileSystem, segDir: Path): Seq[String] =
-    if (!f.exists(segDir)) Seq.empty
-    else f.listStatus(segDir).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith("_bloom.") && n.endsWith(".graft"))
-      .map(_.stripPrefix("_bloom.").stripSuffix(".graft"))
-      .toSeq
 
   /** Column types a Bloom sidecar supports (what Spark's BloomFilter
     * hashes): integral + string. Callers naming other types fail
@@ -2454,33 +2656,25 @@ object ManifestTable {
     }
   }
 
+  /** Segment `seg`'s Bloom filter on `colName`, opened only when its
+    * metadata lists one. */
+  private[graft] def bloomOf(spark: SparkSession, root: String, seg: String,
+      meta: SegMeta, colName: String): Option[org.apache.spark.util.sketch.BloomFilter] =
+    if (meta.blooms.contains(colName)) segmentBloom(spark, root, seg, colName)
+    else None
+
   /** The data segments a `colName = value` read must open: every
     * segment whose Bloom sidecar admits the value (or has none). */
   def pointSegments(spark: SparkSession, root: String, colName: String,
       value: Any): Seq[String] =
-    dataSegments(spark, root).filter { seg =>
-      bloomAdmit(segmentBloom(spark, root, seg, colName), value)
-    }
+    segmentMetas(spark, root).collect { case (s, m) if !s.startsWith(DelPrefix) &&
+      bloomAdmit(bloomOf(spark, root, s, m, colName), value) => s }.toSeq
 
-  /** Bloom-pruned point lookup: equivalent to `read(...).filter(col =
-    * value)` by construction; segments whose sidecar excludes the key
-    * are never opened — `WHERE id = k` on a 100 TB arrival-ordered
-    * log reads O(segments holding k), not O(table). */
+  /** Bloom-pruned point lookup: `read(...).filter(col = value)`. The
+    * relation's file index opens only segments whose zone map and
+    * Bloom sidecar admit the key — `WHERE id = k` on a 100 TB
+    * arrival-ordered log reads O(segments holding k), not O(table). */
   def readPoint(spark: SparkSession, root: String, colName: String,
-      value: Any): DataFrame = {
-    // same dropped-column contract as readRange: loud probe, projected
-    // result; Bloom sidecars and raw frames are keyed PHYSICAL
-    val actions @ (dropped, mapping) = schemaActions(spark, root)
-    val eq = spark.sessionState.conf.resolver
-    val phys = physicalNameOf(spark, mapping, colName)
-    require(!dropped.exists(eq(_, phys)),
-      s"column $colName was DROPped from $root; point reads cannot " +
-        "probe a dropped column")
-    val keep = pointSegments(spark, root, phys, value)
-    val base =
-      if (keep.nonEmpty) readSegs(spark, root, keep)
-      else read(spark, root).filter(lit(false)) // schema-only; empty plan
-    if (keep.isEmpty) base.filter(col(colName) === lit(value))
-    else applySchemaActions(base.filter(col(phys) === lit(value)), actions)
-  }
+      value: Any): DataFrame =
+    probeRead(spark, root, colName, "point")(_ === lit(value))
 }

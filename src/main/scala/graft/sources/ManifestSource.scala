@@ -3,12 +3,12 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
-  Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan,
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast,
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan,
   LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider,
   DataSourceRegister, RelationProvider, SchemaRelationProvider}
 import org.apache.spark.sql.types._
@@ -38,10 +38,12 @@ import graft.io.ManifestTable
   * API reads), pinned at relation-build time (a query plans against
   * one manifest version even while ingest keeps committing — snapshot
   * isolation for free), and prunes whole segments through the
-  * `_stats.graft.json` zone maps when the query's `WHERE` carries
-  * range predicates on stat-covered columns. Data skipping therefore
-  * happens at BOTH granularities: segments here, row groups in
-  * parquet below — the two-layer structure every lakehouse reader
+  * manifest-embedded zone maps and Bloom sidecars when the query's
+  * `WHERE` carries range or equality predicates on covered columns.
+  * The relation is the typed API's own segment reader
+  * ([[ManifestTable.readSegs]]), cached per snapshot. Data skipping
+  * therefore happens at BOTH granularities: segments here, row groups
+  * in parquet below — the two-layer structure every lakehouse reader
   * ships.
   *
   * Contract edges, all loud:
@@ -53,12 +55,12 @@ import graft.io.ManifestTable
   *    ANN index's `cell=` layout) are first-class: the partition
   *    column surfaces in the schema and pushed partition predicates
   *    prune `col=value` dirs inside every surviving segment — but the
-  *    layout must be consistent (all flat, or all single-level on one
-  *    column; anything else fails the build rather than dropping
-  *    dirs);
+  *    layout must be consistent (all flat, or all partitioned on the
+  *    same columns; anything else fails the build rather than dropping
+  *    dirs, and the writers refuse to create it);
   *  - additive schema evolution is supported: the relation's schema is
-  *    the merged footer schema and parquet reads NULL-fill columns a
-  *    segment predates.
+  *    the additive merge of the segments' embedded schemas and parquet
+  *    reads NULL-fill columns a segment predates.
   */
 class ManifestSource extends RelationProvider with SchemaRelationProvider
     with CreatableRelationProvider
@@ -504,22 +506,17 @@ private[sources] class ManifestStreamSource(spark: SparkSession,
         val mapping = ManifestTable.columnMappingAt(spark, root, toV)
         def logical(df: DataFrame): DataFrame =
           ManifestTable.applyMapping(df, mapping)
-        val metas = ManifestTable.segmentMetas(spark, root, Some(toV)) ++
+        val metas = ManifestTable.snapshotAt(spark, root, Some(toV)).metas ++
           pre.collect { case (s, Some(m)) => s -> m }
+        def readLogical(segs: Seq[String]) =
+          logical(ManifestTable.readSegs(spark, root, segs, metas))
         val ins = chg.filterNot(_.startsWith("del-"))
         val insDf =
           if (ins.isEmpty) None
-          else Some(logical(
-            ManifestSource.readSegsPlanned(spark, root, ins, metas))
-            .withColumn("_change_type", lit("insert")))
+          else Some(readLogical(ins).withColumn("_change_type", lit("insert")))
         val delSides =
-          (if (dels.isEmpty) Nil
-           else Seq(logical(
-             ManifestSource.readSegsPlanned(spark, root, dels, metas))
-             .distinct())) ++
-          (if (pre.isEmpty) Nil
-           else Seq(logical(ManifestSource.readSegsPlanned(spark, root,
-             pre.map(_._1), metas)).distinct()))
+          (if (dels.isEmpty) Nil else Seq(readLogical(dels).distinct())) ++
+          (if (pre.isEmpty) Nil else Seq(readLogical(pre.map(_._1)).distinct()))
         val delDf = delSides
           .reduceOption(_.unionByName(_, allowMissingColumns = true))
           .map(_.withColumn("_change_type", lit("delete")))
@@ -597,9 +594,11 @@ object ManifestSource {
   // embedded metadata a relation build must do O(1) filesystem work in
   // SEGMENT COUNT — one root listing to resolve the head version plus
   // one manifest read — instead of a listStatus + sidecar open per
-  // segment and a footer-merge job over every file. PlanSpec asserts
-  // these counters stay zero on meta-bearing tables and grow O(n) only
-  // on the legacy fallback path.
+  // segment and a footer-merge job over every file. The segment reader
+  // (ManifestTable.metaOf / segRelation) counts that fallback work for
+  // every reader; each SQL relation build resets the counters first.
+  // PlanSpec asserts they stay zero on meta-bearing tables and grow
+  // O(n) only on the legacy fallback path.
   // ------------------------------------------------------------------
   @volatile var lastBuildListOps: Int = 0       // per-segment listStatus calls
   @volatile var lastBuildSidecarReads: Int = 0  // _stats.graft.json opens
@@ -616,76 +615,11 @@ object ManifestSource {
     * missing-file error the uncached API read gives for past-retention
     * access. */
   private case class CacheKey(root: String, v: Long, fingerprint: String)
-  private case class Cached(index: ManifestFileIndex, dataSchema: StructType)
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[CacheKey, Cached](16, 0.75f, true) {
+    new java.util.LinkedHashMap[CacheKey, HadoopFsRelation](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[CacheKey, Cached]): Boolean = size() > 64
+          e: java.util.Map.Entry[CacheKey, HadoopFsRelation]): Boolean = size() > 64
     })
-
-  /** Additive-evolution merge of per-segment schemas, in commit order:
-    * later segments may ADD columns, and a same-name column whose
-    * types differ by a SAFE WIDENING (the `ALTER COLUMN TYPE` marker-
-    * segment contract — int→bigint/double, float→double, decimal
-    * growth) merges to the WIDER type: the parquet scan then upcasts
-    * the narrow segments' values at read time (Spark 4 vectorized
-    * reader), so a widened 100 TB table reads as one homogeneous
-    * relation with zero rewrites. Any other type conflict is NOT
-    * additive → None (caller falls back to the footer-merge job,
-    * which applies parquet's own reconciliation). */
-  private def mergeAdditive(schemas: Seq[StructType]): Option[StructType] = {
-    def widen(a: DataType, b: DataType): Option[DataType] =
-      if (a == b) Some(a)
-      else if (graft.io.ManifestTable.safeWiden(a, b)) Some(b)
-      else if (graft.io.ManifestTable.safeWiden(b, a)) Some(a)
-      else None
-    schemas.foldLeft(Option(StructType(Nil))) {
-      case (None, _) => None
-      case (Some(acc), st) =>
-        val byName = acc.fields.map(f => f.name -> f).toMap
-        val conflict = st.fields.exists(f =>
-          byName.get(f.name).exists(g => widen(g.dataType, f.dataType).isEmpty))
-        if (conflict) None
-        else Some(StructType(acc.fields.map { g =>
-          st.fields.find(_.name == g.name) match {
-            case Some(f) => g.copy(dataType = widen(g.dataType, f.dataType).get)
-            case None => g
-          }
-        } ++ st.fields.filterNot(f => byName.contains(f.name))))
-    }.filter(_.fields.nonEmpty)
-  }
-
-  /** A DataFrame over exactly `segs` of `root`, PLANNED from embedded
-    * metadata when every segment carries it — zero filesystem calls at
-    * plan time, so the plan builds even for segments maintenance has
-    * already retired (the streaming source's recovery contract: the
-    * engine re-requests the last committed window on restart and never
-    * executes it). Legacy segments without metadata fall back to the
-    * eager per-segment union read. */
-  private[graft] def readSegsPlanned(spark: SparkSession, root: String,
-      segs: Seq[String],
-      metas: Map[String, ManifestTable.SegMeta]): DataFrame = {
-    val schemas = segs.filter(s => metas.get(s).forall(_.files.nonEmpty))
-      .map(s => metas.get(s).flatMap(_.schema))
-    val merged =
-      if (segs.forall(metas.contains) && schemas.forall(_.isDefined))
-        mergeAdditive(schemas.flatten)
-      else None
-    merged match {
-      case Some(dataSchema) =>
-        val index = new ManifestFileIndex(spark, root, segs, metas)
-        val partNames = index.partitionSchema.fieldNames.toSet
-        spark.baseRelationToDataFrame(HadoopFsRelation(
-          location = index,
-          partitionSchema = index.partitionSchema,
-          dataSchema = StructType(
-            dataSchema.filterNot(f => partNames.contains(f.name))),
-          bucketSpec = None,
-          fileFormat = new ParquetFileFormat(),
-          options = Map.empty)(spark))
-      case None => ManifestTable.readSegs(spark, root, segs)
-    }
-  }
 
   private[graft] def relation(spark: SparkSession, root: String,
       version: Option[Long], allowTombstones: Boolean): HadoopFsRelation = {
@@ -698,7 +632,8 @@ object ManifestSource {
       .getOrElse(throw new IllegalArgumentException(
         s"no committed manifest under $root"))
     // ONE manifest read: segment list + embedded metadata + fingerprint
-    val (all, metas, fp, dropped, _) = ManifestTable.manifestSnapshot(spark, root, v)
+    val snap = ManifestTable.manifestSnapshot(spark, root, v)
+    val all = snap.segs
     require(all.nonEmpty, s"no committed manifest under $root" +
       version.map(v0 => s" at version $v0").getOrElse(""))
     val dels = all.filter(_.startsWith("del-"))
@@ -709,61 +644,23 @@ object ManifestSource {
           "table, read through ManifestTable.readMerged, or set " +
           "option(\"allowTombstones\", \"true\") to knowingly scan raw " +
           "data segments.")
-    val segs = all.filterNot(_.startsWith("del-"))
-    val key = CacheKey(root, v, fp)
-    val cached = cache.get(key) match {
+    val key = CacheKey(root, v, snap.fingerprint)
+    val rel = cache.get(key) match {
       case c if c != null =>
         lastBuildCacheHit = true
         c
       case _ =>
-        val index = new ManifestFileIndex(spark, root, segs, metas, v)
-        val dataSchema = resolveDataSchema(spark, root, segs, metas, index)
-        val c = Cached(index, dataSchema)
+        val c = ManifestTable.segRelation(spark, root,
+          all.filterNot(_.startsWith("del-")), snap.metas, v)
         cache.put(key, c)
         c
     }
-    val partNames = cached.index.partitionSchema.fieldNames.toSet
     // DROPped columns are a schema projection: the relation never
     // advertises them, so the parquet scan never requests them (the
     // physical bytes stay until a rewrite repackages the rows)
     val eq = spark.sessionState.conf.resolver
-    HadoopFsRelation(
-      location = cached.index,
-      partitionSchema = cached.index.partitionSchema,
-      dataSchema = StructType(
-        cached.dataSchema.filterNot(f => partNames.contains(f.name) ||
-          dropped.exists(d => eq(d, f.name)))),
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark)
-  }
-
-  /** The relation's data schema. Fast path: every file-bearing segment
-    * carries an embedded schema → additive merge in commit order, ZERO
-    * footer reads. Fallback (legacy/mixed tables, or a non-additive
-    * type change): one mergeSchema footer job over all listed files —
-    * the pre-metadata behavior. A table with no data files at all
-    * fails with a clear contract error instead of parquet's
-    * unable-to-infer. */
-  private def resolveDataSchema(spark: SparkSession, root: String,
-      segs: Seq[String], metas: Map[String, ManifestTable.SegMeta],
-      index: ManifestFileIndex): StructType = {
-    val withFiles = segs.filter(s => metas.get(s).forall(_.files.nonEmpty))
-    val embedded = withFiles.map(s => metas.get(s).flatMap(_.schema))
-    val fromMeta =
-      if (embedded.nonEmpty && embedded.forall(_.isDefined))
-        mergeAdditive(embedded.flatten)
-      else None
-    fromMeta.getOrElse {
-      val files = index.inputFiles
-      if (files.isEmpty)
-        throw new IllegalStateException(
-          s"manifest table $root has no data files (every committed " +
-            "segment is empty) and no embedded schema; append data " +
-            "before reading it through SQL")
-      lastBuildFooterJobs += 1
-      spark.read.option("mergeSchema", "true").parquet(files.toSeq: _*).schema
-    }
+    rel.copy(dataSchema = StructType(
+      rel.dataSchema.filterNot(f => snap.actions._1.exists(d => eq(d, f.name)))))(spark)
   }
 }
 
@@ -772,16 +669,20 @@ object ManifestSource {
   * filters (conjunct ranges, equalities, and IN/OR-of-equality value
   * sets), and hive-style partition-dir pruning on pushed partition
   * filters (`a=v/b=w` layouts of any depth, the shapes [[ManifestTable
-  * .append]]'s `partitionBy` writes). All listing state comes from the
-  * manifest's embedded metadata when present — ZERO per-segment
-  * filesystem calls; segments without metadata (legacy tables) fall
-  * back to a per-segment recursive listing + sidecar read, counted in
-  * [[ManifestSource.lastBuildListOps]]/[[ManifestSource
-  * .lastBuildSidecarReads]]. */
+  * .append]]'s `partitionBy` writes). Every file group, zone map and
+  * Bloom column comes from `metas` — one [[ManifestTable.SegMeta]] per
+  * segment, resolved by [[ManifestTable.readSegs]] — so the index makes
+  * no filesystem call of its own except opening a Bloom sidecar a
+  * query probes. Partition columns take their type from `typeHint`
+  * (the segments' merged schema) when it has them. */
 private[graft] class ManifestFileIndex(spark: SparkSession, root: String,
     segs: Seq[String], metas: Map[String, graft.io.ManifestTable.SegMeta],
-    atVersion: Long = -1L)
+    typeHint: Option[StructType], atVersion: Long)
     extends FileIndex {
+
+  /** The metadata of every segment the index lists — what a DML
+    * rewrite of its segments carries forward. */
+  private[graft] def segMetas: Map[String, graft.io.ManifestTable.SegMeta] = metas
 
   /** The manifest root this index lists — the handle [[graft.plans
     * .ResolveManifestDml]] routes SQL DELETE/UPDATE/MERGE through. */
@@ -792,12 +693,11 @@ private[graft] class ManifestFileIndex(spark: SparkSession, root: String,
     * commands carry it as their optimistic-concurrency expectation. */
   private[graft] def pinnedVersion: Long = atVersion
 
-
   private val rootPath = new Path(root)
   private val fs =
     rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Synthetic FileStatus from embedded metadata — length is what scan
+  /** Synthetic FileStatus from the metadata — length is what scan
     * planning consumes (split sizing); mtime/blocksize are unused by
     * the parquet read path. */
   private def metaStatus(seg: String, rel: String, len: Long): FileStatus =
@@ -805,153 +705,69 @@ private[graft] class ManifestFileIndex(spark: SparkSession, root: String,
       fs.makeQualified(new Path(rootPath, s"$seg/$rel")))
 
   /** One file group per (segment, partition-value vector):
-    * (segment, partition column names, raw values, files). Partition
-    * names must agree across every group (checked below). */
+    * (segment, partition column names, raw values, files). Only the
+    * files the commit named are listed, so junk later dropped into a
+    * segment dir is invisible. Partition names must agree across every
+    * group (checked below). */
   private val entries: Seq[(String, Seq[String], Seq[String], Array[FileStatus])] =
     segs.flatMap { s =>
-      metas.get(s) match {
-        case Some(m) =>
-          // manifest-embedded listing: the commit named these files, so
-          // junk later dropped into the dir is invisible — the same
-          // only-the-log-is-truth contract as the API reads
-          m.files.groupBy(f => partOf(f._1)).toSeq
-            .sortBy(_._1.map(_._2).mkString("/"))
-            .map { case (pvs, fl) =>
-              (s, pvs.map(_._1), pvs.map(_._2),
-                fl.map { case (rel, len) => metaStatus(s, rel, len) }.toArray)
-            }
-        case None => listSegment(s)
-      }
+      metas(s).files.groupBy(f => partOf(f._1)).toSeq
+        .sortBy(_._1.map(_._2).mkString("/"))
+        .map { case (pvs, fl) =>
+          (s, pvs.map(_._1), pvs.map(_._2),
+            fl.map { case (rel, len) => metaStatus(s, rel, len) }.toArray)
+        }
     }
 
-  /** `a=1/b=2/part-x.parquet` → Seq(("a","1"),("b","2")). */
+  /** `a=1/b=2/part-x.parquet` → Seq(("a","1"),("b","2")), values
+    * unescaped the way hive partition dir names are escaped. */
   private def partOf(rel: String): Seq[(String, String)] =
     rel.split("/").dropRight(1).toSeq.map { d =>
       val Array(c, v) = d.split("=", 2)
-      (c, v)
+      (c, ExternalCatalogUtils.unescapePathName(v))
     }
-
-  private def dataFiles(dir: Path): Array[FileStatus] =
-    fs.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-
-  /** Legacy fallback: recursive listing of one segment (no embedded
-    * metadata). Each level must be all `col=value` dirs or all files —
-    * a mixed shape reads back partially, so it fails loudly. */
-  private def listSegment(
-      s: String): Seq[(String, Seq[String], Seq[String], Array[FileStatus])] = {
-    def walk(dir: Path, cols: Seq[String], vals: Seq[String])
-        : Seq[(String, Seq[String], Seq[String], Array[FileStatus])] = {
-      ManifestSource.lastBuildListOps += 1
-      val all = fs.listStatus(dir)
-      val dirs = all.filter(st =>
-        st.isDirectory && st.getPath.getName.contains("="))
-      val files = all.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (dirs.isEmpty) Seq((s, cols, vals, files))
-      else {
-        require(files.isEmpty,
-          s"segment $s of $root mixes partition dirs with ${files.length} " +
-            s"loose data file(s) (e.g. ${files.head.getPath.getName}); " +
-            "refusing to read a partially-visible segment — repair the " +
-            "layout or use ManifestTable.read")
-        dirs.toSeq.flatMap { d =>
-          val Array(c, v) = d.getPath.getName.split("=", 2)
-          walk(d.getPath, cols :+ c, vals :+ v)
-        }
-      }
-    }
-    walk(new Path(rootPath, s), Nil, Nil)
-  }
 
   /** The one partition layout every group must share (Nil = flat).
     * File-less groups (empty partitioned segments) carry no layout
     * evidence and are exempt. */
   private val partCols: Seq[String] = {
-    val layouts = entries.filter(_._4.nonEmpty).map(e => (e._1, e._2)).distinct
-    layouts.map(_._2).distinct match {
-      case Nil => Nil
-      case Seq(one) => one
-      case several =>
-        val flat = layouts.collectFirst { case (s, Nil) => s }
-        val parted = layouts.collectFirst { case (s, c) if c.nonEmpty => s }
-        if (flat.isDefined && several.size == 2 && several.contains(Nil))
-          throw new IllegalArgumentException(
-            s"$root mixes flat and partitioned segments (e.g. " +
-              s"${flat.get} vs ${parted.get}); the graft.manifest " +
-              "relation needs one consistent layout — use ManifestTable.read")
-        else {
-          val Seq(a, b) = several.filter(_.nonEmpty).take(2)
-          val segA = layouts.find(_._2 == a).get._1
-          val segB = layouts.find(_._2 == b).get._1
-          throw new IllegalArgumentException(
-            s"segment $segB of $root is partitioned on " +
-              s"'${b.mkString("/")}' but segment $segA " +
-              s"uses '${a.mkString("/")}'; the graft.manifest relation " +
-              "needs one consistent layout — use ManifestTable.read for " +
-              "mixed layouts")
-        }
-    }
+    val layouts = entries.filter(_._4.nonEmpty).map(e => (e._1, e._2))
+    ManifestTable.requireOneLayout(root, layouts)
+    layouts.headOption.fold(Seq.empty[String])(_._2)
   }
-  require(entries.filter(_._4.nonEmpty)
-      .forall(e => (e._2.isEmpty) == partCols.isEmpty),
-    s"$root mixes flat and partitioned segments; the graft.manifest " +
-      "relation needs one consistent layout — use ManifestTable.read")
 
-  /** Partition value types: smallest of Int/Long that fits every dir
-    * value per column, else String — matching what hive-style
-    * discovery infers for the layouts our writers produce. */
+  /** Partition value types: the merged segment schema's type when it
+    * has the column, else the smallest of Int/Long that fits every dir
+    * value, else String — what hive-style discovery infers for the
+    * layouts our writers produce. */
   override val partitionSchema: StructType = StructType(
     partCols.zipWithIndex.map { case (c, i) =>
       val vals = entries.filter(_._2.nonEmpty).map(_._3(i))
-      val dt =
+        .filterNot(_ == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      val dt = typeHint.flatMap(_.find(_.name == c)).map(_.dataType).getOrElse {
         if (vals.forall(v => scala.util.Try(v.toInt).isSuccess)) IntegerType
         else if (vals.forall(v => scala.util.Try(v.toLong).isSuccess)) LongType
         else StringType
-      StructField(c, dt, nullable = false)
+      }
+      StructField(c, dt, nullable = true)
     })
+
+  private val zone = Option(spark.sessionState.conf.sessionLocalTimeZone)
 
   private def partRow(raw: Seq[String]): InternalRow =
     if (raw.isEmpty) InternalRow.empty
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      raw.zipWithIndex.map { case (v, i) =>
-        val x: Any = partitionSchema(i).dataType match {
-          case IntegerType => v.toInt
-          case LongType => v.toLong
-          case _ => UTF8String.fromString(v)
-        }
-        x
-      }.toArray)
-
-  /** Zone-map stats per segment: embedded copy when present (zero IO),
-    * else the sidecar file (counted). A meta-bearing segment with NO
-    * embedded stats genuinely collected none — no sidecar exists to
-    * read. */
-  private val stats: Map[String, Option[graft.io.ManifestTable.SegStats]] =
-    segs.map { s =>
-      s -> (metas.get(s) match {
-        case Some(m) => m.stats
-        case None =>
-          ManifestSource.lastBuildSidecarReads += 1
-          ManifestTable.segmentStats(spark, root, s)
-      })
-    }.toMap
+    else InternalRow.fromSeq(raw.zip(partitionSchema.fields).map { case (v, f) =>
+      if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+      else Cast(Literal(UTF8String.fromString(v)), f.dataType, zone).eval()
+    })
 
   // Bloom sidecars load lazily (a probe-free query never opens them)
-  // and memoize per (segment, column) for the relation's lifetime;
-  // embedded metadata short-circuits columns with no sidecar.
+  // and memoize per (segment, column) for the relation's lifetime
   private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), Option[org.apache.spark.util.sketch.BloomFilter]]
   private def bloomOf(seg: String, colName: String) =
     bloomCache.computeIfAbsent((seg, colName), _ =>
-      metas.get(seg) match {
-        case Some(m) if !m.blooms.contains(colName) => None
-        case _ => ManifestTable.segmentBloom(spark, root, seg, colName)
-      })
+      ManifestTable.bloomOf(spark, root, seg, metas(seg), colName))
 
   override def rootPaths: Seq[Path] = segs.map(s => new Path(rootPath, s))
 
@@ -973,11 +789,11 @@ private[graft] class ManifestFileIndex(spark: SparkSession, root: String,
     // segments
     val keep = entries.filter { case (s, _, _, _) =>
       bounds.forall { case (c, lo, hi) =>
-        ManifestTable.statsAdmit(stats(s), c, lo, hi)
+        ManifestTable.statsAdmit(metas(s).stats, c, lo, hi)
       } && keySets.forall { case (c, values) =>
         values.exists { case (b, pv) =>
           b.forall(x =>
-            ManifestTable.statsAdmit(stats(s), c, Some(x), Some(x))) &&
+            ManifestTable.statsAdmit(metas(s).stats, c, Some(x), Some(x))) &&
           pv.forall(x => ManifestTable.bloomAdmit(bloomOf(s, c), x))
         }
       }

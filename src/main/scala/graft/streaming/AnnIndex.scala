@@ -109,25 +109,15 @@ object AnnIndex {
     } finally graft.core.Lineage.release(b)
   }
 
-  /** The index restricted to `cells`: per-segment partition-pruned
-    * reads (only the named `cell=` dirs are opened), minus any
-    * tombstoned ids — the tombstone set is O(deleted) and BROADCAST
-    * into a left-anti join, so honoring deletes never shuffles the
-    * corpus side; [[compact]] applies deletes physically and resets
-    * that cost to zero. */
+  /** The index restricted to `cells`: the merge-on-read index (one
+    * scan, minus tombstoned ids — the tombstone set is O(deleted) and
+    * BROADCAST into a left-anti join, so honoring deletes never
+    * shuffles the corpus side; [[compact]] applies deletes physically
+    * and resets that cost to zero) whose `cell` filter is partition
+    * pruning: only the named `cell=` dirs of each segment are opened. */
   private def readCells(spark: SparkSession, root: String,
-      cells: Seq[Int]): DataFrame = {
-    val segs = ManifestTable.dataSegments(spark, root)
-    require(segs.nonEmpty, s"AnnIndex: no committed index under $root")
-    val data = segs.map { seg =>
-      spark.read.parquet(s"$root/$seg").filter(col("cell").isin(cells: _*))
-    }.reduce(_ unionByName _)
-    ManifestTable.tombstones(spark, root) match {
-      case None => data
-      case Some(t) =>
-        data.join(broadcast(t.select("id")), Seq("id"), "left_anti")
-    }
-  }
+      cells: Seq[Int]): DataFrame =
+    ManifestTable.readMerged(spark, root).filter(col("cell").isin(cells: _*))
 
   /** Merge-on-read DELETE from the index: append the ids as one
     * tombstone segment — O(ids) IO, every data segment stays

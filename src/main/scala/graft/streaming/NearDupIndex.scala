@@ -155,6 +155,7 @@ object NearDupIndex {
         }
         kept
       }
+    lazy val metas = graft.io.ManifestTable.segmentMetas(spark, root)
     segs.filterNot(covered).foreach { seg =>
       val segDir = new Path(br, seg)
       // complete = committed AND banded at the CURRENT pb count; a
@@ -163,7 +164,7 @@ object NearDupIndex {
       if (!f.exists(new Path(segDir, "_SUCCESS")) ||
           !f.exists(pbMarker(segDir, PartBuckets)))
         writeFor(spark, root, seg,
-          spark.read.parquet(s"$root/$seg")
+          graft.io.ManifestTable.readSegs(spark, root, Seq(seg), metas)
             .select(col("doc_id").as("id"), col("sig")))
     }
   }

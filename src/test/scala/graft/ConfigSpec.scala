@@ -82,6 +82,30 @@ class ConfigSpec extends AnyFunSuite {
       "sessions must come from core.Session.build: " + offenders.mkString(", "))
   }
 
+  test("one segment reader: only io/ManifestTable.scala reads a manifest segment dir as parquet") {
+    import scala.jdk.CollectionConverters._
+    // comments are stripped; string literals stay, since the segment
+    // path is itself an interpolated string (strings are matched first
+    // so "a//b" opens no comment)
+    val comment = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+    // `.parquet(` whose arguments build `<...root>/<segment>` paths
+    val segmentRead = """\.parquet\(\s*[^\n]*?s"\$\{?\w*[Rr]oot\}?/\$""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val reader = files.find(_.endsWith("io/ManifestTable.scala"))
+    assert(reader.exists(f => segmentRead.findFirstIn(
+      java.nio.file.Files.readString(f)).isDefined), "the lint must see the reader's own reads")
+    val offenders = files.filterNot(reader.contains).filter { f =>
+      val code = comment.replaceAllIn(java.nio.file.Files.readString(f),
+        m => if (m.matched.startsWith("/")) "" else
+          java.util.regex.Matcher.quoteReplacement(m.matched))
+      segmentRead.findFirstIn(code).isDefined
+    }
+    assert(offenders.isEmpty,
+      "manifest segments are read through ManifestTable.readSegs: " +
+        offenders.mkString(", "))
+  }
+
   test("TestSession carries the shared session settings") {
     assert(spark.sessionState.functionRegistry
       .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")))

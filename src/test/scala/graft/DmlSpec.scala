@@ -74,6 +74,20 @@ class DmlSpec extends AnyFunSuite {
       "replacement of [200,300) must keep its zone-map range")
     assert(df.filter(col("id") === 50).select("v").as[Long].head() == -5L)
     assert(ManifestTable.read(spark, r).count() == 300)
+    // a broad UPDATE touching every segment rewrites all three, still 1:1
+    val before = ManifestTable.dataSegments(spark, r)
+    assert(ManifestDml.updateWhere(spark, r, Seq("v" -> lit(7L)),
+      col("id") % 100 === 7) == ManifestDml.DmlReceipt(3, 3L))
+    val after = ManifestTable.dataSegments(spark, r)
+    assert(after.size == 3 && after.toSet.intersect(before.toSet).isEmpty,
+      s"every segment must be replaced 1:1: $before -> $after")
+    val df2 = spark.read.format("graft.manifest").load(r)
+    Seq(7, 107, 207).foreach { k =>
+      assert(df2.filter(col("id") === k).select("v").as[Long].head() == 7L)
+      assert(graft.sources.ManifestSource.lastListedSegments.size == 1,
+        s"replacement holding id $k must keep its zone-map range")
+    }
+    assert(ManifestTable.read(spark, r).count() == 300)
   }
 
   test("DML on a root spelled as a bare path, file:/ or file:/// — flat and partitioned segments attribute to the manifest") {

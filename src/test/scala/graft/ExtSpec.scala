@@ -4239,8 +4239,18 @@ class ExtSpec extends AnyFunSuite {
     assert(ManifestTable.readRange(spark, root, "s", Some("y"), Some("zzz"))
       .collect().map(_.getString(0)).sorted.toSeq == Seq("zeta\r1", "zz"))
     // corrupt one sidecar on disk: that segment degrades to
-    // always-read; nothing throws anywhere on the read path
+    // always-read; nothing throws anywhere on the read path. Readers
+    // take stats from the manifest's embedded copy, so strip that
+    // segment's #meta line first: its stats then come from the sidecar
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mf = new Path(root, "_manifest.v" + ManifestTable.versions(spark, root).last)
+    val mfIn = fs.open(mf)
+    val mfLines = try scala.io.Source.fromInputStream(mfIn, "UTF-8")
+      .getLines().toList finally mfIn.close()
+    fs.delete(mf, false)
+    val mfOut = fs.create(mf, true)
+    try mfOut.write(mfLines.filterNot(_.startsWith(s"#meta ${segs.head} "))
+      .mkString("", "\n", "\n").getBytes("UTF-8")) finally mfOut.close()
     val bad = new Path(new Path(root, segs.head), "_stats.graft.json")
     fs.delete(bad, false)
     val out = fs.create(bad, true)
@@ -4755,6 +4765,112 @@ class ExtSpec extends AnyFunSuite {
     ManifestTable.destroy(spark, root)
   }
 
+  test("ManifestTable writes keep one segment layout: a flat/partitioned mix is refused at append and optimize") {
+    import spark.implicits._
+    import graft.io.ManifestTable
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val flat = new org.apache.hadoop.fs.Path(wh, "graft_manifest_layout_flat").toString
+    ManifestTable.destroy(spark, flat)
+    ManifestTable.append(spark, flat, Seq((1L, 0), (2L, 1)).toDF("v", "p"))
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.append(spark, flat, Seq((3L, 0)).toDF("v", "p"),
+        partitionBy = Seq("p"))
+    }
+    assert(e.getMessage.contains("one layout"), e.getMessage)
+    assert(ManifestTable.dataSegments(spark, flat).size == 1)
+    assert(ManifestTable.read(spark, flat).agg(sum("v")).head.getLong(0) == 3L,
+      "a refused append must leave the table readable")
+    // the reverse: a flat segment onto a partitioned table
+    val parted = new org.apache.hadoop.fs.Path(wh, "graft_manifest_layout_part").toString
+    ManifestTable.destroy(spark, parted)
+    ManifestTable.append(spark, parted, Seq((1L, 0), (2L, 1)).toDF("v", "p"),
+      partitionBy = Seq("p"))
+    ManifestTable.append(spark, parted, Seq((3L, 0)).toDF("v", "p"),
+      partitionBy = Seq("p"))
+    intercept[IllegalArgumentException] {
+      ManifestTable.append(spark, parted, Seq((4L, 1)).toDF("v", "p"))
+    }
+    // optimize folding only some segments must keep the layout of the rest
+    val big = ManifestTable.segmentSizes(spark, parted).map(_._2).max
+    ManifestTable.append(spark, parted, (10L until 5000L).map(x => (x, 0)).toDF("v", "p"),
+      partitionBy = Seq("p"))
+    intercept[IllegalArgumentException] {
+      ManifestTable.optimize(spark, parted, big + 1)
+    }
+    assert(ManifestTable.optimize(spark, parted, big + 1, partitionBy = Seq("p")) == 2)
+    assert(ManifestTable.read(spark, parted).count() == 4993L)
+    // a mixed table committed by hand (or by an older writer): readers
+    // refuse it and name the repair; compact(partitionBy) rewrites it
+    val mixed = new org.apache.hadoop.fs.Path(wh, "graft_manifest_layout_mixed").toString
+    val donor = new org.apache.hadoop.fs.Path(wh, "graft_manifest_layout_donor").toString
+    Seq(mixed, donor).foreach(ManifestTable.destroy(spark, _))
+    ManifestTable.append(spark, mixed, Seq((1L, 0), (2L, 1)).toDF("v", "p"))
+    ManifestTable.append(spark, donor, Seq((3L, 0), (4L, 1)).toDF("v", "p"),
+      partitionBy = Seq("p"))
+    def local(r: String) = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(r).toUri.getPath)
+    val moved = ManifestTable.dataSegments(spark, donor).head
+    java.nio.file.Files.move(local(donor).resolve(moved), local(mixed).resolve(moved))
+    val donorMeta = java.nio.file.Files.readAllLines(local(donor).resolve("_manifest.v1"))
+      .toArray.map(_.toString).filter(_.startsWith(s"#meta $moved "))
+    assert(donorMeta.length == 1)
+    java.nio.file.Files.write(local(mixed).resolve("_manifest.v2"),
+      (java.nio.file.Files.readAllLines(local(mixed).resolve("_manifest.v1"))
+        .toArray.map(_.toString) ++ donorMeta :+ moved).mkString("", "\n", "\n")
+        .getBytes("UTF-8"))
+    val refused = intercept[IllegalArgumentException](ManifestTable.read(spark, mixed))
+    assert(refused.getMessage.contains("ManifestTable.compact"), refused.getMessage)
+    ManifestTable.compact(spark, mixed, partitionBy = Seq("p"))
+    val repaired = ManifestTable.read(spark, mixed)
+    assert(repaired.agg(sum("v")).head.getLong(0) == 10L)
+    assert(repaired.groupBy("p").count().collect().map(r => (r.getInt(0), r.getLong(1)))
+      .sorted.toSeq == Seq((0, 2L), (1, 2L)))
+    assert(ManifestTable.dataSegments(spark, mixed).size == 1)
+    Seq(flat, parted, mixed, donor).foreach(ManifestTable.destroy(spark, _))
+  }
+
+  test("ALTER ADD COLUMNS and ALTER COLUMN TYPE on a hive-partitioned manifest table keep its layout") {
+    import spark.implicits._
+    import graft.io.ManifestTable
+    import org.apache.spark.sql.types.LongType
+    val root = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"),
+      "graft_manifest_alter_part").toString
+    ManifestTable.destroy(spark, root)
+    ManifestTable.append(spark, root, Seq((1, 0), (2, 1)).toDF("v", "p"),
+      partitionBy = Seq("p"))
+    ManifestTable.addColumns(spark, root, Seq("w" -> LongType))
+    ManifestTable.alterColumnType(spark, root, "v", LongType)
+    val head = ManifestTable.read(spark, root)
+    assert(head.columns.toSet == Set("v", "p", "w"))
+    assert(head.schema("v").dataType == LongType)
+    assert(head.filter(col("w").isNull).count() == 2L)
+    ManifestTable.append(spark, root, Seq((3L, 0, 7L)).toDF("v", "p", "w"),
+      partitionBy = Seq("p"))
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      df.agg(sum("v"), sum("w")).head.toSeq
+    assert(sums(ManifestTable.read(spark, root)) == Seq(6L, 7L))
+    assert(sums(spark.sql(s"SELECT * FROM `graft.manifest`.`$root`")) == Seq(6L, 7L),
+      "the SQL face must see the evolved schema of a partitioned table")
+    ManifestTable.compact(spark, root, partitionBy = Seq("p"))
+    assert(sums(ManifestTable.read(spark, root)) == Seq(6L, 7L))
+    ManifestTable.destroy(spark, root)
+  }
+
+  test("merge-on-read tombstones keyed on different columns fail loudly, never resurrect deleted rows") {
+    import spark.implicits._
+    import graft.io.ManifestTable
+    val root = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"),
+      "graft_manifest_del_keysets").toString
+    ManifestTable.destroy(spark, root)
+    ManifestTable.append(spark, root, Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v"))
+    ManifestTable.delete(spark, root, Seq(1L).toDF("id"))
+    ManifestTable.delete(spark, root, Seq((2L, 20L)).toDF("id", "v"))
+    intercept[org.apache.spark.sql.AnalysisException](ManifestTable.readMerged(spark, root))
+    intercept[org.apache.spark.sql.AnalysisException](ManifestTable.compact(spark, root))
+    assert(ManifestTable.deleteSegments(spark, root).size == 2,
+      "a refused compact must keep the tombstones")
+    ManifestTable.destroy(spark, root)
+  }
+
   test("graft.manifest relation: a partitioned segment with loose files at its root fails the build loudly, never reads partially") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -4779,6 +4895,29 @@ class ExtSpec extends AnyFunSuite {
     assert(spark.read.format("graft.manifest").load(root)
       .agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0) == 3L,
       "files the commit never named must be invisible to the relation")
+    assert(ManifestTable.read(spark, root)
+      .agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0) == 3L,
+      "files the commit never named must be invisible to typed reads")
+    assert(Seq(0, 1).map(k => ManifestTable.readPoint(spark, root, "p", k)
+      .agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0)).sum == 3L,
+      "files the commit never named must be invisible to point reads")
+    // the same junk in a FLAT segment, where a directory read would
+    // pick it up: typed reads still see only the commit's files
+    val flat = new Path(spark.conf.get("spark.sql.warehouse.dir"),
+      "graft_manifest_mixedshape_flat").toString
+    ManifestTable.destroy(spark, flat)
+    ManifestTable.append(spark, flat, Seq(1L, 2L).toDF("v"))
+    val flatSeg = ManifestTable.segments(spark, flat).head
+    Seq(99L).toDF("v").coalesce(1).write.mode("overwrite")
+      .parquet(s"$flat/.loose-tmp")
+    val flatLoose = f.listStatus(new Path(flat, ".loose-tmp"))
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet")).head
+    assert(f.rename(flatLoose.getPath, new Path(s"$flat/$flatSeg/loose.parquet")))
+    assert(ManifestTable.read(spark, flat)
+      .agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0) == 3L,
+      "a junk file in a flat segment must be invisible to typed reads")
+    assert(ManifestTable.readPoint(spark, flat, "v", 99L).isEmpty)
+    ManifestTable.destroy(spark, flat)
     // legacy table (no #meta lines -> per-segment listing fallback):
     // the same mixed shape must fail the build loudly, never read
     // partially

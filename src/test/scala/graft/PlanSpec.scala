@@ -818,6 +818,43 @@ class PlanSpec extends AnyFunSuite {
     assert(spark.read.format("graft.manifest").load(root).count() == n * 100L + 1)
     assert(!ManifestSource.lastBuildCacheHit)
     assert(ManifestSource.lastBuildListOps == 0)
+    // the typed reads plan from the same metadata: building their frames
+    // runs no Spark job (no per-segment schema-inference footer job)
+    val versions = ManifestTable.versions(spark, root)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftBenchInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val (all, point, range, changes) =
+      try {
+        val built = (ManifestTable.read(spark, root),
+          ManifestTable.readPoint(spark, root, "v", 150L),
+          ManifestTable.readRange(spark, root, "v", Some(100L), Some(299L)),
+          ManifestTable.readChanges(spark, root, versions.head, versions.last))
+        org.apache.spark.GraftBenchInternals.drainListenerBus(sc)
+        built
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"building typed reads must run no Spark job, saw ${jobs.get}")
+    assert(all.count() == n * 100L + 1)
+    assert(point.count() == 1L)
+    assert(range.count() == 200L)
+    assert(changes.count() == (n - 1) * 100L + 1)
+    // the metadata-only answers come from the embedded copies: no
+    // sidecar open, no segment listing
+    ManifestSource.lastBuildListOps = 0
+    ManifestSource.lastBuildSidecarReads = 0
+    // the last segment carries no Bloom column, so it always admits
+    assert(ManifestTable.pointSegments(spark, root, "v", 150L).size == 2)
+    assert(ManifestTable.prunedDataSegments(spark, root, "v",
+      Some(n * 100L), None).size == 2)
+    assert(ManifestTable.fastRowCount(spark, root).contains(n * 100L + 1))
+    assert(ManifestSource.lastBuildSidecarReads == 0,
+      s"embedded stats must answer without sidecars, saw ${ManifestSource.lastBuildSidecarReads}")
+    assert(ManifestSource.lastBuildListOps == 0)
     // legacy table (manifest without #meta lines, the pre-metadata
     // format): the build falls back to one listing + one sidecar read
     // per segment and one footer-merge job — and still answers right
