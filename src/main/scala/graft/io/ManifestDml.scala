@@ -164,29 +164,30 @@ object ManifestDml {
     }
   }
 
-  /** Shared DML preamble: pin the head version, enforce the OCC
-    * expectation, reject tombstoned tables, build the version-pinned
-    * relation — every rewrite verb's entry invariant in ONE place. */
+  /** Shared DML preamble: pin the head version and read its snapshot
+    * (the one prior-manifest read the swap commits from), enforce the
+    * OCC expectation, reject tombstoned tables, build the
+    * version-pinned relation — every rewrite verb's entry invariant in
+    * ONE place. */
   private def dmlTarget(spark: SparkSession, root: String, verb: String,
       expectVersion: Option[Long])
-      : (org.apache.hadoop.fs.FileSystem, Path, Long, Seq[String],
+      : (org.apache.hadoop.fs.FileSystem, Path, Long, ManifestTable.Snapshot,
          org.apache.spark.sql.execution.datasources.HadoopFsRelation) = {
     val (f, p) = ManifestTable.fs(spark, root)
-    val v = ManifestTable.currentVersion(f, p).getOrElse(
-      throw new IllegalStateException(s"$verb on uncommitted table $root"))
+    val (v, snap) = ManifestTable.headSnapshot(spark, root)
+    if (v == 0L) throw new IllegalStateException(s"$verb on uncommitted table $root")
     expectVersion.foreach { ev =>
       require(ev == v,
         s"$root is at manifest v$v but the statement was planned against " +
           s"v$ev (pinned-version target, or a concurrent commit won the " +
           "race) — re-run against the head")
     }
-    val all = ManifestTable.readManifest(f, p, v)
-    require(!all.exists(_.startsWith(ManifestTable.DelPrefix)),
+    require(!snap.segs.exists(_.startsWith(ManifestTable.DelPrefix)),
       s"$root has outstanding merge-on-read tombstones; a copy-on-write " +
         "rewrite under them could resurrect deleted rows — compact() first")
     val rel = graft.sources.ManifestSource.relation(
       spark, root, Some(v), allowTombstones = false)
-    (f, p, v, all, rel)
+    (f, p, v, snap, rel)
   }
 
   /** Every segment's metadata, as the pinned relation's file index
@@ -195,14 +196,6 @@ object ManifestDml {
       rel: org.apache.spark.sql.execution.datasources.HadoopFsRelation) =
     rel.location.asInstanceOf[graft.sources.ManifestFileIndex].segMetas
 
-  /** The path component right after the table root IS the segment
-    * name, for flat (`root/seg/part-*`) and partitioned
-    * (`root/seg/k=v/part-*`) segments alike ([[ManifestTable
-    * .rootRelative]]). Must be projected on the scan side, never
-    * post-join. */
-  private def segOf(f: org.apache.hadoop.fs.FileSystem, p: Path): Column =
-    substring_index(ManifestTable.rootRelative(f, p, input_file_name()), "/", 1)
-
   /** Shared copy-on-write core: find touched segments through the
     * pruned predicate scan, rewrite them with `rewrite`, swap
     * atomically. `rewrite` receives exactly the touched segments'
@@ -210,24 +203,24 @@ object ManifestDml {
   private def dmlRewrite(spark: SparkSession, root: String, cond: Column,
       expectVersion: Option[Long], retryRaces: Boolean = false)(
       rewrite: DataFrame => DataFrame): DmlReceipt = {
-    val (f, p, v, all, rel) =
+    val (f, p, v, snap, rel) =
       dmlTarget(spark, root, "row-level DML", expectVersion)
     // conditions/assignments speak LOGICAL names; the relation scans
     // PHYSICAL ones — rename up front (Catalyst pushes the rebased
     // predicate through the rename aliases, so pruning is unchanged),
     // run the whole rewrite in logical space, translate back at the
     // segment write (swap below)
-    val mapping = ManifestTable.columnMappingAt(spark, root, v)
+    val mapping = snap.actions._2
 
     // ---- phase 1: pruned match scan, grouped by source segment ----
     val df = ManifestTable.applyMapping(spark.baseRelationToDataFrame(rel), mapping)
-    val segCol = segOf(f, p)
+    val segCol = ManifestTable.segmentOf(f, p)
     val matchedBySeg = df.filter(cond)
       .groupBy(segCol.as("_seg")).count().collect()
     if (matchedBySeg.isEmpty) return DmlReceipt(0, 0L)
     val touched = matchedBySeg.map(_.getString(0)).toSeq
     val rowsMatched = matchedBySeg.map(_.getLong(1)).sum
-    val allSet = all.toSet
+    val allSet = snap.segs.toSet
     require(touched.forall(allSet),
       s"internal: matched files attributed outside the manifest " +
         s"(${touched.filterNot(allSet).mkString(", ")}) — root prefix mismatch")
@@ -239,7 +232,7 @@ object ManifestDml {
     val kept = rewrite(rows)
     require(kept.columns.toSeq == rows.columns.toSeq,
       "internal: DML rewrite changed the column set")
-    swapRetrying(spark, root, v, touched,
+    swapRetrying(spark, root, v, snap, touched,
       ManifestTable.toPhysical(kept, mapping),
       rel.partitionSchema.fieldNames.toSeq, metas, retryRaces)
     DmlReceipt(touched.size, rowsMatched)
@@ -271,24 +264,23 @@ object ManifestDml {
     * mid-read of segments the winner just retired fails loudly and
     * re-runs; nothing is ever silently lost. */
   private def swapRetrying(spark: SparkSession, root: String, v: Long,
-      touched: Seq[String], kept: DataFrame, partBy: Seq[String],
-      metas: Map[String, ManifestTable.SegMeta],
+      snap: ManifestTable.Snapshot, touched: Seq[String], kept: DataFrame,
+      partBy: Seq[String], metas: Map[String, ManifestTable.SegMeta],
       retryRaces: Boolean): Unit = {
-    val (f, p) = ManifestTable.fs(spark, root)
-    var curV = v
+    var (curV, cur) = (v, snap)
     var attempts = 0
     while (true) {
       try {
-        swapSegments(spark, root, curV, touched, kept, partBy, metas)
+        swapSegments(spark, root, curV, cur, touched, kept, partBy, metas)
         return
       } catch {
         case e: ManifestTable.CommitRaceLost =>
           if (!retryRaces || attempts >= 20) throw e
           attempts += 1
-          val nv = ManifestTable.currentVersion(f, p).getOrElse(
-            throw new IllegalStateException(
-              s"$root lost its manifest mid-DML retry"))
-          val head = ManifestTable.readManifest(f, p, nv)
+          val (nv, headSnap) = ManifestTable.headSnapshot(spark, root)
+          if (nv == 0L) throw new IllegalStateException(
+            s"$root lost its manifest mid-DML retry")
+          val head = headSnap.segs
           val headSet = head.toSet
           val missing = touched.filterNot(headSet)
           if (missing.nonEmpty) throw new ManifestTable.CommitRaceLost(
@@ -296,7 +288,7 @@ object ManifestDml {
               s"rewrote or dropped touched segment(s) " +
               s"${missing.mkString(", ")} — true overlap, re-run against " +
               "the new head")
-          val plannedDels = ManifestTable.readManifest(f, p, curV)
+          val plannedDels = cur.segs
             .filter(_.startsWith(ManifestTable.DelPrefix)).toSet
           val newDels = head.filter(s =>
             s.startsWith(ManifestTable.DelPrefix) && !plannedDels(s))
@@ -306,6 +298,7 @@ object ManifestDml {
               "unseen tombstones could resurrect deleted rows — " +
               "compact() and re-run")
           curV = nv
+          cur = headSnap
       }
     }
   }
@@ -383,10 +376,11 @@ object ManifestDml {
         case MergeInsert(_, values) => values.map(_._1)
         case _ => Nil
       })
-    val (f, p, v, all, rel) = dmlTarget(spark, root, "MERGE", expectVersion)
+    val (f, p, v, snap, rel) = dmlTarget(spark, root, "MERGE", expectVersion)
+    val all = snap.segs
     // logical-space MERGE over a physical-name scan, same contract as
     // dmlRewrite: rename on entry, translate back at the segment write
-    val mapping = ManifestTable.columnMappingAt(spark, root, v)
+    val mapping = snap.actions._2
     val tdf = ManifestTable.applyMapping(
       spark.baseRelationToDataFrame(rel), mapping)
     // WITH SCHEMA EVOLUTION: source-only columns extend the target
@@ -406,7 +400,7 @@ object ManifestDml {
     }
     val src = source.localCheckpoint()
     try {
-      val segCol = segOf(f, p)
+      val segCol = ManifestTable.segmentOf(f, p)
       // dynamic target pruning from the ON clause's equality keys:
       // the filter reaches the relation as a pushed predicate, so the
       // manifest's zone maps / Bloom sidecars prune whole segments
@@ -487,7 +481,7 @@ object ManifestDml {
             .cast(fd.dataType).as(fd.name)
         } :+ coalesce(t2(SrcCol), lit(-1)).as(SrcCol) // inserts → own segment
         val kept = j.filter(keep).select(outCols: _*)
-        swapRetrying(spark, root, v, touched,
+        swapRetrying(spark, root, v, snap, touched,
           ManifestTable.toPhysical(kept, mapping),
           rel.partitionSchema.fieldNames.toSeq, segMetas, retryRaces)
         DmlReceipt(touched.size, rowsMatched)
@@ -638,46 +632,34 @@ object ManifestDml {
 
   /** Phases 2b+3 shared by every rewriting DML verb: write `kept`
     * (carrying [[SrcCol]] source-segment tags) split 1:1 back into
-    * replacement segments, regenerate each replacement's sidecars from
-    * what ITS source carried, and commit the swap atomically under
+    * replacement segments through [[ManifestTable.writeSegments]] —
+    * each replacement's sidecars from what ITS source carried — and
+    * commit the swap atomically on `prior` (the snapshot of `v`) under
     * [[ManifestTable.DmlMark]], GC per the retention horizon.
     *
-    * The split is ONE write pass: `kept` writes hive-partitioned on
-    * the tag into a tmp shell and each `__graft_src=i` dir renames
-    * into place as `seg-<v+1>-dml<i>-…` — the [[ManifestTable
-    * .cluster]] trick, no extra shuffle, no per-segment job. 1:1
-    * matters on a clustered log: folding range-disjoint touched
-    * segments into one range-spanning replacement would blunt the
-    * zone maps a maintained layout exists for. A source whose rows
-    * were all deleted writes no dir and is simply dropped; MERGE
-    * inserts ride tag -1 into their own append-like segment. */
+    * The split is the writer's ONE write pass on the tag (`seg-<v+1>-
+    * dml<i>-…`), flat or partitioned alike, and its stats and Bloom
+    * jobs are grouped over all replacements, so a broad DML's job
+    * count does not grow with the segments it touches. 1:1 matters on
+    * a clustered log: folding range-disjoint touched segments into one
+    * range-spanning replacement would blunt the zone maps a maintained
+    * layout exists for. A source whose rows were all deleted writes no
+    * dir and is simply dropped; MERGE inserts ride tag -1 into their
+    * own append-like segment (`dmlins`, stat and Bloom columns the
+    * union of the touched segments'). */
   private def swapSegments(spark: SparkSession, root: String, v: Long,
-      touched: Seq[String], kept: DataFrame, partBy: Seq[String],
-      metas: Map[String, ManifestTable.SegMeta]): Unit = {
+      prior: ManifestTable.Snapshot, touched: Seq[String], kept: DataFrame,
+      partBy: Seq[String], metas: Map[String, ManifestTable.SegMeta]): Unit = {
     val (f, p) = ManifestTable.fs(spark, root)
-    val all = ManifestTable.readManifest(f, p, v)
-    val rest = all.filterNot(touched.toSet)
-    val tmp = s".dml-tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-    ManifestTable.writeSeg(kept, s"$root/$tmp", SrcCol +: partBy)
-    val shell = new Path(p, tmp)
-    val srcDirs =
-      if (!f.exists(shell)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else f.listStatus(shell).filter(st =>
-        st.isDirectory && st.getPath.getName.startsWith(SrcCol + "="))
-    val newSegs: Seq[(String, Int)] = srcDirs.toSeq
-      .map(d => d.getPath.getName.stripPrefix(SrcCol + "=").toInt)
-      .sorted
-      .map { i =>
-        val label = if (i < 0) "ins" else i.toString
-        val seg = s"seg-${v + 1}-dml$label-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        require(f.rename(new Path(shell, s"$SrcCol=$i"), new Path(p, seg)),
-          s"failed to place DML replacement segment $seg")
-        (seg, i)
-      }
-    val fallback: Seq[(String, Int)] =
-      if (newSegs.nonEmpty || rest.nonEmpty) Nil
-      else {
+    val rest = prior.segs.filterNot(touched.toSet)
+    val statsOf = touched.map(metas(_).stats.toSeq.flatMap(_.cols.keys))
+    val bloomsOf = touched.map(metas(_).blooms)
+    def colsFor(i: Int): (Seq[String], Seq[String]) =
+      if (i >= 0) (statsOf(i), bloomsOf(i))
+      else (statsOf.flatten.distinct, bloomsOf.flatten.distinct)
+    val placed = ManifestTable.writeSegments(spark, root, v, kept, Some(SrcCol),
+      partBy, "dml", colsFor) match {
+      case Nil if rest.isEmpty =>
         // full clear of a flat table: keep the table alive with its
         // schema — a 0-partition frame takes FileFormatWriter's
         // write-one-empty-file path, so the snapshot stays readable
@@ -685,56 +667,15 @@ object ManifestDml {
           s"DML removed every row of hive-partitioned table $root — a " +
             "partitioned layout cannot hold an empty snapshot; destroy() " +
             "or replace() instead")
-        val seg = s"seg-${v + 1}-dml-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        ManifestTable.writeSeg(spark.createDataFrame(
+        ManifestTable.writeSegments(spark, root, v, spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(
-            kept.schema.filterNot(_.name == SrcCol))), s"$root/$seg", Nil)
-        Seq((seg, -1))
-      }
-    val placed = newSegs ++ fallback
-    // per-replacement sidecars: stat/bloom columns come from the
-    // segment it REPLACES (the -1 insert segment takes the union — it
-    // has no single source)
-    val statsOf = touched.map(metas(_).stats.toSeq.flatMap(_.cols.keys))
-    val bloomsOf = touched.map(metas(_).blooms)
-    def statColsFor(i: Int): Seq[String] =
-      if (i >= 0) statsOf(i) else statsOf.flatten.distinct
-    def bloomColsFor(i: Int): Seq[String] =
-      if (i >= 0) bloomsOf(i) else bloomsOf.flatten.distinct
-    val newMetas: Map[String, String] =
-      if (partBy.isEmpty) {
-        // flat table: ONE grouped stats job + one pass per Bloom column
-        // for ALL replacements, schema known from the rewrite frame —
-        // the per-segment-jobs path below would schedule O(touched)
-        // tiny jobs and dominate a broad DML's wall clock
-        ManifestTable.sidecarsBatched(spark, root,
-          placed.map { case (seg, i) =>
-            (seg, statColsFor(i), bloomColsFor(i)) },
-          org.apache.spark.sql.types.StructType(
-            kept.schema.filterNot(_.name == SrcCol).map(_.copy(nullable = true))))
-      } else placed.map { case (seg, i) =>
-        val statCols = statColsFor(i)
-        val bCols = bloomColsFor(i)
-        val statsJson =
-          if (statCols.nonEmpty)
-            Some(ManifestTable.writeStats(spark, f, s"$root/$seg", statCols))
-          else None
-        if (bCols.nonEmpty) ManifestTable.writeBlooms(spark, f, s"$root/$seg", bCols)
-        seg -> ManifestTable.buildMeta(spark, f, root, seg, statsJson, bCols)
-      }.toMap
-    // rest/newSegs both empty is handled by the fallback above, so
-    // newList is non-empty by construction here
-    val newList = rest ++ placed.map(_._1)
-    ManifestTable.commit(f, p, v + 1, newList, Seq(ManifestTable.DmlMark),
-      metas = (ManifestTable.priorMetas(f, p, v) -- touched) ++ newMetas)
-    // the shell is OURS and now empty (every __graft_src dir renamed
-    // out) — delete explicitly; gc's unnamed-dir grace would otherwise
-    // leave it lingering, and gc must never assume an unnamed fresh
-    // dir is collectable (it may be a concurrent appender's in-flight
-    // segment — see ManifestTable.gcGraceMs)
-    f.delete(shell, true)
-    ManifestTable.gc(f, p) // retires the touched dirs
+            kept.schema.filterNot(_.name == SrcCol))), None, Nil, "dml-",
+          _ => colsFor(-1))
+      case segs => segs
+    }
+    ManifestTable.commit(f, p, v + 1, prior, rest ++ placed.map(_._1),
+      Seq(ManifestTable.DmlMark), metas = placed.map(s => s._1 -> s._3).toMap)
+    ManifestTable.gc(f, p, prior) // retires the touched dirs
   }
 }

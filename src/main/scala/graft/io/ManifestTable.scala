@@ -3,7 +3,7 @@ package graft.io
 import scala.collection.immutable.SeqMap
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, count, datediff, lit, max, min,
@@ -220,7 +220,10 @@ object ManifestTable {
     * log with thousands of ingests between packs that was the
     * remaining O(segments) driver IO per query; real lakehouse logs
     * carry exactly this in the commit. Every reader — typed and SQL —
-    * plans from these lines through [[segmentMetas]]/[[readSegs]].
+    * plans from these lines through [[segmentMetas]]/[[readSegs]], and
+    * every writer encodes them in one place ([[writeSegments]], which
+    * also writes the sidecars); [[commit]] carries each untouched
+    * segment's line forward verbatim from the prior [[Snapshot]].
     * Sidecars keep being written (external tools and tables whose
     * manifest lost its `#meta` lines read them); the manifest line is
     * a COPY taken at commit time, authoritative for the snapshot it
@@ -308,19 +311,11 @@ object ManifestTable {
   private def colMapLine(p: String, l: String): String =
     ColMapPrefix + "{\"p\":" + jsonString(p) + ",\"l\":" + jsonString(l) + "}"
 
-  /** Column mapping as of version `v` (physical → logical; columns
-    * not listed have logical ≡ physical). */
-  def columnMappingAt(spark: SparkSession, root: String, v: Long): Seq[(String, String)] = {
-    val (f, p) = fs(spark, root)
-    colMapLines(manifestLines(f, p, v))
-  }
-
-  /** Head-version [[columnMappingAt]]; empty for an uncommitted root. */
-  def columnMapping(spark: SparkSession, root: String): Seq[(String, String)] = {
-    val (f, p) = fs(spark, root)
-    currentVersion(f, p).map(v => colMapLines(manifestLines(f, p, v)))
-      .getOrElse(Seq.empty)
-  }
+  /** Head-version column mapping (physical → logical; columns not
+    * listed have logical ≡ physical); empty for an uncommitted root.
+    * Other versions: `snapshotAt(…, Some(v)).actions`. */
+  def columnMapping(spark: SparkSession, root: String): Seq[(String, String)] =
+    snapshotAt(spark, root, None).actions._2
 
   /** Reader-side mapping application: rename physical → logical (a
     * physical name the frame lacks is a no-op, matching `drop`'s
@@ -352,33 +347,16 @@ object ManifestTable {
     mapping.collectFirst { case (p, l) if eq(p, name) => l }.getOrElse(name)
   }
 
-  /** Column names dropped from the visible schema as of version `v`
-    * (accumulated, case preserved; match with the session resolver). */
-  def droppedColsAt(spark: SparkSession, root: String, v: Long): Seq[String] = {
-    val (f, p) = fs(spark, root)
-    dropColLines(manifestLines(f, p, v))
-  }
-
-  /** Head-version [[droppedColsAt]]; empty for an uncommitted root. */
-  def droppedCols(spark: SparkSession, root: String): Seq[String] = {
-    val (f, p) = fs(spark, root)
-    currentVersion(f, p).map(v => dropColLines(manifestLines(f, p, v)))
-      .getOrElse(Seq.empty)
-  }
+  /** Head-version column names dropped from the visible schema
+    * (accumulated, case preserved; match with the session resolver);
+    * empty for an uncommitted root. */
+  def droppedCols(spark: SparkSession, root: String): Seq[String] =
+    snapshotAt(spark, root, None).actions._1
 
   /** Subtract the dropped-column projection (case-insensitive on the
     * default resolver; `drop` ignores names the frame lacks). */
   private def applyDrops(df: DataFrame, dropped: Seq[String]): DataFrame =
     if (dropped.isEmpty) df else df.drop(dropped: _*)
-
-  /** (dropped physical names, column mapping) of version `v` — ONE
-    * manifest read for both carried schema states. */
-  private def schemaActionsAt(spark: SparkSession, root: String,
-      v: Long): (Seq[String], Seq[(String, String)]) = {
-    val (f, p) = fs(spark, root)
-    val lines = manifestLines(f, p, v)
-    (dropColLines(lines), colMapLines(lines))
-  }
 
   /** The reader-side schema projection every face applies LAST: drop
     * the tombstoned physical columns, then rename the survivors to
@@ -600,13 +578,30 @@ object ManifestTable {
   def readAt(spark: SparkSession, root: String, v: Long): DataFrame =
     readSnapshot(spark, root, snapshotAt(spark, root, Some(v)))
 
-  /** One manifest version as readers see it: its segments, their
-    * embedded metadata, its content fingerprint, and its schema actions
-    * (dropped physical columns, column mapping). `version` is the
-    * pinned version (None for a head read). */
-  private[graft] final case class Snapshot(version: Option[Long],
-      segs: Seq[String], metas: Map[String, SegMeta], fingerprint: String,
-      actions: (Seq[String], Seq[(String, String)]))
+  /** One manifest version as readers and writers see it: its lines,
+    * from which derive its segments, their embedded metadata (raw
+    * `#meta` JSON, which a commit carries verbatim, and decoded), its
+    * content fingerprint, and its schema actions (dropped physical
+    * columns, column mapping). `version` is the pinned version (None
+    * for a head read). */
+  private[graft] final case class Snapshot(version: Option[Long], lines: Seq[String]) {
+    lazy val segs: Seq[String] = lines.filterNot(_.startsWith("#"))
+    lazy val metaJson: Map[String, String] = lines.iterator
+      .filter(_.startsWith(MetaPrefix))
+      .flatMap { l =>
+        val rest = l.stripPrefix(MetaPrefix)
+        val sp = rest.indexOf(' ')
+        if (sp <= 0) None else Some((rest.take(sp), rest.drop(sp + 1)))
+      }.toMap
+    lazy val metas: Map[String, SegMeta] =
+      metaJson.flatMap { case (s, j) => decodeMeta(j).map(s -> _) }
+    lazy val fingerprint: String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(lines.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    lazy val actions: (Seq[String], Seq[(String, String)]) =
+      (dropColLines(lines), colMapLines(lines))
+  }
 
   /** [[Snapshot]] of manifest `version` (head when None) — ONE
     * manifest read. An uncommitted root has an empty head snapshot; a
@@ -615,9 +610,26 @@ object ManifestTable {
       version: Option[Long]): Snapshot = {
     val (f, p) = fs(spark, root)
     version.orElse(currentVersion(f, p)) match {
-      case None => Snapshot(None, Nil, Map.empty, "", (Nil, Nil))
+      case None => Snapshot(None, Nil)
       case Some(v) => manifestSnapshot(spark, root, v).copy(version = version)
     }
+  }
+
+  /** The head a write commits on top of: its version (0 for an
+    * uncommitted root) and its [[Snapshot]] — the one read of the
+    * prior manifest that the write and its [[commit]] share. */
+  private[io] def headSnapshot(spark: SparkSession, root: String): (Long, Snapshot) = {
+    val (f, p) = fs(spark, root)
+    currentVersion(f, p).fold((0L, Snapshot(None, Nil)))(v =>
+      (v, manifestSnapshot(spark, root, v)))
+  }
+
+  /** [[headSnapshot]] of a committed table; `uncommitted` otherwise. */
+  private def committedHead(spark: SparkSession, root: String,
+      uncommitted: => String): (Long, Snapshot) = {
+    val head = headSnapshot(spark, root)
+    if (head._1 == 0L) throw new IllegalStateException(uncommitted)
+    head
   }
 
   /** Every typed read of a snapshot: its data segments through
@@ -699,32 +711,33 @@ object ManifestTable {
   /** Atomically publish `segs` as manifest version `v` through the
     * configured [[CommitStrategy]] (single winner per version; the
     * loser throws and its segment dir is orphaned, never read).
-    * `marks` are `#`-prefixed metadata lines ([[RewriteMark]]);
-    * `metas` maps segment names to their embedded-metadata JSON
-    * ([[MetaPrefix]] lines — only segments actually named by this
-    * commit are emitted, so a carried-forward map can never leak a
-    * retired segment's metadata into a newer snapshot). */
-  private[io] def commit(f: FileSystem, root: Path, v: Long, segs: Seq[String],
-      marks: Seq[String] = Nil, metas: Map[String, String] = Map.empty,
+    * `prior` is the [[Snapshot]] of version `v - 1` the writer already
+    * read (empty for `v = 1`). `marks` are `#`-prefixed metadata lines
+    * ([[RewriteMark]]); `metas` maps the segments this write added to
+    * their embedded-metadata JSON ([[MetaPrefix]] lines); every other
+    * named segment carries its `prior` line verbatim. Only segments
+    * named by this commit are emitted, so a retired segment's metadata
+    * can never leak into a newer snapshot. */
+  private[io] def commit(f: FileSystem, root: Path, v: Long, prior: Snapshot,
+      segs: Seq[String], marks: Seq[String] = Nil,
+      metas: Map[String, String] = Map.empty,
       addDrops: Seq[String] = Nil, clearDrops: Boolean = false,
       addMaps: Seq[(String, String)] = Nil): Unit = {
-    val metaLns = segs.flatMap(s => metas.get(s).map(j => s"$MetaPrefix$s $j"))
-    // ONE read of the prior manifest serves all carried states: the
-    // dropped-column set and the column mapping (table-level schema
-    // state every commit carries forward, exactly like the full
-    // segment list) and the commit-timestamp monotonicity clamp
-    // below. `clearDrops` is the FULL-rewrite escape: replace/compact/
-    // cluster write every row through the post-drop LOGICAL
-    // projection, so the physical bytes are gone, the name-tombstones
-    // can retire, and physical names converge back to logical — the
-    // mapping clears with the drop set (partial rewrites — optimize/
-    // clusterRange/DML — must keep carrying: untouched segments may
-    // still hold the column / the old physical name).
-    val prevLines =
-      if (v <= 1L) Seq.empty[String]
-      else scala.util.Try(manifestLines(f, root, v - 1)).getOrElse(Seq.empty)
+    val metaLns = segs.flatMap(s =>
+      metas.get(s).orElse(prior.metaJson.get(s)).map(j => s"$MetaPrefix$s $j"))
+    // the prior snapshot serves all carried states: the dropped-column
+    // set and the column mapping (table-level schema state every
+    // commit carries forward, exactly like the full segment list) and
+    // the commit-timestamp monotonicity clamp below. `clearDrops` is
+    // the FULL-rewrite escape: replace/compact/cluster write every row
+    // through the post-drop LOGICAL projection, so the physical bytes
+    // are gone, the name-tombstones can retire, and physical names
+    // converge back to logical — the mapping clears with the drop set
+    // (partial rewrites — optimize/clusterRange/DML — must keep
+    // carrying: untouched segments may still hold the column / the old
+    // physical name).
     val dropSet =
-      ((if (clearDrops) Nil else dropColLines(prevLines)) ++ addDrops).distinct
+      ((if (clearDrops) Nil else prior.actions._1) ++ addDrops).distinct
     val dropLns = dropSet.map(DropColPrefix + _)
     // mapping merge: new entries override the carried entry for the
     // same physical (chained renames keep one line per column);
@@ -733,7 +746,7 @@ object ManifestTable {
     val mapLns = {
       val carried =
         if (clearDrops) Nil
-        else colMapLines(prevLines)
+        else prior.actions._2
           .filterNot { case (p, _) => addMaps.exists(_._1 == p) }
       (carried ++ addMaps)
         .filterNot { case (p, l) => p == l || dropSet.contains(p) }
@@ -745,7 +758,7 @@ object ManifestTable {
     // snapshot that includes later-versioned data — so stamp
     // max(prev commit ts + 1, now), the standard in-commit-timestamp
     // contract. (Pre-#ts legacy manifests fall back to file mtime.)
-    val prevTs = prevLines.find(_.startsWith(TsPrefix))
+    val prevTs = prior.lines.find(_.startsWith(TsPrefix))
       .flatMap(_.stripPrefix(TsPrefix).trim.toLongOption)
       .orElse(if (v <= 1L) None else scala.util.Try(
         f.getFileStatus(new Path(root, ManifestPrefix + (v - 1)))
@@ -773,29 +786,11 @@ object ManifestTable {
       .getOrElse(
         f.getFileStatus(new Path(root, ManifestPrefix + v)).getModificationTime)
 
-  /** Raw `#meta` lines of manifest `v`: segment name -> embedded JSON.
-    * Tolerant of malformed lines (they read as absent — the embedded
-    * metadata is a planning fast path, never a correctness gate). */
-  private def metaLinesOf(f: FileSystem, root: Path, v: Long): Map[String, String] =
-    manifestLines(f, root, v).iterator
-      .filter(_.startsWith(MetaPrefix))
-      .flatMap { l =>
-        val rest = l.stripPrefix(MetaPrefix)
-        val sp = rest.indexOf(' ')
-        if (sp <= 0) None else Some((rest.take(sp), rest.drop(sp + 1)))
-      }.toMap
-
-  /** The previous version's embedded metadata, carried into the next
-    * commit (append/delete name every prior segment unchanged). */
-  private[io] def priorMetas(f: FileSystem, root: Path, v: Long): Map[String, String] =
-    if (v == 0L) Map.empty
-    else scala.util.Try(metaLinesOf(f, root, v)).getOrElse(Map.empty)
-
   /** Recursive data-file listing of a segment dir: (path relative to
     * the segment, byte length), descending through hive `col=value`
     * partition dirs. Runs ONCE at commit time on the just-written
     * segment — the listing every reader would otherwise redo. */
-  private[io] def listDataFilesRec(f: FileSystem, dir: Path,
+  private def listDataFilesRec(f: FileSystem, dir: Path,
       prefix: String): Seq[(String, Long)] =
     f.listStatus(dir).toSeq.flatMap { st =>
       val n = st.getPath.getName
@@ -804,27 +799,17 @@ object ManifestTable {
       else listDataFilesRec(f, st.getPath, prefix + n + "/")
     }
 
-  /** Build a segment's embedded-metadata JSON at commit time: file
-    * list + sizes, read-back Spark schema (including discovered
-    * partition columns), zone-map stats (the sidecar JSON, when
-    * collected) and Bloom-sidecar column names. O(one segment) —
-    * a listing plus one footer read — paid once per commit so NO
-    * reader ever pays it again. A segment with no files (an empty
-    * partitioned write, e.g. an ALTER marker on a partitioned table)
-    * embeds `writtenSchema`, the schema of the frame that wrote it. */
-  private[io] def buildMeta(spark: SparkSession, f: FileSystem, root: String,
-      seg: String, statsJson: Option[String], bloomCols: Seq[String],
-      writtenSchema: Option[StructType] = None): String = {
-    val files = listDataFilesRec(f, new Path(s"$root/$seg"), "")
-    val schemaJson =
-      if (files.isEmpty) writtenSchema.fold("null")(_.json)
-      else spark.read.parquet(s"$root/$seg").schema.json
+  /** A segment's embedded-metadata JSON ([[MetaPrefix]]): file list +
+    * sizes, Spark schema, zone-map stats (the sidecar JSON) and
+    * Bloom-sidecar column names. */
+  private def metaJson(files: Seq[(String, Long)], schema: StructType,
+      stats: Option[String], blooms: Seq[String]): String = {
     val filesJson = files.map { case (pp, l) =>
       s"""{"p":${jsonString(pp)},"l":$l}"""
     }.mkString(",")
-    val bloomsJson = bloomCols.map(jsonString).mkString(",")
-    s"""{"files":[$filesJson],"schema":$schemaJson,""" +
-      s""""stats":${statsJson.getOrElse("null")},"blooms":[$bloomsJson]}"""
+    s"""{"files":[$filesJson],"schema":${schema.json},""" +
+      s""""stats":${stats.getOrElse("null")},""" +
+      s""""blooms":[${blooms.map(jsonString).mkString(",")}]}"""
   }
 
   /** A segment's embedded metadata, decoded: data files (segment-
@@ -866,25 +851,17 @@ object ManifestTable {
       SegMeta(files, schema, stats, blooms)
     }.toOption
 
-  private[io] def metasFromLines(lines: Seq[String]): Map[String, SegMeta] =
-    lines.iterator
-      .filter(_.startsWith(MetaPrefix))
-      .flatMap { l =>
-        val rest = l.stripPrefix(MetaPrefix)
-        val sp = rest.indexOf(' ')
-        if (sp <= 0) None
-        else decodeMeta(rest.drop(sp + 1)).map(m => (rest.take(sp), m))
-      }.toMap
-
   /** A [[SegMeta]] for every segment manifest `version` (head when
     * None) names, in commit order: the embedded copy where the
     * manifest carries one, else [[metaOf]]'s derivation from the
     * segment dir. Empty for an uncommitted root. */
   def segmentMetas(spark: SparkSession, root: String,
-      version: Option[Long] = None): SeqMap[String, SegMeta] = {
-    val snap = snapshotAt(spark, root, version)
+      version: Option[Long] = None): SeqMap[String, SegMeta] =
+    metasOf(spark, root, snapshotAt(spark, root, version))
+
+  private def metasOf(spark: SparkSession, root: String,
+      snap: Snapshot): SeqMap[String, SegMeta] =
     SeqMap.from(snap.segs.map(s => s -> metaOf(spark, root, s, snap.metas.get(s))))
-  }
 
   /** A segment's metadata: its `embedded` copy, else derived from its
     * dir — the ONE place a reader lists a segment or opens its
@@ -936,18 +913,168 @@ object ManifestTable {
     val (f, p) = fs(spark, root)
     require(f.exists(new Path(p, ManifestPrefix + v)),
       s"no committed manifest version $v under $root")
-    val lines = manifestLines(f, p, v)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hash = md.digest(lines.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    Snapshot(Some(v), lines.filterNot(_.startsWith("#")), metasFromLines(lines),
-      hash, (dropColLines(lines), colMapLines(lines)))
+    Snapshot(Some(v), manifestLines(f, p, v))
   }
 
-  private[io] def writeSeg(df: DataFrame, dir: String, partitionBy: Seq[String]): Unit = {
-    val w = df.write
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+  /** The one segment writer: lays `frame` out as segment dirs of
+    * version `v + 1`, writes each one's sidecars (`_stats.graft.json`,
+    * `_bloom.<col>.graft`) and returns `(segment, split key, #meta
+    * JSON)` per segment, for [[commit]]. Every write verb — append,
+    * delete, replace, optimize, the clusters and the DML swap — lays
+    * out its segments here and nowhere else.
+    *
+    * `split = None` writes one segment, `seg-<v+1>-<label><uuid>`
+    * (`del-…` when `tombstone`), key 0. `split = Some(tag)` writes one
+    * segment per distinct value of the integer `tag` column in ONE
+    * write pass: hive-split on the tag into a temp shell whose
+    * `tag=<k>` dirs rename into place as `seg-<v+1>-<label><k>-<uuid>`
+    * (`ins` for k < 0) — no extra shuffle, no per-segment job. Either
+    * way `partitionBy` lays each segment out as hive partition dirs,
+    * and `colsFor(key)` names a segment's (stat, Bloom) columns.
+    *
+    * Stats: one flat segment collects its row count and zone maps
+    * through an [[org.apache.spark.sql.Observation]] riding the write
+    * scan — zero extra jobs; any other layout runs ONE grouped
+    * aggregate over the written files, keyed by segment. Blooms: one
+    * pass per Bloom column over the written files, each segment's
+    * filter sized by that row count (fpp 1e-6). Schema: the written
+    * frame's, all fields nullable (what a footer read-back reports);
+    * partitioned segments take the partition column types hive
+    * discovery gives them; a segment with no file (an empty
+    * partitioned write, e.g. an ALTER marker) embeds the frame's. */
+  private[io] def writeSegments(spark: SparkSession, root: String, v: Long,
+      frame: DataFrame, split: Option[String], partitionBy: Seq[String],
+      label: String, colsFor: Int => (Seq[String], Seq[String]),
+      tombstone: Boolean = false): Seq[(String, Int, String)] = {
+    val (f, p) = fs(spark, root)
+    def fresh(stem: String) = stem + java.util.UUID.randomUUID().toString.take(8)
+    def write(df: DataFrame, dir: String, by: Seq[String]): Unit = {
+      val w = df.write
+      (if (by.nonEmpty) w.partitionBy(by: _*) else w).parquet(dir)
+    }
+    val written = StructType(frame.schema.filterNot(fd => split.contains(fd.name)))
+    val observed = split match {
+      case None if partitionBy.isEmpty =>
+        val (stats, blooms) = colsFor(0)
+        if (stats.isEmpty && blooms.isEmpty) None
+        else Some((org.apache.spark.sql.Observation(), statAggs(written, stats)))
+      case _ => None
+    }
+    val outputs: Seq[(String, Int)] = split match {
+      case None =>
+        val seg = fresh(s"${if (tombstone) DelPrefix else "seg-"}${v + 1}-$label")
+        write(observed.fold(frame) { case (o, (_, aggs)) =>
+          frame.observe(o, aggs.head, aggs.tail: _*) }, s"$root/$seg", partitionBy)
+        Seq((seg, 0))
+      case Some(tag) =>
+        val shell = fresh(s".$label-tmp-")
+        write(frame, s"$root/$shell", tag +: partitionBy)
+        val keys =
+          if (!f.exists(new Path(p, shell))) Nil
+          else f.listStatus(new Path(p, shell)).toSeq.map(_.getPath.getName)
+            .filter(_.startsWith(tag + "=")).map(_.stripPrefix(tag + "=").toInt).sorted
+        val placed = keys.map { k =>
+          val seg = fresh(s"seg-${v + 1}-$label${if (k < 0) "ins" else k}-")
+          require(f.rename(new Path(p, s"$shell/$tag=$k"), new Path(p, seg)),
+            s"failed to place segment $seg")
+          (seg, k)
+        }
+        // the shell is ours and now empty; gc's unnamed-dir grace would
+        // leave it lingering (it must never assume a fresh unnamed dir
+        // is collectable: it may be a concurrent appender's segment)
+        f.delete(new Path(p, shell), true)
+        placed
+    }
+    if (outputs.isEmpty) return Nil
+    val cols = outputs.map { case (s, k) => s -> colsFor(k) }.toMap
+    val statUnion = outputs.flatMap(o => cols(o._1)._1).distinct
+    val bloomUnion = outputs.flatMap(o => cols(o._1)._2).distinct
+    // each segment's files, and its schema: the written one, nullable,
+    // with hive discovery typing any partition columns (a listing of
+    // the segment dir, no job)
+    val data = GraftColumnBridge.asNullable(
+      StructType(written.filterNot(fd => partitionBy.contains(fd.name))))
+    val listed = outputs.map { case (seg, _) =>
+      val files = listDataFilesRec(f, new Path(p, seg), "")
+      val schema =
+        if (files.isEmpty) written
+        else if (partitionBy.isEmpty) data
+        else spark.read.schema(data).parquet(s"$root/$seg").schema
+      seg -> SegMeta(files, Some(schema), None, Nil)
+    }.toMap
+    // the written rows, read back as one relation over every segment
+    lazy val back = readSegs(spark, root, outputs.map(_._1), listed)
+    lazy val segOfRow = segmentOf(f, p)
+    val (typed, values) = observed match {
+      case Some((o, (t, _))) => (t, Map(outputs.head._1 -> o.get))
+      case None if statUnion.nonEmpty || bloomUnion.nonEmpty =>
+        val (t, aggs) = statAggs(back.schema, statUnion)
+        (t, back.groupBy(segOfRow.as("_seg")).agg(aggs.head, aggs.tail: _*)
+          .collect().map(r => r.getString(0) ->
+            r.getValuesMap[Any](r.schema.fieldNames.toSeq.tail)).toMap)
+      case None => (Nil, Map.empty[String, Map[String, Any]])
+    }
+    import org.apache.spark.util.sketch.BloomFilter
+    // each segment's Bloom filters are sized by its row count
+    val est = outputs.map { case (seg, _) =>
+      seg -> math.max(values.get(seg).fold(0L)(_("rows").asInstanceOf[Long]), 1L)
+    }.toMap
+    def put(b: BloomFilter, x: Any): Unit = x match {
+      case n: Byte => b.putLong(n.toLong)
+      case n: Short => b.putLong(n.toLong)
+      case n: Int => b.putLong(n.toLong)
+      case n: Long => b.putLong(n)
+      case s: String => b.putString(s)
+      case other => throw new IllegalStateException(
+        s"unbloomable value class ${other.getClass}")
+    }
+    bloomUnion.foreach { c =>
+      require(bloomable(back.schema(c).dataType),
+        s"bloom sidecars support integral/string columns; '$c' is " +
+          s"${back.schema(c).dataType.simpleString}")
+      val segsFor = outputs.map(_._1).filter(cols(_)._2.contains(c)).toSet
+      val built = back.select(segOfRow.as("_seg"), col(c).as("_v"))
+        .where(col("_v").isNotNull)
+        .rdd.map(r => (r.getString(0), r.get(1)))
+        .treeAggregate(scala.collection.mutable.Map.empty[String, BloomFilter])(
+          (m, kv) => {
+            if (segsFor(kv._1))
+              put(m.getOrElseUpdate(kv._1, BloomFilter.create(est(kv._1), 1e-6)), kv._2)
+            m
+          },
+          (a, b) => {
+            b.foreach { case (s, bf) =>
+              a.get(s) match {
+                case Some(acc) => acc.mergeInPlace(bf)
+                case None => a.update(s, bf)
+              }
+            }
+            a
+          })
+      segsFor.foreach { seg =>
+        val out = f.create(new Path(p, s"$seg/${bloomFile(c)}"), true)
+        try built.getOrElse(seg, BloomFilter.create(1L, 1e-6)).writeTo(out)
+        finally out.close()
+      }
+    }
+    outputs.map { case (seg, k) =>
+      val (statCols, bloomCols) = cols(seg)
+      val stats =
+        if (statCols.isEmpty) None
+        else Some(statsJson(values.getOrElse(seg, Map("rows" -> 0L)), typed, statCols))
+      stats.foreach(json => commitStrategy.publish(f, new Path(p, seg),
+        new Path(p, s"$seg/$StatsFile"), json))
+      (seg, k, metaJson(listed(seg).files, listed(seg).schema.get, stats, bloomCols))
+    }
   }
+
+  /** The path component right after the table root IS the segment
+    * name, for flat (`root/seg/part-*`) and partitioned
+    * (`root/seg/k=v/part-*`) segments alike ([[rootRelative]]). Must be
+    * projected on the scan side, never post-join. */
+  private[io] def segmentOf(f: FileSystem, root: Path): Column =
+    org.apache.spark.sql.functions.substring_index(
+      rootRelative(f, root, org.apache.spark.sql.functions.input_file_name()), "/", 1)
 
   /** Append `df` as one new segment: IO = O(df) + a tiny manifest,
     * regardless of how much data the table already holds.
@@ -1025,55 +1152,37 @@ object ManifestTable {
       bloomCols: Seq[String] = Nil, retryRaces: Boolean = false,
       addMaps: Seq[(String, String)] = Nil): Unit = {
     val (f, p) = fs(spark, root)
-    var v = currentVersion(f, p).getOrElse(0L)
+    var (v, prior) = headSnapshot(spark, root)
     // physical-name constancy: callers write LOGICAL names; the
     // segment stores PHYSICAL (mapping entries being committed WITH
     // this append — addColumns' re-ADD — translate too). Stats/Bloom
     // sidecars are keyed physical, matching the probe translation in
     // readRange/readPoint and the SQL relation's pushed filters.
-    val mapping0 = columnMapping(spark, root)
-    val mapping = mapping0.filterNot { case (mp, _) =>
+    val mapping = prior.actions._2.filterNot { case (mp, _) =>
       addMaps.exists(_._1 == mp) } ++ addMaps
-    val pdf = toPhysical(df, mapping)
     val pStats = statsCols.map(physicalNameOf(spark, mapping, _))
     val pBlooms = bloomCols.map(physicalNameOf(spark, mapping, _))
-    val t = tag.map(_ + "-").getOrElse("")
-    val suffix = java.util.UUID.randomUUID().toString.take(8)
-    var seg = s"seg-${v + 1}-$t$suffix"
-    var prior = priorMetas(f, p, v)
-    requireLayout(root, prior.iterator.filterNot(_._1.startsWith(DelPrefix))
-      .flatMap { case (s, j) => decodeMeta(j).map(s -> _) }, partitionBy)
-    // flat + stats-bearing: the min/max/count ride the write's scan
-    val (frame, obs) =
-      if (pStats.nonEmpty && partitionBy.isEmpty) observedStats(pdf, pStats)
-      else (pdf, None)
-    writeSeg(frame, s"$root/$seg", partitionBy)
-    val statsJson =
-      if (pStats.isEmpty) None
-      else obs match {
-        case Some((o, typed)) =>
-          Some(publishObservedStats(f, s"$root/$seg", o, typed))
-        case None => Some(writeStats(spark, f, s"$root/$seg", pStats))
-      }
-    if (pBlooms.nonEmpty) writeBlooms(spark, f, s"$root/$seg", pBlooms)
-    val meta = buildMeta(spark, f, root, seg, statsJson, pBlooms, Some(pdf.schema))
+    requireLayout(root, prior.metas.iterator.filterNot(_._1.startsWith(DelPrefix)),
+      partitionBy)
+    val (seg0, _, meta) = writeSegments(spark, root, v, toPhysical(df, mapping),
+      None, partitionBy, tag.fold("")(_ + "-"), _ => (pStats, pBlooms)).head
+    var seg = seg0
     var attempts = 0
     while (true) {
       try {
-        val segs = if (v == 0L) Seq.empty else readManifest(f, p, v)
-        commit(f, p, v + 1, segs :+ seg, metas = prior + (seg -> meta),
+        commit(f, p, v + 1, prior, prior.segs :+ seg, metas = Map(seg -> meta),
           addMaps = addMaps)
         return
       } catch {
         case _: CommitRaceLost if retryRaces && attempts < 50 =>
           attempts += 1
-          val nv = currentVersion(f, p).getOrElse(0L)
-          val ns = s"seg-${nv + 1}-$t$suffix"
+          val (nv, head) = headSnapshot(spark, root)
+          val ns = s"seg-${nv + 1}-" + seg.stripPrefix(s"seg-${v + 1}-")
           require(f.rename(new Path(p, seg), new Path(p, ns)),
             s"append retry could not re-version segment $seg -> $ns")
           seg = ns
           v = nv
-          prior = priorMetas(f, p, v)
+          prior = head
       }
     }
   }
@@ -1127,21 +1236,17 @@ object ManifestTable {
       tag: Option[String] = None): Unit = {
     rejectReservedTag(tag)
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(
-      throw new IllegalStateException(s"delete from uncommitted table $root"))
-    val t = tag.map(_ + "-").getOrElse("")
-    val seg = s"$DelPrefix${v + 1}-$t${java.util.UUID.randomUUID().toString.take(8)}"
+    val (v, prior) = committedHead(spark, root, s"delete from uncommitted table $root")
     // tombstone keys store PHYSICAL names like every segment (the
-    // merge-on-read anti-join runs in physical space, pre-projection)
-    toPhysical(keys, columnMapping(spark, root)).distinct()
-      .write.parquet(s"$root/$seg")
-    // tombstones carry embedded metadata too: the streaming source
-    // plans change-feed batches from the manifest alone (its recovery
+    // merge-on-read anti-join runs in physical space, pre-projection);
+    // they carry embedded metadata too: the streaming source plans
+    // change-feed batches from the manifest alone (its recovery
     // contract re-requests committed windows whose segments
     // maintenance may have retired)
-    val meta = buildMeta(spark, f, root, seg, None, Nil)
-    commit(f, p, v + 1, readManifest(f, p, v) :+ seg,
-      metas = priorMetas(f, p, v) + (seg -> meta))
+    val (seg, _, meta) = writeSegments(spark, root, v,
+      toPhysical(keys, prior.actions._2).distinct(), None, Nil,
+      tag.fold("")(_ + "-"), _ => (Nil, Nil), tombstone = true).head
+    commit(f, p, v + 1, prior, prior.segs :+ seg, metas = Map(seg -> meta))
   }
 
   /** Replace the whole table with `df` (first write, or an explicit
@@ -1158,29 +1263,15 @@ object ManifestTable {
       bloomCols: Seq[String] = Nil): Unit = {
     rejectReservedTag(tag)
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(0L)
-    val t = tag.map(_ + "-").getOrElse("")
-    val seg = s"seg-${v + 1}-$t${java.util.UUID.randomUUID().toString.take(8)}"
-    // flat + stats-bearing: the min/max/count ride the write's scan
-    val (frame, obs) =
-      if (statsCols.nonEmpty && partitionBy.isEmpty) observedStats(df, statsCols)
-      else (df, None)
-    writeSeg(frame, s"$root/$seg", partitionBy)
-    val statsJson =
-      if (statsCols.isEmpty) None
-      else obs match {
-        case Some((o, typed)) =>
-          Some(publishObservedStats(f, s"$root/$seg", o, typed))
-        case None => Some(writeStats(spark, f, s"$root/$seg", statsCols))
-      }
-    if (bloomCols.nonEmpty) writeBlooms(spark, f, s"$root/$seg", bloomCols)
-    val meta = buildMeta(spark, f, root, seg, statsJson, bloomCols)
+    val (v, prior) = headSnapshot(spark, root)
+    val (seg, _, meta) = writeSegments(spark, root, v, df, None, partitionBy,
+      tag.fold("")(_ + "-"), _ => (statsCols, bloomCols)).head
     // full overwrite: the new content defines the schema — dropped-
     // column tombstones retire (compact routes here too, and writes
     // through the post-drop projection)
-    commit(f, p, v + 1, Seq(seg), if (rewrite) Seq(RewriteMark) else Nil,
+    commit(f, p, v + 1, prior, Seq(seg), if (rewrite) Seq(RewriteMark) else Nil,
       metas = Map(seg -> meta), clearDrops = true)
-    gc(f, p)
+    gc(f, p, prior)
   }
 
   /** `ALTER TABLE … ADD COLUMN(S)`: additive schema evolution as ONE
@@ -1197,10 +1288,9 @@ object ManifestTable {
   def addColumns(spark: SparkSession, root: String,
       cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Unit = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(throw new IllegalStateException(
+    val (v, head) = committedHead(spark, root,
       s"ALTER TABLE of uncommitted table $root — INSERT first (or declare " +
-        "the columns in CREATE TABLE)"))
+        "the columns in CREATE TABLE)")
     val cur = read(spark, root).schema
     val eq = spark.sessionState.conf.resolver
     cols.foreach { case (n, _) =>
@@ -1218,7 +1308,7 @@ object ManifestTable {
     // schema marker, so old values in unrewritten segments can never
     // resurface — the column-mapping lifecycle (pre-r17 this rejected
     // loudly until a full rewrite retired the tombstone)
-    val (dropped, mapping) = schemaActionsAt(spark, root, v)
+    val (dropped, mapping) = head.actions
     val rel = graft.sources.ManifestSource
       .relation(spark, root, None, allowTombstones = true)
     val rawPhysical = rel.dataSchema.fieldNames.toSeq
@@ -1258,15 +1348,14 @@ object ManifestTable {
       cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "DROP COLUMNS needs at least one column")
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(throw new IllegalStateException(
-      s"ALTER TABLE of uncommitted table $root"))
+    val (v, prior) = committedHead(spark, root, s"ALTER TABLE of uncommitted table $root")
     val eq = spark.sessionState.conf.resolver
     val rel = graft.sources.ManifestSource
       .relation(spark, root, None, allowTombstones = true)
     // callers name LOGICAL columns; partition columns are never mapped
     // (renames reject them) and the `#dropcol` tombstone records the
     // PHYSICAL name — the reader projection drops physical-first
-    val mapping = columnMappingAt(spark, root, v)
+    val mapping = prior.actions._2
     cols.foreach { c =>
       require(!rel.partitionSchema.fieldNames.exists(eq(_, c)),
         s"$c is a hive PARTITION column of $root — the physical layout " +
@@ -1284,8 +1373,7 @@ object ManifestTable {
       s"duplicate column in DROP COLUMNS: $cols")
     require(visible.length + rel.partitionSchema.size > cols.size,
       s"cannot DROP every column of $root")
-    commit(f, p, v + 1, readManifest(f, p, v), Seq(AlterMark),
-      metas = priorMetas(f, p, v),
+    commit(f, p, v + 1, prior, prior.segs, Seq(AlterMark),
       addDrops = cols.map(physicalNameOf(spark, mapping, _)))
   }
 
@@ -1305,15 +1393,14 @@ object ManifestTable {
       oldName: String, newName: String): Unit = {
     require(oldName != newName, s"RENAME COLUMN $oldName TO $newName is a no-op")
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(throw new IllegalStateException(
-      s"ALTER TABLE of uncommitted table $root"))
+    val (v, prior) = committedHead(spark, root, s"ALTER TABLE of uncommitted table $root")
     val eq = spark.sessionState.conf.resolver
     val rel = graft.sources.ManifestSource
       .relation(spark, root, None, allowTombstones = true)
     require(!rel.partitionSchema.fieldNames.exists(eq(_, oldName)),
       s"$oldName is a hive PARTITION column of $root — its name IS the " +
         "directory layout; re-partition via cluster()/compact() instead")
-    val (dropped, mapping) = schemaActionsAt(spark, root, v)
+    val (dropped, mapping) = prior.actions
     val rawPhysical = rel.dataSchema.fieldNames.toSeq
     val visibleLogical = rawPhysical.map(logicalNameOf(spark, mapping, _)) ++
       rel.partitionSchema.fieldNames
@@ -1332,8 +1419,8 @@ object ManifestTable {
       s"$newName is a DROPped-column tombstone of $root still covering " +
         "unrewritten segments — pick another name, or compact() first")
     val phys = physicalNameOf(spark, mapping, oldName)
-    commit(f, p, v + 1, readManifest(f, p, v), Seq(AlterMark),
-      metas = priorMetas(f, p, v), addMaps = Seq((phys, newName)))
+    commit(f, p, v + 1, prior, prior.segs, Seq(AlterMark),
+      addMaps = Seq((phys, newName)))
   }
 
   /** `ALTER TABLE … ALTER COLUMN col TYPE t`: SAFE TYPE WIDENING as
@@ -1520,7 +1607,7 @@ object ManifestTable {
   /** Grace window (ms) before an UNNAMED dir is collected. A dir named
     * by no manifest on disk is usually a crashed append's orphan — but
     * it can also be a CONCURRENT appender's written-but-not-yet-
-    * committed segment (append = writeSeg, then commit names it), and
+    * committed segment (append = writeSegments, then commit names it), and
     * deleting that between its write and its commit would publish a
     * manifest naming a vanished dir. GC therefore collects unnamed
     * dirs only once they are older than this window; dirs named by a
@@ -1551,17 +1638,13 @@ object ManifestTable {
     * the grace spares an in-flight concurrent append's segment dir.
     * Manifest files and the retention marker stay ([[expireVersions]]
     * trims the former). */
-  private[io] def gc(f: FileSystem, root: Path): Unit = {
-    // every dir the just-published commit retired is named by the
-    // PREVIOUS head manifest — ONE read covers the mass-retirement
-    // case (compact/cluster retiring thousands of fresh segments),
-    // keeping GC O(1) in retired-dir count
-    val priorNamed = currentVersion(f, root).filter(_ >= 2)
-      .map(v => scala.util.Try(readManifest(f, root, v - 1))
-        .getOrElse(Seq.empty).toSet)
-      .getOrElse(Set.empty[String])
-    gcKeeping(f, root, retainOf(f, root), priorNamed)
-  }
+  private[io] def gc(f: FileSystem, root: Path, prior: Snapshot): Unit =
+    // every dir the just-published commit retired is named by `prior`,
+    // the snapshot it committed on top of — the hint covers the
+    // mass-retirement case (compact/cluster retiring thousands of
+    // fresh segments) with no manifest read, keeping GC O(1) in
+    // retired-dir count
+    gcKeeping(f, root, retainOf(f, root), prior.segs.toSet)
 
   private def gcKeeping(f: FileSystem, root: Path, horizon: Int,
       namedHint: Set[String] = Set.empty): Seq[String] = {
@@ -1732,7 +1815,7 @@ object ManifestTable {
             "deletes + re-inserts) or full-refresh and re-pin")
         // pre-image metadata = what the manifest said just before the
         // drop (the replacement's commit no longer names the segment)
-        lazy val prevMetas = metasFromLines(manifestLines(f, p, v - 1))
+        lazy val prevMetas = Snapshot(Some(v - 1), manifestLines(f, p, v - 1)).metas
         dropped.foreach { d =>
           if (out.contains(d)) out -= d // in-window addition: nets out
           else {
@@ -1783,7 +1866,7 @@ object ManifestTable {
       if (v <= 1) Set.empty[String]
       else scala.util.Try(readManifest(f, p, v - 1).toSet)
         .getOrElse(Set.empty[String])
-    val metas = metasFromLines(lines)
+    val metas = Snapshot(Some(v), lines).metas
     cur.filterNot(prev).map { s =>
       scala.util.Try(metaOf(spark, root, s, metas.get(s)).files.map(_._2).sum)
         .getOrElse(0L)
@@ -1870,8 +1953,17 @@ object ManifestTable {
   def readChanges(spark: SparkSession, root: String,
       fromV: Long, toV: Long, verifyDeletes: Boolean = false,
       rowId: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val (chg, pre) = changedSegmentsDml(spark, root, fromV, toV)
+    readChanges(spark, root, fromV, toV, chg, pre, verifyDeletes, rowId)
+  }
+
+  /** [[readChanges]] of a window already walked by
+    * [[changedSegmentsDml]] (the streaming source walks it once for its
+    * own guards, then builds the batch here). */
+  private[graft] def readChanges(spark: SparkSession, root: String,
+      fromV: Long, toV: Long, chg: Seq[String],
+      pre: Seq[(String, Option[SegMeta])], verifyDeletes: Boolean,
+      rowId: Boolean): DataFrame = {
     require(chg.nonEmpty || pre.nonEmpty,
       s"no segments committed in ($fromV, $toV] under $root")
     require(chg.forall(!_.startsWith(DelPrefix)) || pre.isEmpty,
@@ -1890,8 +1982,8 @@ object ManifestTable {
     // window segments are named by toV (additions, tombstones) or by
     // the version just before the DML that dropped them (pre-images,
     // whose embedded metadata the walk captured)
-    val metas = snapshotAt(spark, root, Some(toV)).metas ++
-      pre.collect { case (s, Some(m)) => s -> m }
+    val atTo = snapshotAt(spark, root, Some(toV))
+    val metas = atTo.metas ++ pre.collect { case (s, Some(m)) => s -> m }
     def readIns(segs: Seq[String]) =
       if (rowId) readSegsWithRowId(spark, root, segs, metas)
       else readSegs(spark, root, segs, metas)
@@ -1941,7 +2033,7 @@ object ManifestTable {
       case _ => throw new IllegalStateException("unreachable: chg or pre nonEmpty")
     }
     // the window's consumers see the schema AS OF its end version
-    applySchemaActions(out, schemaActionsAt(spark, root, toV))
+    applySchemaActions(out, atTo.actions)
   }
 
   /** Committed data segments with their on-disk byte sizes (driver-
@@ -1971,9 +2063,8 @@ object ManifestTable {
   def optimize(spark: SparkSession, root: String, smallBytes: Long,
       partitionBy: Seq[String] = Nil): Int = {
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(
-      throw new IllegalStateException(s"optimize of uncommitted table $root"))
-    val metas = segmentMetas(spark, root, Some(v))
+    val (v, prior) = committedHead(spark, root, s"optimize of uncommitted table $root")
+    val metas = metasOf(spark, root, prior)
     val all = metas.keys.toSeq
     val small = all.filterNot(_.startsWith(DelPrefix))
       .filter(s => f.getContentSummary(new Path(p, s)).getLength < smallBytes)
@@ -1983,25 +2074,11 @@ object ManifestTable {
       smallSet(s) || s.startsWith(DelPrefix) }, partitionBy)
     val statCols = small.flatMap(metas(_).stats.toSeq.flatMap(_.cols.keys)).distinct
     val bCols = small.flatMap(metas(_).blooms).distinct
-    val seg = s"seg-${v + 1}-opt-${java.util.UUID.randomUUID().toString.take(8)}"
-    // flat + stats-bearing: the min/max/count ride the fold's write scan
-    val rows = readSegs(spark, root, small, metas)
-    val (frame, obs) =
-      if (statCols.nonEmpty && partitionBy.isEmpty) observedStats(rows, statCols)
-      else (rows, None)
-    writeSeg(frame, s"$root/$seg", partitionBy)
-    val statsJson =
-      if (statCols.isEmpty) None
-      else obs match {
-        case Some((o, typed)) =>
-          Some(publishObservedStats(f, s"$root/$seg", o, typed))
-        case None => Some(writeStats(spark, f, s"$root/$seg", statCols))
-      }
-    if (bCols.nonEmpty) writeBlooms(spark, f, s"$root/$seg", bCols)
-    val meta = buildMeta(spark, f, root, seg, statsJson, bCols)
-    commit(f, p, v + 1, all.filterNot(smallSet) :+ seg, Seq(RewriteMark),
-      metas = (priorMetas(f, p, v) -- smallSet) + (seg -> meta))
-    gc(f, p)
+    val (seg, _, meta) = writeSegments(spark, root, v, readSegs(spark, root, small, metas),
+      None, partitionBy, "opt-", _ => (statCols, bCols)).head
+    commit(f, p, v + 1, prior, all.filterNot(smallSet) :+ seg, Seq(RewriteMark),
+      metas = Map(seg -> meta))
+    gc(f, p, prior)
     small.size
   }
 
@@ -2019,46 +2096,9 @@ object ManifestTable {
     * per partition of the log in practice). `statsCols` defaults to
     * `byCol` alone. */
   def cluster(spark: SparkSession, root: String, byCol: String,
-      nSegments: Int, statsCols: Seq[String] = Nil): Unit = {
-    require(nSegments >= 1, s"nSegments must be >= 1, got $nSegments")
-    val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(
-      throw new IllegalStateException(s"cluster of uncommitted table $root"))
-    val snap = readMerged(spark, root).localCheckpoint()
-    try {
-      // One ranged shuffle, one write: partition dirs _seg=K of a tmp
-      // hive write become the new segment dirs by driver-side rename
-      // (the alternative — one filtered write per segment — would
-      // re-scan the table nSegments times).
-      val tmp = s".cluster-tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-      snap.repartitionByRange(nSegments, col(byCol))
-        .withColumn("_seg", org.apache.spark.sql.functions.spark_partition_id())
-        .write.partitionBy("_seg").parquet(s"$root/$tmp")
-      val subdirs = f.listStatus(new Path(p, tmp))
-        .filter(_.isDirectory).map(_.getPath)
-        .sortBy(d => d.getName.stripPrefix("_seg=").toInt)
-      val stats = if (statsCols.nonEmpty) statsCols else Seq(byCol)
-      val segNames = subdirs.zipWithIndex.map { case (d, i) =>
-        val seg = s"seg-${v + 1}-clu$i-${java.util.UUID.randomUUID().toString.take(8)}"
-        require(f.rename(d, new Path(p, seg)),
-          s"failed to place clustered segment $seg")
-        seg
-      }.toSeq
-      // ONE grouped stats job + embedded meta for ALL segments (the
-      // per-segment writeStats loop scheduled nSegments scan jobs and
-      // dominated the wall clock; schema is the write frame's — the
-      // _seg split column never reached the data files)
-      val metas = sidecarsBatched(spark, root,
-        segNames.map(s => (s, stats, Seq.empty[String])),
-        StructType(snap.schema.map(_.copy(nullable = true))))
-      // full rewrite through the post-drop projection (readMerged):
-      // dropped-column tombstones retire with the physical bytes
-      commit(f, p, v + 1, segNames, Seq(RewriteMark), metas = metas,
-        clearDrops = true)
-      f.delete(new Path(p, tmp), true) // our own (now-empty) shell
-      gc(f, p) // retires the old segments and tombstones
-    } finally graft.core.Lineage.release(snap)
-  }
+      nSegments: Int, statsCols: Seq[String] = Nil): Unit =
+    clusterBy(spark, root, "cluster", "clu", col(byCol), nSegments,
+      if (statsCols.nonEmpty) statsCols else Seq(byCol))
 
   /** Multi-column Z-ORDER clustering: [[cluster]] with the
     * z-interleave of (`colA`, `colB`) as the layout key ([[graft
@@ -2071,40 +2111,30 @@ object ManifestTable {
     * shape as cluster: one ranged shuffle + one write pass; tombstones
     * applied physically; rewrite-marked for the change feed. */
   def clusterZ(spark: SparkSession, root: String, colA: String, colB: String,
-      nSegments: Int, bits: Int = 16): Unit = {
+      nSegments: Int, bits: Int = 16): Unit =
+    clusterBy(spark, root, "clusterZ", "clz",
+      graft.functions.zInterleave2(col(colA), col(colB), bits), nSegments,
+      Seq(colA, colB))
+
+  /** The full re-clustering behind [[cluster]] and [[clusterZ]]: one
+    * ranged shuffle of the tombstone-applied head on `key` into
+    * `nSegments` ranges, one write pass splitting them into segments
+    * that each carry zone maps for `stats`, committed as a rewrite. */
+  private def clusterBy(spark: SparkSession, root: String, verb: String,
+      label: String, key: Column, nSegments: Int, stats: Seq[String]): Unit = {
     require(nSegments >= 1, s"nSegments must be >= 1, got $nSegments")
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(
-      throw new IllegalStateException(s"clusterZ of uncommitted table $root"))
-    val snap = readMerged(spark, root).localCheckpoint()
+    val (v, prior) = committedHead(spark, root, s"$verb of uncommitted table $root")
+    val snap = readSnapshot(spark, root, prior, merge = true).localCheckpoint()
     try {
-      require(!snap.columns.contains("__z"),
-        "clusterZ uses a reserved working column __z already present in the input")
-      val tmp = s".cluster-tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-      snap.withColumn("__z",
-          graft.functions.zInterleave2(col(colA), col(colB), bits))
-        .repartitionByRange(nSegments, col("__z"))
-        .withColumn("_seg", org.apache.spark.sql.functions.spark_partition_id())
-        .drop("__z")
-        .write.partitionBy("_seg").parquet(s"$root/$tmp")
-      val subdirs = f.listStatus(new Path(p, tmp))
-        .filter(_.isDirectory).map(_.getPath)
-        .sortBy(d => d.getName.stripPrefix("_seg=").toInt)
-      val segNames = subdirs.zipWithIndex.map { case (d, i) =>
-        val seg = s"seg-${v + 1}-clz$i-${java.util.UUID.randomUUID().toString.take(8)}"
-        require(f.rename(d, new Path(p, seg)),
-          s"failed to place z-clustered segment $seg")
-        seg
-      }.toSeq
-      // one grouped stats job for all segments (see cluster)
-      val metas = sidecarsBatched(spark, root,
-        segNames.map(s => (s, Seq(colA, colB), Seq.empty[String])),
-        StructType(snap.schema.map(_.copy(nullable = true))))
-      // full rewrite through the projection: drop tombstones retire
-      commit(f, p, v + 1, segNames, Seq(RewriteMark), metas = metas,
-        clearDrops = true)
-      f.delete(new Path(p, tmp), true) // our own (now-empty) shell
-      gc(f, p)
+      val segs = writeSegments(spark, root, v, snap.repartitionByRange(nSegments, key)
+          .withColumn("_seg", org.apache.spark.sql.functions.spark_partition_id()),
+        Some("_seg"), Nil, label, _ => (stats, Nil))
+      // full rewrite through the post-drop projection (readSnapshot):
+      // dropped-column tombstones retire with the physical bytes
+      commit(f, p, v + 1, prior, segs.map(_._1), Seq(RewriteMark),
+        metas = segs.map(s => s._1 -> s._3).toMap, clearDrops = true)
+      gc(f, p, prior) // retires the old segments and tombstones
     } finally graft.core.Lineage.release(snap)
   }
 
@@ -2127,14 +2157,13 @@ object ManifestTable {
       statsCols: Seq[String] = Nil): Int = {
     require(nSegments >= 1, s"nSegments must be >= 1, got $nSegments")
     val (f, p) = fs(spark, root)
-    val v = currentVersion(f, p).getOrElse(
-      throw new IllegalStateException(s"clusterRange of uncommitted table $root"))
-    val metas = segmentMetas(spark, root, Some(v))
+    val (v, prior) = committedHead(spark, root, s"clusterRange of uncommitted table $root")
+    val metas = metasOf(spark, root, prior)
     val all = metas.keys.toSeq
     // this is a PARTIAL rewrite: it reads raw physical frames and
     // writes them back (mapping carried forward untouched), so the
     // caller's LOGICAL column names translate to physical here
-    val mapping = columnMappingAt(spark, root, v)
+    val mapping = prior.actions._2
     val byPhys = physicalNameOf(spark, mapping, byCol)
     val touched = rangeAdmitted(metas, byPhys, lo, hi)
     if (touched.size < 2) return 0
@@ -2142,32 +2171,15 @@ object ManifestTable {
     // the clustered segments are flat: untouched segments must be too
     requireLayout(root, metas.iterator.filterNot { case (s, _) =>
       touchedSet(s) || s.startsWith(DelPrefix) }, Nil)
-    val tmp = s".cluster-tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-    val frame = readSegs(spark, root, touched, metas)
-    frame
-      .repartitionByRange(nSegments, col(byPhys))
-      .withColumn("_seg", org.apache.spark.sql.functions.spark_partition_id())
-      .write.partitionBy("_seg").parquet(s"$root/$tmp")
-    val subdirs = f.listStatus(new Path(p, tmp))
-      .filter(_.isDirectory).map(_.getPath)
-      .sortBy(d => d.getName.stripPrefix("_seg=").toInt)
     val stats = (if (statsCols.nonEmpty) statsCols else Seq(byCol))
       .map(physicalNameOf(spark, mapping, _))
-    val segNames = subdirs.zipWithIndex.map { case (d, i) =>
-      val seg = s"seg-${v + 1}-clr$i-${java.util.UUID.randomUUID().toString.take(8)}"
-      require(f.rename(d, new Path(p, seg)),
-        s"failed to place clustered segment $seg")
-      seg
-    }.toSeq
-    // one grouped stats job for all segments (see cluster)
-    val newMetas = sidecarsBatched(spark, root,
-      segNames.map(s => (s, stats, Seq.empty[String])),
-      StructType(frame.schema.map(_.copy(nullable = true))))
-    commit(f, p, v + 1, all.filterNot(touchedSet) ++ segNames,
-      Seq(RewriteMark),
-      metas = (priorMetas(f, p, v) -- touchedSet) ++ newMetas)
-    f.delete(new Path(p, tmp), true) // our own (now-empty) shell
-    gc(f, p)
+    val segs = writeSegments(spark, root, v, readSegs(spark, root, touched, metas)
+        .repartitionByRange(nSegments, col(byPhys))
+        .withColumn("_seg", org.apache.spark.sql.functions.spark_partition_id()),
+      Some("_seg"), Nil, "clr", _ => (stats, Nil))
+    commit(f, p, v + 1, prior, all.filterNot(touchedSet) ++ segs.map(_._1),
+      Seq(RewriteMark), metas = segs.map(s => s._1 -> s._3).toMap)
+    gc(f, p, prior)
     touched.size
   }
 
@@ -2241,203 +2253,37 @@ object ManifestTable {
     case _ => None
   }
 
-  /** One aggregate pass over the just-committed segment bytes (column-
-    * pruned to `cols`), then a tiny JSON write. O(segment) once, at
-    * write time — never again on the read path. Returns the sidecar
-    * JSON so commit-time callers can embed the same stats in the
-    * manifest line ([[buildMeta]]) without re-reading it. */
-  /** [[writeStats]]' aggregates attached to the WRITE pass via
-    * [[org.apache.spark.sql.Observation]]: a stats-bearing append
-    * costs ONE scan of the batch (the segment write), not write +
-    * read-back — at ingest scale that halves per-commit data IO.
-    * Restricted to FLAT segments: a hive-partitioned read-back can
-    * re-type partition columns via directory inference, so that path
-    * keeps the read-back ([[writeStats]]). Returns the frame to write
-    * (observation attached) plus the observation + typed column list
-    * to resolve AFTER the write action completes. */
-  private def observedStats(df: DataFrame, cols: Seq[String])
-      : (DataFrame,
-         Option[(org.apache.spark.sql.Observation, Seq[(String, String)])]) = {
-    val typed = cols.flatMap(c => statType(df.schema(c).dataType).map((c, _)))
-    if (cols.isEmpty) (df, None)
-    else {
-      val o = org.apache.spark.sql.Observation()
-      val aggs = count(lit(1)).as("rows") +:
-        typed.zipWithIndex.flatMap { case ((c, t), i) =>
-          val key = t match {
-            case "ts" => unix_micros(col(c))
-            case "d"  => datediff(col(c), lit("1970-01-01"))
-            case _    => col(c)
-          }
-          Seq(min(key).cast("string").as(s"mn$i"),
-            max(key).cast("string").as(s"mx$i"))
+  /** The zone-map aggregates over `cols` of a frame with `schema`: the
+    * row count (`rows`), then each typed column's min/max canonical key
+    * (`mn<i>`/`mx<i>`) — the one stat-key expression every writer
+    * shares. Returns the (column, type tag) pairs with the aggregates. */
+  private def statAggs(schema: StructType, cols: Seq[String])
+      : (Seq[(String, String)], Seq[Column]) = {
+    val typed = cols.flatMap(c => statType(schema(c).dataType).map((c, _)))
+    val aggs = count(lit(1)).as("rows") +: typed.zipWithIndex.flatMap {
+      case ((c, t), i) =>
+        val key = t match {
+          case "ts" => unix_micros(col(c))
+          case "d"  => datediff(col(c), lit("1970-01-01"))
+          case _    => col(c)
         }
-      (df.observe(o, aggs.head, aggs.tail: _*), Some((o, typed)))
+        Seq(min(key).cast("string").as(s"mn$i"), max(key).cast("string").as(s"mx$i"))
     }
+    (typed, aggs)
   }
 
-  /** Publish the observed stats as the segment's sidecar — same JSON
-    * as [[writeStats]], zero extra jobs. Call only after the write
-    * action completed (Observation.get blocks on it). */
-  private def publishObservedStats(f: FileSystem, segDir: String,
-      o: org.apache.spark.sql.Observation,
-      typed: Seq[(String, String)]): String = {
-    val m = o.get
-    val colsJson = typed.zipWithIndex.map { case ((c, t), i) =>
+  /** Render one segment's [[statAggs]] values (by alias) as the stats
+    * JSON of the sidecar and the `#meta` line, over `cols` in order. */
+  private def statsJson(values: Map[String, Any], typed: Seq[(String, String)],
+      cols: Seq[String]): String = {
+    val at = typed.zipWithIndex.map { case ((c, t), i) => c -> (t, i) }.toMap
+    val colsJson = cols.flatMap(c => at.get(c).map { case (t, i) =>
       def v(k: String): String =
-        m.get(k).flatMap(Option(_)).map(x => jsonString(x.toString))
+        values.get(k).flatMap(Option(_)).map(x => jsonString(x.toString))
           .getOrElse("null")
       s""""${jsonEscape(c)}":{"t":"$t","min":${v(s"mn$i")},"max":${v(s"mx$i")}}"""
-    }.mkString(",")
-    val json = s"""{"rows":${m("rows")},"cols":{$colsJson}}"""
-    commitStrategy.publish(f, new Path(segDir), new Path(segDir, StatsFile), json)
-    json
-  }
-
-  private[io] def writeStats(spark: SparkSession, f: FileSystem,
-      segDir: String, cols: Seq[String]): String = {
-    val df = spark.read.parquet(segDir)
-    val typed = cols.flatMap(c => statType(df.schema(c).dataType).map((c, _)))
-    val aggs = typed.flatMap { case (c, t) =>
-      val key = t match {
-        case "ts" => unix_micros(col(c))
-        case "d"  => datediff(col(c), lit("1970-01-01"))
-        case _    => col(c)
-      }
-      Seq(min(key).cast("string"), max(key).cast("string"))
-    }
-    val row = df.agg(count(lit(1)).as("rows"), aggs: _*).head()
-    val colsJson = typed.zipWithIndex.map { case ((c, t), i) =>
-      def v(off: Int): String = Option(row.getString(1 + 2 * i + off))
-        .map(jsonString).getOrElse("null")
-      s""""${jsonEscape(c)}":{"t":"$t","min":${v(0)},"max":${v(1)}}"""
-    }.mkString(",")
-    val json = s"""{"rows":${row.getLong(0)},"cols":{$colsJson}}"""
-    commitStrategy.publish(f, new Path(segDir), new Path(segDir, StatsFile), json)
-    json
-  }
-
-  /** Batched sidecar + embedded-metadata regeneration for a set of
-    * just-written FLAT segments (the broad-DML swap path): instead of
-    * one stats job + one count job + one Bloom job + one footer-read
-    * per segment — O(touched) tiny driver-scheduled jobs, the
-    * scale-killer of a wide rewrite — this runs ONE grouped aggregate
-    * over all segments (count + zone-map min/max, grouped by the
-    * `input_file_name()`-derived segment tag), at most one
-    * `treeAggregate` per Bloom column (per-segment filters built and
-    * merged distributively), and embeds the caller-known write schema
-    * (nullable-widened, what a footer read-back reports) — zero
-    * per-segment footer inference. Each segment's sidecar files carry
-    * exactly ITS requested column set; the returned map is the
-    * manifest-embedded JSON per segment. */
-  private[io] def sidecarsBatched(spark: SparkSession, root: String,
-      segCols: Seq[(String, Seq[String], Seq[String])],
-      schema: StructType): Map[String, String] = {
-    val (f, p) = fs(spark, root)
-    val dirs = segCols.map(x => s"$root/${x._1}")
-    // flat segment => the file's PARENT dir is the segment name (no
-    // dependence on how the reader qualifies the root prefix)
-    val segName = org.apache.spark.sql.functions.element_at(
-      org.apache.spark.sql.functions.split(
-        org.apache.spark.sql.functions.input_file_name(), "/"), -2)
-    val df0 = spark.read.schema(schema).parquet(dirs: _*)
-
-    // ---- one grouped agg: counts + min/max over the stat-col UNION ----
-    val statUnion = segCols.flatMap(_._2).distinct
-    val typed = statUnion.flatMap(c => statType(schema(c).dataType).map((c, _)))
-    val aggs = typed.flatMap { case (c, t) =>
-      val key = t match {
-        case "ts" => unix_micros(col(c))
-        case "d"  => datediff(col(c), lit("1970-01-01"))
-        case _    => col(c)
-      }
-      Seq(min(key).cast("string"), max(key).cast("string"))
-    }
-    val needBlooms = segCols.exists(_._3.nonEmpty)
-    val grouped: Map[String, org.apache.spark.sql.Row] =
-      if (statUnion.isEmpty && !needBlooms) Map.empty
-      else df0.groupBy(segName.as("_seg"))
-        .agg(count(lit(1)).as("rows"), aggs: _*)
-        .collect().map(r => r.getString(0) -> r).toMap
-    val colIdx = typed.zipWithIndex.toMap
-    def statsJsonFor(seg: String, cols: Seq[String]): Option[String] =
-      if (cols.isEmpty) None
-      else {
-        val row = grouped.get(seg)
-        val myTyped = typed.filter { case (c, _) => cols.contains(c) }
-        val colsJson = myTyped.map { case (c, t) =>
-          val i = colIdx((c, t))
-          def v(off: Int): String = row.flatMap(r =>
-            Option(r.getString(2 + 2 * i + off)))
-            .map(jsonString).getOrElse("null")
-          s""""${jsonEscape(c)}":{"t":"$t","min":${v(0)},"max":${v(1)}}"""
-        }.mkString(",")
-        Some(s"""{"rows":${row.map(_.getLong(1)).getOrElse(0L)},"cols":{$colsJson}}""")
-      }
-
-    // ---- one treeAggregate per Bloom column ----
-    val bloomUnion = segCols.flatMap(_._3).distinct
-    bloomUnion.foreach(c => require(bloomable(schema(c).dataType),
-      s"bloom sidecars support integral/string columns; '$c' is " +
-        s"${schema(c).dataType.simpleString}"))
-    bloomUnion.foreach { c =>
-      val segsFor = segCols.filter(_._3.contains(c)).map(_._1).toSet
-      val est = segCols.map(x =>
-        x._1 -> math.max(grouped.get(x._1).map(_.getLong(1)).getOrElse(0L), 1L))
-        .toMap
-      val pairs = df0
-        .select(segName.as("_seg"), col(c).as("_v"))
-        .where(col("_v").isNotNull)
-        .rdd.map(r => (r.getString(0), r.get(1)))
-      import org.apache.spark.util.sketch.BloomFilter
-      def put(b: BloomFilter, v: Any): Unit = v match {
-        case x: Byte => b.putLong(x.toLong)
-        case x: Short => b.putLong(x.toLong)
-        case x: Int => b.putLong(x.toLong)
-        case x: Long => b.putLong(x)
-        case s: String => b.putString(s)
-        case other => throw new IllegalStateException(
-          s"unbloomable value class ${other.getClass}")
-      }
-      val built = pairs.treeAggregate(
-        scala.collection.mutable.Map.empty[String, BloomFilter])(
-        (m, kv) => {
-          if (segsFor(kv._1)) {
-            put(m.getOrElseUpdate(kv._1,
-              BloomFilter.create(est.getOrElse(kv._1, 1L), 1e-6)), kv._2)
-          }
-          m
-        },
-        (a, b) => {
-          b.foreach { case (s, bf) =>
-            a.get(s) match {
-              case Some(acc) => acc.mergeInPlace(bf)
-              case None => a.update(s, bf)
-            }
-          }
-          a
-        })
-      segsFor.foreach { seg =>
-        val bf = built.getOrElse(seg, BloomFilter.create(1L, 1e-6))
-        val out = f.create(new Path(s"$root/$seg", bloomFile(c)), true)
-        try bf.writeTo(out) finally out.close()
-      }
-    }
-
-    // ---- per-segment sidecar publish + embedded meta (no footer IO) ----
-    val schemaJson = schema.json
-    segCols.map { case (seg, statCols, bCols) =>
-      val statsJson = statsJsonFor(seg, statCols)
-      statsJson.foreach(json => commitStrategy.publish(
-        f, new Path(s"$root/$seg"), new Path(s"$root/$seg", StatsFile), json))
-      val files = listDataFilesRec(f, new Path(p, seg), "")
-      val filesJson = files.map { case (pp, l) =>
-        s"""{"p":${jsonString(pp)},"l":$l}"""
-      }.mkString(",")
-      val bloomsJson = bCols.map(jsonString).mkString(",")
-      seg -> (s"""{"files":[$filesJson],"schema":$schemaJson,""" +
-        s""""stats":${statsJson.getOrElse("null")},"blooms":[$bloomsJson]}""")
-    }.toMap
+    }).mkString(",")
+    s"""{"rows":${values("rows")},"cols":{$colsJson}}"""
   }
 
   /** Parse a segment's stats sidecar, if it has one. A malformed or
@@ -2606,22 +2452,6 @@ object ManifestTable {
   private def bloomable(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | StringType => true
     case _ => false
-  }
-
-  private[io] def writeBlooms(spark: SparkSession, f: FileSystem,
-      segDir: String, cols: Seq[String]): Unit = {
-    val df = spark.read.parquet(segDir)
-    cols.foreach { c =>
-      require(bloomable(df.schema(c).dataType),
-        s"bloom sidecars support integral/string columns; '$c' is " +
-          s"${df.schema(c).dataType.simpleString}")
-    }
-    val n = math.max(df.count(), 1L)
-    cols.foreach { c =>
-      val bf = df.stat.bloomFilter(c, n, 1e-6)
-      val out = f.create(new Path(segDir, bloomFile(c)), true)
-      try bf.writeTo(out) finally out.close()
-    }
   }
 
   /** Load a segment's Bloom sidecar for `colName`, if present and

@@ -172,7 +172,7 @@ class ResolveManifestRelation(spark: org.apache.spark.sql.SparkSession)
       graft.sources.ManifestSource.relation(spark, root, Some(v),
         allowTombstones = false),
       isStreaming = false)
-    val mapping = graft.io.ManifestTable.columnMappingAt(spark, root, v)
+    val mapping = graft.io.ManifestTable.snapshotAt(spark, root, Some(v)).actions._2
     if (mapping.isEmpty) lr
     else {
       val eq = spark.sessionState.conf.resolver

@@ -474,7 +474,6 @@ private[sources] class ManifestStreamSource(spark: SparkSession,
     * unexecuted windows re-run against segments a rewrite could not
     * have touched (the change feed's folded-unconsumed guard). */
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val fromV = start.map(vOf).getOrElse(startV)
     val toV = vOf(end)
     pacedV = math.max(pacedV, toV)
@@ -499,33 +498,12 @@ private[sources] class ManifestStreamSource(spark: SparkSession,
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
       else {
-        // pre-image metadata was captured from the manifest just
-        // before each drop (the toV snapshot no longer names them);
-        // batch frames read PHYSICAL names — rename to the window-end
-        // logical surface before conform
-        val mapping = ManifestTable.columnMappingAt(spark, root, toV)
-        def logical(df: DataFrame): DataFrame =
-          ManifestTable.applyMapping(df, mapping)
-        val metas = ManifestTable.snapshotAt(spark, root, Some(toV)).metas ++
-          pre.collect { case (s, Some(m)) => s -> m }
-        def readLogical(segs: Seq[String]) =
-          logical(ManifestTable.readSegs(spark, root, segs, metas))
-        val ins = chg.filterNot(_.startsWith("del-"))
-        val insDf =
-          if (ins.isEmpty) None
-          else Some(readLogical(ins).withColumn("_change_type", lit("insert")))
-        val delSides =
-          (if (dels.isEmpty) Nil else Seq(readLogical(dels).distinct())) ++
-          (if (pre.isEmpty) Nil else Seq(readLogical(pre.map(_._1)).distinct()))
-        val delDf = delSides
-          .reduceOption(_.unionByName(_, allowMissingColumns = true))
-          .map(_.withColumn("_change_type", lit("delete")))
-        val raw = (insDf, delDf) match {
-          case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-          case (Some(a), None) => a
-          case (None, Some(b)) => b
-          case _ => throw new IllegalStateException("unreachable: chg nonEmpty")
-        }
+        // the change feed's own read of the walked window (pre-image
+        // metadata captured just before each drop, strict tombstone
+        // union, schema actions as of toV), conformed to the declared
+        // stream schema
+        val raw = ManifestTable.readChanges(spark, root, fromV, toV, chg, pre,
+          verifyDeletes = false, rowId = false)
         conform(if (changeFeed) raw else raw.drop("_change_type"))
       }
     org.apache.spark.sql.GraftColumnBridge.asStreamingDataFrame(batch)

@@ -19,6 +19,12 @@ object GraftColumnBridge {
   def catalystExpression(c: Column): Expression =
     classic.GraftClassicBridge.materialize(ExpressionUtils.expression(c))
 
+  /** `private[spark]` `StructType.asNullable`: every field, array
+    * element and map value nullable, recursively — the schema a parquet
+    * footer read-back reports for a written frame. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** DataFrame over an analyzed logical plan (`Dataset.ofRows` is
     * `private[sql]`) — how a runnable command re-materializes a plan
     * it carried as data (e.g. a MERGE source). */

@@ -106,6 +106,36 @@ class ConfigSpec extends AnyFunSuite {
         offenders.mkString(", "))
   }
 
+  test("one segment writer: only ManifestTable.writeSegments writes parquet into a manifest segment or temp shell") {
+    import scala.jdk.CollectionConverters._
+    // comments are stripped; string literals stay (the segment and
+    // temp-shell paths are themselves interpolated strings)
+    val comment = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+    // `.parquet(` straight into `<root>/…`, or the removed `writeSeg(`
+    val segmentWrite = """\.parquet\(\s*s"\$\{?\w*[Rr]oot\}?/|\bwriteSeg\(""".r
+    // the writer's body: from its `def` to the next member at class indent
+    val nextMember = """\n  (?![\s}])""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    var writerSeen = false
+    val offenders = files.flatMap { f =>
+      val code = comment.replaceAllIn(java.nio.file.Files.readString(f),
+        m => if (m.matched.startsWith("/")) m.matched.filter(_ == '\n') else
+          java.util.regex.Matcher.quoteReplacement(m.matched))
+      val start = code.indexOf("def writeSegments(")
+      val end = if (start < 0) -1
+        else nextMember.findFirstMatchIn(code.substring(start)).fold(code.length)(start + _.start)
+      segmentWrite.findAllMatchIn(code).flatMap { m =>
+        if (m.start > start && m.start < end) { writerSeen = true; None }
+        else Some(s"$f:${code.take(m.start).count(_ == '\n') + 1}")
+      }
+    }
+    assert(offenders.isEmpty,
+      "manifest segments are written through ManifestTable.writeSegments: " +
+        offenders.mkString(", "))
+    assert(writerSeen, "the lint must see the writer's own segment write")
+  }
+
   test("TestSession carries the shared session settings") {
     assert(spark.sessionState.functionRegistry
       .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")))

@@ -4995,6 +4995,38 @@ class ExtSpec extends AnyFunSuite {
     ManifestTable.destroy(spark, down)
   }
 
+  test("graft.manifest changeFeed stream: tombstones keyed on different columns in one window fail as readChanges does") {
+    import spark.implicits._
+    import graft.io.ManifestTable
+    val root = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), "graft_msrc_mixed_keys").toString
+    ManifestTable.destroy(spark, root)
+    ManifestTable.append(spark, root, Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v"))
+    ManifestTable.delete(spark, root, Seq(1L).toDF("id")) // v2, keyed (id)
+    ManifestTable.delete(spark, root, Seq((2L, 20L)).toDF("id", "v")) // v3, keyed (id, v)
+    val batchErr = intercept[org.apache.spark.sql.AnalysisException] {
+      ManifestTable.readChanges(spark, root, 1L, 3L)
+    }
+    // the stream reads the same (1, 3] window through readChanges: an
+    // additive union would NULL-pad the (id) tombstone's v and stop it
+    // matching; the strict union fails the batch instead
+    val cp = java.nio.file.Files.createTempDirectory("graft_msrc_mixed_cp").toString
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      spark.readStream.format("graft.manifest")
+        .option("changeFeed", "true").option("startingVersion", "1").load(root)
+        .writeStream.option("checkpointLocation", cp)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) => b.collect(); () }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start().awaitTermination()
+    }
+    val cause = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case a: org.apache.spark.sql.AnalysisException => a }
+    // same error and parameters (the rendered plans differ in expression ids)
+    assert(cause.exists(a => a.getCondition == batchErr.getCondition &&
+      a.getMessageParameters == batchErr.getMessageParameters),
+      s"the stream must fail with readChanges' error (${batchErr.getCondition}), got $err")
+    ManifestTable.destroy(spark, root)
+  }
+
   test("graft.manifest SQL time travel: VERSION AS OF / TIMESTAMP AS OF resolve committed snapshots; INSERT INTO commits through the log") {
     import spark.implicits._
     import graft.io.ManifestTable
