@@ -108,7 +108,7 @@ object ScaleGate {
       require(diff <= 1.5e-6,
         f"q$q: ndcg replay $ndcgReplay%.6f != query output $ndcg%.6f")
     }
-    // ---- gate 3 (round 12): the bucket-partitioned merge family
+    // ---- gate 3 (round 12): the streaming merge family
     val mergeRows = checkMerges(spark, sfDir)
 
     // ---- gate 4 (round 16): the SQL lakehouse face — change-feed TVF
@@ -141,8 +141,7 @@ object ScaleGate {
     * any sf). Returns rows audited. */
   private def checkRowIdentityFeed(spark: SparkSession, sfDir: String): Long = {
     import graft.io.{ManifestDml, ManifestTable}
-    val root = java.nio.file.Paths.get(
-      spark.conf.get("spark.sql.warehouse.dir"), "gate_rowid__log").toString
+    val root = ManifestTable.warehouseRoot(spark, "gate_rowid__log")
     ManifestTable.destroy(spark, root)
     val ev = SparkEntry.t(spark, sfDir, "events")
       .select(col("event_id").cast("long").as("event_id"),
@@ -258,34 +257,25 @@ object ScaleGate {
     chg.count() + alter.count() + drop.count() + named.count()
   }
 
-  /** The bucket-partitioned merge family at scale: each streaming
-    * merge is split-invariant by contract (N micro-batches ≡ one
-    * batch apply), so its final state is replayed here as ONE
-    * independent single-pass formulation over the same source — the
-    * DuckDB oracle's shape, expressed in Spark — and compared exactly
+  /** The streaming merge family at scale: each streaming merge is
+    * split-invariant by contract (N micro-batches ≡ one batch apply),
+    * so its final state is replayed here as ONE independent
+    * single-pass formulation over the same source — the DuckDB
+    * oracle's shape, expressed in Spark — and compared exactly
     * (two-way exceptAll; distributed, no driver-size limit, so this
-    * gate runs at any sf). The physical layout is then audited
-    * directly: every state row must sit in the partition its key
-    * hashes to under the table's OWN bucket count (the `graft.buckets`
-    * property the merges prune by must exist and agree with the
-    * layout — the invariant [[graft.streaming.Stream.rebucket]]
-    * preserves). Returns total state rows audited. */
+    * gate runs at any sf). The keyed states (both upserts, CDC) must
+    * also hold exactly one row per key, the cardinality every later
+    * MERGE into them depends on. Returns total state rows audited. */
   private def checkMerges(spark: SparkSession, sfDir: String): Long = {
     import org.apache.spark.sql.expressions.Window
     def mustMatch(name: String, got: DataFrame, replay: DataFrame): Unit = {
       val d = got.exceptAll(replay).count() + replay.exceptAll(got).count()
       require(d == 0, s"$name: $d rows differ from the one-batch replay")
     }
-    def layout(table: String, keyCol: String): Long = {
-      val n = graft.streaming.Stream.bucketCountOf(spark, table)
-      require(n.nonEmpty, s"$table lacks the graft.buckets layout property")
-      val st = spark.table(table)
-      val misplaced = st
-        .filter(col("__bucket") =!= pmod(hash(col(keyCol)), lit(n.get)))
-        .count()
-      require(misplaced == 0L, s"$table: $misplaced rows outside their " +
-        s"key-hash bucket (nBuckets=${n.get})")
-      st.count()
+    def oneRowPerKey(name: String, state: DataFrame, keyCol: String): Long = {
+      val dup = state.groupBy(keyCol).count().filter(col("count") > 1).count()
+      require(dup == 0L, s"$name: $dup keys hold more than one state row")
+      state.count()
     }
 
     val up = SparkEntry.queries("stream_upsert")(spark, sfDir)
@@ -301,7 +291,7 @@ object ScaleGate {
         col("s.event_id").as("last_event_id"),
         col("s.value").as("last_value"), col("n_updates"))
     mustMatch("stream_upsert", up, upReplay)
-    val upRows = layout("graft_stream_upsert", "user_id")
+    val upRows = oneRowPerKey("stream_upsert", up, "user_id")
 
     val sc = SparkEntry.queries("stream_scd2")(spark, sfDir)
     val w = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
@@ -316,14 +306,9 @@ object ScaleGate {
       .select("user_id", "valid_from", "event_id", "value",
         "valid_to", "is_current")
     mustMatch("stream_scd2", sc, scReplay)
-    val scRows = layout("graft_stream_scd2", "user_id")
+    val scRows = sc.count()
 
-    // the manifest-log upsert (r15): same split-invariance contract,
-    // the log substituting for the bucket table — replay is the same
-    // argmax (no n_updates bookkeeping; the log keeps latest-per-key),
-    // and the layout audit is the log's own: latest commit is a #dml
-    // (or the bootstrap append) and the head holds exactly one row per
-    // key (the MERGE cardinality the upsert depends on)
+    // the upsert without its n_updates column: same argmax replay
     val um = SparkEntry.queries("stream_upsert_manifest")(spark, sfDir)
     val umReplay = ev.groupBy("user_id")
       .agg(max(struct(col("us"), col("event_id"), col("value"))).as("s"))
@@ -331,10 +316,7 @@ object ScaleGate {
         col("s.event_id").as("last_event_id"),
         col("s.value").as("last_value"))
     mustMatch("stream_upsert_manifest", um, umReplay)
-    val umDup = um.groupBy("user_id").count().filter(col("count") > 1).count()
-    require(umDup == 0L,
-      s"stream_upsert_manifest: $umDup keys hold more than one state row")
-    val umRows = um.count()
+    val umRows = oneRowPerKey("stream_upsert_manifest", um, "user_id")
 
     val cd = SparkEntry.queries("stream_cdc")(spark, sfDir)
     val (base, feed) = SparkEntry.cdcBaseAndFeed(spark, sfDir)
@@ -351,7 +333,7 @@ object ScaleGate {
         when(col("op").isNotNull, col("l_status"))
           .otherwise(col("status")).as("status"))
     mustMatch("stream_cdc", cd, cdReplay)
-    val cdRows = layout("graft_stream_cdc", "okey")
+    val cdRows = oneRowPerKey("stream_cdc", cd, "okey")
 
     upRows + scRows + cdRows + umRows
   }

@@ -522,15 +522,16 @@ trait SparkEntryBase {
   /** Streaming SCD2 maintenance ([[graft.streaming.Stream
     * .foreachBatchScd2]]): the purchase history built incrementally
     * across two REAL micro-batches — each batch re-versions only its
-    * affected keys and rewrites only their hash-bucket partitions
-    * (dynamic partition overwrite; untouched partitions stay
+    * affected keys in one MERGE commit into a manifest table
+    * (copy-on-write: segments holding no affected key stay
     * byte-identical). Split-invariance makes the oracle
     * the single-shot lead() replay (the q44 shape on epoch-micro
     * longs). */
   private[graft] def streamScd2(s: SparkSession, dir: String): DataFrame =
     Stream.foreachBatchScd2(s,
         t(s, dir, "events").filter(col("event_type") === "purchase"),
-        batch2Pred = pmod(col("event_id"), lit(2)) === 1)
+        batch2Pred = pmod(col("event_id"), lit(2)) === 1,
+        root = graft.io.ManifestTable.warehouseRoot(s, "graft_stream_scd2"))
       .select(col("user_id"), col("valid_from"), col("event_id"),
         col("value"), col("valid_to"), col("is_current"))
       .orderBy("user_id", "valid_from", "event_id")
@@ -959,8 +960,8 @@ trait SparkEntryBase {
     // at sf0.1) WITHOUT a single-partition global window (r18): range-
     // repartition by slope, then per-partition row_number offset by
     // the preceding partitions' row counts — the counts are a
-    // ≤shuffle-partitions-element driver list (parameter-bounded, the
-    // touchedBuckets discipline), and the selected VALUES at the two
+    // ≤shuffle-partitions-element driver list (parameter-bounded, never
+    // data-sized), and the selected VALUES at the two
     // middle global positions are the exact order statistics whatever
     // the tie placement at range boundaries (a position's value is
     // unique in the sorted multiset). The global sort becomes fully

@@ -7,6 +7,7 @@ import graft.core.{Exec, GlobalOrder}
 import graft.ext.{Dedup, Multimodal, Similarity, Text}
 import graft.functions.{charShingles, fingerprintMd5, tokens}
 import graft.io.{Load, Unload}
+import graft.io.ManifestTable.warehouseRoot
 import graft.schema.Infer
 import graft.streaming.Stream
 
@@ -21,13 +22,15 @@ trait SparkEntryTail extends SparkEntryMid {
 
   /** Streaming CDC apply ([[graft.streaming.Stream.foreachBatchCdc]]):
     * the SAME feed as [[cdcApply]] split across two real micro-batches
-    * through foreachBatch + staged-rename table swaps. Latest-wins
-    * makes the final state split-invariant, so the oracle is the
-    * single-batch MERGE replay ([[cdcApplySql]]); absolute-valued ops
-    * make batch replay naturally idempotent (spec-pinned). */
+    * through foreachBatch, each one MERGE commit into a manifest
+    * table. Latest-wins makes the final state split-invariant, so the
+    * oracle is the single-batch MERGE replay ([[cdcApplySql]]);
+    * absolute-valued ops make batch replay naturally idempotent
+    * (spec-pinned). */
   private[graft] def streamCdc(s: SparkSession, dir: String): DataFrame = {
     val (base, feed) = cdcBaseAndFeed(s, dir)
-    graft.streaming.Stream.foreachBatchCdc(s, base, feed).orderBy("okey")
+    graft.streaming.Stream.foreachBatchCdc(s, base, feed,
+      warehouseRoot(s, "graft_stream_cdc")).orderBy("okey")
   }
 
   private[graft] val cdcApplySql: String =
@@ -688,9 +691,8 @@ trait SparkEntryTail extends SparkEntryMid {
   private[graft] def streamRestart(s: SparkSession, dir: String): DataFrame = {
     val out = tmpDir("events_restart")
     val cp = tmpDir("events_restart_cp")
-    val table = "graft_stream_restart"
-    graft.io.Load.dropManaged(s, table)
-    graft.io.Load.dropManaged(s, table + "__stage")
+    val root = warehouseRoot(s, "graft_stream_restart")
+    graft.io.ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events")
     ev.filter(pmod(col("event_id"), lit(4)) < 2)
       .repartition(2).write.parquet(out)
@@ -698,14 +700,14 @@ trait SparkEntryTail extends SparkEntryMid {
     // query exists for is CROSS-RUN (run 2 must ingest only unseen
     // files — asserted in ExtSpec and by the shared batch oracle);
     // within a run, one 2-file trigger instead of two 1-file triggers
-    // halves the per-batch replan + complete-mode table swaps. The
+    // halves the per-batch replan + complete-mode table replaces. The
     // multi-batch incremental posture stays pinned by stream_multifile
     // (maxFilesPerTrigger = 1 there, > 1 batch asserted).
-    Stream.runCheckpointed(s, out, cp, table, maxFilesPerTrigger = 2)
+    Stream.runCheckpointed(s, out, cp, root, maxFilesPerTrigger = 2)
     ev.filter(pmod(col("event_id"), lit(4)) >= 2)
       .repartition(2).write.mode("append").parquet(out)
-    Stream.runCheckpointed(s, out, cp, table, maxFilesPerTrigger = 2)
-    s.table(table)
+    Stream.runCheckpointed(s, out, cp, root, maxFilesPerTrigger = 2)
+    graft.io.ManifestTable.read(s, root)
       .select(col("window_start"), col("event_type"), col("n_events"),
         col("sum_value"))
       .orderBy("window_start", "event_type")
@@ -889,11 +891,6 @@ trait SparkEntryTail extends SparkEntryMid {
         col("l_key").as("user_id"), col("r_value").as("purchase_value"))
       .orderBy("click_id", "purchase_id")
 
-  /** Streaming upsert via foreachBatch ([[Stream.foreachBatchUpsert]]):
-    * latest event per user merged into a managed state table across
-    * two real micro-batches (event_id % 3 == 0 arrives in batch 2),
-    * update counts accumulated through the merge. The final table is
-    * split-invariant, so a batch argmax oracle gates it exactly. */
   /** Multi-batch streaming dedup ([[Stream.runDedupMultiBatch]]):
     * batch 1 = each user's LATEST event before Jan 16, batch 2 = each
     * user's EARLIEST event from [Jan 16, …) — plus users ≡ 3 (mod 10),
@@ -911,23 +908,28 @@ trait SparkEntryTail extends SparkEntryMid {
       .select(col("user_id"), col("ts"))
       .orderBy("user_id", "ts")
 
+  /** Streaming upsert via foreachBatch ([[Stream.foreachBatchUpsert]]):
+    * latest event per user merged into a manifest-table state across
+    * two real micro-batches (event_id % 3 == 0 arrives in batch 2),
+    * update counts accumulated through the merge. The final table is
+    * split-invariant, so a batch argmax oracle gates it exactly. */
   private[graft] def streamUpsert(s: SparkSession, dir: String): DataFrame =
     Stream.foreachBatchUpsert(s, t(s, dir, "events"),
-        batch2Pred = pmod(col("event_id"), lit(3)) === 0)
+        batch2Pred = pmod(col("event_id"), lit(3)) === 0,
+        root = warehouseRoot(s, "graft_stream_upsert"))
       .select(col("user_id"), timestamp_micros(col("us")).as("last_ts"),
         col("event_id").as("last_event_id"), col("value").as("last_value"),
         col("n_updates"))
       .orderBy("user_id")
 
-  /** Streaming upsert with the MANIFEST LOG as the state substrate:
-    * each micro-batch is one MERGE commit ([[graft.io.ManifestDml
-    * .mergeInto]]), change-feed-visible, split-invariant vs the batch
-    * argmax (same oracle family as stream_upsert — the log keeps
-    * latest-per-key, no bucket bookkeeping columns). */
+  /** [[streamUpsert]]'s latest-per-key state without the update
+    * counts: each micro-batch is one MERGE commit ([[graft.io
+    * .ManifestDml.mergeInto]]), change-feed-visible, split-invariant
+    * vs the batch argmax. */
   private[graft] def streamUpsertManifest(s: SparkSession, dir: String): DataFrame =
-    Stream.foreachBatchUpsertManifest(s, t(s, dir, "events"),
+    Stream.foreachBatchUpsert(s, t(s, dir, "events"),
         batch2Pred = pmod(col("event_id"), lit(3)) === 0,
-        root = manifestRoot(s, "graft_upsert__log"))
+        root = warehouseRoot(s, "graft_upsert__log"))
       .select(col("user_id"), timestamp_micros(col("us")).as("last_ts"),
         col("event_id").as("last_event_id"), col("value").as("last_value"))
       .orderBy("user_id")
@@ -2016,10 +2018,6 @@ trait SparkEntryTail extends SparkEntryMid {
       .orderBy("doc_id")
   }
 
-  private def manifestRoot(s: SparkSession, name: String): String =
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), name).toString
-
   // Round IN the decimal domain, THEN cast: exact HALF_UP in both Spark
   // and DuckDB, so no binary-double rounding tie can diverge the oracle
   // hash (the r15 stream_lakehouse flake class).
@@ -2036,7 +2034,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * must equal the prefix the first two commits contained. */
   private[graft] def manifestTimetravel(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_tt__log")
+    val root = warehouseRoot(s, "graft_manifest_tt__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     (0 to 2).foreach { k =>
@@ -2058,7 +2056,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * skipping is an IO optimization and must be result-invisible. */
   private[graft] def manifestSkipping(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_skip__log")
+    val root = warehouseRoot(s, "graft_manifest_skip__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "ts", "event_type", "value")
     (0 to 5).foreach { k =>
@@ -2092,7 +2090,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * Oracle: the same BETWEEN aggregate on raw events. */
   private[graft] def manifestSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_sql__log")
+    val root = warehouseRoot(s, "graft_manifest_sql__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "ts", "event_type", "value")
     (0 to 5).foreach { k =>
@@ -2121,7 +2119,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * as a CASE on the segment-split key. */
   private[graft] def manifestEvolution(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_evo__log")
+    val root = warehouseRoot(s, "graft_manifest_evo__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events")
     ManifestTable.append(s, root,
@@ -2148,7 +2146,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * indistinguishable from recomputation. */
   private[graft] def manifestIncrAgg(s: SparkSession, dir: String): DataFrame = {
     import graft.io.AggView
-    val root = manifestRoot(s, "graft_aggview__log")
+    val root = warehouseRoot(s, "graft_aggview__log")
     graft.io.ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events")
       .withColumn("value_dec", col("value").cast("decimal(18,6)"))
@@ -2184,7 +2182,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * window), then another append, all read back with one SELECT. */
   private[graft] def manifestChangesSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_cfsql__log")
+    val root = warehouseRoot(s, "graft_manifest_cfsql__log")
     ManifestTable.destroy(s, root)
     ManifestTable.setRetainVersions(s, root, 6)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
@@ -2208,7 +2206,7 @@ trait SparkEntryTail extends SparkEntryMid {
 
   private[graft] def manifestChangefeed(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_cf__log")
+    val root = warehouseRoot(s, "graft_manifest_cf__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     (0 to 1).foreach { k =>
@@ -2240,7 +2238,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * be result-invisible. */
   private[graft] def manifestOptimize(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_opt__log")
+    val root = warehouseRoot(s, "graft_manifest_opt__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     ManifestTable.append(s, root,
@@ -2276,7 +2274,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * result-invisible. */
   private[graft] def manifestCluster(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_clu__log")
+    val root = warehouseRoot(s, "graft_manifest_clu__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "ts", "event_type", "value")
     (0 to 2).foreach { k =>
@@ -2305,8 +2303,8 @@ trait SparkEntryTail extends SparkEntryMid {
     * recomputation. */
   private[graft] def manifestCfView(s: SparkSession, dir: String): DataFrame = {
     import graft.io.{AggView, ManifestTable}
-    val base = manifestRoot(s, "graft_cfview_base__log")
-    val view = manifestRoot(s, "graft_cfview_view__log")
+    val base = warehouseRoot(s, "graft_cfview_base__log")
+    val view = warehouseRoot(s, "graft_cfview_view__log")
     ManifestTable.destroy(s, base)
     ManifestTable.destroy(s, view)
     val ev = t(s, dir, "events").select(
@@ -2339,8 +2337,8 @@ trait SparkEntryTail extends SparkEntryMid {
     * rollup over events excluding the tombstoned keys. */
   private[graft] def manifestRetractView(s: SparkSession, dir: String): DataFrame = {
     import graft.io.{AggView, ManifestTable}
-    val base = manifestRoot(s, "graft_retract_base__log")
-    val view = manifestRoot(s, "graft_retract_view__log")
+    val base = warehouseRoot(s, "graft_retract_base__log")
+    val view = warehouseRoot(s, "graft_retract_view__log")
     ManifestTable.destroy(s, base); ManifestTable.destroy(s, view)
     val ev = t(s, dir, "events").select(
       col("event_id"), col("event_type"),
@@ -2373,7 +2371,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * zone maps cannot replace. Oracle: the plain equality select. */
   private[graft] def manifestPoint(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_manifest_pt__log")
+    val root = warehouseRoot(s, "graft_manifest_pt__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     (0 to 5).foreach { k =>
@@ -2409,7 +2407,7 @@ trait SparkEntryTail extends SparkEntryMid {
     import graft.io.ManifestTable
     val src = tmpDir("events_sink_src")
     val cp = tmpDir("events_sink_cp")
-    val root = manifestRoot(s, "graft_sinkq__log")
+    val root = warehouseRoot(s, "graft_sinkq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "ts", "event_type", "value")
     (0 to 3).foreach { k => // four files -> four deterministic micro-batches
@@ -2469,8 +2467,8 @@ trait SparkEntryTail extends SparkEntryMid {
     import graft.io.{AggView, ManifestTable}
     val src = tmpDir("events_lakehouse")
     val cp = tmpDir("events_lakehouse_cp")
-    val base = manifestRoot(s, "graft_slake_base__log")
-    val view = manifestRoot(s, "graft_slake_view__log")
+    val base = warehouseRoot(s, "graft_slake_base__log")
+    val view = warehouseRoot(s, "graft_slake_view__log")
     ManifestTable.destroy(s, base)
     ManifestTable.destroy(s, view)
     val ev = t(s, dir, "events")
@@ -2512,8 +2510,8 @@ trait SparkEntryTail extends SparkEntryMid {
     * estimate is in tolerance. */
   private[graft] def manifestHllView(s: SparkSession, dir: String): DataFrame = {
     import graft.io.{AggView, ManifestTable}
-    val base = manifestRoot(s, "graft_hll_base__log")
-    val view = manifestRoot(s, "graft_hll_view__log")
+    val base = warehouseRoot(s, "graft_hll_base__log")
+    val view = warehouseRoot(s, "graft_hll_view__log")
     ManifestTable.destroy(s, base)
     ManifestTable.destroy(s, view)
     val ev = t(s, dir, "events").select("event_id", "event_type", "user_id")
@@ -2552,8 +2550,8 @@ trait SparkEntryTail extends SparkEntryMid {
     * rewrite-transparent feed, tombstone→cluster retirement). */
   private[graft] def pipelineLakehouse(s: SparkSession, dir: String): DataFrame = {
     import graft.io.{AggView, ManifestTable}
-    val base = manifestRoot(s, "graft_lake_base__log")
-    val view = manifestRoot(s, "graft_lake_view__log")
+    val base = warehouseRoot(s, "graft_lake_base__log")
+    val view = warehouseRoot(s, "graft_lake_view__log")
     ManifestTable.destroy(s, base)
     ManifestTable.destroy(s, view)
     val ev = t(s, dir, "events")
@@ -2609,8 +2607,8 @@ trait SparkEntryTail extends SparkEntryMid {
     * the whole pipeline must be result-invisible. */
   private[graft] def manifestStreamSource(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val up = manifestRoot(s, "graft_msrcq_up__log")
-    val down = manifestRoot(s, "graft_msrcq_down__log")
+    val up = warehouseRoot(s, "graft_msrcq_up__log")
+    val down = warehouseRoot(s, "graft_msrcq_down__log")
     val cp = tmpDir("msrcq_cp")
     ManifestTable.destroy(s, up)
     ManifestTable.destroy(s, down)
@@ -2651,7 +2649,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * Oracle: the mod-split aggregates recomputed from raw events. */
   private[graft] def manifestVersionAsof(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_vasof__log")
+    val root = warehouseRoot(s, "graft_vasof__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     def batch(k: Int) = ev.filter(pmod(col("event_id"), lit(3)) === k)
@@ -2682,7 +2680,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * the head must equal the straight rollup. Oracle: that rollup. */
   private[graft] def manifestInsertSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_insq__log")
+    val root = warehouseRoot(s, "graft_insq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     ManifestTable.append(s, root, ev.filter(pmod(col("event_id"), lit(3)) === 0))
@@ -2715,7 +2713,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * surviving row count. */
   private[graft] def manifestMaintSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_maintq__log")
+    val root = warehouseRoot(s, "graft_maintq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     (0 to 3).foreach { k =>
@@ -2741,7 +2739,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * derived-column aggregate on raw events. */
   private[graft] def manifestNestedPart(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_nested__log")
+    val root = warehouseRoot(s, "graft_nested__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events")
       .select(col("event_id"), col("value"),
@@ -2772,7 +2770,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * filter, update = CASE projection. */
   private[graft] def manifestDmlSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_dmlq__log")
+    val root = warehouseRoot(s, "graft_dmlq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     (0 to 2).foreach { k =>
@@ -2809,7 +2807,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * Oracle replays the verbs relationally over raw events. */
   private[graft] def manifestNamedSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_namedq__log")
+    val root = warehouseRoot(s, "graft_namedq__log")
     ManifestTable.destroy(s, root)
     s.sql("DROP TABLE IF EXISTS graft_named_lt")
     t(s, dir, "events").select("event_id", "event_type", "value")
@@ -2862,7 +2860,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * oracle replays that split relationally. */
   private[graft] def manifestAlterSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_alterq__log")
+    val root = warehouseRoot(s, "graft_alterq__log")
     ManifestTable.destroy(s, root)
     s.sql("DROP TABLE IF EXISTS graft_alter_lt")
     t(s, dir, "events").select("event_id", "event_type", "value")
@@ -2905,7 +2903,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * Oracle replays the surviving columns over raw events. */
   private[graft] def manifestDropSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_dropq__log")
+    val root = warehouseRoot(s, "graft_dropq__log")
     ManifestTable.destroy(s, root)
     s.sql("DROP TABLE IF EXISTS graft_drop_lt")
     t(s, dir, "events").select("event_id", "event_type", "value")
@@ -2967,7 +2965,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * events. */
   private[graft] def manifestRenameSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_renq__log")
+    val root = warehouseRoot(s, "graft_renq__log")
     ManifestTable.destroy(s, root)
     s.sql("DROP TABLE IF EXISTS graft_ren_lt")
     t(s, dir, "events").select("event_id", "event_type", "value")
@@ -3033,7 +3031,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * relationally. */
   private[graft] def manifestWidenSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_widenq__log")
+    val root = warehouseRoot(s, "graft_widenq__log")
     ManifestTable.destroy(s, root)
     s.sql("DROP TABLE IF EXISTS graft_widen_lt")
     t(s, dir, "events").select("event_id", "event_type", "value")
@@ -3092,7 +3090,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * projections over raw events. */
   private[graft] def manifestEvolveSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_evolveq__log")
+    val root = warehouseRoot(s, "graft_evolveq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events")
     ManifestTable.append(s, root,
@@ -3127,7 +3125,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * literal expected rows (commit times excluded — wall-clock). */
   private[graft] def manifestHistorySql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_histq__log")
+    val root = warehouseRoot(s, "graft_histq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "value")
     ManifestTable.append(s, root, ev.filter(col("event_id") % 2 === 0))
@@ -3158,8 +3156,8 @@ trait SparkEntryTail extends SparkEntryMid {
     * rollup. */
   private[graft] def manifestDmlView(s: SparkSession, dir: String): DataFrame = {
     import graft.io.{AggView, ManifestTable}
-    val base = manifestRoot(s, "graft_dmlview__log")
-    val view = manifestRoot(s, "graft_dmlview__view")
+    val base = warehouseRoot(s, "graft_dmlview__log")
+    val view = warehouseRoot(s, "graft_dmlview__view")
     ManifestTable.destroy(s, base)
     ManifestTable.destroy(s, view)
     ManifestTable.setRetainVersions(s, base, 8)
@@ -3198,7 +3196,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * (`locopy/database.py:131-190`) with warehouse-side ALTER. */
   private[graft] def manifestMergeEvolve(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_mergeev__log")
+    val root = warehouseRoot(s, "graft_mergeev__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events")
     val tgt = ev.filter(col("event_id") % 3 === 0)
@@ -3232,7 +3230,7 @@ trait SparkEntryTail extends SparkEntryMid {
     * ride through. */
   private[graft] def manifestNestedUpdate(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_nestedupd__log")
+    val root = warehouseRoot(s, "graft_nestedupd__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").filter(col("event_id") % 5 === 0)
       .select(col("event_id"),
@@ -3258,7 +3256,7 @@ trait SparkEntryTail extends SparkEntryMid {
 
   private[graft] def manifestMergeSql(s: SparkSession, dir: String): DataFrame = {
     import graft.io.ManifestTable
-    val root = manifestRoot(s, "graft_mergeq__log")
+    val root = warehouseRoot(s, "graft_mergeq__log")
     ManifestTable.destroy(s, root)
     val ev = t(s, dir, "events").select("event_id", "event_type", "value")
     val tgt = ev.filter(col("event_id") % 3 === 0)

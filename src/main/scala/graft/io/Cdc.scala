@@ -29,15 +29,25 @@ object Cdc {
     val valCols = base.columns.filterNot(_ == keyCol).toSeq
     require(valCols.forall(feed.columns.contains),
       s"feed must carry the base value columns ${valCols.mkString(", ")}")
-    val payload = struct(col(opCol).as("op") +: valCols.map(col): _*)
-    val latest = feed.groupBy(col(keyCol))
-      .agg(max(struct(col(seqCol).as("s"), payload.as("r"))).as("m"))
-      .select(col(keyCol) +: (col("m.r.op").as("__op") +:
-        valCols.map(c => col(s"m.r.$c").as(s"__n_$c"))): _*)
+    val latest = latestOps(feed, keyCol, seqCol, opCol, valCols)
+      .select(col(keyCol) +: (col(opCol).as("__op") +:
+        valCols.map(c => col(c).as(s"__n_$c"))): _*)
     base.join(latest, Seq(keyCol), "full_outer")
       .filter(col("__op").isNull || col("__op") =!= "D")
       .select(col(keyCol) +: valCols.map { c =>
         when(col("__op").isNotNull, col(s"__n_$c")).otherwise(col(c)).as(c)
       }: _*)
+  }
+
+  /** The highest-`seqCol` change per key of a CDC feed: `keyCol`,
+    * `opCol` and `valCols` of the winning row (one map-side-combinable
+    * max-struct aggregation; ties on `seqCol` break on the payload). */
+  def latestOps(feed: DataFrame, keyCol: String, seqCol: String,
+      opCol: String, valCols: Seq[String]): DataFrame = {
+    val payload = struct(col(opCol).as("op") +: valCols.map(col): _*)
+    feed.groupBy(col(keyCol))
+      .agg(max(struct(col(seqCol).as("s"), payload.as("r"))).as("m"))
+      .select(col(keyCol) +: (col("m.r.op").as(opCol) +:
+        valCols.map(c => col(s"m.r.$c").as(c))): _*)
   }
 }

@@ -179,7 +179,7 @@ object Load {
       buckets: Int
   ): DataFrame = {
     if (policy == DriftAllow || mode != SaveMode.Append) return incoming
-    // crash-window recovery (the applyCdcBatch idiom): a previous
+    // crash-window recovery of the evolve stage below: a previous
     // evolve that died between drop and rename leaves the only copy
     // in the stage table — promote it before deciding the table is new
     val evolveStage = table + "__evolve_stage"
@@ -205,7 +205,7 @@ object Load {
         if (added.nonEmpty) {
           // incoming grew columns: one-time rewrite of the existing
           // table via union-by-name. Staged through a DURABLE stage
-          // table (the Stream.applyCdcBatch idiom) — the live table is
+          // table (`<table>__evolve_stage`) — the live table is
           // only dropped once the widened copy is fully on disk, so a
           // crash mid-rewrite never loses history (a localCheckpoint
           // stage would hold the only copy in non-durable block

@@ -186,7 +186,7 @@ object ManifestDml {
       s"$root has outstanding merge-on-read tombstones; a copy-on-write " +
         "rewrite under them could resurrect deleted rows — compact() first")
     val rel = graft.sources.ManifestSource.relation(
-      spark, root, Some(v), allowTombstones = false)
+      spark, root, v, snap, allowTombstones = false)
     (f, p, v, snap, rel)
   }
 

@@ -417,6 +417,12 @@ object ManifestTable {
     readManifest(f, p, v)
   }
 
+  /** Root of the manifest table `name` under the session warehouse:
+    * `<warehouse>/<name lowercased>`, the dir a managed table of that
+    * name would own. */
+  def warehouseRoot(spark: SparkSession, name: String): String =
+    new Path(spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase).toString
+
   def exists(spark: SparkSession, root: String): Boolean = {
     val (f, p) = fs(spark, root)
     currentVersion(f, p).isDefined
@@ -1145,14 +1151,19 @@ object ManifestTable {
     * OTHER stay a single-writer-maintenance recommendation: the OCC
     * retry serializes disjoint interleavers, but a loser mid-read of
     * segments the winner just retired fails loudly (never silently)
-    * and must re-run. */
+    * and must re-run.
+    *
+    * `at` pins the head the caller already read and validated against:
+    * the append commits on exactly that version or throws
+    * [[CommitRaceLost]] (pass it without `retryRaces`). */
   private[graft] def appendReserved(spark: SparkSession, root: String,
       df: DataFrame, partitionBy: Seq[String] = Nil,
       tag: Option[String] = None, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, retryRaces: Boolean = false,
-      addMaps: Seq[(String, String)] = Nil): Unit = {
+      addMaps: Seq[(String, String)] = Nil,
+      at: Option[(Long, Snapshot)] = None): Unit = {
     val (f, p) = fs(spark, root)
-    var (v, prior) = headSnapshot(spark, root)
+    var (v, prior) = at.getOrElse(headSnapshot(spark, root))
     // physical-name constancy: callers write LOGICAL names; the
     // segment stores PHYSICAL (mapping entries being committed WITH
     // this append — addColumns' re-ADD — translate too). Stats/Bloom
@@ -1288,10 +1299,13 @@ object ManifestTable {
   def addColumns(spark: SparkSession, root: String,
       cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Unit = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
+    // ONE head read: the schema, physical names and partition columns
+    // checked below and the version the marker commits on all come
+    // from `head`; a commit that lands first fails the append loudly
     val (v, head) = committedHead(spark, root,
       s"ALTER TABLE of uncommitted table $root — INSERT first (or declare " +
         "the columns in CREATE TABLE)")
-    val cur = read(spark, root).schema
+    val cur = readSnapshot(spark, root, head).schema
     val eq = spark.sessionState.conf.resolver
     cols.foreach { case (n, _) =>
       require(!cur.fields.exists(fd => eq(fd.name, n)),
@@ -1310,7 +1324,7 @@ object ManifestTable {
     // loudly until a full rewrite retired the tombstone)
     val (dropped, mapping) = head.actions
     val rel = graft.sources.ManifestSource
-      .relation(spark, root, None, allowTombstones = true)
+      .relation(spark, root, v, head, allowTombstones = true)
     val rawPhysical = rel.dataSchema.fieldNames.toSeq
     val taken = scala.collection.mutable.Set.empty[String]
     taken ++= dropped
@@ -1334,7 +1348,7 @@ object ManifestTable {
     // written in the table's own layout: on a partitioned table the
     // empty write leaves no file and the schema rides the `#meta` line
     appendReserved(spark, root, empty, rel.partitionSchema.fieldNames.toSeq,
-      tag = Some("alter"), addMaps = addMaps)
+      tag = Some("alter"), addMaps = addMaps, at = Some((v, head)))
   }
 
   /** `ALTER TABLE … DROP COLUMN(S)`: one schema-projection commit (a
@@ -1351,7 +1365,7 @@ object ManifestTable {
     val (v, prior) = committedHead(spark, root, s"ALTER TABLE of uncommitted table $root")
     val eq = spark.sessionState.conf.resolver
     val rel = graft.sources.ManifestSource
-      .relation(spark, root, None, allowTombstones = true)
+      .relation(spark, root, v, prior, allowTombstones = true)
     // callers name LOGICAL columns; partition columns are never mapped
     // (renames reject them) and the `#dropcol` tombstone records the
     // PHYSICAL name — the reader projection drops physical-first
@@ -1396,7 +1410,7 @@ object ManifestTable {
     val (v, prior) = committedHead(spark, root, s"ALTER TABLE of uncommitted table $root")
     val eq = spark.sessionState.conf.resolver
     val rel = graft.sources.ManifestSource
-      .relation(spark, root, None, allowTombstones = true)
+      .relation(spark, root, v, prior, allowTombstones = true)
     require(!rel.partitionSchema.fieldNames.exists(eq(_, oldName)),
       s"$oldName is a hive PARTITION column of $root — its name IS the " +
         "directory layout; re-partition via cluster()/compact() instead")
@@ -1438,17 +1452,16 @@ object ManifestTable {
     * narrow type. Narrowing or cross-family changes reject loudly. */
   def alterColumnType(spark: SparkSession, root: String,
       colName: String, newType: org.apache.spark.sql.types.DataType): Unit = {
-    val (f, p) = fs(spark, root)
-    require(currentVersion(f, p).isDefined,
-      s"ALTER TABLE of uncommitted table $root")
+    // one head read, as in addColumns
+    val (v, head) = committedHead(spark, root, s"ALTER TABLE of uncommitted table $root")
     val eq = spark.sessionState.conf.resolver
     val rel = graft.sources.ManifestSource
-      .relation(spark, root, None, allowTombstones = true)
+      .relation(spark, root, v, head, allowTombstones = true)
     require(!rel.partitionSchema.fieldNames.exists(eq(_, colName)),
       s"$colName is a hive PARTITION column of $root — its values are " +
         "directory names typed by discovery; re-partition via " +
         "cluster()/compact() instead")
-    val cur = read(spark, root).schema
+    val cur = readSnapshot(spark, root, head).schema
     val field = cur.fields.find(fd => eq(fd.name, colName)).getOrElse(
       throw new IllegalArgumentException(
         s"column $colName does not exist in $root (${cur.simpleString})"))
@@ -1467,7 +1480,7 @@ object ManifestTable {
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), evolved)
     appendReserved(spark, root, empty, rel.partitionSchema.fieldNames.toSeq,
-      tag = Some("alter"))
+      tag = Some("alter"), at = Some((v, head)))
   }
 
   /** Is `from -> to` a widening the scan layer performs losslessly?

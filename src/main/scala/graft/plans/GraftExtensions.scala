@@ -168,11 +168,12 @@ class ResolveManifestRelation(spark: org.apache.spark.sql.SparkSession)
     val v = version.orElse(
       graft.io.ManifestTable.versions(spark, root).lastOption).getOrElse(
       throw new IllegalArgumentException(s"no committed manifest under $root"))
+    val snap = graft.io.ManifestTable.manifestSnapshot(spark, root, v)
     val lr = LogicalRelation(
-      graft.sources.ManifestSource.relation(spark, root, Some(v),
+      graft.sources.ManifestSource.relation(spark, root, v, snap,
         allowTombstones = false),
       isStreaming = false)
-    val mapping = graft.io.ManifestTable.snapshotAt(spark, root, Some(v)).actions._2
+    val mapping = snap.actions._2
     if (mapping.isEmpty) lr
     else {
       val eq = spark.sessionState.conf.resolver

@@ -601,19 +601,26 @@ object ManifestSource {
 
   private[graft] def relation(spark: SparkSession, root: String,
       version: Option[Long], allowTombstones: Boolean): HadoopFsRelation = {
-    lastBuildListOps = 0
-    lastBuildSidecarReads = 0
-    lastBuildFooterJobs = 0
-    lastBuildCacheHit = false
     // head resolution = ONE root listing; pinned versions skip even that
     val v = version.orElse(ManifestTable.versions(spark, root).lastOption)
       .getOrElse(throw new IllegalArgumentException(
         s"no committed manifest under $root"))
     // ONE manifest read: segment list + embedded metadata + fingerprint
-    val snap = ManifestTable.manifestSnapshot(spark, root, v)
+    relation(spark, root, v, ManifestTable.manifestSnapshot(spark, root, v),
+      allowTombstones)
+  }
+
+  /** The relation of manifest `v` from the caller's own read of it,
+    * `snap` — a writer that already holds its head snapshot plans on
+    * it without reading the manifest again. */
+  private[graft] def relation(spark: SparkSession, root: String, v: Long,
+      snap: ManifestTable.Snapshot, allowTombstones: Boolean): HadoopFsRelation = {
+    lastBuildListOps = 0
+    lastBuildSidecarReads = 0
+    lastBuildFooterJobs = 0
+    lastBuildCacheHit = false
     val all = snap.segs
-    require(all.nonEmpty, s"no committed manifest under $root" +
-      version.map(v0 => s" at version $v0").getOrElse(""))
+    require(all.nonEmpty, s"no committed manifest under $root at version $v")
     val dels = all.filter(_.startsWith("del-"))
     if (dels.nonEmpty && !allowTombstones)
       throw new IllegalStateException(

@@ -53,9 +53,7 @@ object AnnIndex {
 
   /** Root dir of a streaming ANN index under the warehouse. */
   private[graft] def annRoot(spark: SparkSession, table: String): String =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      table.toLowerCase + "__annivf").toString
+    graft.io.ManifestTable.warehouseRoot(spark, table + "__annivf")
 
   private def batchTag(batchId: Long): String = s"b$batchId"
 

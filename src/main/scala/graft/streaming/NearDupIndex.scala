@@ -210,8 +210,7 @@ object NearDupIndex {
       // rows are set-semantic, so dedup here is free correctness
       .distinct()
       .repartition(col("pb"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
+      .write
       .partitionBy("pb")
       .parquet(s"${bandsRoot(root)}/$dir")
     val d = new Path(br, dir)
@@ -236,16 +235,17 @@ object NearDupIndex {
   private[graft] def writeFor(spark: SparkSession, root: String,
       seg: String, sig: DataFrame): Unit = {
     val dir = s"${bandsRoot(root)}/$seg"
+    // whole-dir replace whatever the session's partition overwrite
+    // mode: a rebuild at a NEW pb count must not leave old-count dirs
+    // behind (a crash in between leaves the segment unindexed, the
+    // gap sync() heals)
+    val (f, _) = hadoopFs(spark, dir)
+    f.delete(new Path(dir), true)
     withPb(graft.ext.Dedup.bandedFromSig(sig))
       .repartition(col("pb"))
-      .write.mode("overwrite")
-      // pin whole-dir replace semantics regardless of session config:
-      // a rebuild at a NEW pb count must not leave old-count dirs
-      // behind (dynamic mode only overwrites colliding partitions)
-      .option("partitionOverwriteMode", "static")
+      .write
       .partitionBy("pb")
       .parquet(dir)
-    val (f, _) = hadoopFs(spark, dir)
     f.create(pbMarker(new Path(dir), PartBuckets), true).close()
   }
 

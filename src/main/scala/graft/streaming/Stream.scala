@@ -193,44 +193,29 @@ object Stream {
   /** Streaming UPSERT through `foreachBatch` — the serve-the-latest
     * pattern: each micro-batch is reduced to its newest row per key
     * (max (event time, event id, value) struct — id-tiebroken, so
-    * deterministic), then MERGED into a managed state table: newest
-    * row per key wins across batches, per-key update counts accumulate.
-    * Two scheduled MemoryStream batches (split by `batch2Pred`) make
-    * the cross-batch merge real: keys present in both batches must
-    * take the global max and SUM their counts, which only happens if
-    * batch 2's merge actually reads batch 1's table.
+    * deterministic), then MERGED into the manifest-table state at
+    * `root` ([[mergeUpsertBatch]]): newest row per key wins across
+    * batches, per-key update counts accumulate. Two scheduled
+    * micro-batches (split by `batch2Pred`) make the cross-batch merge
+    * real: keys present in both batches must take the global max and
+    * SUM their counts, which only happens if batch 2's merge actually
+    * reads batch 1's state.
     *
     * The final table is a pure function of the input set — the split
     * only changes the merge schedule — so a batch argmax oracle
-    * gates it exactly (`__batch_id` is state-table bookkeeping the
-    * caller projects away).
-    *
-    * Restart-safe ([[mergeUpsertBatch]]): the state table carries the
-    * last-applied `__batch_id` per key, so re-delivering a micro-batch
-    * (foreachBatch is at-least-once on recovery) is a detected no-op —
-    * keys already stamped with that batch id are anti-joined out of
-    * the delta before counts accumulate (replay-idempotence is
-    * spec-tested), and the partition-by-partition dynamic-overwrite
-    * commit converges under replay even if a crash left only some
-    * touched buckets written (see [[mergeUpsertBatch]]).
-    *
-    * 100 TB shape: the state table is hash-partitioned on the key, so
-    * the per-batch reduce is a keyed partial aggregate of the BATCH
-    * (bounded by trigger size, not corpus) and the merge reads AND
-    * rewrites only the touched bucket partitions. The driver-side
-    * collect feeds the deterministic two-batch schedule (semantics
-    * harness, as in [[lateDataWindowCounts]]). */
+    * gates it exactly (`__batch_id` is state bookkeeping the caller
+    * projects away). Each batch is ONE atomic manifest commit, so the
+    * change feed sees it as its own window. */
   def foreachBatchUpsert(
       spark: SparkSession,
       events: DataFrame,
       batch2Pred: org.apache.spark.sql.Column,
-      table: String = "graft_stream_upsert"
+      root: String
   ): DataFrame = {
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
+    graft.io.ManifestTable.destroy(spark, root)
     twoBatchFileSchedule(spark, events, batch2Pred,
-      (batch, batchId) => mergeUpsertBatch(spark, table, batch, batchId))
-    spark.table(table)
+      (batch, batchId) => mergeUpsertBatch(spark, root, batch, batchId))
+    graft.io.ManifestTable.read(spark, root)
   }
 
   /** Deterministic two-micro-batch schedule through the CHECKPOINTED
@@ -272,208 +257,62 @@ object Stream {
     runAvailable()
   }
 
-  /** Streaming UPSERT into the MANIFEST LOG — [[foreachBatchUpsert]]'s
-    * semantics with the log as the single stateful-table substrate:
-    * each micro-batch reduces to its newest row per key and MERGEs
-    * into the log via [[graft.io.ManifestDml.mergeInto]], so every
-    * batch is ONE atomic commit (first batch an append, later ones
-    * `#dml`-marked copy-on-write) and change-feed consumers see each
-    * batch as its own pre-image-delete + re-insert window — the
-    * bucket-table machinery's pruning arrives for free through the
-    * log's zone maps on the key column.
+  /** One micro-batch of the upsert (the [[foreachBatchUpsert]] batch
+    * body, public so replays can be driven directly in tests): reduce
+    * the batch to one row per key — its newest (us, event_id, value),
+    * its row count as `n_updates`, `batchId` as `__batch_id` — then
+    * append it (first batch) or MERGE it on the key: a matched key
+    * whose stamp is older than `batchId` takes the newer of the two
+    * rows and adds the counts, an unmatched key is inserted.
     *
-    * Replay-idempotent by SEMANTICS, not bookkeeping: the matched
-    * UPDATE fires only when the source row is strictly newer
-    * (`(us, event_id, value)` struct order — total, so cross-batch
-    * ties cannot flip), so re-delivering a batch rewrites the touched
-    * segments to byte-equal contents and inserts nothing — the state
-    * is a pure function of the delivered input set (split-invariant,
-    * the batch-argmax oracle gates it). Concurrent appenders are
-    * tolerated via the DML race retry (disjoint interleavers
-    * serialize; true overlap stays loud). */
-  def foreachBatchUpsertManifest(
-      spark: SparkSession,
-      events: DataFrame,
-      batch2Pred: org.apache.spark.sql.Column,
-      root: String
-  ): DataFrame = {
-    graft.io.ManifestTable.destroy(spark, root)
-    twoBatchFileSchedule(spark, events, batch2Pred,
-      (batch, batchId) => mergeUpsertManifestBatch(spark, root, batch, batchId))
-    graft.io.ManifestTable.read(spark, root)
-  }
-
-  /** One micro-batch of the manifest-log upsert (public so replays can
-    * be driven directly in tests): reduce the batch to its newest row
-    * per key, then MERGE — strictly-newer matched UPDATE, NOT MATCHED
-    * INSERT. The batch frame is re-exposed as a batch DataFrame when
-    * the engine hands a streaming-flagged one. */
-  def mergeUpsertManifestBatch(spark: SparkSession, root: String,
-      batchDf: DataFrame, batchId: Long): Unit = {
+    * Replay-idempotent: foreachBatch is at-least-once on recovery, and
+    * a re-delivered batch matches every key with its own stamp, so it
+    * changes nothing (`n_updates` is never double-counted). The batch
+    * is one atomic manifest commit, so a crash before the commit
+    * leaves the pre-batch state readable (the written segments are
+    * orphans no reader sees) and the replay converges. Concurrent
+    * appenders are tolerated via the DML race retry. */
+  def mergeUpsertBatch(spark: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Unit = {
     import graft.io.{ManifestDml, ManifestTable}
-    val batch =
-      if (batchDf.isStreaming)
-        org.apache.spark.sql.GraftColumnBridge.asBatchDataFrame(batchDf)
-      else batchDf
     val delta = batch
       .groupBy(col("user_id"))
-      .agg(max(struct(col("us"), col("event_id"), col("value"))).as("__m"))
-      .select(col("user_id"), col("__m.us").as("us"),
-        col("__m.event_id").as("event_id"), col("__m.value").as("value"))
-      .localCheckpoint()
-    try {
-      if (delta.isEmpty) return
-      if (!ManifestTable.exists(spark, root)) {
-        ManifestTable.append(spark, root, delta, statsCols = Seq("user_id"))
-        return
-      }
-      val newer =
-        struct(col("__s.us"), col("__s.event_id"), col("__s.value")) >
-          struct(col("__t.us"), col("__t.event_id"), col("__t.value"))
-      ManifestDml.mergeInto(spark, root, delta,
-        col("__t.user_id") === col("__s.user_id"),
-        matched = Seq(ManifestDml.MergeUpdate(Some(newer), Seq(
-          "us" -> col("__s.us"), "event_id" -> col("__s.event_id"),
-          "value" -> col("__s.value")))),
-        notMatched = Seq(ManifestDml.MergeInsert(None, Seq(
-          "user_id" -> col("__s.user_id"), "us" -> col("__s.us"),
-          "event_id" -> col("__s.event_id"), "value" -> col("__s.value")))),
-        notMatchedBySource = Nil,
-        retryRaces = true)
-      ()
-    } finally graft.core.Lineage.release(delta)
-  }
-
-  /** Default bucket count for partition-scoped merge state tables.
-    * 8 keeps the test-scale layout inspectable; a 100 TB deployment
-    * sizes this like any hash-partitioned state store (e.g. 4096) so
-    * one micro-batch touches a small fraction of partitions and each
-    * partition's rewrite fits an executor. */
-  private[graft] val MergeBuckets = 8
-
-  /** The touched-bucket ids of a merge batch — a ≤`nBuckets`-element
-    * driver list (parameter-bounded, never data-sized). */
-  private def touchedBuckets(df: DataFrame, keyCol: String,
-      nBuckets: Int): Seq[Any] =
-    df.select(pmod(hash(col(keyCol)), lit(nBuckets)).as("__bucket"))
-      .distinct().collect().map(_.get(0)).toSeq
-
-  /** Write `rows` into partitioned state `table`, rewriting ONLY the
-    * partitions present in `rows` (dynamic partition overwrite); every
-    * other partition's files stay byte-identical (spec-pinned). First
-    * write creates the table partitioned by `__bucket` WITH the
-    * `partitionOverwriteMode=dynamic` datasource option baked into its
-    * catalog entry — the table itself declares dynamic semantics, so
-    * every subsequent insert honors them with ZERO session-conf
-    * mutation (no toggle, no restore, no race with a concurrent
-    * foreachBatch in the same session; the per-write DataFrameWriter
-    * option is silently ignored by v1 `insertInto`, measured, so the
-    * table-level option is the only mutation-free spelling). */
-  private def overwriteTouched(spark: SparkSession, table: String,
-      rows: DataFrame, nBuckets: Int): Unit = {
-    // materialize before writing into a table the plan may read — but
-    // don't double-copy rows the caller already checkpointed
-    val snap =
-      if (graft.core.Lineage.checkpointRdd(rows).isDefined) rows
-      else rows.localCheckpoint()
-    if (!spark.catalog.tableExists(table)) {
-      snap.write.partitionBy("__bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .saveAsTable(table)
-      // record the layout's bucket count where [[bucketCountOf]] reads
-      // it back. Crash window (table created, property not yet set) is
-      // benign: merges then fall back to the caller's default, which
-      // is exactly the count this table was just created with
-      spark.sql(
-        s"ALTER TABLE $table SET TBLPROPERTIES('$BucketProp'='$nBuckets')")
-    } else
-      snap.write.mode("overwrite").insertInto(table)
-    graft.core.Lineage.release(snap)
-  }
-
-  /** One idempotent MERGE of a micro-batch into the upsert state table
-    * (the [[foreachBatchUpsert]] batch body, public so replays can be
-    * driven directly in tests). Keys whose state row already carries
-    * this `batchId` are dropped from the delta before merging — the
-    * at-least-once re-delivery becomes a no-op instead of
-    * double-counting `n_updates`. Batch ids are engine-monotonic, so
-    * `max(__batch_id)` stamps updated keys with the new id while
-    * untouched keys keep their last-applied id.
-    *
-    * PARTITION-SCOPED: the state table is hash-partitioned on the key
-    * (`__bucket` = pmod(hash(user_id), nBuckets), a physical partition
-    * column the callers project away). A batch reads ONLY its touched
-    * buckets (partition-pruned scan — untouched keys are never even
-    * read, where the old staged-rename design re-wrote the whole
-    * table) and rewrites ONLY those partitions via dynamic partition
-    * overwrite; untouched partitions' files stay byte-identical
-    * (spec-pinned). Per-batch IO is O(touched buckets), the
-    * hash-partitioned-state-store shape a 100 TB upsert needs.
-    *
-    * Crash contract (replaces the staged rename): dynamic overwrite
-    * commits partition-by-partition, so a crash can leave SOME touched
-    * buckets new and others old — but each bucket is internally whole,
-    * per-key rows are a pure function of (state, batch) within their
-    * bucket, and the per-key `__batch_id` stamp makes the
-    * at-least-once replay recompute already-committed buckets to
-    * byte-identical rows while completing the rest: the replay
-    * CONVERGES to exactly the all-committed state (idempotence is
-    * spec-pinned). */
-  def mergeUpsertBatch(spark: SparkSession, table: String,
-      batch: DataFrame, batchId: Long, nBuckets: Int = MergeBuckets): Unit = {
-    // crash/upgrade preamble + the table's authoritative bucket count
-    // (the caller's default must not mis-prune a rebucketed table)
-    val n = ensureBucketedState(spark, table, "user_id", nBuckets)
-    // ONE pass over the batch source: the reduce is materialized, and
-    // the bucket set, the replay guard and the merge all read the
-    // key-bounded snapshot (inside foreachBatch every re-evaluation
-    // would re-scan the micro-batch source)
-    val reduced = batch
-      .groupBy("user_id")
       .agg(max(struct(col("us"), col("event_id"), col("value"))).as("s"),
         count(lit(1)).as("n_updates"))
       .select(col("user_id"), col("s.us").as("us"),
         col("s.event_id").as("event_id"), col("s.value").as("value"),
         col("n_updates"), lit(batchId).as("__batch_id"))
-      .localCheckpoint()
-    val merged =
-      if (!spark.catalog.tableExists(table)) reduced
-      else {
-        // partition-pruned: only the buckets this batch's keys hash to
-        val state = spark.table(table)
-          .filter(col("__bucket").isin(
-            touchedBuckets(reduced, "user_id", n): _*))
-        // replay guard: this batch's keys already stamped with this id
-        // were merged by a previous (crashed-after-write) attempt
-        val fresh = reduced.join(
-          state.filter(col("__batch_id") === batchId).select("user_id"),
-          Seq("user_id"), "left_anti")
-        state.drop("__bucket").unionByName(fresh)
-          .groupBy("user_id")
-          .agg(max(struct(col("us"), col("event_id"), col("value"))).as("s"),
-            sum("n_updates").as("n_updates"),
-            max("__batch_id").as("__batch_id"))
-          .select(col("user_id"), col("s.us").as("us"),
-            col("s.event_id").as("event_id"), col("s.value").as("value"),
-            col("n_updates"), col("__batch_id"))
-      }
-    overwriteTouched(spark, table,
-      merged.withColumn("__bucket", pmod(hash(col("user_id")), lit(n))), n)
-    graft.core.Lineage.release(reduced)
+    if (!ManifestTable.exists(spark, root))
+      ManifestTable.append(spark, root, delta, statsCols = Seq("user_id"))
+    else {
+      def row(side: String) = struct(Seq("us", "event_id", "value")
+        .map(c => col(s"$side.$c").as(c)): _*)
+      val newest = greatest(row("__t"), row("__s"))
+      ManifestDml.mergeInto(spark, root, delta,
+        col("__t.user_id") === col("__s.user_id"),
+        matched = Seq(ManifestDml.MergeUpdate(
+          Some(col("__t.__batch_id") < col("__s.__batch_id")),
+          Seq("us", "event_id", "value").map(c => c -> newest.getField(c)) ++ Seq(
+            "n_updates" -> (col("__t.n_updates") + col("__s.n_updates")),
+            "__batch_id" -> col("__s.__batch_id")))),
+        notMatched = Seq(ManifestDml.MergeInsert(None,
+          delta.columns.toSeq.map(c => c -> col(s"__s.$c")))),
+        notMatchedBySource = Nil,
+        retryRaces = true)
+    }
   }
 
   /** Streaming CDC apply: a two-batch MemoryStream of I/U/D change
-    * rows merged into a persisted base table with [[graft.io.Cdc
-    * .applyChanges]] per micro-batch (foreachBatch), the live table
-    * swapped via a staged rename ([[applyCdcBatch]]).
-    * Because CDC ops carry ABSOLUTE values, a re-delivered batch is
-    * naturally idempotent — re-updates rewrite the same values,
-    * re-deletes no-op, re-inserts overwrite themselves — so no
-    * batch-id stamping is needed (unlike the upsert's n_updates
-    * counter); the spec pins this replay-idempotence directly. The
-    * final state is split-invariant (streaming 2-batch apply ≡ one
-    * batch MERGE of the whole feed under latest-wins), which is what
-    * lets the oracle replay it as a single relational apply.
+    * rows merged into the manifest-table base at `root` per
+    * micro-batch (foreachBatch, [[applyCdcBatch]]). Because CDC ops
+    * carry ABSOLUTE values, a re-delivered batch is naturally
+    * idempotent — re-updates rewrite the same values, re-deletes
+    * no-op, re-inserts overwrite themselves — so no batch-id stamping
+    * is needed (unlike the upsert's n_updates counter); the spec pins
+    * this replay-idempotence directly. The final state is
+    * split-invariant (streaming 2-batch apply ≡ one batch MERGE of the
+    * whole feed under latest-wins), which is what lets the oracle
+    * replay it as a single relational apply.
     *
     * `feed` must carry (okey, seq, op, price, status, second) where
     * `second` routes the row to micro-batch 2. */
@@ -481,7 +320,7 @@ object Stream {
       spark: SparkSession,
       base: DataFrame,
       feed: DataFrame,
-      table: String = "graft_stream_cdc"
+      root: String
   ): DataFrame = {
     import spark.implicits._
     // HARNESS BOUNDARY: driver-side collect is fixture-bounded (the
@@ -498,9 +337,8 @@ object Stream {
           if (r.isNullAt(3)) None else Some(r.getDouble(3)),
           Option(r.getString(4)))
       }
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
-    seedCdcTable(spark, table, base)
+    graft.io.ManifestTable.destroy(spark, root)
+    graft.io.ManifestTable.append(spark, root, base, statsCols = Seq("okey"))
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, String, Option[Double], Option[String])](
         implicitly[org.apache.spark.sql.Encoder[
@@ -509,7 +347,7 @@ object Stream {
     val stream = ms.toDF().toDF("okey", "seq", "op", "price", "status")
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyCdcBatch(spark, table, batch)
+        applyCdcBatch(spark, root, batch)
       }
       .start()
     try {
@@ -518,208 +356,30 @@ object Stream {
       ms.addData(part(second = true))
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(table).drop("__bucket")
-  }
-
-  /** Crash-recovery preamble for the staged-rename table swap: a crash
-    * between [[stagedSwap]]'s drop and rename leaves the ONLY state
-    * copy in `table`__stage — promote it whenever the live table is
-    * missing, so a restart (or an empty micro-batch after recovery)
-    * always restores `spark.table(table)` before any merge logic runs.
-    * One definition for every staged-rename site. */
-  private[graft] def promoteStageIfCrashed(spark: SparkSession,
-      table: String): Unit = {
-    val stage = table + "__stage"
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(stage)) {
-      spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-      repairIfPartitioned(spark, table)
-    }
-  }
-
-  /** RENAME moves a table's directory but leaves a partitioned
-    * datasource table's per-partition catalog locations pointing at
-    * the OLD path — reads then silently see zero files. Re-derive the
-    * partition metadata from the filesystem after any rename of a
-    * partitioned table (a bucket-count-bounded listing). */
-  private def repairIfPartitioned(spark: SparkSession, table: String): Unit =
-    if (spark.catalog.listColumns(table).collect().exists(_.isPartition))
-      spark.sql(s"MSCK REPAIR TABLE $table")
-
-  /** Swap `rows` in as the new content of managed `table` via the
-    * staged rename: materialize, write the stage table, drop the live
-    * one, rename stage over it. A crash leaves either the old live
-    * table or a complete stage copy — never a half-written table —
-    * and [[promoteStageIfCrashed]] closes the drop→rename window.
-    * This is the full-rewrite commit, kept ONLY for whole-content
-    * swaps (complete-mode aggregates, one-time layout migrations,
-    * [[rebucket]]); the merge family uses partitioned or
-    * manifest-append commits instead. `partitionCols` makes the stage
-    * (and hence the renamed live table) a partitioned layout; `props`
-    * are set on the STAGE before the rename, so they ride the atomic
-    * swap (a crash never publishes the new content without them). */
-  private def stagedSwap(spark: SparkSession, table: String,
-      rows: DataFrame, partitionCols: Seq[String] = Nil,
-      props: Map[String, String] = Map.empty): Unit = {
-    val stage = table + "__stage"
-    val snap = rows.localCheckpoint()
-    graft.io.Load.dropManaged(spark, stage)
-    // partitioned stages carry the dynamic-overwrite option in their
-    // catalog entry (see overwriteTouched — the mutation-free spelling)
-    snap.write.partitionBy(partitionCols: _*)
-      .option("partitionOverwriteMode", "dynamic")
-      .saveAsTable(stage)
-    props.foreach { case (k, v) =>
-      spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES('$k'='$v')") }
-    graft.io.Load.dropManaged(spark, table)
-    spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-    repairIfPartitioned(spark, table)
-    graft.core.Lineage.release(snap)
-  }
-
-  private val BucketProp = "graft.buckets"
-
-  /** The bucket count a merge state table was PHYSICALLY laid out
-    * with, from its table property — the layout's source of truth, so
-    * a caller-passed default can never mis-prune a table that was
-    * created (or [[rebucket]]ed) at a different count. Legacy tables
-    * without the property fall back to the caller's value. */
-  private[graft] def bucketCountOf(spark: SparkSession,
-      table: String): Option[Int] =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .collectFirst { case r if r.getString(0) == BucketProp =>
-        r.getString(1).toInt }
-
-  /** Upgrade/crash preamble shared by the bucket-partitioned merges:
-    * (1) promote a crashed staged rename (a pre-upgrade crash that
-    * left only `table`__stage must restore state BEFORE any merge
-    * logic, or the merge would silently re-seed from the batch alone
-    * and lose accumulated state); (2) one-time migration of a legacy
-    * flat (pre-bucketing) layout into `__bucket` partitions — a
-    * staged-rename full rewrite, the same migration [[applyCdcBatch]]
-    * has always done, so an upgraded deployment's first batch against
-    * an old state table works instead of throwing UNRESOLVED_COLUMN.
-    * Returns the table's authoritative bucket count. */
-  private def ensureBucketedState(spark: SparkSession, table: String,
-      keyCol: String, nBuckets: Int): Int = {
-    promoteStageIfCrashed(spark, table)
-    if (!spark.catalog.tableExists(table)) nBuckets
-    else if (!spark.table(table).columns.contains("__bucket")) {
-      stagedSwap(spark, table,
-        spark.table(table)
-          .withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets))),
-        partitionCols = Seq("__bucket"),
-        props = Map(BucketProp -> nBuckets.toString))
-      nBuckets
-    } else {
-      val n = bucketCountOf(spark, table).getOrElse(nBuckets)
-      // a bucketed table WITHOUT the dynamic-overwrite option in its
-      // catalog entry (created before the option-carrying layout)
-      // would be silently TRUNCATED by the next insert — migrate it
-      // once through the same staged swap, which recreates the entry
-      // with the option
-      if (!hasDynamicOverwrite(spark, table))
-        stagedSwap(spark, table, spark.table(table),
-          partitionCols = Seq("__bucket"),
-          props = Map(BucketProp -> n.toString))
-      n
-    }
-  }
-
-  /** Whether `table`'s catalog entry carries the
-    * `partitionOverwriteMode=dynamic` datasource option. */
-  private def hasDynamicOverwrite(spark: SparkSession,
-      table: String): Boolean =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .storage.properties
-      .exists { case (k, v) =>
-        k.equalsIgnoreCase("partitionOverwriteMode") &&
-          v.equalsIgnoreCase("dynamic") }
-
-  /** Maintenance action: rewrite a bucket-partitioned merge state
-    * table at a NEW bucket count — [[graft.io.ManifestTable.compact]]'s
-    * sibling for the merge family, so a deployment can grow 8 →
-    * 4096 buckets without a bespoke migration. One staged-rename full
-    * rewrite (crash leaves old or new layout, never half, and
-    * [[promoteStageIfCrashed]] closes the swap window); the new count
-    * rides the swap as a table property, which every subsequent merge
-    * reads as the layout's source of truth — callers' `nBuckets`
-    * defaults stop mattering the moment the property exists. */
-  def rebucket(spark: SparkSession, table: String, keyCol: String,
-      nBuckets: Int): Unit = {
-    promoteStageIfCrashed(spark, table)
-    stagedSwap(spark, table,
-      spark.table(table).drop("__bucket")
-        .withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets))),
-      partitionCols = Seq("__bucket"),
-      props = Map(BucketProp -> nBuckets.toString))
-  }
-
-  /** Seed a CDC base table in the bucket-partitioned layout
-    * [[applyCdcBatch]] merges into: `__bucket` = pmod(hash(key),
-    * nBuckets) as a physical partition column (callers project it
-    * away on read). */
-  def seedCdcTable(spark: SparkSession, table: String, rows: DataFrame,
-      keyCol: String = "okey", nBuckets: Int = MergeBuckets): Unit = {
-    val snap = rows
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
-      .localCheckpoint()
-    snap.write.partitionBy("__bucket")
-      .option("partitionOverwriteMode", "dynamic")
-      .saveAsTable(table)
-    spark.sql(
-      s"ALTER TABLE $table SET TBLPROPERTIES('$BucketProp'='$nBuckets')")
-    graft.core.Lineage.release(snap)
+    graft.io.ManifestTable.read(spark, root)
   }
 
   /** One CDC micro-batch apply (the [[foreachBatchCdc]] batch body,
     * public so replay-idempotence can be driven directly in tests):
-    * merge the batch into `table` with [[graft.io.Cdc.applyChanges]].
-    *
-    * PARTITION-SCOPED like [[mergeUpsertBatch]]: a CDC batch's
-    * touched keys ARE its `okey`s, so on a bucket-partitioned base
-    * ([[seedCdcTable]]) the apply reads only the touched buckets
-    * (partition-pruned) and dynamic-overwrites only them; untouched
-    * partitions' files stay byte-identical (spec-pinned). CDC ops
-    * carry ABSOLUTE values, so a partially committed batch replayed
-    * by the at-least-once engine rewrites committed buckets to
-    * identical rows and completes the rest — per-bucket convergence
-    * without any batch-id stamping.
-    *
-    * A base table in the pre-bucketing flat layout is migrated by the
-    * shared preamble on its first batch: one staged-rename full
-    * rewrite into the partitioned layout (crash-covered by
-    * [[promoteStageIfCrashed]]), partition-scoped from then on. */
-  def applyCdcBatch(spark: SparkSession, table: String, batch: DataFrame,
-      nBuckets: Int = MergeBuckets): Unit = {
-    // must run BEFORE the empty-batch early return — after a crash in
-    // a staged swap's drop->rename window, an empty micro-batch must
-    // still restore the live table rather than leave it missing
-    val n = ensureBucketedState(spark, table, "okey", nBuckets)
-    // ONE pass over the batch source (see mergeUpsertBatch): the
-    // snapshot serves the empty check, the bucket set, and the apply
-    val b = batch.localCheckpoint()
-    if (b.isEmpty) { graft.core.Lineage.release(b); return }
-    val state = spark.table(table)
-    val tb = touchedBuckets(b, "okey", n)
-    val touched = state.filter(col("__bucket").isin(tb: _*))
-    val applied = graft.io.Cdc
-      .applyChanges(touched.drop("__bucket"), b, "okey", "seq", "op")
-      .withColumn("__bucket", pmod(hash(col("okey")), lit(n)))
-      .localCheckpoint()
-    // dynamic overwrite only rewrites partitions PRESENT in the
-    // output — a batch that deletes every key in a bucket emits no
-    // rows for it, so those partitions must be dropped explicitly
-    // (replay-safe: re-applying the deletes re-derives the same
-    // empty set and re-drops)
-    val present = applied.select("__bucket").distinct()
-      .collect().map(_.get(0)).toSet
-    overwriteTouched(spark, table, applied, n)
-    tb.filterNot(present).foreach { bkt =>
-      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (__bucket=$bkt)")
-    }
-    graft.core.Lineage.release(applied)
-    graft.core.Lineage.release(b)
+    * reduce the batch to its latest op per key ([[graft.io.Cdc
+    * .latestOps]]) and MERGE it into the base at `root` with
+    * [[graft.io.Cdc.applyChanges]]' upsert semantics — a 'D' deletes a
+    * present key, any other op updates it or inserts an absent one.
+    * One atomic manifest commit per batch; CDC ops carry ABSOLUTE
+    * values, so a replayed batch rewrites identical rows. */
+  def applyCdcBatch(spark: SparkSession, root: String, batch: DataFrame): Unit = {
+    import graft.io.ManifestDml._
+    val latest = graft.io.Cdc.latestOps(batch, "okey", "seq", "op",
+      Seq("price", "status"))
+    val isDelete = col("__s.op") === "D"
+    graft.io.ManifestDml.mergeInto(spark, root, latest,
+      col("__t.okey") === col("__s.okey"),
+      matched = Seq(MergeDelete(Some(isDelete)),
+        MergeUpdate(None, Seq("price" -> col("__s.price"),
+          "status" -> col("__s.status")))),
+      notMatched = Seq(MergeInsert(Some(!isDelete),
+        Seq("okey", "price", "status").map(c => c -> col(s"__s.$c")))),
+      notMatchedBySource = Nil)
   }
 
   /** Normalize the events `ts` column to TimestampType regardless of the
@@ -841,22 +501,19 @@ object Stream {
 
   /** One CHECKPOINTED catch-up run of the windowed aggregation over a
     * file-source directory: complete-mode state lives in the real
-    * state store under `checkpoint`, the full aggregate lands in
-    * `table` through a foreachBatch staged-rename overwrite (memory
-    * sinks cannot recover; a foreachBatch table sink can). Returns the
-    * rows THIS run ingested — a restarted run reads only files the
-    * checkpoint has not seen, which is the recovery evidence callers
-    * assert. Calling twice with the same checkpoint after adding files
-    * IS the crash/redeploy-and-resume posture of a 100 TB continuous
-    * pipeline. */
+    * state store under `checkpoint`, and each micro-batch's full
+    * aggregate lands in the manifest table at `root` as ONE atomic
+    * [[graft.io.ManifestTable.replace]] commit (memory sinks cannot
+    * recover; a foreachBatch table sink can — a crash before the
+    * commit leaves the previous aggregate readable and the replayed
+    * batch replaces it). Returns the rows THIS run ingested — a
+    * restarted run reads only files the checkpoint has not seen, which
+    * is the recovery evidence callers assert. Calling twice with the
+    * same checkpoint after adding files IS the crash/redeploy-and-resume
+    * posture of a 100 TB continuous pipeline. */
   def runCheckpointed(spark: SparkSession, dir: String, checkpoint: String,
-      table: String, window_ : String = "1 hour",
+      root: String, window_ : String = "1 hour",
       maxFilesPerTrigger: Int = 1): Long = {
-    // Crash recovery BEFORE streaming: if the checkpoint has already
-    // seen every input file, no batch will fire to run the in-batch
-    // preamble — promote a stranded stage eagerly so a bare restart
-    // always restores the live table.
-    promoteStageIfCrashed(spark, table)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(dir).schema
     val stream = normalizeTs(
@@ -867,9 +524,7 @@ object Stream {
       .outputMode("complete")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        promoteStageIfCrashed(spark, table)
-        stagedSwap(spark, table, batch)
-        ()
+        graft.io.ManifestTable.replace(spark, root, batch)
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -1117,17 +772,18 @@ object Stream {
 
   /** Streaming SCD2 (type-2 history) maintenance: purchase events
     * split across two REAL micro-batches build the versioned-history
-    * table incrementally through foreachBatch — each batch touches
-    * ONLY its affected keys ([[mergeScd2Batch]]), every other history
-    * row is carried unchanged. Versioning is a pure function of the
-    * accumulated (key, ts, event_id, value) set, so the final table is
+    * manifest table at `root` incrementally through foreachBatch —
+    * each batch re-versions ONLY its affected keys
+    * ([[mergeScd2Batch]]), every other history row is carried
+    * unchanged. Versioning is a pure function of the accumulated
+    * (key, ts, event_id, value) set, so the final table is
     * split-invariant and the oracle replays it as the single-shot
     * lead() formulation (the q44 shape). */
   def foreachBatchScd2(
       spark: SparkSession,
       events: DataFrame,
       batch2Pred: org.apache.spark.sql.Column,
-      table: String = "graft_stream_scd2"
+      root: String
   ): DataFrame = {
     import spark.implicits._
     // HARNESS BOUNDARY: driver-side collect is fixture-bounded (the
@@ -1141,8 +797,7 @@ object Stream {
       .collect()
     def part(second: Boolean) = rows.filter(_.getBoolean(4) == second)
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
+    graft.io.ManifestTable.destroy(spark, root)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, Long, Double)](
         implicitly[org.apache.spark.sql.Encoder[(Long, Long, Long, Double)]],
@@ -1150,7 +805,7 @@ object Stream {
     val stream = ms.toDF().toDF("user_id", "us", "event_id", "value")
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeScd2Batch(spark, table, batch)
+        mergeScd2Batch(spark, root, batch)
       }
       .start()
     try {
@@ -1159,27 +814,19 @@ object Stream {
       ms.addData(part(second = true))
       q.processAllAvailable()
     } finally q.stop()
-    spark.table(table)
+    graft.io.ManifestTable.read(spark, root)
   }
 
-  /** Root dir of a streaming near-dup corpus: a [[graft.io
-    * .ManifestTable]] under the warehouse, named after the logical
-    * table. The corpus is NOT a managed catalog table — managed-table
-    * swaps forced a full rewrite per batch; the manifest log appends. */
+  /** Root dir of a streaming near-dup corpus: the [[graft.io
+    * .ManifestTable]] `<table>__corpus` under the warehouse. */
   private[graft] def nearDupRoot(spark: SparkSession, table: String): String =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"),
-      table.toLowerCase + "__corpus").toString
+    graft.io.ManifestTable.warehouseRoot(spark, table + "__corpus")
 
   /** Drop a streaming near-dup corpus: the session temp view AND the
     * manifest-table dir (the [[graft.io.Load.dropManaged]] analogue
     * for this table kind). */
   def dropNearDup(spark: SparkSession, table: String): Unit = {
     spark.catalog.dropTempView(table)
-    // legacy managed-table layout (pre-manifest corpora), so a stale
-    // warehouse never shadows a fresh run
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
     graft.io.ManifestTable.destroy(spark, nearDupRoot(spark, table))
     NearDupIndex.destroy(spark, nearDupRoot(spark, table))
   }
@@ -1210,12 +857,12 @@ object Stream {
     * rewrite survives only as the explicit [[graft.io.ManifestTable
     * .compact]] maintenance action.
     *
-    * Crash/replay contract (replaces the staged-rename preamble): the
-    * manifest commit is atomic, so readers see either the pre- or
-    * post-batch corpus, never a half-append. foreachBatch is
-    * at-least-once — a replayed batch finds its docs already in the
-    * corpus, every one self-pairs at J=1 ≥ threshold, the novel set
-    * is empty and nothing commits (idempotence is spec-pinned). A
+    * Crash/replay contract: the manifest commit is atomic, so
+    * readers see either the pre- or post-batch corpus, never a
+    * half-append. foreachBatch is at-least-once — a replayed batch
+    * finds its docs already in the corpus, every one self-pairs at
+    * J=1 ≥ threshold, the novel set is empty and nothing commits
+    * (idempotence is spec-pinned). A
     * crash between segment write and manifest commit leaves an orphan
     * dir no reader sees; compact() collects it.
     *
@@ -1448,56 +1095,48 @@ object Stream {
     * re-version ONLY the batch's affected keys — their existing
     * history rows reduce back to raw (ts, event_id, value) facts
     * (valid_from IS the fact timestamp), union the batch, and one
-    * key-partitioned lead() window rebuilds their intervals.
-    * Re-versioning is idempotent (a pure function of the accumulated
-    * fact set), so a re-delivered batch rewrites identical rows.
-    *
-    * PARTITION-SCOPED like [[mergeUpsertBatch]]: history lives
-    * hash-partitioned on the key; the merge reads only the touched
-    * buckets (partition-pruned — the anti-join that carries same-
-    * bucket unaffected keys verbatim runs over those buckets alone,
-    * never the full history) and dynamic-overwrites only them, so
-    * per-batch IO is O(touched buckets) and untouched partitions'
-    * files stay byte-identical (spec-pinned). Same per-bucket crash
-    * convergence argument as [[mergeUpsertBatch]]: each bucket's rows
-    * are a pure function of its accumulated facts, and the
-    * (user_id, event_id) fact identity already dedups a replay. */
-  def mergeScd2Batch(spark: SparkSession, table: String,
-      batch: DataFrame, nBuckets: Int = MergeBuckets): Unit = {
-    // crash/upgrade preamble + the table's authoritative bucket count
-    val n = ensureBucketedState(spark, table, "user_id", nBuckets)
-    // ONE pass over the batch source (see mergeUpsertBatch): the fact
-    // snapshot serves the empty check, the bucket set, and the merge
+    * key-partitioned lead() window rebuilds their intervals. The
+    * re-versioned rows MERGE into the state at `root` on the fact
+    * identity (user_id, event_id): every state row of an affected key
+    * matches exactly one of them and takes its interval, new facts
+    * insert, and copy-on-write carries every other row of a touched
+    * segment. Re-versioning is idempotent (a pure function of the
+    * accumulated fact set), so a re-delivered batch rewrites
+    * identical rows; each batch is one atomic manifest commit. */
+  def mergeScd2Batch(spark: SparkSession, root: String,
+      batch: DataFrame): Unit = {
+    import graft.io.{ManifestDml, ManifestTable}
+    // ONE pass over the batch source: the fact snapshot serves the
+    // key set, the redelivery anti-join and the re-versioning
     val facts = batch.select(col("user_id"), col("us"), col("event_id"),
       col("value")).localCheckpoint()
-    if (facts.isEmpty) { graft.core.Lineage.release(facts); return }
-    val merged =
-      if (!spark.catalog.tableExists(table)) version(facts)
+    try {
+      if (!ManifestTable.exists(spark, root))
+        ManifestTable.append(spark, root, version(facts), statsCols = Seq("user_id"))
       else {
-        // partition-pruned: only the buckets this batch's keys hash to
-        val state = spark.table(table)
-          .filter(col("__bucket").isin(
-            touchedBuckets(facts, "user_id", n): _*))
-          .drop("__bucket")
         val keys = facts.select("user_id").distinct()
         // (user_id, event_id) is the fact identity: state copies of
         // facts the batch redelivers are dropped (batch wins), so an
         // at-least-once replay rewrites identical rows instead of
         // versioning every fact twice — and a corrected fact (same
         // event_id, new value) supersedes its old version
-        val stateFacts = state.join(keys, Seq("user_id"), "left_semi")
+        val stateFacts = ManifestTable.read(spark, root)
+          .join(keys, Seq("user_id"), "left_semi")
           .select(col("user_id"), col("valid_from").as("us"), col("event_id"),
             col("value"))
           .join(facts.select("user_id", "event_id"),
             Seq("user_id", "event_id"), "left_anti")
-        // same-bucket keys the batch does NOT touch: carried verbatim,
-        // but rewritten — their partition is being overwritten
-        val untouched = state.join(keys, Seq("user_id"), "left_anti")
-        untouched.unionByName(version(stateFacts.unionByName(facts)))
+        val cols = Seq("valid_from", "value", "valid_to", "is_current")
+        ManifestDml.mergeInto(spark, root, version(stateFacts.unionByName(facts)),
+          col("__t.user_id") === col("__s.user_id") &&
+            col("__t.event_id") === col("__s.event_id"),
+          matched = Seq(ManifestDml.MergeUpdate(None,
+            cols.map(c => c -> col(s"__s.$c")))),
+          notMatched = Seq(ManifestDml.MergeInsert(None,
+            ("user_id" +: "event_id" +: cols).map(c => c -> col(s"__s.$c")))),
+          notMatchedBySource = Nil)
       }
-    overwriteTouched(spark, table,
-      merged.withColumn("__bucket", pmod(hash(col("user_id")), lit(n))), n)
-    graft.core.Lineage.release(facts)
+    } finally graft.core.Lineage.release(facts)
   }
 
   /** The SCD2 versioning kernel: one key-partitioned lead() over the

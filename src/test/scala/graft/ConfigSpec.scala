@@ -136,6 +136,29 @@ class ConfigSpec extends AnyFunSuite {
     assert(writerSeen, "the lint must see the writer's own segment write")
   }
 
+  test("streaming state is manifest-only: graft/streaming writes no catalog table") {
+    import scala.jdk.CollectionConverters._
+    // comments are stripped; string literals stay (the SQL verbs are
+    // themselves strings)
+    val comment = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+    val catalogWrite =
+      """saveAsTable|insertInto|RENAME TO|MSCK REPAIR|partitionOverwriteMode""".r
+    val files = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("Stream.scala")), "the lint must see Stream.scala")
+    val offenders = files.flatMap { f =>
+      val code = comment.replaceAllIn(java.nio.file.Files.readString(f),
+        m => if (m.matched.startsWith("/")) m.matched.filter(_ == '\n') else
+          java.util.regex.Matcher.quoteReplacement(m.matched))
+      catalogWrite.findAllMatchIn(code).map(m =>
+        s"$f:${code.take(m.start).count(_ == '\n') + 1} ${m.matched}")
+    }
+    assert(offenders.isEmpty,
+      "streaming state commits through ManifestTable, not catalog tables: " +
+        offenders.mkString(", "))
+  }
+
   test("TestSession carries the shared session settings") {
     assert(spark.sessionState.functionRegistry
       .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")))

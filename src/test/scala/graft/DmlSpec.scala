@@ -818,11 +818,11 @@ class DmlSpec extends AnyFunSuite {
     def batchDf(rows: Seq[(Long, Long, Long, Double)]) =
       rows.toDF("user_id", "us", "event_id", "value")
     // batch 0: bootstrap append
-    Stream.mergeUpsertManifestBatch(spark, r,
+    Stream.mergeUpsertBatch(spark, r,
       batchDf(Seq((1L, 100L, 1L, 1.0), (2L, 100L, 2L, 2.0))), 0L)
     assert(ManifestTable.history(spark, r).map(_.kind) == Seq("append"))
     // batch 1: update user 1 (newer), insert user 3, stale row for 2 ignored
-    Stream.mergeUpsertManifestBatch(spark, r,
+    Stream.mergeUpsertBatch(spark, r,
       batchDf(Seq((1L, 200L, 5L, 9.0), (2L, 50L, 0L, 0.5), (3L, 150L, 7L, 3.0))), 1L)
     val afterB1 = ManifestTable.read(spark, r).orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getDouble(3)))
@@ -835,7 +835,7 @@ class DmlSpec extends AnyFunSuite {
     assert(chg.filter(col("_change_type") === "delete").count() > 0)
     // replay of batch 1 (at-least-once re-delivery): state identical
     val headBefore = ManifestTable.versions(spark, r).max
-    Stream.mergeUpsertManifestBatch(spark, r,
+    Stream.mergeUpsertBatch(spark, r,
       batchDf(Seq((1L, 200L, 5L, 9.0), (2L, 50L, 0L, 0.5), (3L, 150L, 7L, 3.0))), 1L)
     val replayed = ManifestTable.read(spark, r).orderBy("user_id").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getDouble(3)))
@@ -852,6 +852,31 @@ class DmlSpec extends AnyFunSuite {
       assert(rebuilt.orderBy("user_id").collect().toSeq ==
         ManifestTable.read(spark, r).orderBy("user_id").collect().toSeq)
     }
+  }
+
+  test("ALTER commits on the head it checked: a marker pinned to a moved head fails loudly and commits nothing") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val r = root("dml_alter_pinned")
+    ManifestTable.append(spark, r, Seq((1, 10)).toDF("id", "v"))
+    val v = ManifestTable.versions(spark, r).max
+    val head = ManifestTable.manifestSnapshot(spark, r, v)
+    // another writer commits between the ALTER's checks on `head` and
+    // its marker's commit
+    ManifestTable.append(spark, r, Seq((2, 20)).toDF("id", "v"))
+    val marker = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("id", IntegerType), StructField("v", IntegerType),
+        StructField("w", LongType))))
+    intercept[ManifestTable.CommitRaceLost] {
+      ManifestTable.appendReserved(spark, r, marker, tag = Some("alter"),
+        at = Some((v, head)))
+    }
+    assert(ManifestTable.versions(spark, r).max == v + 1)
+    assert(!ManifestTable.read(spark, r).columns.contains("w"))
+    // uncontended, addColumns checks and commits on one head
+    ManifestTable.addColumns(spark, r, Seq("w" -> LongType))
+    assert(ManifestTable.versions(spark, r).max == v + 2)
+    assert(ManifestTable.read(spark, r).orderBy("id").collect().toSeq.map(_.toSeq) ==
+      Seq(Seq(1, 10, null), Seq(2, 20, null)))
   }
 
   test("commit timestamps live IN the manifest: time travel and history survive scrambled file mtimes") {

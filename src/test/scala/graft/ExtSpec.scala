@@ -329,6 +329,20 @@ class ExtSpec extends AnyFunSuite {
   }
   private def round6(x: Double): Double = math.rint(x * 1e6) / 1e6
 
+  /** Parquet files (path -> length) under segment `seg` of manifest
+    * table `root` — the byte-identity probe of the copy-on-write
+    * specs. */
+  private def segFiles(root: String, seg: String): Map[String, Long] = {
+    val dir = new org.apache.hadoop.fs.Path(root, seg)
+    val it = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(dir, true)
+    val b = Map.newBuilder[String, Long]
+    while (it.hasNext) { val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet"))
+        b += st.getPath.toString -> st.getLen }
+    b.result()
+  }
+
   test("er_golden: canonical is the cluster's most frequent name") {
     val rows = SparkEntry.queries("er_golden")(spark, TestSession.sf).collect()
     assert(rows.nonEmpty)
@@ -1288,7 +1302,7 @@ class ExtSpec extends AnyFunSuite {
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"),
         col("event_id"), col("value"), col("second"))
     val out = Stream.foreachBatchUpsert(spark, ev, col("second"),
-        table = "graft_upsert_spec")
+        root = graft.io.ManifestTable.warehouseRoot(spark, "graft_upsert_spec"))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4)))).toMap
     assert(out(1L) == ((2000L, 11L, 2.0, 2L)), out.toString) // cross-batch merge
@@ -1635,90 +1649,49 @@ class ExtSpec extends AnyFunSuite {
 
   test("applyCdcBatch is idempotent under micro-batch replay (absolute-valued ops)") {
     import spark.implicits._
-    val table = "graft_cdc_replay_test"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
-    Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "c"))
-      .toDF("okey", "price", "status").write.saveAsTable(table)
+    import graft.io.ManifestTable
+    val root = ManifestTable.warehouseRoot(spark, "graft_cdc_replay_test")
+    ManifestTable.destroy(spark, root)
+    ManifestTable.append(spark, root,
+      Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "c"))
+        .toDF("okey", "price", "status"), statsCols = Seq("okey"))
+    // a second segment no batch key falls in
+    ManifestTable.append(spark, root,
+      Seq((10L, 100.0, "x")).toDF("okey", "price", "status"),
+      statsCols = Seq("okey"))
+    val far = ManifestTable.segments(spark, root).last
     val batch = Seq(
       (1L, 1L, "U", Some(11.0), Some("a2")),
       (2L, 1L, "D", None: Option[Double], None: Option[String]),
       (4L, 1L, "I", Some(40.0), Some("d")))
       .toDF("okey", "seq", "op", "price", "status")
-    // seeded FLAT (no __bucket): the first apply must migrate the
-    // table to the bucket-partitioned layout and stay correct
-    graft.streaming.Stream.applyCdcBatch(spark, table, batch)
-    assert(spark.table(table).columns.contains("__bucket"),
-      "first apply must migrate the flat seed to the partitioned layout")
-    val once = spark.table(table).orderBy("okey").collect()
+    def state() = ManifestTable.read(spark, root).orderBy("okey").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+    graft.streaming.Stream.applyCdcBatch(spark, root, batch)
+    val once = state()
     // at-least-once re-delivery of the SAME batch must be a no-op —
-    // and must rewrite ONLY the touched buckets (partition-scoped IO)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Map[String, Long] = {
-      val it = fs.listFiles(loc, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += st.getPath.toString -> st.getLen }
-      b.result()
-    }
-    val pre = files()
-    graft.streaming.Stream.applyCdcBatch(spark, table, batch)
-    val twice = spark.table(table).orderBy("okey").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
-    assert(once == Seq((1L, 11.0, "a2"), (3L, 30.0, "c"), (4L, 40.0, "d")),
-      once.toString)
+    // and copy-on-write must leave the segment it does not touch
+    // byte-identical and still committed
+    val pre = segFiles(root, far)
+    graft.streaming.Stream.applyCdcBatch(spark, root, batch)
+    val twice = state()
+    assert(once == Seq((1L, 11.0, "a2"), (3L, 30.0, "c"), (4L, 40.0, "d"),
+      (10L, 100.0, "x")), once.toString)
     assert(twice == once, s"replay changed state: $twice vs $once")
-    val touched = batch.select(pmod(hash(col("okey")), lit(8)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val bucketOf = "__bucket=(\\d+)".r
-    val post = files()
-    pre.foreach { case (p, len) =>
-      bucketOf.findFirstMatchIn(p).map(_.group(1).toInt).foreach { bkt =>
-        if (!touched.contains(bkt))
-          assert(post.get(p).contains(len), s"untouched partition rewritten: $p")
-      }
-    }
-    graft.io.Load.dropManaged(spark, table)
-  }
-
-  test("applyCdcBatch: a batch that deletes a whole bucket drops its partition") {
-    import spark.implicits._
-    val table = "graft_cdc_emptybucket_test"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
-    val base = Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "c"))
-      .toDF("okey", "price", "status")
-    graft.streaming.Stream.seedCdcTable(spark, table, base)
-    // delete EVERY key: every touched bucket ends empty — dynamic
-    // overwrite alone would leave the old files (no output rows name
-    // those partitions); the explicit partition drop must kick in
-    val wipe = Seq(
-      (1L, 1L, "D", None: Option[Double], None: Option[String]),
-      (2L, 1L, "D", None: Option[Double], None: Option[String]),
-      (3L, 1L, "D", None: Option[Double], None: Option[String]))
-      .toDF("okey", "seq", "op", "price", "status")
-    graft.streaming.Stream.applyCdcBatch(spark, table, wipe)
-    assert(spark.table(table).count() == 0,
-      "deleted rows must not survive in emptied bucket partitions")
-    // replay of the wipe converges (re-drops the already-empty set)
-    graft.streaming.Stream.applyCdcBatch(spark, table, wipe)
-    assert(spark.table(table).count() == 0)
-    graft.io.Load.dropManaged(spark, table)
+    assert(ManifestTable.segments(spark, root).contains(far),
+      "the untouched segment must stay committed")
+    assert(pre.nonEmpty && segFiles(root, far) == pre, s"untouched segment rewritten: $far")
+    ManifestTable.destroy(spark, root)
   }
 
   test("streaming CDC: kill + restart mid-feed (with redelivery) equals the batch apply") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val table = "graft_cdc_restart_test"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
+    val root = graft.io.ManifestTable.warehouseRoot(spark, "graft_cdc_restart_test")
+    graft.io.ManifestTable.destroy(spark, root)
     val base = Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "c"))
       .toDF("okey", "price", "status")
-    base.write.saveAsTable(table)
+    graft.io.ManifestTable.append(spark, root, base)
     val part1: Seq[(Long, Long, String, Option[Double], Option[String])] = Seq(
       (1L, 1L, "U", Some(11.0), Some("a2")),
       (2L, 1L, "D", None, None))
@@ -1733,7 +1706,7 @@ class ExtSpec extends AnyFunSuite {
       val q = ms.toDF().toDF("okey", "seq", "op", "price", "status")
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.streaming.Stream.applyCdcBatch(spark, table, batch)
+          graft.streaming.Stream.applyCdcBatch(spark, root, batch)
         }
         .start()
       try {
@@ -1745,7 +1718,7 @@ class ExtSpec extends AnyFunSuite {
     // restarted query: at-least-once source re-delivers part 1 before
     // part 2 (the unchecked-offset crash scenario)
     runQuery(part1, part2)
-    val got = spark.table(table).orderBy("okey").collect()
+    val got = graft.io.ManifestTable.read(spark, root).orderBy("okey").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
     // reference: one batch MERGE of the whole feed over the base
     val want = graft.io.Cdc.applyChanges(base,
@@ -1755,27 +1728,7 @@ class ExtSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
     assert(got == want, s"got $got want $want")
     assert(got == Seq((1L, 12.0, "a3"), (3L, 30.0, "c"), (4L, 40.0, "d")), got.toString)
-    graft.io.Load.dropManaged(spark, table)
-  }
-
-  test("applyCdcBatch: empty micro-batch still recovers a stranded stage table") {
-    import spark.implicits._
-    val table = "graft_cdc_strand_test"
-    val stage = table + "__stage"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, stage)
-    // simulate a crash inside the drop->rename window: the applied
-    // state sits in the stage table and the live table is gone
-    Seq((1L, 10.0, "a")).toDF("okey", "price", "status")
-      .write.saveAsTable(stage)
-    val empty = Seq.empty[(Long, Long, String, Option[Double], Option[String])]
-      .toDF("okey", "seq", "op", "price", "status")
-    graft.streaming.Stream.applyCdcBatch(spark, table, empty)
-    val got = spark.table(table).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
-    assert(got == Seq((1L, 10.0, "a")), got.toString)
-    assert(!spark.catalog.tableExists(stage), "stage must be promoted, not copied")
-    graft.io.Load.dropManaged(spark, table)
+    graft.io.ManifestTable.destroy(spark, root)
   }
 
   test("erPairs: within-block matches found, oversized blocks dropped by maxBlock") {
@@ -1941,205 +1894,48 @@ class ExtSpec extends AnyFunSuite {
   test("mergeUpsertBatch: replay-idempotent, partition-scoped IO, partial-commit convergence") {
     import spark.implicits._
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val table = "graft_upsert_replay_spec"
-    graft.io.Load.dropManaged(spark, table)
-    val b1 = Seq((1L, 1000L, 10L, 1.0), (2L, 1000L, 20L, 3.0))
+    import graft.io.ManifestTable
+    val root = ManifestTable.warehouseRoot(spark, "graft_upsert_replay_spec")
+    ManifestTable.destroy(spark, root)
+    val b0 = Seq((1L, 1000L, 10L, 1.0), (2L, 1000L, 20L, 3.0))
       .toDF("user_id", "us", "event_id", "value")
-    val b2 = Seq((1L, 2000L, 11L, 2.0), (3L, 5000L, 30L, 5.0))
+    val b1 = Seq((3L, 1000L, 30L, 4.0)).toDF("user_id", "us", "event_id", "value")
+    val b2 = Seq((1L, 2000L, 11L, 2.0), (4L, 5000L, 40L, 5.0))
       .toDF("user_id", "us", "event_id", "value")
-    def snapshot() = spark.table(table).collect()
+    def snapshot() = ManifestTable.read(spark, root).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getLong(5))).sortBy(_._1).toSeq
-    Stream.mergeUpsertBatch(spark, table, b1, 0L)
-    val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Map[String, Long] = {
-      val it = fs.listFiles(loc, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += st.getPath.toString -> st.getLen }
-      b.result()
-    }
-    val preB2 = files()
-    val backup = new Path(loc.getParent, table + "__backup")
-    fs.delete(backup, true)
-    FileUtil.copy(fs, loc, fs, backup, false, spark.sparkContext.hadoopConfiguration)
-    Stream.mergeUpsertBatch(spark, table, b2, 1L)
+    Stream.mergeUpsertBatch(spark, root, b0, 0L)
+    Stream.mergeUpsertBatch(spark, root, b1, 1L) // insert-only: own segment
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val preB2 = snapshot()
+    val v = ManifestTable.versions(spark, root).max
+    val segs = ManifestTable.segments(spark, root)
+    val far = segs.last // key 3's segment: no b2 key falls in it
+    val farFiles = segFiles(root, far)
+    // crash after the batch's segments are written, before its
+    // manifest commit: a segment dir of version v + 1 that no manifest
+    // names (here a copy of a live segment) — readers must not see it
+    val orphan = s"seg-${v + 1}-orphan"
+    FileUtil.copy(fs, new Path(root, segs.head), fs, new Path(root, orphan),
+      false, spark.sparkContext.hadoopConfiguration)
+    assert(snapshot() == preB2, "an uncommitted segment must stay invisible")
+    // the re-delivered batch converges to the fault-free state
+    Stream.mergeUpsertBatch(spark, root, b2, 2L)
     val applied = snapshot()
-    assert(applied.map(t => t._1 -> t._5).toMap == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
-    // partition-scoped IO: a merge must leave every bucket partition it
-    // does not touch byte-identical — the O(touched)-not-O(state) claim
-    val touched = b2.select(pmod(hash(col("user_id")), lit(8)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val bucketOf = "__bucket=(\\d+)".r
-    val postB2 = files()
-    preB2.foreach { case (p, len) =>
-      bucketOf.findFirstMatchIn(p).map(_.group(1).toInt).foreach { bkt =>
-        if (!touched.contains(bkt))
-          assert(postB2.get(p).contains(len), s"untouched partition rewritten: $p")
-      }
-    }
-    // at-least-once recovery re-delivers the last batch with the SAME id:
-    // the batch-id stamp must make it a no-op (no double-counted updates)
-    Stream.mergeUpsertBatch(spark, table, b2, 1L)
+    assert(applied.map(t => t._1 -> (t._2, t._5, t._6)).toMap == Map(
+      1L -> (2000L, 2L, 2L), 2L -> (1000L, 1L, 0L), 3L -> (1000L, 1L, 1L),
+      4L -> (5000L, 1L, 2L)), applied.toString)
+    // copy-on-write is segment-scoped: a segment holding no batch key
+    // stays committed and byte-identical
+    assert(ManifestTable.segments(spark, root).contains(far))
+    assert(farFiles.nonEmpty && segFiles(root, far) == farFiles,
+      s"untouched segment rewritten: $far")
+    // at-least-once recovery re-delivers the last batch with the SAME
+    // id: the batch-id stamp makes it a no-op (no double-counted updates)
+    Stream.mergeUpsertBatch(spark, root, b2, 2L)
     assert(snapshot() == applied, s"replay changed state: ${snapshot()} vs $applied")
-    // crash MID-COMMIT: dynamic overwrite lands partition-by-partition,
-    // so simulate dying with one touched bucket still on its pre-batch
-    // content (restored from the backup) while the rest committed — the
-    // re-delivered batch must CONVERGE to the fully-applied state
-    val revert = touched.head
-    val rdir = new Path(loc, s"__bucket=$revert")
-    fs.delete(rdir, true)
-    val bdir = new Path(backup, s"__bucket=$revert")
-    if (fs.exists(bdir))
-      FileUtil.copy(fs, bdir, fs, rdir, false, spark.sparkContext.hadoopConfiguration)
-    spark.catalog.refreshTable(table)
-    Stream.mergeUpsertBatch(spark, table, b2, 1L)
-    assert(snapshot() == applied,
-      s"partial-commit replay must converge: ${snapshot()} vs $applied")
-    fs.delete(backup, true)
-    graft.io.Load.dropManaged(spark, table)
-  }
-
-  test("rebucket: state survives an 8->32 bucket-count change, later merges prune by the new count") {
-    import spark.implicits._
-    val table = "graft_rebucket_spec"
-    val twin = "graft_rebucket_twin"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, twin)
-    val b1 = (1L to 60L).map(k => (k, 1000L + k, k, k * 1.0))
-      .toDF("user_id", "us", "event_id", "value")
-    val b2 = (41L to 100L).map(k => (k, 9000L + k, 100 + k, k * 2.0))
-      .toDF("user_id", "us", "event_id", "value")
-    Stream.mergeUpsertBatch(spark, table, b1, 0L)
-    Stream.rebucket(spark, table, "user_id", 32)
-    assert(Stream.bucketCountOf(spark, table).contains(32),
-      "rebucket must stamp the new count as the layout's source of truth")
-    // the caller still passes the DEFAULT bucket count — the table
-    // property must win, or pruning would read mod-8 bucket ids out of
-    // a mod-32 layout and silently lose state
-    Stream.mergeUpsertBatch(spark, table, b2, 1L)
-    Stream.mergeUpsertBatch(spark, twin, b1, 0L)
-    Stream.mergeUpsertBatch(spark, twin, b2, 1L)
-    def snap(t: String) = spark.table(t).drop("__bucket").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
-        r.getLong(4))).sortBy(_._1).toSeq
-    assert(snap(table) == snap(twin),
-      "rebucketed merge sequence must equal the straight one")
-    // physical layout really is 32-way now: every key sits in its
-    // mod-32 bucket partition
-    val misplaced = spark.table(table)
-      .filter(col("__bucket") =!= pmod(hash(col("user_id")), lit(32)))
-      .count()
-    assert(misplaced == 0, s"$misplaced rows in the wrong mod-32 bucket")
-    // untouched-partition byte-identity still holds at the new count
-    import org.apache.hadoop.fs.Path
-    val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Map[String, Long] = {
-      val it = fs.listFiles(loc, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += st.getPath.toString -> st.getLen }
-      b.result()
-    }
-    val before = files()
-    val b3 = Seq((7L, 99999L, 777L, 7.0)).toDF("user_id", "us", "event_id", "value")
-    val touched = b3.select(pmod(hash(col("user_id")), lit(32)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    Stream.mergeUpsertBatch(spark, table, b3, 2L)
-    val after = files()
-    val bucketOf = "__bucket=(\\d+)".r
-    before.foreach { case (p, len) =>
-      bucketOf.findFirstMatchIn(p).map(_.group(1).toInt).foreach { bkt =>
-        if (!touched.contains(bkt))
-          assert(after.get(p).contains(len),
-            s"untouched mod-32 partition rewritten: $p")
-      }
-    }
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, twin)
-  }
-
-  test("merge partition pruning: a 1-bucket batch reads and rewrites ~1/8 of the state") {
-    import spark.implicits._
-    // the byte-identity specs pin that untouched partitions are not
-    // REWRITTEN; this pins the positive half — a batch confined to one
-    // bucket also doesn't READ the other seven (partition-pruned scan)
-    val table = "graft_upsert_prune_spec"
-    graft.io.Load.dropManaged(spark, table)
-    val seed = (1L to 400L).map(k => (k, 1000L, k, 1.0))
-      .toDF("user_id", "us", "event_id", "value")
-    Stream.mergeUpsertBatch(spark, table, seed, 0L)
-    // 16 keys that all hash to ONE bucket vs 16 spread across all 8
-    val byBucket = (1L to 400L).toDF("user_id")
-      .withColumn("b", pmod(hash(col("user_id")), lit(8)))
-      .collect().map(r => r.getLong(0) -> r.getInt(1))
-    val oneKeys = byBucket.filter(_._2 == byBucket.head._2).take(16).map(_._1)
-    val allKeys = byBucket.groupBy(_._2).values.flatMap(_.take(2)).map(_._1).take(16)
-    assert(allKeys.map(k => byBucket.toMap.apply(k)).toSet.size == 8)
-    class Agg extends org.apache.spark.scheduler.SparkListener {
-      @volatile var read = 0L
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        Option(s.stageInfo.taskMetrics).foreach(
-          m => read += m.inputMetrics.bytesRead)
-    }
-    def ingest(keys: Iterable[Long], id: Long): Long = {
-      val agg = new Agg
-      spark.sparkContext.addSparkListener(agg)
-      try {
-        Stream.mergeUpsertBatch(spark, table,
-          keys.map(k => (k, 2000L + id, k, 2.0)).toSeq
-            .toDF("user_id", "us", "event_id", "value"), id)
-        org.apache.spark.GraftBenchInternals
-          .drainListenerBus(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(agg)
-      agg.read
-    }
-    val readAll = ingest(allKeys, 1L)
-    val readOne = ingest(oneKeys, 2L)
-    info(f"16-key merge input bytes: $readAll%d (8 buckets) vs $readOne%d (1 bucket)")
-    // 1 of 8 partitions ≈ 1/8 of the state scan; 1/3 leaves room for
-    // per-file footer overhead and the batch's own input
-    assert(readOne * 3 <= readAll,
-      s"1-bucket merge read $readOne B vs 8-bucket $readAll B — pruning not engaged")
-    graft.io.Load.dropManaged(spark, table)
-  }
-
-  test("legacy upsert layouts migrate on first merge instead of losing state") {
-    import spark.implicits._
-    val table = "graft_upsert_legacy_spec"
-    graft.io.Load.dropManaged(spark, table)
-    // 1) pre-bucketing FLAT layout: state written without __bucket —
-    // the next merge must migrate it, not throw UNRESOLVED_COLUMN or
-    // silently re-seed from the batch alone
-    Seq((1L, 1000L, 10L, 1.0, 1L, 0L), (2L, 1000L, 20L, 3.0, 1L, 0L))
-      .toDF("user_id", "us", "event_id", "value", "n_updates", "__batch_id")
-      .write.saveAsTable(table)
-    Stream.mergeUpsertBatch(spark, table,
-      Seq((1L, 2000L, 11L, 2.0)).toDF("user_id", "us", "event_id", "value"), 1L)
-    def state() = spark.table(table).drop("__bucket").collect()
-      .map(r => r.getLong(0) -> (r.getDouble(3), r.getLong(4)))
-      .sortBy(_._1).toSeq
-    assert(state() == Seq(1L -> (2.0, 2L), 2L -> (3.0, 1L)),
-      s"flat-layout migration lost state: ${state()}")
-    assert(spark.table(table).columns.contains("__bucket"),
-      "flat layout must be migrated to buckets")
-    graft.io.Load.dropManaged(spark, table)
-    // 2) bucketed but WITHOUT the dynamic-overwrite catalog option
-    // (the r11 layout): a merge must not static-truncate the table
-    Seq((1L, 1000L, 10L, 1.0, 1L, 0L), (2L, 1000L, 20L, 3.0, 1L, 0L))
-      .toDF("user_id", "us", "event_id", "value", "n_updates", "__batch_id")
-      .withColumn("__bucket", pmod(hash(col("user_id")), lit(8)))
-      .write.partitionBy("__bucket").saveAsTable(table)
-    Stream.mergeUpsertBatch(spark, table,
-      Seq((1L, 2000L, 11L, 2.0)).toDF("user_id", "us", "event_id", "value"), 1L)
-    assert(state() == Seq(1L -> (2.0, 2L), 2L -> (3.0, 1L)),
-      s"option-less layout lost state on merge: ${state()}")
-    graft.io.Load.dropManaged(spark, table)
+    ManifestTable.destroy(spark, root)
   }
 
   test("pqTrainCodebooks lowers quantization error vs the first-k seed") {
@@ -2783,48 +2579,33 @@ class ExtSpec extends AnyFunSuite {
 
   test("SCD2 batch merge is replay-idempotent") {
     import spark.implicits._
-    val table = "graft_scd2_replay_test"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
+    import graft.io.ManifestTable
+    val root = ManifestTable.warehouseRoot(spark, "graft_scd2_replay_test")
+    ManifestTable.destroy(spark, root)
+    def state() = ManifestTable.read(spark, root).collect().map(_.toString).sorted.toSeq
     val b1 = Seq((1L, 100L, 10L, 1.0), (1L, 200L, 11L, 2.0), (2L, 150L, 12L, 3.0))
       .toDF("user_id", "us", "event_id", "value")
-    Stream.mergeScd2Batch(spark, table, b1)
-    val once = spark.table(table).collect().map(_.toString).sorted.toSeq
-    Stream.mergeScd2Batch(spark, table, b1) // at-least-once redelivery
-    val twice = spark.table(table).collect().map(_.toString).sorted.toSeq
-    assert(once == twice, "redelivered batch must rewrite identical rows")
-    // an incremental batch versions only its key — and REWRITES only
-    // its key's bucket partition: every other bucket's files stay
-    // byte-identical (the partition-scoped IO contract)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Map[String, Long] = {
-      val it = fs.listFiles(loc, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          b += st.getPath.toString -> st.getLen }
-      b.result()
-    }
-    val preB2 = files()
+    Stream.mergeScd2Batch(spark, root, b1)
+    val once = state()
+    Stream.mergeScd2Batch(spark, root, b1) // at-least-once redelivery
+    assert(once == state(), "redelivered batch must rewrite identical rows")
+    // a new key lands in its own segment; an incremental batch for key 1
+    // versions only its key and leaves that segment byte-identical
+    Stream.mergeScd2Batch(spark, root,
+      Seq((3L, 120L, 14L, 5.0)).toDF("user_id", "us", "event_id", "value"))
+    val far = ManifestTable.segments(spark, root).last
+    val farFiles = segFiles(root, far)
     val b2 = Seq((1L, 300L, 13L, 4.0)).toDF("user_id", "us", "event_id", "value")
-    Stream.mergeScd2Batch(spark, table, b2)
-    val touched = b2.select(pmod(hash(col("user_id")), lit(8)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val bucketOf = "__bucket=(\\d+)".r
-    val postB2 = files()
-    preB2.foreach { case (p, len) =>
-      bucketOf.findFirstMatchIn(p).map(_.group(1).toInt).foreach { bkt =>
-        if (!touched.contains(bkt))
-          assert(postB2.get(p).contains(len), s"untouched partition rewritten: $p")
-      }
-    }
-    val after = spark.table(table).collect()
+    Stream.mergeScd2Batch(spark, root, b2)
+    assert(ManifestTable.segments(spark, root).contains(far))
+    assert(farFiles.nonEmpty && segFiles(root, far) == farFiles,
+      s"untouched segment rewritten: $far")
+    val after = ManifestTable.read(spark, root).collect()
     assert(after.count(r => r.getLong(0) == 1L) == 3, "user 1 gains a version")
     assert(after.filter(r => r.getLong(0) == 1L && r.getLong(2) == 11L)
       .forall(r => r.getLong(4) == 300L), "previous open row closes at the new ts")
-    graft.io.Load.dropManaged(spark, table)
+    assert(after.count(_.getBoolean(5)) == 3, "one open row per key")
+    ManifestTable.destroy(spark, root)
   }
 
   test("PCM frames match a driver-side md5 sample decode") {
@@ -2871,29 +2652,26 @@ class ExtSpec extends AnyFunSuite {
   test("checkpoint restart resumes state: phase 2 ingests only new files") {
     val base = java.nio.file.Files.createTempDirectory("restart_spec").toString
     val dataDir = s"$base/data"; val cp = s"$base/cp"
-    val table = "graft_restart_spec"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
+    val root = s"$base/state"
     val ev = Stream.normalizeTs(
       spark.read.parquet(s"${TestSession.sf}/events.parquet"))
     val total = ev.count()
     ev.filter(col("event_id") % 2 === 0).repartition(2).write.parquet(dataDir)
-    val r1 = Stream.runCheckpointed(spark, dataDir, cp, table)
+    val r1 = Stream.runCheckpointed(spark, dataDir, cp, root)
     ev.filter(col("event_id") % 2 === 1).repartition(2)
       .write.mode("append").parquet(dataDir)
-    val r2 = Stream.runCheckpointed(spark, dataDir, cp, table)
+    val r2 = Stream.runCheckpointed(spark, dataDir, cp, root)
     assert(r1 > 0 && r2 > 0 && r1 + r2 == total,
       s"phase ingests $r1 + $r2 must cover exactly the $total events")
     assert(r2 < total, "phase 2 must NOT rescan phase-1 files")
     // recovered state + new files == batch aggregate over everything
-    val got = spark.table(table)
+    val got = graft.io.ManifestTable.read(spark, root)
       .select("window_start", "event_type", "n_events", "sum_value")
       .collect().map(_.toString).sorted.toSeq
     val want = Stream.windowedAgg(ev)
       .select("window_start", "event_type", "n_events", "sum_value")
       .collect().map(_.toString).sorted.toSeq
     assert(got == want, "restarted aggregate must equal the batch aggregate")
-    graft.io.Load.dropManaged(spark, table)
   }
 
   test("mutual information is non-negative and bounded by both entropies") {
@@ -3023,30 +2801,6 @@ class ExtSpec extends AnyFunSuite {
       .collect()(0)
     val q = mod.getDouble(mod.length - 1)
     assert(q >= -0.5 && q <= 1.0, s"modularity $q outside [-0.5, 1]")
-  }
-
-  test("runCheckpointed heals a crash between table drop and stage rename") {
-    val base = java.nio.file.Files.createTempDirectory("graft_crash").toString
-    val dataDir = s"$base/data"; val cp = s"$base/cp"
-    val table = "graft_crash_spec"
-    graft.io.Load.dropManaged(spark, table)
-    graft.io.Load.dropManaged(spark, table + "__stage")
-    val ev = Stream.normalizeTs(
-      spark.read.parquet(s"${TestSession.sf}/events.parquet"))
-    ev.limit(2000).repartition(2).write.parquet(dataDir)
-    assert(Stream.runCheckpointed(spark, dataDir, cp, table) > 0)
-    val want = spark.table(table).collect().map(_.toString).sorted.toSeq
-    // simulate the crash window: live table dropped, stage left behind
-    spark.sql(s"ALTER TABLE $table RENAME TO ${table}__stage")
-    assert(!spark.catalog.tableExists(table))
-    // bare restart with NO new files: zero batches fire, yet the
-    // eager preamble must still restore the live table from the stage
-    val r2 = Stream.runCheckpointed(spark, dataDir, cp, table)
-    assert(r2 == 0, s"restart must not re-ingest, got $r2 rows")
-    assert(spark.catalog.tableExists(table), "live table not restored")
-    val got = spark.table(table).collect().map(_.toString).sorted.toSeq
-    assert(got == want, "restored table must carry the pre-crash state")
-    graft.io.Load.dropManaged(spark, table)
   }
 
   test("streaming near-dup: accepted corpus is pairwise clean, rejects are real dups") {
