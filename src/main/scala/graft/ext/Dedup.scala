@@ -277,7 +277,7 @@ object Dedup {
           F.col("a.id") < F.col("b.id"))
       .select(F.col("a.id").as("id_a"), F.col("b.id").as("id_b"))
       .distinct()
-    verifyJaccard(cands, hashed, threshold)
+    verifyJaccard(cands, hashed, hashed, threshold)
   }
 
   /** Batch-vs-corpus near-dup pairs where BOTH sides are stored
@@ -304,11 +304,13 @@ object Dedup {
     * corpus's append-only write side. The batch's banded rows (bands
     * rows of ~20 bytes per batch doc) BROADCAST, so the corpus index
     * streams through a broadcast hash join with NO shuffle of corpus
-    * data at all; at scale the caller additionally partition-prunes
-    * the index to the batch's colliding (band, bucket) hash partitions
-    * ([[graft.streaming.NearDupIndex.read]]), making the scan — not
-    * just the shuffle — O(colliding buckets). Returns distinct
-    * (id_a = batch id, id_b = corpus id). */
+    * data at all; at scale the caller additionally prunes the index
+    * manifest's partition dirs to the batch's colliding (band, bucket)
+    * hash partitions ([[graft.streaming.NearDupIndex.read]]), making
+    * the scan — not just the shuffle — O(colliding buckets). Returns
+    * distinct (id_a = batch id, id_b = index id). The index's ids are
+    * a superset of the corpus's, so an `id_b` may name a doc the
+    * corpus never committed; [[verifyIncrement]] drops those pairs. */
   def incrementCandidatesBanded(batchBanded: DataFrame,
       corpusBanded: DataFrame): DataFrame =
     broadcast(batchBanded.select("id", "band", "bucket")).as("a")
@@ -326,19 +328,27 @@ object Dedup {
     * arrays instead of the whole corpus per ingest (the round-11
     * read-side scale fix). Prune-then-verify returns exactly what
     * verify-over-everything returned: a corpus row without a candidate
-    * pair cannot appear in the verify output. */
+    * pair cannot appear in the verify output.
+    *
+    * Two-sided: `id_a` is looked up in `batchHashed` only and `id_b`
+    * in the pruned corpus only. A candidate whose corpus id the corpus
+    * does not hold — a band row the index committed ahead of a corpus
+    * append that never landed ([[graft.streaming.NearDupIndex]]) —
+    * drops out; looked up in a batch ∪ corpus union, a replayed doc
+    * would instead find its own batch row and reject itself at J = 1. */
   def verifyIncrement(cands: DataFrame, corpusHashed: DataFrame,
       batchHashed: DataFrame, threshold: Double): DataFrame = {
     val candIds = cands.select(col("id_b").as("id")).distinct()
     val pruned = corpusHashed.join(broadcast(candIds), Seq("id"), "left_semi")
-    verifyJaccard(cands, batchHashed.union(pruned), threshold)
+    verifyJaccard(cands, batchHashed, pruned, threshold)
       .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
         col("jaccard"))
   }
 
   /** Verify stage shared by the minhash and prefix-filter pipelines:
-    * join candidate pairs back to the per-doc hashed-shingle arrays and
-    * keep pairs with exact Jaccard ≥ threshold.
+    * join candidate pairs back to the per-doc hashed-shingle arrays —
+    * `id_a` to `hashedA`, `id_b` to `hashedB` (the same relation for a
+    * within-set pass) — and keep pairs with exact Jaccard ≥ threshold.
     *
     * 100 TB shape: `hashed` is corpus-sized, so it must NEVER be
     * broadcast — both joins are explicit shuffle merge joins on id
@@ -354,11 +364,12 @@ object Dedup {
     * remaining elements cannot reach that bound (returns -1 → filtered;
     * the usual 1e-9 ceil slack only ever loosens the bound, and the
     * exact `jaccard >= threshold` filter still runs on survivors). */
-  private def verifyJaccard(cands: DataFrame, hashed: DataFrame, threshold: Double): DataFrame =
+  private def verifyJaccard(cands: DataFrame, hashedA: DataFrame,
+      hashedB: DataFrame, threshold: Double): DataFrame =
     cands
-      .join(hashed.select(col("id").as("id_a"), col("sz").as("sz_a"), col("hs").as("hs_a"))
+      .join(hashedA.select(col("id").as("id_a"), col("sz").as("sz_a"), col("hs").as("hs_a"))
         .hint("shuffle_merge"), "id_a")
-      .join(hashed.select(col("id").as("id_b"), col("sz").as("sz_b"), col("hs").as("hs_b"))
+      .join(hashedB.select(col("id").as("id_b"), col("sz").as("sz_b"), col("hs").as("hs_b"))
         .hint("shuffle_merge"), "id_b")
       .withColumn("inter", graft.functions.fx.sortedIntersectAtLeast(
         col("hs_a"), col("hs_b"),
@@ -384,7 +395,7 @@ object Dedup {
         charShingles(col(textCol), shingle).as("sh"))
       .select(col("id"), size(col("sh")).as("sz"),
         array_sort(array_distinct(transform(col("sh"), s => xxhash64(s)))).as("hs"))
-    verifyJaccard(cands, hashed, threshold)
+    verifyJaccard(cands, hashed, hashed, threshold)
   }
 
   /** Exact CONTAINMENT-similarity pairs: |A∩B| / min(|A|, |B|) ≥
@@ -458,9 +469,9 @@ object Dedup {
     *
     * Scale shape: both banded relations shuffle on (band, bucket) —
     * bands rows of 16 bytes per doc; the verify stage is the pinned
-    * shuffle-merge [[verifyJaccard]] over the UNION of the two hashed
-    * relations (ids disjoint by contract, so the union is a plain
-    * id-keyed lookup). No broadcast, no cartesian. */
+    * shuffle-merge [[verifyJaccard]], `id_a` looked up in the batch's
+    * hashed rows and `id_b` in the corpus's. No broadcast, no
+    * cartesian. */
   def minhashIncrementPairs(
       corpus: DataFrame,
       batch: DataFrame,
@@ -490,7 +501,7 @@ object Dedup {
       df.select(col(idCol).as("id"), charShingles(col(textCol), shingle).as("sh"))
         .select(col("id"), size(col("sh")).as("sz"),
           array_sort(array_distinct(transform(col("sh"), s => xxhash64(s)))).as("hs"))
-    verifyJaccard(cands, hashed(batch).union(hashed(corpus)), threshold)
+    verifyJaccard(cands, hashed(batch), hashed(corpus), threshold)
       .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"), col("jaccard"))
   }
 
@@ -641,7 +652,7 @@ object Dedup {
         sets.select(col("id"), explode(col("sh")).as("s")), lshK), lshK, lshBands)
       val hashed = sets.select(col("id"), col("sz"),
         array_sort(array_distinct(transform(col("sh"), s => xxhash64(s)))).as("hs"))
-      return verifyJaccard(cands, hashed, threshold)
+      return verifyJaccard(cands, hashed, hashed, threshold)
     }
     val tok = sets.select(col("id"), col("sz"), explode(col("sh")).as("tok"))
     val dfreq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -681,7 +692,7 @@ object Dedup {
     // fraction of the per-pair cost
     val hashed = sets.select(col("id"), col("sz"),
       array_sort(array_distinct(transform(col("sh"), s => xxhash64(s)))).as("hs"))
-    verifyJaccard(cands, hashed, threshold)
+    verifyJaccard(cands, hashed, hashed, threshold)
   }
 
   // ---------------------------------------------- 5. embedding cosine dedup

@@ -66,7 +66,7 @@ case class GraftMaintenanceCommand(verb: String, root: String,
       case "neardup_pack" =>
         val folded = graft.streaming.NearDupIndex.pack(session, root)
         Seq(Row("neardup_pack", folded.toLong,
-          s"folded $folded per-ingest band root(s) into one packed root"))
+          s"rewrote $folded near-dup index segment(s) as one"))
       case "ann_optimize" =>
         val folded = graft.streaming.AnnIndex.optimize(session, root, arg.get)
         Seq(Row("ann_optimize", folded.toLong,
@@ -168,7 +168,7 @@ object GraftMaintenance {
     fn2("graft_manifest_set_retain", "set_retain",
       "graft_manifest_set_retain(root, n) - rewrites keep segments named by the newest n versions"),
     fn1("graft_neardup_pack", "neardup_pack",
-      "graft_neardup_pack(root) - fold per-ingest near-dup band roots into one packed root"),
+      "graft_neardup_pack(root) - rewrite the near-dup band index's segments as one"),
     fn2("graft_ann_optimize", "ann_optimize",
       "graft_ann_optimize(root, smallBytes) - bin-pack small ANN index segments"),
     ("graft_manifest_history",

@@ -831,13 +831,6 @@ object Stream {
     NearDupIndex.destroy(spark, nearDupRoot(spark, table))
   }
 
-  /** Index-side maintenance for a near-dup table: fold every
-    * per-segment band dir into one packed root ([[NearDupIndex
-    * .pack]]), so the next ingest's corpus check opens 1 index root
-    * instead of one per prior ingest. Corpus data untouched. */
-  def packNearDupIndex(spark: SparkSession, table: String): Int =
-    NearDupIndex.pack(spark, nearDupRoot(spark, table))
-
   /** Streaming NEAR-dup deduplication: documents arrive in micro-
     * batches; each batch is (1) near-dup'd within itself (MinHash-LSH
     * banding + exact shingle-Jaccard verify ≥ `threshold`, drop any
@@ -859,12 +852,16 @@ object Stream {
     *
     * Crash/replay contract: the manifest commit is atomic, so
     * readers see either the pre- or post-batch corpus, never a
-    * half-append. foreachBatch is at-least-once — a replayed batch
-    * finds its docs already in the corpus, every one self-pairs at
-    * J=1 ≥ threshold, the novel set is empty and nothing commits
-    * (idempotence is spec-pinned). A
-    * crash between segment write and manifest commit leaves an orphan
-    * dir no reader sees; compact() collects it.
+    * half-append. The novel rows' bands are appended to the index
+    * BEFORE the rows are appended to the corpus, so the index's ids
+    * stay a superset of the corpus's ([[NearDupIndex]]); a crash in
+    * between leaves band rows the verify ignores, because it looks
+    * candidate ids up in the corpus alone. foreachBatch is
+    * at-least-once — a replayed batch finds its docs already in the
+    * corpus, every one self-pairs at J=1 ≥ threshold, the novel set is
+    * empty and nothing commits (idempotence is spec-pinned). A crash
+    * between segment write and manifest commit leaves an orphan dir no
+    * reader sees; compact() collects it.
     *
     * `spark.table(table)` keeps working: the merged corpus is
     * registered as a session temp view over the manifest read.
@@ -932,13 +929,17 @@ object Stream {
     // (NearDupIndex — partition-pruned to the batch's own pb collision
     // partitions; the batch's banded rows broadcast, so no corpus data
     // shuffles), and the verify joins see only corpus rows the
-    // candidate-id semi-join keeps (Dedup.verifyIncrement) — the full
-    // corpus's hashed-shingle arrays are never shuffled per ingest
-    // (spec-pinned: shuffle bytes stay flat as the corpus grows).
+    // candidate-id semi-join keeps (Dedup.verifyIncrement), so an
+    // ingest shuffles O(batch · collisions), not O(corpus). That is
+    // flat only while collisions are: the spec pins it on fixture docs,
+    // but on the neardup_stream workload's 31-word vocabulary random
+    // docs share LSH buckets, and per 2,500-doc batch the candidates
+    // grew 36k → 148k and shuffle read 66 → 123 MB as the corpus grew
+    // 2.4k → 9.5k docs (4 cores), the pruned side ~93% of the corpus.
     val cross =
       if (!graft.io.ManifestTable.exists(spark, root)) None
       else {
-        NearDupIndex.sync(spark, root) // heal crash-window gaps first
+        NearDupIndex.ensure(spark, root) // rebuild a missing index
         // banded rows derive NARROWLY (a posexplode, no shuffle) from
         // the survivor snapshot — re-evaluation per consumer is
         // cheaper than a dedicated snapshot job was
@@ -969,13 +970,10 @@ object Stream {
           .localCheckpoint()
     }
     if (!snap.isEmpty) {
+      // index first, from the rows still in memory: a crash between
+      // the two commits leaves the index a superset of the corpus
+      NearDupIndex.write(spark, root, sigOf(snap))
       graft.io.ManifestTable.append(spark, root, snap)
-      // index the fresh segment from the rows still in memory (no
-      // disk re-read); a crash before this line is exactly the window
-      // sync() heals on the next ingest
-      NearDupIndex.writeFor(spark, root,
-        graft.io.ManifestTable.segments(spark, root).last,
-        snap.select(col("doc_id").as("id"), col("sig")))
     }
     if (graft.io.ManifestTable.exists(spark, root))
       graft.io.ManifestTable.read(spark, root).createOrReplaceTempView(table)
@@ -1019,26 +1017,22 @@ object Stream {
         // the ONLY full rewrite in the path, amortized to once per
         // maxSegments ingests and crash-safe (compact commits through
         // the same atomic manifest rename; a crash mid-compact leaves
-        // the old manifest readable)
+        // the old manifest readable). The doc set is unchanged, so the
+        // band index is too.
         if (graft.io.ManifestTable.segments(spark, root).size > maxSegments) {
           graft.io.ManifestTable.compact(spark, root)
-          // rebuild the banded index for the folded segment eagerly
-          // (and GC the superseded segments' index dirs) so the next
-          // ingest doesn't pay the rebuild inside its own latency
-          NearDupIndex.sync(spark, root)
           graft.io.ManifestTable.read(spark, root)
             .createOrReplaceTempView(table)
         }
         // index-side auto-maintenance (the r13 pack() verb, now on a
         // cadence): between corpus compactions each ingest adds one
-        // band dir and every corpus check opens all of them — once
-        // the open count reaches `packEvery`, fold the index roots
-        // back to one (index rows are ~2.5% of signature bytes, so
-        // this is cheap and never touches corpus data). The invariant
-        // a spec pins: indexRoots stays ≤ packEvery after EVERY
-        // ingest, for any run length, without operator action.
+        // index segment and every corpus check opens all of them —
+        // once the open count reaches `packEvery`, fold the index
+        // back to one segment (index rows are ~2.5% of signature
+        // bytes, so this is cheap and never touches corpus data). The
+        // invariant a spec pins: indexRoots stays ≤ packEvery after
+        // EVERY ingest, for any run length, without operator action.
         else if (packEvery > 0 &&
-            graft.io.ManifestTable.exists(spark, root) &&
             NearDupIndex.indexRoots(spark, root).size >= packEvery)
           NearDupIndex.pack(spark, root)
         ()

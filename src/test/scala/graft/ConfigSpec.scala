@@ -141,8 +141,12 @@ class ConfigSpec extends AnyFunSuite {
     // comments are stripped; string literals stay (the SQL verbs are
     // themselves strings)
     val comment = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
-    val catalogWrite =
-      """saveAsTable|insertInto|RENAME TO|MSCK REPAIR|partitionOverwriteMode""".r
+    // also: no marker files through a Hadoop FileSystem and no
+    // partitioned parquet written outside ManifestTable (a writer's
+    // `.partitionBy(`; Window.partitionBy is not preceded by `.write`)
+    val catalogWrite = ("""saveAsTable|insertInto|RENAME TO|MSCK REPAIR|""" +
+      """partitionOverwriteMode|\.create\(|_SUCCESS|""" +
+      """\.write(?:Stream)?(?:\s*\.\w+\([^()]*\))*\s*\.partitionBy\(""").r
     val files = java.nio.file.Files.walk(
         java.nio.file.Paths.get("src/main/scala/graft/streaming"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
@@ -151,11 +155,15 @@ class ConfigSpec extends AnyFunSuite {
       val code = comment.replaceAllIn(java.nio.file.Files.readString(f),
         m => if (m.matched.startsWith("/")) m.matched.filter(_ == '\n') else
           java.util.regex.Matcher.quoteReplacement(m.matched))
-      catalogWrite.findAllMatchIn(code).map(m =>
-        s"$f:${code.take(m.start).count(_ == '\n') + 1} ${m.matched}")
+      catalogWrite.findAllMatchIn(code).map { m =>
+        // a writer chain is reported at its `.partitionBy(` line
+        val at = m.start + math.max(0, m.matched.lastIndexOf('.'))
+        s"$f:${code.take(at).count(_ == '\n') + 1} ${m.matched.split('.').last}"
+      }
     }
     assert(offenders.isEmpty,
-      "streaming state commits through ManifestTable, not catalog tables: " +
+      "streaming state commits through ManifestTable, not catalog tables, " +
+        "marker files or hand-partitioned parquet: " +
         offenders.mkString(", "))
   }
 

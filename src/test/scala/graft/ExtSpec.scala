@@ -2873,7 +2873,7 @@ class ExtSpec extends AnyFunSuite {
     graft.streaming.Stream.dropNearDup(spark, table)
   }
 
-  test("NearDupIndex.pack: probed reads open ONE root after packing, index contents identical, ingest unchanged; corpus compact invalidates the pack and sync heals") {
+  test("NearDupIndex.pack: one rewrite commit folds the index to one segment with identical rows; replays reject through it; corpus compact leaves the index alone") {
     import graft.streaming.{NearDupIndex, Stream}
     val docs = spark.read.parquet(s"${TestSession.sf}/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -2886,39 +2886,16 @@ class ExtSpec extends AnyFunSuite {
     }
     val root = Stream.nearDupRoot(spark, table)
     assert(NearDupIndex.indexRoots(spark, root).size == 3,
-      "one band dir per ingest before packing")
+      "one index segment per ingest before packing")
     def indexRows() = NearDupIndex.read(spark, root, 0 until NearDupIndex.PartBuckets)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq.sorted
     val before = indexRows()
     assert(NearDupIndex.pack(spark, root) == 3)
     assert(NearDupIndex.indexRoots(spark, root).size == 1,
-      "the probed-read open count must drop to one packed root")
-    assert(indexRows() == before,
-      "packing must not change a single index row")
-    // crash recovery: a pack() that died between publishing its output
-    // and deleting its inputs leaves an older, fully-covered pack
-    // behind — plant one (valid by every marker, covering one live
-    // segment) and assert sync deletes it as redundant
-    val liveSegs = graft.io.ManifestTable.dataSegments(spark, root)
-    val br = root + "__bands"
-    val fake = s"$br/_packed-zzfake"
-    spark.read.parquet(s"$br/${NearDupIndex.indexRoots(spark, root).head}")
-      .limit(5).write.partitionBy("pb").parquet(fake)
-    val ffs = new org.apache.hadoop.fs.Path(br)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cov = ffs.create(new org.apache.hadoop.fs.Path(fake, "_covers.graft"), true)
-    cov.write((liveSegs.head + "\n").getBytes("UTF-8")); cov.close()
-    ffs.create(new org.apache.hadoop.fs.Path(fake,
-      s"_pb_count_${NearDupIndex.PartBuckets}"), true).close()
-    assert(NearDupIndex.indexRoots(spark, root).size == 2,
-      "the planted redundant pack must look valid before sync")
-    NearDupIndex.sync(spark, root)
-    assert(NearDupIndex.indexRoots(spark, root).size == 1 &&
-      !ffs.exists(new org.apache.hadoop.fs.Path(fake)),
-      "sync must delete a pack made redundant by a larger one")
-    assert(indexRows() == before, "redundancy cleanup changes no rows")
-    // the next ingest dedups THROUGH the pack (known dups rejected,
-    // novel docs appended as a fresh per-segment dir beside it)
+      "the probed-read open count must drop to one segment")
+    assert(indexRows() == before, "packing must not change a single index row")
+    // the next ingest dedups THROUGH the packed index (known dups
+    // rejected, novel docs appended as a fresh segment beside it)
     val sizeBefore = spark.table(table).count()
     Stream.mergeNearDupBatch(spark, table,
       docs.filter(col("doc_id") % 4 === 0)) // full replay: all dups
@@ -2926,19 +2903,23 @@ class ExtSpec extends AnyFunSuite {
       "replayed batch must be fully rejected through the packed index")
     Stream.mergeNearDupBatch(spark, table,
       docs.filter(col("doc_id") % 4 === 3))
-    val roots2 = NearDupIndex.indexRoots(spark, root)
-    assert(roots2.size == 2 && roots2.exists(_.startsWith("_packed-")),
-      s"novel ingest lands beside the pack: $roots2")
-    // a corpus rewrite retires covered segments -> the pack is invalid;
-    // sync deletes it and rebuilds per-segment dirs for the new layout
+    assert(NearDupIndex.indexRoots(spark, root).size == 2,
+      "novel ingest lands beside the packed segment")
+    // the SQL maintenance verb is the same pack
+    val receipt = spark.sql(s"SELECT * FROM graft_neardup_pack('$root')").collect()
+    assert(receipt.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("neardup_pack", 2L)), receipt.toSeq)
+    assert(NearDupIndex.indexRoots(spark, root).size == 1)
+    // a corpus rewrite keeps the doc set, so the index is untouched
+    val roots = NearDupIndex.indexRoots(spark, root)
     val expect = indexRows()
+    val corpus = spark.table(table).count()
     graft.io.ManifestTable.compact(spark, root)
-    NearDupIndex.sync(spark, root)
-    val roots3 = NearDupIndex.indexRoots(spark, root)
-    assert(roots3.size == 1 && !roots3.head.startsWith("_packed-"),
-      s"post-compact the index is rebuilt per segment: $roots3")
-    assert(indexRows() == expect,
-      "rebuilt index must equal the pre-compact banding (pure derivation)")
+    assert(NearDupIndex.indexRoots(spark, root) == roots &&
+      indexRows() == expect, "a corpus compact must not touch the index")
+    Stream.mergeNearDupBatch(spark, table, docs)
+    assert(spark.table(table).count() == corpus,
+      "a replay after the corpus compact must be fully rejected")
     Stream.dropNearDup(spark, table)
   }
 
@@ -3052,49 +3033,76 @@ class ExtSpec extends AnyFunSuite {
     graft.streaming.Stream.dropNearDup(spark, table)
   }
 
-  test("near-dup index pb-count change self-heals: a stale-count segment index is rebuilt, not mis-pruned") {
-    // The hazard: the reader prunes the banded index with pb values
-    // computed at the CURRENT PartBuckets; a segment dir written by a
-    // deployment with a DIFFERENT count would silently miss most
-    // collisions (false accepts). sync() must detect the recorded
-    // count and rebuild. Simulate the old deployment by rewriting the
-    // segment's index partitioned at pb count 8 with its marker.
+  test("near-dup index migration: an older per-segment bands layout is replaced by a rebuilt index table, and a replay accepts nothing") {
+    // An older layout kept one parquet dir per corpus segment under
+    // `<root>__bands`, stamped with its pb count. Plant one at pb count
+    // 8 with no index table beside it: the next ingest must delete it
+    // and rebuild the index from the corpus at the current count — a
+    // reader pruning the old dir with current pb values would miss
+    // most collisions and falsely re-ingest the replay.
     import org.apache.hadoop.fs.Path
+    import graft.streaming.NearDupIndex
     val docs = spark.read.parquet(s"${TestSession.sf}/documents.parquet")
       .select("doc_id", "text").filter(col("doc_id") % 7 === 0)
-    val table = "graft_neardup_pbevolve"
+    val table = "graft_neardup_migrate"
     graft.streaming.Stream.dropNearDup(spark, table)
     graft.streaming.Stream.mergeNearDupBatch(spark, table, docs)
     val root = graft.streaming.Stream.nearDupRoot(spark, table)
     val corpus1 = spark.table(table).count()
+    NearDupIndex.destroy(spark, root)
     val seg = graft.io.ManifestTable.segments(spark, root).head
     val segDir = s"${root}__bands/$seg"
-    val fs = new Path(segDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(segDir), true)
     val oldCount = 8
-    graft.streaming.NearDupIndex.withPb(graft.ext.Dedup.bandedFromSig(
+    NearDupIndex.withPb(graft.ext.Dedup.bandedFromSig(
         spark.read.parquet(s"$root/$seg")
           .select(col("doc_id").as("id"), col("sig"))))
       .withColumn("pb", pmod(xxhash64(col("band"), col("bucket")),
         lit(oldCount)).cast("int"))
       .repartition(col("pb"))
-      .write.mode("overwrite").partitionBy("pb").parquet(segDir)
+      .write.partitionBy("pb").parquet(segDir)
+    val fs = new Path(segDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.create(new Path(segDir, s"_pb_count_$oldCount"), true).close()
-    // replay the SAME docs: every one self-pairs at J=1 against the
-    // corpus, so idempotence demands zero accepts — which only holds
-    // if candidate pruning still finds the collisions after the heal
-    // (unhealed, the count mismatch drops ~7/8 of candidates and the
-    // replay falsely re-ingests)
+    assert(!graft.io.ManifestTable.exists(spark, NearDupIndex.bandsRoot(root)))
     graft.streaming.Stream.mergeNearDupBatch(spark, table, docs)
     assert(spark.table(table).count() == corpus1,
-      "replay against a healed index must accept nothing")
-    assert(fs.exists(new Path(segDir,
-        s"_pb_count_${graft.streaming.NearDupIndex.PartBuckets}")),
-      "sync must restamp the segment at the current pb count")
-    assert(!fs.exists(new Path(segDir, s"_pb_count_$oldCount")),
-      "the stale-count marker must not survive the rebuild")
+      "replay against the rebuilt index must accept nothing")
+    assert(!fs.exists(new Path(segDir)), "the older layout must be deleted")
+    assert(fs.listStatus(new Path(s"${root}__bands")).map(_.getPath.getName).toSeq ==
+      Seq(s"pb${NearDupIndex.PartBuckets}"),
+      "the bands dir holds only the index table")
     graft.streaming.Stream.dropNearDup(spark, table)
+  }
+
+  test("near-dup ingest commits the index ahead of the corpus: a crash between the two loses no doc on replay") {
+    import graft.streaming.{NearDupIndex, Stream}
+    val docs = spark.read.parquet(s"${TestSession.sf}/documents.parquet")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .filter(col("doc_id") < 240)
+    val b1 = docs.filter(col("doc_id") % 2 === 0)
+    val b2 = docs.filter(col("doc_id") % 2 === 1)
+    def ids(table: String) =
+      spark.table(table).collect().map(_.getLong(0)).sorted.toSeq
+    val ref = "graft_ndcrash_ref"
+    Stream.dropNearDup(spark, ref)
+    Stream.mergeNearDupBatch(spark, ref, b1)
+    Stream.mergeNearDupBatch(spark, ref, b2)
+    val table = "graft_ndcrash"
+    Stream.dropNearDup(spark, table)
+    Stream.mergeNearDupBatch(spark, table, b1)
+    // the crash: batch 2's index append committed, its corpus append
+    // did not — its novel docs now have band rows and no corpus rows
+    val novel2 = graft.io.ManifestTable.read(spark, Stream.nearDupRoot(spark, ref))
+      .filter(col("doc_id") % 2 === 1).select(col("doc_id").as("id"), col("sig"))
+    assert(novel2.count() > 0, "batch 2 must carry novel docs")
+    NearDupIndex.write(spark, Stream.nearDupRoot(spark, table), novel2)
+    // the replay: each novel doc collides with its own leftover band
+    // rows, which the corpus-only lookup drops
+    Stream.mergeNearDupBatch(spark, table, b2)
+    assert(ids(table) == ids(ref),
+      "the replayed batch must land exactly as in a fault-free run")
+    Stream.dropNearDup(spark, ref)
+    Stream.dropNearDup(spark, table)
   }
 
   test("streaming ANN index: split-invariant vs batch IVF, replay-guarded, partition-pruned reads, compaction-stable") {
